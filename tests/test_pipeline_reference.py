@@ -9,6 +9,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from youtube_etl_automated_pipeline_spark.operators.joins import (
+    LOOKUP_MAX_ROWS,
+    lookup_enrich,
+)
 from youtube_etl_automated_pipeline_spark.pipeline import (
     build_wide_fact,
     to_sink_projection,
@@ -172,3 +176,78 @@ def test_sink_projection_all_strings(wide):
     sink = to_sink_projection(df)
     assert all(t == "string" for _, t in sink.dtypes)
     assert all(("|" not in c) and (" " not in c) for c in sink.columns)
+
+
+# -- the dim lookup itself (operators/joins.py::lookup_columns) --------
+
+
+def _lookup(fact, dim, on, **kw):
+    return {r[on]: r for r in lookup_enrich(fact, dim, on, **kw).collect()}
+
+
+def test_lookup_last_wins_in_row_order(spark):
+    # spread over several partitions: the dup key's rows sit in the
+    # first and the last one, so partition order decides the winner
+    rows = [("K", "first")] + [(f"F{i}", str(i)) for i in range(40)] + [("K", "last")]
+    dim = spark.createDataFrame(rows, "k string, v string")
+    assert dim.rdd.getNumPartitions() > 1
+    fact = spark.createDataFrame([("K",), ("F3",)], "k string")
+    out = _lookup(fact, dim, "k")
+    assert out["K"]["v"] == "last"
+    assert out["F3"]["v"] == "3"
+
+
+def test_lookup_null_keys_never_match(spark):
+    dim = spark.createDataFrame([(None, "null key"), ("A", "a")], "k string, v string")
+    fact = spark.createDataFrame([(None,), ("A",)], "k string")
+    rows = lookup_enrich(fact, dim, "k", defaults={"v": "miss"}).collect()
+    got = {r["k"]: r["v"] for r in rows}
+    assert got == {None: "miss", "A": "a"}
+
+
+@pytest.mark.parametrize("preserve", [True, False])
+def test_lookup_matched_null_versus_miss(spark, preserve):
+    dim = spark.createDataFrame([("N", None, "x"), ("H", "h", None)], "k string, a string, b string")
+    fact = spark.createDataFrame([("N",), ("H",), ("M",)], "k string")
+    out = _lookup(fact, dim, "k", defaults={"a": "dflt"}, preserve_matched_nulls=preserve)
+    assert out["N"]["a"] == (None if preserve else "dflt")  # matched, null attribute
+    assert out["M"]["a"] == "dflt"  # miss
+    assert out["H"]["a"] == "h"
+    # a column without a default stays null on a miss, like the join
+    assert out["M"]["b"] is None and out["N"]["b"] == "x"
+
+
+def test_lookup_empty_dim_is_all_misses(spark):
+    dim = spark.createDataFrame([], "k string, v string, n long")
+    fact = spark.createDataFrame([("A",), (None,)], "k string")
+    out = lookup_enrich(fact, dim, "k", defaults={"v": "miss"})
+    assert dict(out.dtypes) == {"k": "string", "v": "string", "n": "bigint"}
+    assert sorted((r["v"], r["n"]) for r in out.collect()) == [("miss", None), ("miss", None)]
+
+
+@pytest.mark.parametrize(
+    "fact_type, fact_keys, dim_type, dim_keys",
+    [
+        ("string", ["7", " 7", "07", "x", "8"], "int", [7, 9]),
+        ("int", [7, 8], "string", ["7", "08", "y"]),
+        ("int", [7, 8], "bigint", [7, 2**40]),
+        ("bigint", [7, 2**40], "int", [7, 8]),
+        ("double", [7.0, 7.5], "int", [7, 8]),
+    ],
+)
+def test_lookup_key_coercion_matches_the_join(spark, fact_type, fact_keys, dim_type, dim_keys):
+    fact = spark.createDataFrame([(i, k) for i, k in enumerate(fact_keys)], f"i int, k {fact_type}")
+    dim = spark.createDataFrame([(k, f"v{k}") for k in dim_keys], f"dk {dim_type}, v string")
+    joined = fact.join(dim, fact["k"] == dim["dk"], "left").select("i", "v")
+    looked = lookup_enrich(fact, dim.withColumnRenamed("dk", "k"), "k").select("i", "v")
+    assert sorted(joined.collect()) == sorted(looked.collect())
+    assert looked.filter(F.col("v").isNotNull()).count() > 0
+
+
+def test_lookup_dim_over_the_bound_raises(spark):
+    fact = spark.createDataFrame([(1,)], "id long")
+    at_bound = spark.range(LOOKUP_MAX_ROWS).withColumn("v", F.col("id") * 2)
+    assert lookup_enrich(fact, at_bound, "id").collect()[0]["v"] == 2
+    over = spark.range(LOOKUP_MAX_ROWS + 1).withColumn("v", F.col("id") * 2)
+    with pytest.raises(ValueError, match=f"LOOKUP_MAX_ROWS={LOOKUP_MAX_ROWS}"):
+        lookup_enrich(fact, over, "id")

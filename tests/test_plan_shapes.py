@@ -5,6 +5,8 @@ nested-loop) must survive refactors."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -49,7 +51,16 @@ def test_pipeline_e2e_no_cartesian_no_nested_loop(spark):
     plan = plan_of(pipeline_e2e(spark, SF_SMOKE))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    assert plan.count("BroadcastHashJoin") >= 3
+    # the four config dims fold into the projection as literal maps: no
+    # dim relation is left to window (last-wins) or broadcast
+    assert "LocalTableScan" not in plan
+    scanned = set(re.findall(r"/(\w+)\.parquet", plan))
+    assert scanned == {"orders", "lineitem"}, scanned
+    nodes = [
+        line.lstrip(" :|+-").split(" ")[0] for line in plan.splitlines()[1:]
+    ]
+    assert nodes.count("Window") == 1  # the videos keep-last only
+    assert sum("Exchange" in n for n in nodes) <= 3, plan
 
 
 def test_lsh_band_joins_are_equi_joins(spark):
@@ -406,17 +417,19 @@ def test_containment_candidates_stay_equi_join(spark):
 
 
 def test_knn_confusion_broadcasts_the_holdout_side(spark):
-    """knn_label_confusion scans the reference corpus once with the
-    bounded holdout broadcast — the eval must never shuffle the
-    corpus for the cross score."""
+    """knn_label_confusion scores the corpus against the broadcast
+    holdout matrix in one numpy MapInPandas pass — the eval must never
+    shuffle the corpus or fall back to a cross join for the cross
+    score."""
     from youtube_etl_automated_pipeline_spark.plans.queries_similarity import (
         knn_label_confusion,
     )
 
     plan = plan_of(knn_label_confusion(spark, SF_SMOKE))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
+    assert "MapInPandas" in plan
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_curriculum_position_window_bounded_by_limit(spark):

@@ -1,7 +1,12 @@
-"""E3 flush lifecycle: append -> dedup+swap -> truncate staging."""
+"""E3 flush lifecycle: one keep-last merge rewrite -> truncate staging,
+with its job budget."""
 
 from __future__ import annotations
 
+import contextlib
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -39,6 +44,84 @@ def test_flush_lifecycle(spark, tmp_path):
     # empty staging short-circuits (P9): table untouched
     sinks.flush(spark, staging, table, key="c_custkey", order_col="_seq")
     assert spark.read.parquet(table).count() == 100
+
+
+@contextlib.contextmanager
+def _jobs(spark, group):
+    """Collect the ids of the Spark jobs run inside the block."""
+    sc = spark.sparkContext
+    ids: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _listing(path):
+    return {n: os.stat(os.path.join(path, n)).st_mtime_ns for n in os.listdir(path)}
+
+
+def test_flush_job_budget(spark, tmp_path):
+    """A non-empty flush writes the staged rows once: the merge rewrite
+    (shuffle + write) and the truncate; staging schema and emptiness
+    come from parquet footers. An empty one leaves the table alone."""
+    staging = str(tmp_path / "staging")
+    table = str(tmp_path / "table")
+    cust = load_table(spark, SF_SMOKE, "customer").limit(100)
+    for seq in (1, 2):  # first flush creates the table, second merges
+        sinks.overwrite_table(cust.limit(60 * seq).withColumn("_seq", F.lit(seq)), staging)
+        with _jobs(spark, f"flush_budget_{seq}") as ids:
+            sinks.flush(spark, staging, table, key="c_custkey", order_col="_seq")
+        assert len(ids) <= 3, ids
+    assert spark.read.parquet(table).count() == 100
+
+    before = _listing(table)
+    with _jobs(spark, "flush_budget_empty") as ids:
+        sinks.flush(spark, staging, table, key="c_custkey", order_col="_seq")
+    assert not ids, ids
+    assert _listing(table) == before
+
+
+def test_pipeline_staging_write_and_build_job_budget(spark, tmp_path):
+    """The config dims cost no exchange or broadcast: a warm
+    pipeline_e2e build runs only the channels-dim collect, and one
+    staging write of the wide fact runs at most 4 jobs."""
+    from youtube_etl_automated_pipeline_spark.plans.queries_pipeline import (
+        pipeline_e2e,
+    )
+
+    pipeline_e2e(spark, SF_SMOKE)  # prime scans and schemas
+    with _jobs(spark, "pipeline_build_budget") as ids:
+        wide = pipeline_e2e(spark, SF_SMOKE)
+    assert len(ids) <= 2, ids
+    with _jobs(spark, "pipeline_staging_budget") as ids:
+        sinks.overwrite_table(wide.withColumn("flush_seq", F.lit(1)), str(tmp_path / "staging"))
+    assert len(ids) <= 4, ids
+
+
+@pytest.mark.parametrize("change", ["extra", "missing", "retyped"])
+def test_flush_schema_mismatch_raises(spark, tmp_path, change):
+    """Reading the table with a foreign staged schema would silently
+    drop or null columns: the flush must refuse, before writing."""
+    staging = str(tmp_path / "staging")
+    table = str(tmp_path / "table")
+    cust = load_table(spark, SF_SMOKE, "customer").limit(20).withColumn("_seq", F.lit(1))
+    cust.write.parquet(staging)
+    sinks.flush(spark, staging, table, key="c_custkey", order_col="_seq")
+
+    staged = {
+        "extra": cust.withColumn("bonus", F.lit(1)),
+        "missing": cust.drop("c_name"),
+        "retyped": cust.withColumn("c_acctbal", F.col("c_acctbal").cast("string")),
+    }[change]
+    sinks.overwrite_table(staged, staging)
+    before = _listing(table)
+    with pytest.raises(ValueError, match="does not match table"):
+        sinks.flush(spark, staging, table, key="c_custkey", order_col="_seq")
+    assert _listing(table) == before
+    assert spark.read.parquet(staging).count() == 20  # staging kept for a retry
 
 
 def test_approx_distinct_error_envelope(spark):

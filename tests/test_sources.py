@@ -1,4 +1,4 @@
-"""S5: JSON dim scan -> broadcast dim with last-wins dup resolution
+"""S5: JSON dim scan -> dim lookup with last-wins dup resolution
 (the reference's dict-comprehension overwrite: dataingestion3.py:37,
 65 dup codes and null show names in Documents/showname.json)."""
 
@@ -8,8 +8,7 @@ import json
 
 from pyspark.sql import functions as F
 
-from youtube_etl_automated_pipeline_spark.operators.dedup import dedup_audit
-from youtube_etl_automated_pipeline_spark.operators.joins import dim_last_wins
+from youtube_etl_automated_pipeline_spark.operators.joins import lookup_enrich
 from tests.conftest import SF_SMOKE
 from youtube_etl_automated_pipeline_spark.sources import load_json_dim
 
@@ -26,15 +25,16 @@ def test_json_dim_last_wins_and_nulls(spark, tmp_path):
     dim = load_json_dim(spark, str(path))
     assert dim.count() == 3
 
-    # last-wins needs a file-order sequence (dict overwrite order)
-    seq = dim.withColumn("_seq", F.monotonically_increasing_id())
-    deduped = dim_last_wins(seq, "Code", ["_seq"])
-    assert dedup_audit(seq, deduped) == 1
-
-    out = {r["Code"]: r for r in deduped.collect()}
+    # last-wins in file order (dict overwrite order), resolved by the lookup
+    facts = spark.createDataFrame([("AB",), ("CD",), ("EF",)], "Code string")
+    out = {
+        r["Code"]: r
+        for r in lookup_enrich(facts, dim, "Code", defaults={"Show_Name": ""}).collect()
+    }
     assert out["AB"]["Show_Name"] == "Second"  # later row overwrote
     assert out["AB"]["Broadcaster"] == "Z"
     assert out["CD"]["Show_Name"] is None  # present-but-null preserved
+    assert out["EF"]["Show_Name"] == ""  # miss -> default
 
 
 def test_jsonl_malformed_rows_land_permissive_nulls(spark, tmp_path):

@@ -3,13 +3,17 @@ capabilities of RimshaIshfaq/Youtube-ETL-Automated-Pipeline.
 
 Spark-first re-expression of the reference's dataflow (see SURVEY.md):
 the seven-process sheet-mutating pipeline becomes one lazy DataFrame
-plan (scan -> enrich joins -> window dedup -> agg -> derive -> write),
-dims are broadcast, state lives in Parquet, and incremental flow is
-Structured Streaming ``foreachBatch``.
+plan (scan -> window dedup -> dim lookups -> merge join -> agg ->
+derive -> write), config dims fold into the plan as literal maps,
+state lives in Parquet, and incremental flow is Structured Streaming
+``foreachBatch``.
 
-Design posture is 100 TB scale: no ``collect()`` in operators, facts
-are never broadcast, dedup uses windows (not ``dropDuplicates``), AQE
-is on, and every join declares which side is broadcastable.
+Design posture is 100 TB scale: the only rows operators collect are a
+config dim's, under a constant bound (bounded dim collect,
+``operators/joins.py::LOOKUP_MAX_ROWS``), facts are never collected or
+broadcast, dedup uses windows (not
+``dropDuplicates``), AQE is on, and every join declares which side is
+broadcastable.
 """
 
 __version__ = "0.1.0"

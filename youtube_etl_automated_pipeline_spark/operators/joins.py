@@ -1,9 +1,10 @@
 """Join operators (SURVEY.md section 2.4 J1-J7).
 
-Every reference join is a broadcast hash lookup of a fact against a
-tiny dim (dict ``.get`` / ``.map``), plus one anti-join waterfall.
-Scale posture: dims are explicitly ``F.broadcast``-hinted (no shuffle
-of the fact for enrichment); the fact side is never collected or
+Every reference enrichment is a lookup of a fact against a tiny
+config dim (dict ``.get`` / ``.map``), plus one anti-join waterfall.
+Scale posture: a config dim is collected under a constant row bound
+and folded into the fact's projection as a literal map, so enrichment
+runs no exchange and no broadcast; the fact side is never collected or
 broadcast; the upsert/merge is a window dedup (one shuffle on the key).
 """
 
@@ -13,45 +14,105 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, MapType, StringType, StructField, StructType
 
 from youtube_etl_automated_pipeline_spark.operators.dedup import keep_last
 
 
-def broadcast_enrich(
+# A config dim rides in the plan as one literal map: Catalyst folds it,
+# every task carries it and each fact row scans it linearly. Dims past
+# this size belong in a join, so the lookup refuses them.
+LOOKUP_MAX_ROWS = 1000
+
+
+def _join_key_type(fact_type: DataType, dim_type: DataType, spark) -> DataType:
+    """The type an equi-join compares the two keys in: a string key is
+    cast to the other side's type, otherwise both widen to their common
+    type (the analyzer's binary-comparison coercion)."""
+    if fact_type == dim_type:
+        return fact_type
+    if isinstance(fact_type, StringType) != isinstance(dim_type, StringType):
+        return dim_type if isinstance(fact_type, StringType) else fact_type
+    probe = spark.createDataFrame(
+        [], StructType([StructField("f", fact_type), StructField("d", dim_type)])
+    )
+    return probe.select(F.coalesce("f", "d")).schema[0].dataType
+
+
+def _collect_bounded(dim: DataFrame) -> list:
+    """Collect at most LOOKUP_MAX_ROWS rows in row order, in one job (a
+    local relation in none); raise if the dim holds more."""
+    bounded = dim.limit(LOOKUP_MAX_ROWS + 1)
+    if bounded._jdf.queryExecution().optimizedPlan().getClass().getSimpleName() != "LocalRelation":
+        # one task reads the partitions in order; a bare limit would
+        # run one job per partition scale-up step
+        bounded = dim.coalesce(1).limit(LOOKUP_MAX_ROWS + 1)
+    rows = bounded.collect()
+    if len(rows) > LOOKUP_MAX_ROWS:
+        raise ValueError(
+            f"lookup dim has more than LOOKUP_MAX_ROWS={LOOKUP_MAX_ROWS} rows; "
+            "join it instead of folding it into the plan"
+        )
+    return rows
+
+
+def lookup_columns(
     fact: DataFrame,
     dim: DataFrame,
-    on: str | Sequence[str],
+    on: str,
+    defaults: Mapping[str, str] | None = None,
+    preserve_matched_nulls: bool = True,
+) -> dict[str, Column]:
+    """J1-J4: the dim's value columns for each fact row, as
+    ``fact LEFT JOIN dim USING (on)`` would give them, expressed as one
+    constant-folded map lookup (no exchange, no broadcast).
+
+    The dim is collected on the driver (bounded by LOOKUP_MAX_ROWS) and
+    duplicate keys resolve last-wins in row order — the reference's
+    dict comprehension (dataingestion3.py:37). Null keys on either
+    side never match. ``defaults`` maps value column -> default for
+    misses; ``preserve_matched_nulls=True`` keeps a matched key's null
+    attribute null (dict ``.get`` semantics, dataingestion3.py:37-45),
+    False also defaults it (``coalesce``). A null struct from the map
+    is the miss marker, so the two cases never conflate.
+    """
+    values = [f for f in dim.schema.fields if f.name != on]
+    fact_type = fact.schema[on].dataType
+    key_type = _join_key_type(fact_type, dim.schema[on].dataType, dim.sparkSession)
+    rows = _collect_bounded(dim.select(F.col(on).cast(key_type), *[f.name for f in values]))
+    last = {r[0]: r[1:] for r in rows if r[0] is not None}  # later rows overwrite
+    entry_type = StructType([StructField(f.name, f.dataType) for f in values])
+    if last and values:
+        folded = F.create_map(
+            *[x for k, vs in last.items() for x in (F.lit(k), F.struct(*map(F.lit, vs)))]
+        ).cast(MapType(key_type, entry_type))
+        fact_key = F.col(on) if fact_type == key_type else F.col(on).cast(key_type)
+        hit = folded[fact_key]
+    else:
+        hit = F.lit(None).cast(entry_type)
+    out = {}
+    for f in values:
+        col = hit[f.name]
+        if defaults and f.name in defaults:
+            default = F.lit(defaults[f.name])
+            col = (
+                F.when(hit.isNull(), default).otherwise(col)
+                if preserve_matched_nulls
+                else F.coalesce(col, default)
+            )
+        out[f.name] = col
+    return out
+
+
+def lookup_enrich(
+    fact: DataFrame,
+    dim: DataFrame,
+    on: str,
     defaults: Mapping[str, str] | None = None,
     preserve_matched_nulls: bool = True,
 ) -> DataFrame:
-    """J1-J4: fact LEFT JOIN broadcast(dim) with miss defaults.
-
-    ``defaults`` maps dim value-column -> default for JOIN MISSES.
-    ``preserve_matched_nulls=True`` reproduces the reference's
-    dict-lookup semantics (dataingestion3.py:37-45): a key that matched
-    but carries a null attribute stays null — only true misses get the
-    default. This is the miss-vs-null distinction SURVEY section 4
-    flags; a bare ``coalesce`` would conflate the two.
-    """
-    keys = [on] if isinstance(on, str) else list(on)
-    marked = dim.withColumn("_dim_matched", F.lit(True))
-    out = fact.join(F.broadcast(marked), keys, "left")
-    for col_name, default in (defaults or {}).items():
-        if preserve_matched_nulls:
-            out = out.withColumn(
-                col_name,
-                F.when(F.col("_dim_matched").isNull(), F.lit(default)).otherwise(F.col(col_name)),
-            )
-        else:
-            out = out.withColumn(col_name, F.coalesce(F.col(col_name), F.lit(default)))
-    return out.drop("_dim_matched")
-
-
-def dim_last_wins(dim: DataFrame, key: str | Sequence[str], order_by: Sequence[Column | str]) -> DataFrame:
-    """Dict-comprehension last-wins dup resolution for dim tables
-    (dataingestion3.py:37: 65 duplicated codes, last wins)."""
-    keys = [key] if isinstance(key, str) else list(key)
-    return keep_last(dim, keys, order_by)
+    """``fact`` with the dim's value columns added (``lookup_columns``)."""
+    return fact.withColumns(lookup_columns(fact, dim, on, defaults, preserve_matched_nulls))
 
 
 def anti_join_waterfall(
@@ -103,10 +164,9 @@ def update_merge(
     renamed = updates.select(
         on, *[F.col(c).alias(f"_upd_{c}") for c in update_cols]
     )
-    out = fact.join(renamed, on, "left")
-    for c in update_cols:
-        if c in fact.columns:
-            out = out.withColumn(c, F.coalesce(F.col(f"_upd_{c}"), F.col(c)))
-        else:
-            out = out.withColumn(c, F.col(f"_upd_{c}"))
+    merged = {
+        c: F.coalesce(F.col(f"_upd_{c}"), F.col(c)) if c in fact.columns else F.col(f"_upd_{c}")
+        for c in update_cols
+    }
+    out = fact.join(renamed, on, "left").withColumns(merged)
     return out.drop(*[f"_upd_{c}" for c in update_cols])

@@ -7,11 +7,15 @@ Reference flow (SURVEY.md section 3, dags/Dashboard-pipeline.py:31-40):
     --7--> BigQuery (append + window-dedup)
 
 Each stage re-read and re-wrote the whole sheet; here Catalyst sees
-the entire plan at once: scan -> keep-last dedup -> broadcast enrich
-joins -> analytics merge -> derived-metric projection. All dims are
-broadcast; the only fact shuffles are the dedup window and (if the
+the entire plan at once: scan -> keep-last dedup -> dim lookups ->
+analytics merge -> derived-metric projection. Each config dim is
+collected under a constant bound (operators/joins.py::LOOKUP_MAX_ROWS)
+and folded into the projection as a literal map, so no dim is shuffled
+or broadcast; the only fact shuffles are the dedup window and (if the
 analytics side is large) the metrics merge join — at 100 TB both
-shuffle on video_id, the natural key.
+shuffle on video_id, the natural key. Stages add their columns in
+batched ``withColumns`` calls (each DataFrame call is one driver-side
+analysis pass), not one ``withColumn`` per column.
 
 Column map parity (sheet cols A-AD -> snake_case): SURVEY section 1.1.
 """
@@ -26,8 +30,8 @@ from youtube_etl_automated_pipeline_spark.functions import metrics as M
 from youtube_etl_automated_pipeline_spark.functions import text as X
 from youtube_etl_automated_pipeline_spark.operators.dedup import keep_last
 from youtube_etl_automated_pipeline_spark.operators.joins import (
-    broadcast_enrich,
-    dim_last_wins,
+    lookup_columns,
+    lookup_enrich,
     update_merge,
 )
 
@@ -49,18 +53,13 @@ ANALYTICS_COLS = (
 def ingest_merge(videos: DataFrame, channels: DataFrame | None = None) -> DataFrame:
     """Stage 1 (dataingestion1.py:104-181): keep-last dedup by video_id
     over ingest_seq (A5/J7), then channel enrichment (J1) with
-    'Unknown Channel' for misses; dup channel ids resolve last-wins
-    (channel.json has dup UCmHCyBKDCQk5GwJB3NvTbdw)."""
+    'Unknown Channel' for misses; dup channel ids resolve last-wins in
+    row order (channel.json has dup UCmHCyBKDCQk5GwJB3NvTbdw)."""
     deduped = keep_last(videos, ["video_id"], ["ingest_seq"])
     if channels is not None and "channel_id" in deduped.columns:
-        dim = dim_last_wins(
-            channels.withColumn("_ord", F.monotonically_increasing_id()),
-            "channel_id",
-            ["_ord"],
-        ).drop("_ord")
-        deduped = broadcast_enrich(
+        deduped = lookup_enrich(
             deduped,
-            dim,
+            channels,
             "channel_id",
             defaults={"channel_name": "Unknown Channel"},
             preserve_matched_nulls=False,
@@ -72,40 +71,36 @@ def derive_codes(df: DataFrame, resource_names: DataFrame | None = None) -> Data
     """Stage 2 (dataingestion2.py): cols E-I. Title -> last word (F2),
     cleaning chain (P5-P7), Len recompute (F3), prefix code (F6), last
     char (F7), resource team lookup (J2, miss -> '')."""
-    raw = X.extract_last_word(F.col("title"))
-    out = df.withColumn("main_code", X.clean_main_code(raw))
-    out = out.withColumn("code_len", F.length("main_code"))
-    out = out.withColumn("code", X.code_prefix(F.col("main_code"), F.col("code_len")))
-    out = out.withColumn("resource_code", X.last_char(F.col("main_code")))
+    out = df.withColumn("main_code", X.clean_main_code(X.extract_last_word(F.col("title"))))
+    main_code = F.col("main_code")
+    out = out.withColumns(
+        {
+            "code_len": F.length(main_code),
+            "code": X.code_prefix(main_code, F.length(main_code)),
+            "resource_code": X.last_char(main_code),
+        }
+    )
     if resource_names is not None:
-        dim = dim_last_wins(
-            resource_names.withColumn("_ord", F.monotonically_increasing_id()),
-            "employee_code",
-            ["_ord"],
-        ).drop("_ord")
-        out = broadcast_enrich(
-            out.withColumn("employee_code", F.col("resource_code")),
-            dim.withColumnRenamed("team", "resource_name"),
-            "employee_code",
+        out = lookup_enrich(
+            out,
+            resource_names.withColumnsRenamed(
+                {"employee_code": "resource_code", "team": "resource_name"}
+            ),
+            "resource_code",
             defaults={"resource_name": ""},
             preserve_matched_nulls=False,
-        ).drop("employee_code")
+        )
     return out
 
 
 def enrich_shownames(df: DataFrame, shownames: DataFrame) -> DataFrame:
     """Stage 3 (dataingestion3.py:33-45): cols J-L. Code -> show name /
-    broadcaster / category. Dup codes last-wins (65 in showname.json);
-    miss -> ''; a MATCHED-but-null show_name stays null (miss-vs-null
-    distinction, SURVEY section 4)."""
-    dim = dim_last_wins(
-        shownames.withColumn("_ord", F.monotonically_increasing_id()),
-        "code",
-        ["_ord"],
-    ).drop("_ord")
-    return broadcast_enrich(
+    broadcaster / category. Dup codes last-wins in row order (65 in
+    showname.json); miss -> ''; a MATCHED-but-null show_name stays null
+    (miss-vs-null distinction, SURVEY section 4)."""
+    return lookup_enrich(
         df,
-        dim,
+        shownames,
         "code",
         defaults={"show_name": "", "broadcaster": "", "category": ""},
         preserve_matched_nulls=True,
@@ -125,53 +120,38 @@ def derive_final_metrics(df: DataFrame, cpm_categories: DataFrame | None = None)
     null-safe parses (F18: null -> 0), CPM category CASE (F23/J4)."""
     local_date, local_time = D.utc_to_local_date_time(F.col("published_at"))
     views = F.coalesce(F.col("views"), F.lit(0))
-    out = (
-        df.withColumn("published_date_local", local_date)
-        .withColumn("published_time_local", local_time)
-        .withColumn(
-            "net_subscribers",
-            M.net_subscribers(F.col("subscribers_gained"), F.col("subscribers_lost")),
-        )
-        .withColumn("watch_hours", M.minutes_to_hours(F.coalesce(F.col("minutes_watched"), F.lit(0.0))))
-        .withColumn(
-            "avg_view_duration_hms",
-            D.seconds_to_hms(F.coalesce(F.col("avg_view_duration"), F.lit(0))),
-        )
-        .withColumn(
-            "engagement_pct",
-            M.engagement_pct(
-                F.coalesce(F.col("comments"), F.lit(0)),
-                F.coalesce(F.col("likes"), F.lit(0)),
-                F.coalesce(F.col("shares"), F.lit(0)),
-                views,
-            ),
-        )
-        .withColumn("cpv", M.cpv(F.coalesce(F.col("estimated_revenue"), F.lit(0.0)), views))
-        .withColumn("rpm", M.rpm(F.coalesce(F.col("estimated_revenue"), F.lit(0.0)), views))
-    )
+    revenue = F.coalesce(F.col("estimated_revenue"), F.lit(0.0))
+    derived = {
+        "published_date_local": local_date,
+        "published_time_local": local_time,
+        "net_subscribers": M.net_subscribers(
+            F.col("subscribers_gained"), F.col("subscribers_lost")
+        ),
+        "watch_hours": M.minutes_to_hours(F.coalesce(F.col("minutes_watched"), F.lit(0.0))),
+        "avg_view_duration_hms": D.seconds_to_hms(
+            F.coalesce(F.col("avg_view_duration"), F.lit(0))
+        ),
+        "engagement_pct": M.engagement_pct(
+            F.coalesce(F.col("comments"), F.lit(0)),
+            F.coalesce(F.col("likes"), F.lit(0)),
+            F.coalesce(F.col("shares"), F.lit(0)),
+            views,
+        ),
+        "cpv": M.cpv(revenue, views),
+        "rpm": M.rpm(revenue, views),
+    }
     if cpm_categories is not None:
-        dim = dim_last_wins(
-            cpm_categories.withColumn("_ord", F.monotonically_increasing_id()),
-            "show_name",
-            ["_ord"],
-        ).drop("_ord")
-        out = broadcast_enrich(
-            out,
-            dim,
-            "show_name",
-            defaults={"cpm_category": ""},
+        cpm = lookup_columns(
+            df, cpm_categories, "show_name", defaults={"cpm_category": ""},
             preserve_matched_nulls=False,
-        )
+        )["cpm_category"]
         # F23 (dataprocessing3.py:88-91): International News videos use
         # the show name itself as the category
-        out = out.withColumn(
-            "cpm_category",
-            F.when(
-                F.trim(F.coalesce(F.col("category"), F.lit(""))) == "International News",
-                F.coalesce(F.col("show_name"), F.lit("")),
-            ).otherwise(F.coalesce(F.col("cpm_category"), F.lit(""))),
-        )
-    return out
+        derived["cpm_category"] = F.when(
+            F.trim(F.coalesce(F.col("category"), F.lit(""))) == "International News",
+            F.coalesce(F.col("show_name"), F.lit("")),
+        ).otherwise(cpm)
+    return df.withColumns(derived)
 
 
 def build_wide_fact(

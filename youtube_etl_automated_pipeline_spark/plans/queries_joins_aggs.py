@@ -18,8 +18,7 @@ from youtube_etl_automated_pipeline_spark.functions.compat import (
     xsum,
 )
 from youtube_etl_automated_pipeline_spark.operators.joins import (
-    broadcast_enrich,
-    dim_last_wins,
+    lookup_enrich,
     update_merge,
 )
 from youtube_etl_automated_pipeline_spark.sources import load_table
@@ -27,29 +26,25 @@ from youtube_etl_automated_pipeline_spark.sources import load_table
 
 def broadcast_enrich_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1+J3 (dataingestion1.py:129-133, dataingestion3.py:37-45):
-    broadcast left join with last-wins dup resolution in the dim and a
-    miss default for unmatched facts.
+    dim lookup with last-wins dup resolution and a miss default for
+    unmatched facts.
 
     The dim is nation restricted to keys < 20 (so keys >= 20 miss ->
-    'Unknown Nation', the reference's 'Unknown Channel' semantics) and
-    unioned with a 'v2' copy for even keys (dup keys, last wins — the
-    reference's dict-comprehension overwrite, 65 dup codes in
-    showname.json). Fact side never shuffles: dim is broadcast.
+    'Unknown Nation', the reference's 'Unknown Channel' semantics)
+    followed by a 'v2' copy for even keys (dup keys, last wins in row
+    order — the reference's dict-comprehension overwrite, 65 dup codes
+    in showname.json). The fact side never shuffles: the dim is folded
+    into its projection as a literal map (operators/joins.py).
     """
     cust = load_table(spark, sf_dir, "customer")
     nat = load_table(spark, sf_dir, "nation")
-    v1 = nat.filter(F.col("n_nationkey") < 20).select(
-        "n_nationkey", "n_name"
-    ).withColumn("_seq", F.lit(1))
-    v2 = (
-        nat.filter((F.col("n_nationkey") < 20) & (F.col("n_nationkey") % 2 == 0))
-        .select("n_nationkey", F.concat(F.col("n_name"), F.lit("_V2")).alias("n_name"))
-        .withColumn("_seq", F.lit(2))
+    v1 = nat.filter(F.col("n_nationkey") < 20).select("n_nationkey", "n_name")
+    v2 = nat.filter((F.col("n_nationkey") < 20) & (F.col("n_nationkey") % 2 == 0)).select(
+        "n_nationkey", F.concat(F.col("n_name"), F.lit("_V2")).alias("n_name")
     )
-    dim = dim_last_wins(v1.unionByName(v2), "n_nationkey", ["_seq"]).drop("_seq")
-    enriched = broadcast_enrich(
+    enriched = lookup_enrich(
         cust.withColumnRenamed("c_nationkey", "n_nationkey"),
-        dim,
+        v1.unionByName(v2),
         "n_nationkey",
         defaults={"n_name": "Unknown Nation"},
     )

@@ -17,6 +17,7 @@ H:MM:SS > 1 h, International News CPM branch.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -147,17 +148,19 @@ def _analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _local_dim(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A literal dim as a local relation: collecting it runs no job."""
+    names = [f.split()[0] for f in schema.split(",")]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=names), schema)
+
+
 def pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's whole DAG (E1) over synthesized inputs."""
-    shownames = spark.createDataFrame(
-        SHOWNAMES_ROWS, "code string, show_name string, broadcaster string, category string"
+    shownames = _local_dim(
+        spark, SHOWNAMES_ROWS, "code string, show_name string, broadcaster string, category string"
     )
-    resource_names = spark.createDataFrame(
-        RESOURCE_ROWS, "employee_code string, team string"
-    )
-    cpm_categories = spark.createDataFrame(
-        CPM_ROWS, "show_name string, cpm_category string"
-    )
+    resource_names = _local_dim(spark, RESOURCE_ROWS, "employee_code string, team string")
+    cpm_categories = _local_dim(spark, CPM_ROWS, "show_name string, cpm_category string")
     wide = build_wide_fact(
         _videos(spark, sf_dir),
         _channels(spark, sf_dir),

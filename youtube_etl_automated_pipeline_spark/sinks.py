@@ -7,26 +7,38 @@ and swap it in place (:84-96), then truncate staging keeping the
 header (:103-112). Re-expressed over parquet table directories:
 
 - K4  append_table      - mode('append') / create on first write
-- A6  dedup_table_swap  - the same ROW_NUMBER SQL via spark.sql,
-                          written to a temp dir and atomically swapped
+- A6  dedup_table_swap  - the same ROW_NUMBER keep-last, written to a
+                          temp dir and atomically swapped; given the
+                          staged frame it rewrites ``table ∪ staged``
 - K5  truncate_staging  - overwrite with the empty (limit 0) frame,
                           schema preserved
-- E3  flush             - the composition
+- E3  flush             - one merge rewrite, then the truncate
 
-Scale notes: append is a no-shuffle write; the dedup pass shuffles
-once on the key (window, not dropDuplicates — SURVEY section 4 note on
-keep-last); the swap keeps readers consistent (a table format with
-MERGE — Delta/Iceberg — replaces the swap at production scale).
+Scale notes: the reference appends and then rewrites the whole table,
+so every staged row is written twice. Here ``flush`` hands the staged
+frame to the dedup rewrite instead of appending it first: one pass
+writes the merged table (append + dedup fused), the dedup shuffles once
+on the key (window, not dropDuplicates — SURVEY section 4 note on
+keep-last), and the swap keeps readers consistent (a table format with
+MERGE — Delta/Iceberg — replaces the swap at production scale). The
+flush reads the staging schema and row count from parquet footers on
+the driver and reads the table with that schema, so no Spark job infers
+a schema or probes for emptiness.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from youtube_etl_automated_pipeline_spark.operators.dedup import keep_last
+
+# footer key under which Spark's parquet writer stores the table schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def append_table(df: DataFrame, path: str) -> None:
@@ -47,34 +59,86 @@ def overwrite_table(df: DataFrame, path: str) -> None:
     os.replace(tmp, path)
 
 
+def _data_files(path: str) -> list[str]:
+    """The parquet data files of a flat table directory, as the sinks
+    write it."""
+    return [os.path.join(path, n) for n in sorted(os.listdir(path)) if n.endswith(".parquet")]
+
+
+def _footer_schema(footer) -> StructType:
+    """The Spark schema a parquet footer records (Spark's writer stores
+    it under _SPARK_SCHEMA_KEY; other writers get the arrow mapping)."""
+    meta = footer.metadata or {}
+    if _SPARK_SCHEMA_KEY in meta:
+        return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return from_arrow_schema(footer.schema.to_arrow_schema())
+
+
+def _check_table_schema(path: str, schema: StructType) -> None:
+    """Raise unless the table at ``path`` has ``schema``'s columns and
+    types: reading it with a foreign schema would silently drop its
+    extra columns and null the missing ones. Reads one parquet footer
+    on the driver (every file of the table comes from one rewrite)."""
+    import pyarrow.parquet as pq
+
+    files = _data_files(path)
+    if not files:
+        return
+    table = _footer_schema(pq.read_metadata(files[0]))
+
+    def shape(s: StructType) -> dict[str, str]:
+        return {f.name: f.dataType.simpleString() for f in s.fields}
+
+    if shape(table) != shape(schema):
+        raise ValueError(
+            f"staged schema {schema.simpleString()} does not match table {path} "
+            f"schema {table.simpleString()}"
+        )
+
+
 def dedup_table_swap(
-    spark: SparkSession, path: str, key: str = "video_id", order_col: str | None = None
+    spark: SparkSession,
+    path: str,
+    key: str = "video_id",
+    order_col: str | None = None,
+    staged: DataFrame | None = None,
 ) -> None:
     """A6/W1: the reference's BigQuery dedup
     (``ROW_NUMBER() OVER (PARTITION BY video_id ORDER BY ...) ...
     WHERE row_num = 1`` + table swap, ingestdatainbigquery.py:84-96).
+
+    With ``staged``, the rewrite covers ``table ∪ staged`` (the table
+    may not exist yet): the append and the dedup in one write. The
+    table is read with the staged frame's schema after a footer check
+    that the two agree, so no second schema inference runs.
 
     The reference orders by CURRENT_TIMESTAMP() — a constant, i.e.
     arbitrary-row-per-key. We demand a real ``order_col`` for
     determinism (keep-last); pass None to reproduce the reference's
     arbitrary pick (dropDuplicates).
     """
-    table = spark.read.parquet(path)
+    if staged is None:
+        table = spark.read.parquet(path)
+    elif os.path.exists(path):
+        _check_table_schema(path, staged.schema)
+        table = spark.read.schema(staged.schema).parquet(path).unionByName(staged)
+    else:
+        table = staged
     if order_col is None:
         deduped = table.dropDuplicates([key])
     else:
         deduped = keep_last(table, [key], [order_col])
-    tmp = path + ".inprogress"
-    deduped.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
-    os.replace(tmp, path)
+    overwrite_table(deduped, path)
 
 
-def truncate_staging(spark: SparkSession, path: str) -> None:
+def truncate_staging(spark: SparkSession, path: str, schema: StructType | None = None) -> None:
     """K5: clear the staging table but keep its schema (the reference
-    re-appends the header row after clear(), :103-112)."""
-    schema_keeper = spark.read.parquet(path).limit(0)
-    overwrite_table(schema_keeper, path)
+    re-appends the header row after clear(), :103-112). A caller that
+    already holds the schema passes it, saving the inference pass."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    overwrite_table(reader.parquet(path).limit(0), path)
 
 
 def flush(
@@ -84,15 +148,28 @@ def flush(
     key: str = "video_id",
     order_col: str | None = None,
 ) -> None:
-    """E3: staging -> durable table append -> window dedup + swap ->
+    """E3: staging -> one keep-last rewrite of ``table ∪ staging`` ->
     staging truncate (ingestdatainbigquery.py:115-136). Empty staging
-    short-circuits (P9, :119-121)."""
-    staging = spark.read.parquet(staging_path)
-    if staging.isEmpty():
+    short-circuits (P9, :119-121) and leaves the table untouched.
+
+    The reference appends staging into the table and then dedups the
+    whole table; here the staged frame goes straight into the dedup
+    rewrite (``dedup_table_swap(staged=...)``), so the staged rows are
+    written once and a staging/table schema mismatch raises before
+    anything is written. The staging schema and row count come from
+    its parquet footers, so neither schema inference nor an emptiness
+    probe runs a Spark job: the flush runs the rewrite and the
+    truncate only.
+    """
+    import pyarrow.parquet as pq
+
+    footers = [pq.read_metadata(f) for f in _data_files(staging_path)]
+    if not sum(f.num_rows for f in footers):
         return
-    append_table(staging, table_path)
-    dedup_table_swap(spark, table_path, key, order_col)
-    truncate_staging(spark, staging_path)
+    schema = _footer_schema(footers[0])
+    staging = spark.read.schema(schema).parquet(staging_path)
+    dedup_table_swap(spark, table_path, key, order_col, staged=staging)
+    truncate_staging(spark, staging_path, schema)
 
 
 def write_snapshot(df: DataFrame, table_dir: str) -> int:
