@@ -6,6 +6,8 @@ vs matched nulls, guarded divisions, tz split, H:MM:SS, code cleaning.
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -233,6 +235,9 @@ def test_lookup_empty_dim_is_all_misses(spark):
         ("int", [7, 8], "bigint", [7, 2**40]),
         ("bigint", [7, 2**40], "int", [7, 8]),
         ("double", [7.0, 7.5], "int", [7, 8]),
+        # string vs decimal compares as double: "7.001" must not match 7.00
+        ("string", ["7.001", "7"], "decimal(10,2)", [Decimal("7")]),
+        ("decimal(10,2)", [Decimal("7")], "string", ["7", "7.001"]),
     ],
 )
 def test_lookup_key_coercion_matches_the_join(spark, fact_type, fact_keys, dim_type, dim_keys):

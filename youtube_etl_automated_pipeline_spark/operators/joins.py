@@ -14,29 +14,48 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType, MapType, StringType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    StructField,
+    StructType,
+    _parse_datatype_json_string,
+)
 
 from youtube_etl_automated_pipeline_spark.operators.dedup import keep_last
 
 
 # A config dim rides in the plan as one literal map: Catalyst folds it,
-# every task carries it and each fact row scans it linearly. Dims past
-# this size belong in a join, so the lookup refuses them.
+# every task carries it and each fact row scans it linearly. At this
+# bound (4 cores) the lookup matched the keep-last + broadcast join it
+# replaces on a 51k-row fact, but a fact row that misses all 1000 keys
+# costs ~1.3 us more than a hash probe: 2M all-miss rows took 3.4 s
+# against the join's 1.2 s. Dims past this size belong in a join, so
+# the lookup refuses them.
 LOOKUP_MAX_ROWS = 1000
+
+# Spark renders the dim rows as JSON and parses them back into the
+# literal: microsecond timestamps, and a failed parse raises instead of
+# turning an entry into nulls.
+_JSON_OPTIONS = {
+    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+    "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
+    "mode": "FAILFAST",
+}
 
 
 def _join_key_type(fact_type: DataType, dim_type: DataType, spark) -> DataType:
-    """The type an equi-join compares the two keys in: a string key is
-    cast to the other side's type, otherwise both widen to their common
-    type (the analyzer's binary-comparison coercion)."""
+    """The type an equi-join compares the two keys in, as the analyzer
+    coerces ``fact_key = dim_key`` (e.g. string vs int compares as int,
+    string vs decimal as double): read off the analyzed filter of an
+    empty relation, so no Spark job runs."""
     if fact_type == dim_type:
         return fact_type
-    if isinstance(fact_type, StringType) != isinstance(dim_type, StringType):
-        return dim_type if isinstance(fact_type, StringType) else fact_type
     probe = spark.createDataFrame(
         [], StructType([StructField("f", fact_type), StructField("d", dim_type)])
     )
-    return probe.select(F.coalesce("f", "d")).schema[0].dataType
+    condition = probe.where(F.col("f") == F.col("d"))._jdf.queryExecution().analyzed().condition()
+    return _parse_datatype_json_string(condition.left().dataType().json())
 
 
 def _collect_bounded(dim: DataFrame) -> list:
@@ -79,15 +98,21 @@ def lookup_columns(
     values = [f for f in dim.schema.fields if f.name != on]
     fact_type = fact.schema[on].dataType
     key_type = _join_key_type(fact_type, dim.schema[on].dataType, dim.sparkSession)
-    rows = _collect_bounded(dim.select(F.col(on).cast(key_type), *[f.name for f in values]))
-    last = {r[0]: r[1:] for r in rows if r[0] is not None}  # later rows overwrite
+    key = F.col(on).cast(key_type)
+    entry = F.struct(key.alias("k"), F.struct(*[f.name for f in values]).alias("v"))
+    rows = _collect_bounded(dim.select(key, F.to_json(entry, _JSON_OPTIONS)))
+    last = {k: doc for k, doc in rows if k is not None}  # later rows overwrite
     entry_type = StructType([StructField(f.name, f.dataType) for f in values])
     if last and values:
-        folded = F.create_map(
-            *[x for k, vs in last.items() for x in (F.lit(k), F.struct(*map(F.lit, vs)))]
-        ).cast(MapType(key_type, entry_type))
-        fact_key = F.col(on) if fact_type == key_type else F.col(on).cast(key_type)
-        hit = folded[fact_key]
+        # one literal JSON array, parsed back by Spark into the types it
+        # was rendered from; Catalyst folds the parse into a literal map
+        entries = ArrayType(
+            StructType([StructField("k", key_type), StructField("v", entry_type)])
+        )
+        folded = F.map_from_entries(
+            F.from_json(F.lit(f"[{','.join(last.values())}]"), entries, _JSON_OPTIONS)
+        )
+        hit = folded[F.col(on) if fact_type == key_type else F.col(on).cast(key_type)]
     else:
         hit = F.lit(None).cast(entry_type)
     out = {}

@@ -7,11 +7,11 @@ and swap it in place (:84-96), then truncate staging keeping the
 header (:103-112). Re-expressed over parquet table directories:
 
 - K4  append_table      - mode('append') / create on first write
-- A6  dedup_table_swap  - the same ROW_NUMBER keep-last, written to a
-                          temp dir and atomically swapped; given the
-                          staged frame it rewrites ``table ∪ staged``
+- A6  dedup_table_swap  - the same ROW_NUMBER keep-last over
+                          ``table ∪ staged``, written to a temp dir and
+                          atomically swapped
 - K5  truncate_staging  - overwrite with the empty (limit 0) frame,
-                          schema preserved
+                          schema preserved from a parquet footer
 - E3  flush             - one merge rewrite, then the truncate
 
 Scale notes: the reference appends and then rewrites the whole table,
@@ -65,9 +65,18 @@ def _data_files(path: str) -> list[str]:
     return [os.path.join(path, n) for n in sorted(os.listdir(path)) if n.endswith(".parquet")]
 
 
-def _footer_schema(footer) -> StructType:
-    """The Spark schema a parquet footer records (Spark's writer stores
-    it under _SPARK_SCHEMA_KEY; other writers get the arrow mapping)."""
+def _table_schema(path: str) -> StructType | None:
+    """The Spark schema the first parquet footer of ``path`` records
+    (Spark's writer stores it under _SPARK_SCHEMA_KEY; other writers get
+    the arrow mapping), read on the driver; None if no data file exists.
+    Every file of a sink table comes from one write, so one footer
+    speaks for all."""
+    import pyarrow.parquet as pq
+
+    files = _data_files(path)
+    if not files:
+        return None
+    footer = pq.read_metadata(files[0])
     meta = footer.metadata or {}
     if _SPARK_SCHEMA_KEY in meta:
         return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
@@ -79,14 +88,10 @@ def _footer_schema(footer) -> StructType:
 def _check_table_schema(path: str, schema: StructType) -> None:
     """Raise unless the table at ``path`` has ``schema``'s columns and
     types: reading it with a foreign schema would silently drop its
-    extra columns and null the missing ones. Reads one parquet footer
-    on the driver (every file of the table comes from one rewrite)."""
-    import pyarrow.parquet as pq
-
-    files = _data_files(path)
-    if not files:
+    extra columns and null the missing ones."""
+    table = _table_schema(path)
+    if table is None:
         return
-    table = _footer_schema(pq.read_metadata(files[0]))
 
     def shape(s: StructType) -> dict[str, str]:
         return {f.name: f.dataType.simpleString() for f in s.fields}
@@ -101,27 +106,25 @@ def _check_table_schema(path: str, schema: StructType) -> None:
 def dedup_table_swap(
     spark: SparkSession,
     path: str,
+    staged: DataFrame,
     key: str = "video_id",
     order_col: str | None = None,
-    staged: DataFrame | None = None,
 ) -> None:
     """A6/W1: the reference's BigQuery dedup
     (``ROW_NUMBER() OVER (PARTITION BY video_id ORDER BY ...) ...
-    WHERE row_num = 1`` + table swap, ingestdatainbigquery.py:84-96).
+    WHERE row_num = 1`` + table swap, ingestdatainbigquery.py:84-96),
+    over ``table ∪ staged``: the append and the dedup in one write.
 
-    With ``staged``, the rewrite covers ``table ∪ staged`` (the table
-    may not exist yet): the append and the dedup in one write. The
-    table is read with the staged frame's schema after a footer check
-    that the two agree, so no second schema inference runs.
+    The table may not exist yet. When it does, it is read with the
+    staged frame's schema after a footer check that the two agree, so
+    no second schema inference runs.
 
     The reference orders by CURRENT_TIMESTAMP() — a constant, i.e.
     arbitrary-row-per-key. We demand a real ``order_col`` for
     determinism (keep-last); pass None to reproduce the reference's
     arbitrary pick (dropDuplicates).
     """
-    if staged is None:
-        table = spark.read.parquet(path)
-    elif os.path.exists(path):
+    if os.path.exists(path):
         _check_table_schema(path, staged.schema)
         table = spark.read.schema(staged.schema).parquet(path).unionByName(staged)
     else:
@@ -133,12 +136,14 @@ def dedup_table_swap(
     overwrite_table(deduped, path)
 
 
-def truncate_staging(spark: SparkSession, path: str, schema: StructType | None = None) -> None:
+def truncate_staging(spark: SparkSession, path: str) -> None:
     """K5: clear the staging table but keep its schema (the reference
-    re-appends the header row after clear(), :103-112). A caller that
-    already holds the schema passes it, saving the inference pass."""
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    overwrite_table(reader.parquet(path).limit(0), path)
+    re-appends the header row after clear(), :103-112). The schema
+    comes from a parquet footer, so no inference pass runs."""
+    schema = _table_schema(path)
+    if schema is None:
+        raise ValueError(f"staging {path} holds no parquet file to take a schema from")
+    overwrite_table(spark.read.schema(schema).parquet(path).limit(0), path)
 
 
 def flush(
@@ -154,22 +159,19 @@ def flush(
 
     The reference appends staging into the table and then dedups the
     whole table; here the staged frame goes straight into the dedup
-    rewrite (``dedup_table_swap(staged=...)``), so the staged rows are
-    written once and a staging/table schema mismatch raises before
-    anything is written. The staging schema and row count come from
-    its parquet footers, so neither schema inference nor an emptiness
-    probe runs a Spark job: the flush runs the rewrite and the
-    truncate only.
+    rewrite (``dedup_table_swap``), so the staged rows are written once
+    and a staging/table schema mismatch raises before anything is
+    written. The staging schema and row count come from its parquet
+    footers, so neither schema inference nor an emptiness probe runs a
+    Spark job: the flush runs the rewrite and the truncate only.
     """
     import pyarrow.parquet as pq
 
-    footers = [pq.read_metadata(f) for f in _data_files(staging_path)]
-    if not sum(f.num_rows for f in footers):
+    if not sum(pq.read_metadata(f).num_rows for f in _data_files(staging_path)):
         return
-    schema = _footer_schema(footers[0])
-    staging = spark.read.schema(schema).parquet(staging_path)
-    dedup_table_swap(spark, table_path, key, order_col, staged=staging)
-    truncate_staging(spark, staging_path, schema)
+    staging = spark.read.schema(_table_schema(staging_path)).parquet(staging_path)
+    dedup_table_swap(spark, table_path, staging, key, order_col)
+    truncate_staging(spark, staging_path)
 
 
 def write_snapshot(df: DataFrame, table_dir: str) -> int:
