@@ -4,7 +4,7 @@
 SF01  ?= /root/testdata/sf0.01
 SF1   ?= /root/testdata/sf0.1
 
-.PHONY: strict-record bench test smoke etl
+.PHONY: strict-record bench test smoke etl stream
 
 # Full-registry bit-exact sweeps at both gate scales; paste the two
 # N/N lines into README's "standing record" each round.
@@ -25,6 +25,24 @@ etl:
 	  tests/test_plan_shapes.py::test_pipeline_e2e_no_cartesian_no_nested_loop \
 	  "tests/test_oracle_parity.py::test_query_matches_oracle[pipeline_e2e]" \
 	  "tests/test_oracle_parity.py::test_query_matches_oracle[broadcast_enrich_defaults]"
+
+# fast local check of the streaming runner: state postures, the
+# foreachBatch driver and the keep-last merge, TWS restarts, and the
+# oracle parity of the five benchmarked streaming queries
+STREAM_TESTS = test_foreach_batch_upsert_keep_last test_incremental_pipeline_equals_batch \
+  test_tws_user_peaks_or_env_gate test_stream_state_posture_is_read_off_the_plan_and_restored \
+  test_rocksdb_state_store_matches_default_provider test_checkpoint_state_width_is_sticky \
+  test_streaming_minhash_index_survives_restart
+STREAM_GATES = streaming_tws_inactive_users streaming_merge_cdc streaming_stream_stream_join \
+  streaming_incremental_agg streaming_session_window
+stream:
+	python -m pytest -q -p no:cacheprovider tests/test_streaming_merge.py \
+	  $(addprefix tests/test_streaming.py::,$(STREAM_TESTS)) \
+	  tests/test_engine7.py::test_streaming_transitions_restart_equals_oneshot_and_batch \
+	  tests/test_engine8.py::test_streaming_ewma_restart_equals_oneshot_and_batch \
+	  tests/test_engine8.py::test_streaming_funnel_restart_equals_oneshot_and_batch \
+	  "tests/test_sinks.py::test_flush_schema_mismatch_raises[upsert_batch]" \
+	  $(foreach q,$(STREAM_GATES),"tests/test_oracle_parity.py::test_query_matches_oracle[$(q)]")
 
 # fast sanity: entry() + a handful of cheap queries at sf0.001
 smoke:

@@ -146,9 +146,12 @@ def test_salted_join_spreads_hot_key_empirically(spark):
     dim = spark.range(100).select(
         F.col("id").alias("dk"), (F.col("id") * 7).alias("dval")
     )
+    # 32 reducers whatever the core count: 16 salts cannot spread the
+    # hot key over fewer reducers than get_spark's default of one per core
     confs = {
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": "32",
     }
     old = {k: spark.conf.get(k, None) for k in confs}
     try:

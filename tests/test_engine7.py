@@ -235,19 +235,14 @@ def test_streaming_transitions_restart_equals_oneshot_and_batch(
     from youtube_etl_automated_pipeline_spark.plans.queries_analytics import (
         event_transition_matrix,
     )
-    from youtube_etl_automated_pipeline_spark.session import (
-        ensure_protobuf_on_session,
-    )
     from youtube_etl_automated_pipeline_spark.streaming.incremental import (
         EVENTS_STREAM_SCHEMA,
-        tws_state_partitions,
-        stream_state_partitions,
+        tws_state_posture,
     )
     from youtube_etl_automated_pipeline_spark.streaming.stateful import (
         tws_transition_deltas,
     )
 
-    ensure_protobuf_on_session(spark)
     tbl = pq.read_table(os.path.join(SF_SMOKE, "events.parquet"))
     # split by ts order so batch 2 is strictly later arrivals
     import pyarrow.compute as pc
@@ -258,58 +253,46 @@ def test_streaming_transitions_restart_equals_oneshot_and_batch(
     src.mkdir()
     pq.write_table(tbl.slice(0, half), src / "a.parquet")
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
     captured: list[dict] = []
-    try:
-        def run(ckpt):
-            stream = (
-                spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(str(src))
-            )
 
-            def sink(batch_df, _bid):
-                for r in batch_df.collect():
-                    captured.append(
-                        (r["from_type"], r["to_type"], int(r["n"]))
-                    )
+    def run(ckpt):
+        stream = (
+            spark.readStream.schema(EVENTS_STREAM_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src))
+        )
 
-            with stream_state_partitions(spark, tws_state_partitions()):
-                q = (
-                    tws_transition_deltas(stream)
-                    .writeStream.foreachBatch(sink)
-                    .outputMode("update")
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
+        def sink(batch_df, _bid):
+            for r in batch_df.collect():
+                captured.append(
+                    (r["from_type"], r["to_type"], int(r["n"]))
                 )
-                q.awaitTermination()
 
-        run(str(tmp_path / "ckpt"))
-        pq.write_table(tbl.slice(half), src / "b.parquet")
-        run(str(tmp_path / "ckpt"))  # RESTART: state recovers
-        from collections import Counter
+        with tws_state_posture(spark):
+            q = (
+                tws_transition_deltas(stream)
+                .writeStream.foreachBatch(sink)
+                .outputMode("update")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
 
-        incremental = Counter()
-        for a, b, n in captured:
-            incremental[(a, b)] += n
+    run(str(tmp_path / "ckpt"))
+    pq.write_table(tbl.slice(half), src / "b.parquet")
+    run(str(tmp_path / "ckpt"))  # RESTART: state recovers
+    from collections import Counter
 
-        captured.clear()
-        run(str(tmp_path / "ckpt_ref"))  # one-shot over both files
-        oneshot = Counter()
-        for a, b, n in captured:
-            oneshot[(a, b)] += n
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    incremental = Counter()
+    for a, b, n in captured:
+        incremental[(a, b)] += n
+
+    captured.clear()
+    run(str(tmp_path / "ckpt_ref"))  # one-shot over both files
+    oneshot = Counter()
+    for a, b, n in captured:
+        oneshot[(a, b)] += n
 
     assert incremental == oneshot and len(oneshot) > 0
     batch = {

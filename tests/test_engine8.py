@@ -343,19 +343,14 @@ def test_streaming_ewma_restart_equals_oneshot_and_batch(spark, tmp_path):
     from youtube_etl_automated_pipeline_spark.plans.queries_analytics import (
         ewma_user_value,
     )
-    from youtube_etl_automated_pipeline_spark.session import (
-        ensure_protobuf_on_session,
-    )
     from youtube_etl_automated_pipeline_spark.streaming.incremental import (
         EVENTS_STREAM_SCHEMA,
-        stream_state_partitions,
-        tws_state_partitions,
+        tws_state_posture,
     )
     from youtube_etl_automated_pipeline_spark.streaming.stateful import (
         tws_ewma_user_value,
     )
 
-    ensure_protobuf_on_session(spark)
     tbl = pq.read_table(os.path.join(SF_SMOKE, "events.parquet"))
     import pyarrow.compute as pc
 
@@ -370,53 +365,41 @@ def test_streaming_ewma_restart_equals_oneshot_and_batch(spark, tmp_path):
     src.mkdir()
     pq.write_table(tbl.slice(0, half), src / "a.parquet")
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
     latest: dict = {}
-    try:
-        def run(ckpt):
-            stream = (
-                spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(str(src))
+
+    def run(ckpt):
+        stream = (
+            spark.readStream.schema(EVENTS_STREAM_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src))
+        )
+
+        def sink(batch_df, _bid):
+            for r in batch_df.collect():
+                u = r["user_id"]
+                row = (int(r["n_events"]), int(r["ewma_cents"]))
+                if u not in latest or row[0] > latest[u][0]:
+                    latest[u] = row
+
+        with tws_state_posture(spark):
+            q = (
+                tws_ewma_user_value(stream)
+                .writeStream.foreachBatch(sink)
+                .outputMode("update")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
             )
+            q.awaitTermination()
 
-            def sink(batch_df, _bid):
-                for r in batch_df.collect():
-                    u = r["user_id"]
-                    row = (int(r["n_events"]), int(r["ewma_cents"]))
-                    if u not in latest or row[0] > latest[u][0]:
-                        latest[u] = row
+    run(str(tmp_path / "ckpt"))
+    pq.write_table(tbl.slice(half), src / "b.parquet")
+    run(str(tmp_path / "ckpt"))  # RESTART: state recovers
+    incremental = dict(latest)
 
-            with stream_state_partitions(spark, tws_state_partitions()):
-                q = (
-                    tws_ewma_user_value(stream)
-                    .writeStream.foreachBatch(sink)
-                    .outputMode("update")
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-
-        run(str(tmp_path / "ckpt"))
-        pq.write_table(tbl.slice(half), src / "b.parquet")
-        run(str(tmp_path / "ckpt"))  # RESTART: state recovers
-        incremental = dict(latest)
-
-        latest.clear()
-        run(str(tmp_path / "ckpt_ref"))  # one-shot over both files
-        oneshot = dict(latest)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    latest.clear()
+    run(str(tmp_path / "ckpt_ref"))  # one-shot over both files
+    oneshot = dict(latest)
 
     assert incremental == oneshot and len(oneshot) > 0
     batch = {
@@ -568,19 +551,14 @@ def test_streaming_funnel_restart_equals_oneshot_and_batch(
     from youtube_etl_automated_pipeline_spark.plans.queries_engine8 import (
         sequence_funnel_regex,
     )
-    from youtube_etl_automated_pipeline_spark.session import (
-        ensure_protobuf_on_session,
-    )
     from youtube_etl_automated_pipeline_spark.streaming.incremental import (
         EVENTS_STREAM_SCHEMA,
-        stream_state_partitions,
-        tws_state_partitions,
+        tws_state_posture,
     )
     from youtube_etl_automated_pipeline_spark.streaming.stateful import (
         tws_funnel_seq,
     )
 
-    ensure_protobuf_on_session(spark)
     tbl = pq.read_table(os.path.join(SF_SMOKE, "events.parquet"))
     import pyarrow.compute as pc
 
@@ -595,57 +573,45 @@ def test_streaming_funnel_restart_equals_oneshot_and_batch(
     src.mkdir()
     pq.write_table(tbl.slice(0, half), src / "a.parquet")
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
     latest: dict = {}
-    try:
-        def run(ckpt):
-            stream = (
-                spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(str(src))
-            )
 
-            def sink(batch_df, _bid):
-                for r in batch_df.collect():
-                    u = r["user_id"]
-                    row = (
-                        int(r["seq_len"]),
-                        int(r["n_conversions"]),
-                        int(r["longest_run"]),
-                    )
-                    if u not in latest or row[0] > latest[u][0]:
-                        latest[u] = row
+    def run(ckpt):
+        stream = (
+            spark.readStream.schema(EVENTS_STREAM_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src))
+        )
 
-            with stream_state_partitions(spark, tws_state_partitions()):
-                q = (
-                    tws_funnel_seq(stream)
-                    .writeStream.foreachBatch(sink)
-                    .outputMode("update")
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
+        def sink(batch_df, _bid):
+            for r in batch_df.collect():
+                u = r["user_id"]
+                row = (
+                    int(r["seq_len"]),
+                    int(r["n_conversions"]),
+                    int(r["longest_run"]),
                 )
-                q.awaitTermination()
+                if u not in latest or row[0] > latest[u][0]:
+                    latest[u] = row
 
-        run(str(tmp_path / "ckpt"))
-        pq.write_table(tbl.slice(half), src / "b.parquet")
-        run(str(tmp_path / "ckpt"))  # RESTART: string state recovers
-        incremental = dict(latest)
+        with tws_state_posture(spark):
+            q = (
+                tws_funnel_seq(stream)
+                .writeStream.foreachBatch(sink)
+                .outputMode("update")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
 
-        latest.clear()
-        run(str(tmp_path / "ckpt_ref"))  # one-shot over both files
-        oneshot = dict(latest)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    run(str(tmp_path / "ckpt"))
+    pq.write_table(tbl.slice(half), src / "b.parquet")
+    run(str(tmp_path / "ckpt"))  # RESTART: string state recovers
+    incremental = dict(latest)
+
+    latest.clear()
+    run(str(tmp_path / "ckpt_ref"))  # one-shot over both files
+    oneshot = dict(latest)
 
     assert incremental == oneshot and len(oneshot) > 0
     batch = {

@@ -101,20 +101,34 @@ def test_pipeline_staging_write_and_build_job_budget(spark, tmp_path):
     assert len(ids) <= 4, ids
 
 
-@pytest.mark.parametrize("change", ["extra", "missing", "retyped"])
+@pytest.mark.parametrize("change", ["extra", "missing", "retyped", "upsert_batch"])
 def test_flush_schema_mismatch_raises(spark, tmp_path, change):
     """Reading the table with a foreign staged schema would silently
-    drop or null columns: the flush must refuse, before writing."""
+    drop or null columns: the flush, and a streaming upsert batch
+    against its state table, must refuse, before writing."""
     staging = str(tmp_path / "staging")
     table = str(tmp_path / "table")
     cust = load_table(spark, SF_SMOKE, "customer").limit(20).withColumn("_seq", F.lit(1))
+    retyped = cust.withColumn("c_acctbal", F.col("c_acctbal").cast("string"))
+    if change == "upsert_batch":
+        from youtube_etl_automated_pipeline_spark.streaming.incremental import (
+            foreach_batch_upsert,
+        )
+
+        upsert = foreach_batch_upsert(table, ["c_custkey"], ["_seq"])
+        upsert(cust, 0)
+        before = _listing(table)
+        with pytest.raises(ValueError, match="does not match table"):
+            upsert(retyped, 1)
+        assert _listing(table) == before
+        return
     cust.write.parquet(staging)
     sinks.flush(spark, staging, table, key="c_custkey", order_col="_seq")
 
     staged = {
         "extra": cust.withColumn("bonus", F.lit(1)),
         "missing": cust.drop("c_name"),
-        "retyped": cust.withColumn("c_acctbal", F.col("c_acctbal").cast("string")),
+        "retyped": retyped,
     }[change]
     sinks.overwrite_table(staged, staging)
     before = _listing(table)

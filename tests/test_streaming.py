@@ -319,38 +319,123 @@ def test_tws_user_peaks_or_env_gate(spark, tmp_path):
         tws_user_peaks,
     )
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
+    stream = read_events_stream(spark, SF_SMOKE)
+    out = run_stream_to_memory(
+        tws_user_peaks(stream), "tws_peaks_t", output_mode="update"
     )
+    rows = {r["user_id"]: r for r in out.collect()}
+    exact = (
+        load_table(spark, SF_SMOKE, "events")
+        .groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.max(F.expr("CAST(floor(value*100.0+0.5) AS BIGINT)")).alias(
+                "peak_cents"
+            ),
+        )
+    )
+    for r in exact.collect():
+        got = rows[r["user_id"]]
+        assert got["n_events"] == r["n_events"]
+        assert got["peak_cents"] == r["peak_cents"]
+
+
+def test_stream_state_posture_is_read_off_the_plan_and_restored(spark):
+    """run_stream_to_memory picks the state posture from the plan: a
+    transformWithState plan runs on RocksDB at tws_state_partitions()
+    state partitions, any other stateful plan at width 2 on the
+    default provider. Every conf a posture touches is back to its
+    prior value afterwards, also when the query raises."""
+    import json
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from youtube_etl_automated_pipeline_spark.streaming.incremental import (
+        read_events_stream,
+        run_stream_to_memory,
+        tumbling_window_agg,
+        tws_state_partitions,
+    )
+    from youtube_etl_automated_pipeline_spark.streaming.stateful import (
+        tws_user_peaks,
+    )
+
+    keys = (
+        "spark.sql.streaming.stateStore.providerClass",
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+    )
+    prior = {k: spark.conf.get(k, None) for k in keys}
+    progress: list[dict] = []
+
+    class Progress(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            progress.append(json.loads(event.progress.json))
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    def state_operators(name):
+        """The state operators of the runs named ``name``; progress
+        events arrive asynchronously."""
+        deadline = time.time() + 30
+        while time.time() < deadline:
+            ops = [
+                op
+                for p in list(progress)
+                if p["name"].startswith(name + "_")
+                for op in p["stateOperators"]
+            ]
+            if ops:
+                return ops
+            time.sleep(0.2)
+        return []
+
+    def rocksdb(op):
+        return any(k.startswith("rocksdb") for k in op["customMetrics"])
+
+    listener = Progress()
+    spark.streams.addListener(listener)
     try:
-        stream = read_events_stream(spark, SF_SMOKE)
-        out = run_stream_to_memory(
-            tws_user_peaks(stream), "tws_peaks_t", output_mode="update"
+        run_stream_to_memory(
+            tws_user_peaks(read_events_stream(spark, SF_SMOKE)),
+            "posture_tws",
+            output_mode="update",
+            skip_nodata=True,
         )
-        rows = {r["user_id"]: r for r in out.collect()}
-        exact = (
-            load_table(spark, SF_SMOKE, "events")
-            .groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.max(F.expr("CAST(floor(value*100.0+0.5) AS BIGINT)")).alias(
-                    "peak_cents"
-                ),
+        assert {k: spark.conf.get(k, None) for k in keys} == prior
+        with pytest.raises(Exception):
+            run_stream_to_memory(
+                tws_user_peaks(read_events_stream(spark, SF_SMOKE)),
+                "posture_raises",
+                output_mode="no_such_mode",
             )
+        assert {k: spark.conf.get(k, None) for k in keys} == prior
+        run_stream_to_memory(
+            tumbling_window_agg(read_events_stream(spark, SF_SMOKE)),
+            "posture_window",
         )
-        for r in exact.collect():
-            got = rows[r["user_id"]]
-            assert got["n_events"] == r["n_events"]
-            assert got["peak_cents"] == r["peak_cents"]
+        assert {k: spark.conf.get(k, None) for k in keys} == prior
+
+        tws = state_operators("posture_tws")
+        assert tws and all(
+            op["numShufflePartitions"] == tws_state_partitions() and rocksdb(op)
+            for op in tws
+        ), tws
+        window = state_operators("posture_window")
+        width = int(os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "2"))
+        assert window and all(
+            op["numShufflePartitions"] == width and not rocksdb(op) for op in window
+        ), window
     finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+        spark.streams.removeListener(listener)
 
 
 def test_rocksdb_state_store_matches_default_provider(spark):

@@ -10,9 +10,9 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMOKE
 from youtube_etl_automated_pipeline_spark.streaming.merge import (
     CDC_SCHEMA,
+    cdc_run_dir,
     foreach_batch_merge,
     live_rows,
-    merge_batch,
     read_state,
 )
 
@@ -21,18 +21,26 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_tombstone_blocks_late_lower_seq_update(spark):
+def test_tombstone_blocks_late_lower_seq_update(spark, tmp_path):
     """A delete (seq 10) followed by a LATE-arriving lower-seq update
     (seq 5) in a later batch must keep the key dead — the reason
     tombstones stay in state instead of being dropped at merge time."""
-    state = spark.createDataFrame([(1, 100, "S", 0)], CDC_SCHEMA)
+    seed = spark.createDataFrame([(1, 100, "S", 0)], CDC_SCHEMA)
     b1 = spark.createDataFrame([(1, None, "D", 10)], CDC_SCHEMA)
     b2 = spark.createDataFrame([(1, 999, "U", 5)], CDC_SCHEMA)
-    after = merge_batch(merge_batch(state, b1), b2)
+
+    def merged(name, batches):
+        state_dir = str(tmp_path / name)
+        seed.write.parquet(state_dir)
+        apply_fn = foreach_batch_merge(state_dir)
+        for batch_id, batch in enumerate(batches):
+            apply_fn(batch, batch_id)
+        return read_state(spark, state_dir)
+
+    after = merged("in_order", [b1, b2])
     assert _rows(live_rows(after)) == []
     # and the reverse order of arrival gives the same state (associative)
-    after_rev = merge_batch(merge_batch(state, b2), b1)
-    assert _rows(after) == _rows(after_rev)
+    assert _rows(after) == _rows(merged("reversed", [b2, b1]))
 
 
 def test_merge_batch_retry_is_noop(spark, tmp_path):
@@ -64,12 +72,9 @@ def test_cdc_gate_runs_three_batches_and_is_rerunnable(spark):
     )
 
     first = _rows(streaming_merge_cdc(spark, SF_SMOKE))
-    sf_tag = os.path.basename(os.path.normpath(SF_SMOKE))
-    # run/ is the per-invocation dir (fixture/ is the memoized source
-    # files + base snapshot shared across runs)
-    commits = os.path.join(
-        "/tmp/spark_graft_cdc", sf_tag, "run", "ckpt", "commits"
-    )
+    # the per-invocation run dir (the memoized source files + base
+    # snapshot live in a fixture dir shared across runs)
+    commits = os.path.join(cdc_run_dir(SF_SMOKE), "ckpt", "commits")
     done = [f for f in os.listdir(commits) if not f.startswith(".")]
     assert sorted(done) == ["0", "1", "2"]
     assert len(first) > 0

@@ -17,17 +17,6 @@ def iso_utc(ts: Column) -> Column:
     return F.date_format(ts, ISO_UTC_FMT)
 
 
-def safe_date_normalize(date_str: Column, default: str = "2024-01-01") -> Column:
-    """F13: parse 'yyyy-MM-dd', any failure -> default
-    (dataprocessing.py:63-69). ``to_date`` yields null on failure,
-    mirroring the reference's try/except.
-    """
-    return F.coalesce(
-        F.date_format(F.to_date(F.trim(date_str), "yyyy-MM-dd"), "yyyy-MM-dd"),
-        F.lit(default),
-    )
-
-
 def utc_to_local_date_time(published_at: Column, tz: str = "Asia/Karachi") -> tuple[Column, Column]:
     """F14: ISO UTC string -> (local date 'yyyy-MM-dd', local time 'HH:mm:ss')
     (dataprocessing3.py:28-43). Empty/malformed input -> ('','').

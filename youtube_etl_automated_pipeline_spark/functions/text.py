@@ -63,12 +63,6 @@ def last_char(code: Column) -> Column:
     ).otherwise(F.substring(code, -1, 1))
 
 
-def lowercase_count(col: Column) -> Column:
-    """F5: count of Unicode-lowercase chars (dataingestion2.py:51 uses
-    ``str.islower()``, which is Unicode-aware)."""
-    return F.length(F.regexp_replace(col, r"[^\p{Ll}]", ""))
-
-
 def sanitize_column_name(name: str) -> str:
     """F8: BigQuery-safe column names (ingestdatainbigquery.py:37-46).
 

@@ -655,40 +655,20 @@ def streaming_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     State is ONE row per user (O(users), watermark-free); deltas are
     |types|^2-bounded per user per batch. The null-key quarantine and
     the in-state null-type encoding are the round-8 TWS contracts."""
-    from youtube_etl_automated_pipeline_spark.session import (
-        ensure_protobuf_on_session,
-    )
     from youtube_etl_automated_pipeline_spark.streaming.incremental import (
         read_events_stream,
         run_stream_to_memory,
-        tws_state_partitions,
     )
     from youtube_etl_automated_pipeline_spark.streaming.stateful import (
         tws_transition_deltas,
     )
 
-    ensure_protobuf_on_session(spark)
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
+    deltas = run_stream_to_memory(
+        tws_transition_deltas(read_events_stream(spark, sf_dir)),
+        "tws_transitions",
+        output_mode="update",
+        skip_nodata=True,
     )
-    try:
-        stream = read_events_stream(spark, sf_dir)
-        deltas = run_stream_to_memory(
-            tws_transition_deltas(stream),
-            "tws_transitions",
-            output_mode="update",
-            skip_nodata=True,
-            state_partitions=tws_state_partitions(),
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     cells = deltas.groupBy("from_type", "to_type").agg(
         F.sum("n").cast("bigint").alias("n_transitions")
     )

@@ -970,40 +970,20 @@ def streaming_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer fold. The rollup keeps each user's LAST emission via a
     keep-max on the strictly-increasing n_events — a deterministic
     collapse of the update-mode output."""
-    from youtube_etl_automated_pipeline_spark.session import (
-        ensure_protobuf_on_session,
-    )
     from youtube_etl_automated_pipeline_spark.streaming.incremental import (
         read_events_stream,
         run_stream_to_memory,
-        tws_state_partitions,
     )
     from youtube_etl_automated_pipeline_spark.streaming.stateful import (
         tws_ewma_user_value,
     )
 
-    ensure_protobuf_on_session(spark)
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
+    out = run_stream_to_memory(
+        tws_ewma_user_value(read_events_stream(spark, sf_dir)),
+        "tws_ewma",
+        output_mode="update",
+        skip_nodata=True,
     )
-    try:
-        stream = read_events_stream(spark, sf_dir)
-        out = run_stream_to_memory(
-            tws_ewma_user_value(stream),
-            "tws_ewma",
-            output_mode="update",
-            skip_nodata=True,
-            state_partitions=tws_state_partitions(),
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     last = out.groupBy("user_id").agg(
         F.max(F.struct("n_events", "ewma_cents")).alias("s")
     )
@@ -1526,40 +1506,20 @@ def streaming_funnel_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries); each batch's work is one state-partition shuffle plus
     an O(len) scan per touched user. The rollup keeps each user's
     LAST emission via keep-max on the strictly-increasing seq_len."""
-    from youtube_etl_automated_pipeline_spark.session import (
-        ensure_protobuf_on_session,
-    )
     from youtube_etl_automated_pipeline_spark.streaming.incremental import (
         read_events_stream,
         run_stream_to_memory,
-        tws_state_partitions,
     )
     from youtube_etl_automated_pipeline_spark.streaming.stateful import (
         tws_funnel_seq,
     )
 
-    ensure_protobuf_on_session(spark)
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
+    out = run_stream_to_memory(
+        tws_funnel_seq(read_events_stream(spark, sf_dir)),
+        "tws_funnel",
+        output_mode="update",
+        skip_nodata=True,
     )
-    try:
-        stream = read_events_stream(spark, sf_dir)
-        out = run_stream_to_memory(
-            tws_funnel_seq(stream),
-            "tws_funnel",
-            output_mode="update",
-            skip_nodata=True,
-            state_partitions=tws_state_partitions(),
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     last = out.groupBy("user_id").agg(
         F.max(
             F.struct("seq_len", "n_conversions", "longest_run")

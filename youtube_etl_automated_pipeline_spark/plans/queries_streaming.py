@@ -20,7 +20,6 @@ from youtube_etl_automated_pipeline_spark.streaming.incremental import (
     run_stream_to_memory,
     session_window_agg,
     tumbling_window_agg,
-    tws_state_partitions,
 )
 
 
@@ -490,6 +489,7 @@ def streaming_merge_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time
 
     from youtube_etl_automated_pipeline_spark.streaming.merge import (
+        cdc_run_dir,
         live_rows,
         read_state,
         run_cdc_merge_stream,
@@ -532,11 +532,9 @@ def streaming_merge_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.utime(dst, (t0 + 10 * b, t0 + 10 * b))
         open(os.path.join(fixture, "_READY"), "w").close()
 
-    from youtube_etl_automated_pipeline_spark.session import fast_scratch_dir
-
     # per-run state on tmpfs (r08): the 3-batch MERGE rewrites the
     # state parquet three times — on ext4 /tmp that is pure fsync tax
-    run_dir = fast_scratch_dir("cdc", sf_tag)
+    run_dir = cdc_run_dir(sf_dir)
     shutil.rmtree(run_dir, ignore_errors=True)
     state = os.path.join(run_dir, "state")
     ckpt = os.path.join(run_dir, "ckpt")
@@ -987,32 +985,12 @@ def streaming_tws_user_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
         tws_user_peaks,
     )
 
-    from youtube_etl_automated_pipeline_spark.session import (
-        ensure_protobuf_on_session,
+    updates = run_stream_to_memory(
+        tws_user_peaks(read_events_stream(spark, sf_dir)),
+        "tws_peaks",
+        output_mode="update",
+        skip_nodata=True,
     )
-
-    ensure_protobuf_on_session(spark)  # caller-provided sessions too
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        stream = read_events_stream(spark, sf_dir)
-        updates = run_stream_to_memory(
-            tws_user_peaks(stream),
-            "tws_peaks",
-            output_mode="update",
-            skip_nodata=True,
-            state_partitions=tws_state_partitions(),
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     final = keep_first(updates, ["user_id"], [F.col("n_events").desc()])
     return final.select("user_id", "n_events", "peak_cents").orderBy("user_id")
 
@@ -1032,32 +1010,12 @@ def streaming_tws_user_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         tws_user_topk,
     )
 
-    from youtube_etl_automated_pipeline_spark.session import (
-        ensure_protobuf_on_session,
+    updates = run_stream_to_memory(
+        tws_user_topk(read_events_stream(spark, sf_dir)),
+        "tws_topk",
+        output_mode="update",
+        skip_nodata=True,
     )
-
-    ensure_protobuf_on_session(spark)  # caller-provided sessions too
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        stream = read_events_stream(spark, sf_dir)
-        updates = run_stream_to_memory(
-            tws_user_topk(stream),
-            "tws_topk",
-            output_mode="update",
-            skip_nodata=True,
-            state_partitions=tws_state_partitions(),
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     final = keep_first(updates, ["user_id"], [F.col("n_seen").desc()])
     return final.select("user_id", "n_seen", "top_cents").orderBy("user_id")
 
@@ -1076,32 +1034,12 @@ def streaming_tws_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         tws_user_type_counts,
     )
 
-    from youtube_etl_automated_pipeline_spark.session import (
-        ensure_protobuf_on_session,
+    updates = run_stream_to_memory(
+        tws_user_type_counts(read_events_stream(spark, sf_dir)),
+        "tws_typemap",
+        output_mode="update",
+        skip_nodata=True,
     )
-
-    ensure_protobuf_on_session(spark)  # caller-provided sessions too
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        stream = read_events_stream(spark, sf_dir)
-        updates = run_stream_to_memory(
-            tws_user_type_counts(stream),
-            "tws_typemap",
-            output_mode="update",
-            skip_nodata=True,
-            state_partitions=tws_state_partitions(),
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     final = keep_first(
         updates, ["user_id", "event_type"], [F.col("n").desc()]
     )
@@ -1127,31 +1065,11 @@ def streaming_tws_inactive_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         tws_inactive_users,
     )
 
-    from youtube_etl_automated_pipeline_spark.session import (
-        ensure_protobuf_on_session,
+    out = run_stream_to_memory(
+        tws_inactive_users(read_events_stream(spark, sf_dir)),
+        "tws_inactive",
+        output_mode="append",
     )
-
-    ensure_protobuf_on_session(spark)  # caller-provided sessions too
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        stream = read_events_stream(spark, sf_dir)
-        out = run_stream_to_memory(
-            tws_inactive_users(stream),
-            "tws_inactive",
-            output_mode="append",
-            state_partitions=tws_state_partitions(),
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     return out.select("user_id", "n_events", "last_ms").orderBy("user_id")
 
 

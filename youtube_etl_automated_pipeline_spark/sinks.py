@@ -31,6 +31,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -107,33 +108,33 @@ def dedup_table_swap(
     spark: SparkSession,
     path: str,
     staged: DataFrame,
-    key: str = "video_id",
-    order_col: str | None = None,
-) -> None:
+    keys: Sequence[str],
+    order: Sequence[str],
+) -> DataFrame:
     """A6/W1: the reference's BigQuery dedup
     (``ROW_NUMBER() OVER (PARTITION BY video_id ORDER BY ...) ...
     WHERE row_num = 1`` + table swap, ingestdatainbigquery.py:84-96),
-    over ``table ∪ staged``: the append and the dedup in one write.
+    over ``table ∪ staged``: the append and the dedup in one write,
+    keeping the last row per ``keys`` by ``order``. The one keep-last
+    merge of the package: the flush, the streaming upsert and the CDC
+    merge all rewrite through it. Returns the frame it wrote.
 
     The table may not exist yet. When it does, it is read with the
     staged frame's schema after a footer check that the two agree, so
-    no second schema inference runs.
+    no second schema inference runs and a mismatch raises before
+    anything is written.
 
     The reference orders by CURRENT_TIMESTAMP() — a constant, i.e.
-    arbitrary-row-per-key. We demand a real ``order_col`` for
-    determinism (keep-last); pass None to reproduce the reference's
-    arbitrary pick (dropDuplicates).
+    arbitrary-row-per-key. We demand a real ``order`` for determinism.
     """
     if os.path.exists(path):
         _check_table_schema(path, staged.schema)
         table = spark.read.schema(staged.schema).parquet(path).unionByName(staged)
     else:
         table = staged
-    if order_col is None:
-        deduped = table.dropDuplicates([key])
-    else:
-        deduped = keep_last(table, [key], [order_col])
+    deduped = keep_last(table, list(keys), list(order))
     overwrite_table(deduped, path)
+    return deduped
 
 
 def truncate_staging(spark: SparkSession, path: str) -> None:
@@ -150,8 +151,8 @@ def flush(
     spark: SparkSession,
     staging_path: str,
     table_path: str,
-    key: str = "video_id",
-    order_col: str | None = None,
+    key: str,
+    order_col: str,
 ) -> None:
     """E3: staging -> one keep-last rewrite of ``table ∪ staging`` ->
     staging truncate (ingestdatainbigquery.py:115-136). Empty staging
@@ -170,7 +171,7 @@ def flush(
     if not sum(pq.read_metadata(f).num_rows for f in _data_files(staging_path)):
         return
     staging = spark.read.schema(_table_schema(staging_path)).parquet(staging_path)
-    dedup_table_swap(spark, table_path, staging, key, order_col)
+    dedup_table_swap(spark, table_path, staging, [key], [order_col])
     truncate_staging(spark, staging_path)
 
 
@@ -252,11 +253,7 @@ def compact_table(
     ]
     total_bytes = sum(os.path.getsize(f) for f in files_before)
     n_out = max(1, -(-total_bytes // target_file_bytes))  # ceil div
-    df = spark.read.parquet(path)
-    tmp = path + ".compacting"
-    df.coalesce(int(n_out)).write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
-    os.replace(tmp, path)
+    overwrite_table(spark.read.parquet(path).coalesce(int(n_out)), path)
     files_after = [f for f in os.listdir(path) if f.endswith(".parquet")]
     return len(files_before), len(files_after)
 

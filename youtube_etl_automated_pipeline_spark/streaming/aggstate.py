@@ -35,9 +35,10 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from youtube_etl_automated_pipeline_spark.sinks import overwrite_table
 from youtube_etl_automated_pipeline_spark.streaming.incremental import (
     record_batch_plan,
-    record_stream_plan,
+    run_foreach_batch,
 )
 
 
@@ -58,12 +59,7 @@ def write_batch_partials(
         *[expr.alias(name) for name, expr in measures.items()]
     )
     record_batch_plan("agg_partials_batch", partials)
-    tmp = _batch_dir(state_dir, batch_id) + ".inprogress"
-    partials.write.mode("overwrite").parquet(tmp)
-    final = _batch_dir(state_dir, batch_id)
-    if os.path.exists(final):
-        shutil.rmtree(final)
-    os.replace(tmp, final)
+    overwrite_table(partials, _batch_dir(state_dir, batch_id))
 
 
 def foreach_batch_partials(
@@ -109,14 +105,8 @@ def compact(spark: SparkSession, state_dir: str, keys: Sequence[str]) -> None:
     dirs = _partial_dirs(state_dir)
     if not dirs:
         return
-    folded = read_view(spark, state_dir, keys)
-    tmp = os.path.join(state_dir, "base.inprogress")
-    folded.write.mode("overwrite").parquet(tmp)
-    base = os.path.join(state_dir, "base")
     old_batches = [d for d in dirs if os.path.basename(d) != "base"]
-    if os.path.exists(base):
-        shutil.rmtree(base)
-    os.replace(tmp, base)
+    overwrite_table(read_view(spark, state_dir, keys), os.path.join(state_dir, "base"))
     for d in old_batches:
         shutil.rmtree(d)
 
@@ -129,19 +119,9 @@ def run_partials_stream(
     measures: dict[str, Column],
 ) -> None:
     """Drive a stream through the partial-aggregate sink to completion."""
-    from youtube_etl_automated_pipeline_spark.streaming.incremental import (
-        stream_state_partitions,
+    run_foreach_batch(
+        stream,
+        foreach_batch_partials(state_dir, keys, measures),
+        checkpoint_dir,
+        "agg_partials_stream",
     )
-
-    with stream_state_partitions(stream.sparkSession):
-        query = (
-            stream.writeStream.foreachBatch(
-                foreach_batch_partials(state_dir, keys, measures)
-            )
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        record_stream_plan("agg_partials_stream", query)

@@ -25,7 +25,6 @@ from __future__ import annotations
 
 import itertools
 import os
-import shutil
 from collections.abc import Callable, Sequence
 from contextlib import contextmanager
 
@@ -33,7 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from youtube_etl_automated_pipeline_spark.functions.compat import units
-from youtube_etl_automated_pipeline_spark.operators.dedup import keep_last
+from youtube_etl_automated_pipeline_spark.sinks import dedup_table_swap
 
 # Schema for event files whose ts column is PHYSICALLY int64 nanos
 # (files written by our own sinks/tests as bigint). The batch path
@@ -165,6 +164,23 @@ def session_window_agg(
 
 
 @contextmanager
+def _conf_scope(spark, confs: dict[str, str]):
+    """Set ``confs`` for the block; on exit restore each as it was, or
+    unset it if it was unset."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+@contextmanager
 def stream_state_partitions(spark, n: int | str | None = None):
     """Pin the STREAMING state partition count for the duration of a
     query start: stateful operators fix their partition count at the
@@ -181,9 +197,10 @@ def stream_state_partitions(spark, n: int | str | None = None):
     ``SPARK_GRAFT_STREAM_STATE_PARTITIONS`` to hundreds before the
     FIRST run of a checkpoint (changing it later requires a state
     rebuild — that is Spark's contract, not ours). ``n`` overrides
-    per query: the TWS family passes ``tws_state_partitions()``
-    because its per-partition Python state workers PARALLELIZE real
-    work — narrowing those serializes it (measured slower at 2).
+    the width; transformWithState plans run under ``tws_state_posture``
+    instead, because their per-partition Python state workers
+    PARALLELIZE real work — narrowing those serializes it (measured
+    slower at 2).
 
     MIGRATION (default changed 8 -> 2 in round 4): the state-store
     partition count is frozen into a checkpoint at its first commit —
@@ -201,12 +218,8 @@ def stream_state_partitions(spark, n: int | str | None = None):
     callers are affected."""
     if n is None:
         n = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "2")
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
+    with _conf_scope(spark, {"spark.sql.shuffle.partitions": str(n)}):
         yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def tws_state_partitions() -> int:
@@ -269,17 +282,64 @@ def quiet_state_server_logs(spark) -> None:
     setattr(sc, _QUIET_MARKER, True)
 
 
+@contextmanager
+def tws_state_posture(spark):
+    """The state posture of a transformWithState query: the RocksDB
+    state store provider (the TWS operator requires it), the
+    ``tws_state_partitions()`` width and a quiet state server log. On
+    exit every conf is restored as it was, or unset if it was unset.
+
+    Worker-side ``google.protobuf`` is not wired here: a PythonFunction
+    snapshots ``sc.environment`` and the shipped includes when the plan
+    is BUILT, so streaming/stateful.py wires it before it builds a TWS
+    node (a bare session that wires it only at query start fails)."""
+    quiet_state_server_logs(spark)
+    with _conf_scope(
+        spark,
+        {
+            "spark.sql.streaming.stateStore.providerClass": (
+                "org.apache.spark.sql.execution.streaming.state."
+                "RocksDBStateStoreProvider"
+            ),
+            "spark.sql.shuffle.partitions": str(tws_state_partitions()),
+        },
+    ):
+        yield
+
+
+def _holds_transform_with_state(df: DataFrame) -> bool:
+    """Whether ``df``'s logical plan has a TransformWithStateInPySpark
+    node, read off the plan tree (a few ms of py4j calls)."""
+    stack = [df._jdf.queryExecution().logical()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "TransformWithStateInPySpark":
+            return True
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return False
+
+
+def state_posture(df: DataFrame):
+    """The state posture ``df`` starts under: ``tws_state_posture`` for
+    a transformWithState plan, ``stream_state_partitions`` otherwise."""
+    spark = df.sparkSession
+    if _holds_transform_with_state(df):
+        return tws_state_posture(spark)
+    return stream_state_partitions(spark)
+
+
 def run_stream_to_memory(
     result: DataFrame,
     name: str = "stream_result",
     output_mode: str = "complete",
     skip_nodata: bool = False,
-    state_partitions: int | str | None = None,
 ) -> DataFrame:
     """Run a streaming plan to completion with trigger(availableNow)
-    into a memory sink; returns the sink table. availableNow processes
-    everything currently in the source then stops — the deterministic
-    'catch-up run' mode matching the reference's cron semantics.
+    into a memory sink, under ``state_posture(result)``; returns the
+    sink table. availableNow processes everything currently in the
+    source then stops — the deterministic 'catch-up run' mode matching
+    the reference's cron semantics.
 
     Complete-mode runs skip the trailing no-data micro-batch: the last
     data batch already emitted the full result, so the extra batch is
@@ -292,25 +352,42 @@ def run_stream_to_memory(
     state-store commit cycle)."""
     qname = f"{name}_{next(_memsink_seq)}"
     spark = result.sparkSession
-    quiet_state_server_logs(spark)
-    nodata_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    nodata_prev = spark.conf.get(nodata_key, "true")
-    with stream_state_partitions(spark, state_partitions):
-        if output_mode == "complete" or skip_nodata:
-            spark.conf.set(nodata_key, "false")
-        try:
-            query = (
-                result.writeStream.format("memory")
-                .queryName(qname)
-                .outputMode(output_mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
-            record_stream_plan(name, query)
-        finally:
-            spark.conf.set(nodata_key, nodata_prev)
+    nodata = {}
+    if output_mode == "complete" or skip_nodata:
+        nodata = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
+    with state_posture(result), _conf_scope(spark, nodata):
+        query = (
+            result.writeStream.format("memory")
+            .queryName(qname)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+        query.awaitTermination()
+        record_stream_plan(name, query)
     return spark.table(qname)
+
+
+def run_foreach_batch(
+    stream: DataFrame,
+    sink: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    name: str,
+) -> None:
+    """Drive ``stream`` through the foreachBatch ``sink`` to completion
+    (append mode, availableNow, checkpointed) under
+    ``state_posture(stream)``; the last micro-batch plan is recorded
+    under ``name``."""
+    with state_posture(stream):
+        query = (
+            stream.writeStream.foreachBatch(sink)
+            .option("checkpointLocation", checkpoint_dir)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        query.awaitTermination()
+        record_stream_plan(name, query)
 
 
 def foreach_batch_upsert(
@@ -320,32 +397,26 @@ def foreach_batch_upsert(
     transform: Callable[[DataFrame], DataFrame] | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """K3/E3 as a streaming sink: each micro-batch merges into a
-    parquet state table with keep-last-by-key semantics.
+    parquet state table with keep-last-by-key semantics
+    (``sinks.dedup_table_swap``).
 
     Keep-last order is (batch_id, *order_by): later batches win, ties
     within a batch resolved by the caller's total order — the
     reference's ingest-sequence semantics (dataingestion1.py:166-168)
     made deterministic. The rewrite goes to a temp dir then swaps, so
     a failed batch never corrupts state (re-running the batch is
-    idempotent: same keys, same keep-last outcome).
+    idempotent: same keys, same keep-last outcome), and a batch whose
+    schema disagrees with the state table raises before writing.
     """
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         if transform is not None:
             batch_df = transform(batch_df)
         batch = batch_df.withColumn("_batch_id", F.lit(int(batch_id)))
-        if os.path.exists(state_dir):
-            merged = spark.read.parquet(state_dir).unionByName(batch)
-        else:
-            merged = batch
-        deduped = keep_last(merged, list(keys), ["_batch_id", *order_by])
-        record_batch_plan("upsert_batch", deduped)
-        tmp = state_dir + ".inprogress"
-        deduped.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(state_dir):
-            shutil.rmtree(state_dir)
-        os.replace(tmp, state_dir)
+        written = dedup_table_swap(
+            batch.sparkSession, state_dir, batch, keys, ["_batch_id", *order_by]
+        )
+        record_batch_plan("upsert_batch", written)
 
     return _apply
 
@@ -358,18 +429,12 @@ def run_upsert_stream(
     order_by: Sequence[str] = ("ts",),
 ) -> None:
     """Drive a stream through the foreachBatch upsert to completion."""
-    with stream_state_partitions(events.sparkSession):
-        query = (
-            events.writeStream.foreachBatch(
-                foreach_batch_upsert(state_dir, keys, order_by)
-            )
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        record_stream_plan("upsert_stream", query)
+    run_foreach_batch(
+        events,
+        foreach_batch_upsert(state_dir, keys, order_by),
+        checkpoint_dir,
+        "upsert_stream",
+    )
 
 
 def incremental_pipeline(
@@ -384,16 +449,17 @@ def incremental_pipeline(
 ) -> None:
     """The E1 pipeline, incremental: each micro-batch of newly
     ingested videos runs the FULL enrichment chain (pipeline.
-    build_wide_fact — dedup, broadcast dims, analytics merge, derived
-    metrics) and upserts into the wide-fact table keep-last by
+    build_wide_fact — dedup, in-plan dim lookups, analytics merge,
+    derived metrics) and upserts into the wide-fact table keep-last by
     video_id. This is the reference's twice-daily cron loop
     (dags/Dashboard-pipeline.py:26) as a checkpointed stream: a
     re-ingested video in a later batch overwrites its earlier row,
     exactly like the sheet-merge + BigQuery-dedup cycle.
 
-    All enrichment is per-row (dims broadcast), so incremental
-    results equal the batch pipeline over the union of batches —
-    verified by tests/test_streaming.py.
+    All enrichment is per-row (the dims are literal-map lookups folded
+    into the projection), so incremental results equal the batch
+    pipeline over the union of batches — verified by
+    tests/test_streaming.py.
     """
     from youtube_etl_automated_pipeline_spark.pipeline import build_wide_fact
 
@@ -402,17 +468,9 @@ def incremental_pipeline(
             batch, channels, resource_names, shownames, cpm_categories, analytics
         )
 
-    with stream_state_partitions(video_stream.sparkSession):
-        query = (
-            video_stream.writeStream.foreachBatch(
-                foreach_batch_upsert(
-                    fact_dir, ["video_id"], ["ingest_seq"], transform=enrich
-                )
-            )
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        record_stream_plan("incremental_pipeline", query)
+    run_foreach_batch(
+        video_stream,
+        foreach_batch_upsert(fact_dir, ["video_id"], ["ingest_seq"], transform=enrich),
+        checkpoint_dir,
+        "incremental_pipeline",
+    )

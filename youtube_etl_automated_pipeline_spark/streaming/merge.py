@@ -29,24 +29,24 @@ of ingestdatainbigquery.py:103-136, with deletes added).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from youtube_etl_automated_pipeline_spark.operators.dedup import keep_last
+from youtube_etl_automated_pipeline_spark.session import fast_scratch_dir
+from youtube_etl_automated_pipeline_spark.sinks import dedup_table_swap
 from youtube_etl_automated_pipeline_spark.streaming.incremental import (
     record_batch_plan,
-    record_stream_plan,
+    run_foreach_batch,
 )
 
 CDC_SCHEMA = "key bigint, price_cents bigint, op string, seq bigint"
 
 
-def merge_batch(state_df: DataFrame, batch_df: DataFrame) -> DataFrame:
-    """One MERGE step: keep-last-by-seq over state ∪ batch, tombstones
-    retained. Associative and idempotent in the batch."""
-    return keep_last(state_df.unionByName(batch_df), ["key"], ["seq"])
+def cdc_run_dir(sf_dir: str) -> str:
+    """The per-run state + checkpoint root of ``streaming_merge_cdc``
+    over ``sf_dir`` (tmpfs when available, see fast_scratch_dir)."""
+    return fast_scratch_dir("cdc", os.path.basename(os.path.normpath(sf_dir)))
 
 
 def read_state(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -61,18 +61,15 @@ def live_rows(state: DataFrame) -> DataFrame:
 
 
 def foreach_batch_merge(state_dir: str):
-    """foreachBatch sink applying merge_batch with an atomic swap."""
+    """foreachBatch sink applying one MERGE step: keep-last-by-seq over
+    state ∪ batch, tombstones retained (``sinks.dedup_table_swap``).
+    Associative and idempotent in the batch."""
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        state = read_state(spark, state_dir)
-        new_state = merge_batch(state, batch_df)
-        record_batch_plan("cdc_merge_batch", new_state)
-        tmp = state_dir + ".inprogress"
-        new_state.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(state_dir):
-            shutil.rmtree(state_dir)
-        os.replace(tmp, state_dir)
+        written = dedup_table_swap(
+            batch_df.sparkSession, state_dir, batch_df, ["key"], ["seq"]
+        )
+        record_batch_plan("cdc_merge_batch", written)
 
     return _apply
 
@@ -87,17 +84,6 @@ def run_cdc_merge_stream(
         .option("maxFilesPerTrigger", "1")
         .parquet(src_dir)
     )
-    from youtube_etl_automated_pipeline_spark.streaming.incremental import (
-        stream_state_partitions,
+    run_foreach_batch(
+        stream, foreach_batch_merge(state_dir), checkpoint_dir, "cdc_merge_stream"
     )
-
-    with stream_state_partitions(stream.sparkSession):
-        query = (
-            stream.writeStream.foreachBatch(foreach_batch_merge(state_dir))
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        record_stream_plan("cdc_merge_stream", query)

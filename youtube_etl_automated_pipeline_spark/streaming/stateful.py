@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from youtube_etl_automated_pipeline_spark.session import ensure_protobuf_on_session
+
 OUTPUT_SCHEMA = (
     "user_id bigint, n_events bigint, sum_value double, last_event_id bigint"
 )
@@ -169,17 +171,32 @@ def _restore_null_user_key(out: DataFrame) -> DataFrame:
     )
 
 
+def _transform_with_state(
+    keyed: DataFrame,
+    processor,
+    schema: str,
+    mode: str = "Update",
+    time_mode: str = "None",
+) -> DataFrame:
+    """Group ``keyed`` by user_id through ``processor``. Wires
+    worker-side protobuf first: the TWS PythonFunction snapshots the
+    session's worker environment when it is built, not when the query
+    starts."""
+    ensure_protobuf_on_session(keyed.sparkSession)
+    return keyed.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=processor,
+        outputStructType=schema,
+        outputMode=mode,
+        timeMode=time_mode,
+    )
+
+
 def tws_user_peaks(events: DataFrame) -> DataFrame:
     """Apply the transformWithStateInPandas peak tracker to a
     STREAMING events DataFrame (update mode, no event-time timers)."""
     keyed = _null_safe_user_key(events, F.col("value"))
     return _restore_null_user_key(
-        keyed.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=_tws_processor(),
-            outputStructType=TWS_OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
+        _transform_with_state(keyed, _tws_processor(), TWS_OUTPUT_SCHEMA)
     )
 
 
@@ -244,12 +261,7 @@ def tws_user_topk(events: DataFrame) -> DataFrame:
     DataFrame (update mode)."""
     keyed = _null_safe_user_key(events, F.col("value"))
     return _restore_null_user_key(
-        keyed.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=_tws_topk_processor(),
-            outputStructType=TWS_TOPK_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
+        _transform_with_state(keyed, _tws_topk_processor(), TWS_TOPK_SCHEMA)
     )
 
 
@@ -312,11 +324,8 @@ def tws_user_type_counts(events: DataFrame) -> DataFrame:
         events, F.coalesce("event_type", F.lit("<null>")).alias("event_type")
     )
     return _restore_null_user_key(
-        keyed.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=_tws_typemap_processor(),
-            outputStructType=TWS_TYPEMAP_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
+        _transform_with_state(
+            keyed, _tws_typemap_processor(), TWS_TYPEMAP_SCHEMA
         )
     )
 
@@ -389,11 +398,8 @@ def tws_inactive_users(events: DataFrame, watermark: str = "1 hour") -> DataFram
         F.col("ts"),
     )
     return _restore_null_user_key(
-        keyed.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=_tws_inactive_processor(),
-            outputStructType=TWS_INACTIVE_SCHEMA,
-            outputMode="Append",
-            timeMode="EventTime",
+        _transform_with_state(
+            keyed, _tws_inactive_processor(), TWS_INACTIVE_SCHEMA, "Append", "EventTime"
         )
     )
 
@@ -480,11 +486,8 @@ def tws_transition_deltas(events: DataFrame) -> DataFrame:
         F.col("event_id"),
         F.col("event_type"),
     )
-    return keyed.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_tws_transition_processor(),
-        outputStructType=TWS_TRANSITION_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
+    return _transform_with_state(
+        keyed, _tws_transition_processor(), TWS_TRANSITION_SCHEMA
     )
 
 
@@ -564,12 +567,7 @@ def tws_ewma_user_value(events: DataFrame) -> DataFrame:
         F.col("value"),
     )
     return _restore_null_user_key(
-        keyed.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=_tws_ewma_processor(),
-            outputStructType=TWS_EWMA_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
+        _transform_with_state(keyed, _tws_ewma_processor(), TWS_EWMA_SCHEMA)
     )
 
 
@@ -648,10 +646,5 @@ def tws_funnel_seq(events: DataFrame) -> DataFrame:
         F.expr("upper(substring(event_type, 1, 1))").alias("sym"),
     )
     return _restore_null_user_key(
-        keyed.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=_tws_funnel_processor(),
-            outputStructType=TWS_FUNNEL_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
+        _transform_with_state(keyed, _tws_funnel_processor(), TWS_FUNNEL_SCHEMA)
     )
