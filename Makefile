@@ -32,15 +32,15 @@ etl:
 STREAM_TESTS = test_foreach_batch_upsert_keep_last test_incremental_pipeline_equals_batch \
   test_tws_user_peaks_or_env_gate test_stream_state_posture_is_read_off_the_plan_and_restored \
   test_rocksdb_state_store_matches_default_provider test_checkpoint_state_width_is_sticky \
-  test_streaming_minhash_index_survives_restart
+  test_streaming_minhash_index_survives_restart \
+  test_streaming_transitions_restart_equals_oneshot_and_batch \
+  test_streaming_ewma_restart_equals_oneshot_and_batch \
+  test_streaming_funnel_restart_equals_oneshot_and_batch
 STREAM_GATES = streaming_tws_inactive_users streaming_merge_cdc streaming_stream_stream_join \
   streaming_incremental_agg streaming_session_window
 stream:
 	python -m pytest -q -p no:cacheprovider tests/test_streaming_merge.py \
 	  $(addprefix tests/test_streaming.py::,$(STREAM_TESTS)) \
-	  tests/test_engine7.py::test_streaming_transitions_restart_equals_oneshot_and_batch \
-	  tests/test_engine8.py::test_streaming_ewma_restart_equals_oneshot_and_batch \
-	  tests/test_engine8.py::test_streaming_funnel_restart_equals_oneshot_and_batch \
 	  "tests/test_sinks.py::test_flush_schema_mismatch_raises[upsert_batch]" \
 	  $(foreach q,$(STREAM_GATES),"tests/test_oracle_parity.py::test_query_matches_oracle[$(q)]")
 

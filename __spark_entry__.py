@@ -12,11 +12,13 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from youtube_etl_automated_pipeline_spark.plans import registry
+
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001 (SURVEY.md section 7
     step 1: enrich + keep-last dedup + aggregate + guarded ratios)."""
-    from youtube_etl_automated_pipeline_spark.plans.queries import (
+    from youtube_etl_automated_pipeline_spark.plans.queries_pipeline import (
         flagship_enrich_dedup_agg,
     )
 
@@ -24,290 +26,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md section 2."""
-    from youtube_etl_automated_pipeline_spark.plans.queries import QUERIES
-    from youtube_etl_automated_pipeline_spark.plans.queries_joins_aggs import (
-        QUERIES_JOINS_AGGS,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_pipeline import (
-        QUERIES_PIPELINE,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_ext import QUERIES_EXT
-    from youtube_etl_automated_pipeline_spark.plans.queries_similarity import (
-        QUERIES_SIMILARITY,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_dedup_adv import (
-        QUERIES_DEDUP_ADV,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_streaming import (
-        QUERIES_STREAMING,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_multimodal import (
-        QUERIES_MULTIMODAL,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_sql import QUERIES_SQL
-    from youtube_etl_automated_pipeline_spark.plans.queries_extra import QUERIES_EXTRA
-    from youtube_etl_automated_pipeline_spark.plans.queries_olap import QUERIES_OLAP
-    from youtube_etl_automated_pipeline_spark.plans.queries_sources import (
-        QUERIES_SOURCES,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_tpch import QUERIES_TPCH
-    from youtube_etl_automated_pipeline_spark.plans.queries_tpch2 import QUERIES_TPCH2
-    from youtube_etl_automated_pipeline_spark.plans.queries_graph import QUERIES_GRAPH
-    from youtube_etl_automated_pipeline_spark.plans.queries_tpch3 import QUERIES_TPCH3
-    from youtube_etl_automated_pipeline_spark.plans.queries_analytics import (
-        QUERIES_ANALYTICS,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_llmdata import (
-        QUERIES_LLMDATA,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_sketch import (
-        QUERIES_SKETCH,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine4 import (
-        QUERIES_ENGINE4,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_mining import (
-        QUERIES_MINING,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_curation import (
-        QUERIES_CURATION,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_curation2 import (
-        QUERIES_CURATION2,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_algo import (
-        QUERIES_ALGO,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_stats import (
-        QUERIES_STATS,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_retrieval import (
-        QUERIES_RETRIEVAL,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_resample import (
-        QUERIES_RESAMPLE,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_eval import (
-        QUERIES_EVAL,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_alloc import (
-        QUERIES_ALLOC,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5 import (
-        QUERIES_ENGINE5,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5b import (
-        QUERIES_ENGINE5B,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5c import (
-        QUERIES_ENGINE5C,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5d import (
-        QUERIES_ENGINE5D,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5e import (
-        QUERIES_ENGINE5E,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5f import (
-        QUERIES_ENGINE5F,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5g import (
-        QUERIES_ENGINE5G,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine6 import (
-        QUERIES_ENGINE6,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine7 import (
-        QUERIES_ENGINE7,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine8 import (
-        QUERIES_ENGINE8,
-    )
-
-    return {
-        **QUERIES,
-        **QUERIES_JOINS_AGGS,
-        **QUERIES_PIPELINE,
-        **QUERIES_EXT,
-        **QUERIES_SIMILARITY,
-        **QUERIES_DEDUP_ADV,
-        **QUERIES_STREAMING,
-        **QUERIES_MULTIMODAL,
-        **QUERIES_SQL,
-        **QUERIES_EXTRA,
-        **QUERIES_OLAP,
-        **QUERIES_SOURCES,
-        **QUERIES_TPCH,
-        **QUERIES_TPCH2,
-        **QUERIES_TPCH3,
-        **QUERIES_GRAPH,
-        **QUERIES_ANALYTICS,
-        **QUERIES_LLMDATA,
-        **QUERIES_SKETCH,
-        **QUERIES_ENGINE4,
-        **QUERIES_MINING,
-        **QUERIES_CURATION,
-        **QUERIES_CURATION2,
-        **QUERIES_ALGO,
-        **QUERIES_STATS,
-        **QUERIES_RETRIEVAL,
-        **QUERIES_RESAMPLE,
-        **QUERIES_EVAL,
-        **QUERIES_ALLOC,
-        **QUERIES_ENGINE5,
-        **QUERIES_ENGINE5B,
-        **QUERIES_ENGINE5C,
-        **QUERIES_ENGINE5D,
-        **QUERIES_ENGINE5E,
-        **QUERIES_ENGINE5F,
-        **QUERIES_ENGINE5G,
-        **QUERIES_ENGINE6,
-        **QUERIES_ENGINE7,
-        **QUERIES_ENGINE8,
-    }
+    """Every ``@query`` in plans/, by name (plans/registry.py)."""
+    return registry.queries()
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL per query (same parquet tables as views)."""
-    from youtube_etl_automated_pipeline_spark.plans.oracles import ORACLES
-    from youtube_etl_automated_pipeline_spark.plans.oracles_joins_aggs import (
-        ORACLES_JOINS_AGGS,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.oracles_pipeline import (
-        ORACLES_PIPELINE,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.oracles_ext import ORACLES_EXT
-    from youtube_etl_automated_pipeline_spark.plans.oracles_similarity import (
-        ORACLES_SIMILARITY,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.oracles_dedup_adv import (
-        ORACLES_DEDUP_ADV,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.oracles_streaming import (
-        ORACLES_STREAMING,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.oracles_multimodal import (
-        ORACLES_MULTIMODAL,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_sql import ORACLES_SQL
-    from youtube_etl_automated_pipeline_spark.plans.queries_extra import ORACLES_EXTRA
-    from youtube_etl_automated_pipeline_spark.plans.queries_olap import ORACLES_OLAP
-    from youtube_etl_automated_pipeline_spark.plans.queries_sources import (
-        ORACLES_SOURCES,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_tpch import ORACLES_TPCH
-    from youtube_etl_automated_pipeline_spark.plans.queries_tpch2 import ORACLES_TPCH2
-    from youtube_etl_automated_pipeline_spark.plans.queries_graph import ORACLES_GRAPH
-    from youtube_etl_automated_pipeline_spark.plans.queries_tpch3 import ORACLES_TPCH3
-    from youtube_etl_automated_pipeline_spark.plans.queries_analytics import (
-        ORACLES_ANALYTICS,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_llmdata import (
-        ORACLES_LLMDATA,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_sketch import (
-        ORACLES_SKETCH,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine4 import (
-        ORACLES_ENGINE4,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_mining import (
-        ORACLES_MINING,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_curation import (
-        ORACLES_CURATION,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_curation2 import (
-        ORACLES_CURATION2,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_algo import (
-        ORACLES_ALGO,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_stats import (
-        ORACLES_STATS,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_retrieval import (
-        ORACLES_RETRIEVAL,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_resample import (
-        ORACLES_RESAMPLE,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_eval import (
-        ORACLES_EVAL,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_alloc import (
-        ORACLES_ALLOC,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5 import (
-        ORACLES_ENGINE5,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5b import (
-        ORACLES_ENGINE5B,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5c import (
-        ORACLES_ENGINE5C,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5d import (
-        ORACLES_ENGINE5D,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5e import (
-        ORACLES_ENGINE5E,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5f import (
-        ORACLES_ENGINE5F,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5g import (
-        ORACLES_ENGINE5G,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine6 import (
-        ORACLES_ENGINE6,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine7 import (
-        ORACLES_ENGINE7,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine8 import (
-        ORACLES_ENGINE8,
-    )
-
-    return {
-        **ORACLES,
-        **ORACLES_JOINS_AGGS,
-        **ORACLES_PIPELINE,
-        **ORACLES_EXT,
-        **ORACLES_SIMILARITY,
-        **ORACLES_DEDUP_ADV,
-        **ORACLES_STREAMING,
-        **ORACLES_MULTIMODAL,
-        **ORACLES_SQL,
-        **ORACLES_EXTRA,
-        **ORACLES_OLAP,
-        **ORACLES_SOURCES,
-        **ORACLES_TPCH,
-        **ORACLES_TPCH2,
-        **ORACLES_TPCH3,
-        **ORACLES_GRAPH,
-        **ORACLES_ANALYTICS,
-        **ORACLES_LLMDATA,
-        **ORACLES_SKETCH,
-        **ORACLES_ENGINE4,
-        **ORACLES_MINING,
-        **ORACLES_CURATION,
-        **ORACLES_CURATION2,
-        **ORACLES_ALGO,
-        **ORACLES_STATS,
-        **ORACLES_RETRIEVAL,
-        **ORACLES_RESAMPLE,
-        **ORACLES_EVAL,
-        **ORACLES_ALLOC,
-        **ORACLES_ENGINE5,
-        **ORACLES_ENGINE5B,
-        **ORACLES_ENGINE5C,
-        **ORACLES_ENGINE5D,
-        **ORACLES_ENGINE5E,
-        **ORACLES_ENGINE5F,
-        **ORACLES_ENGINE5G,
-        **ORACLES_ENGINE6,
-        **ORACLES_ENGINE7,
-        **ORACLES_ENGINE8,
-    }
+    return registry.oracle_sql()

@@ -205,7 +205,7 @@ def test_stratified_sample_rates(spark):
     and are bit-deterministic (also oracle-paired since round 4 — the
     rate check here guards the THRESHOLD arithmetic, which parity
     alone would not catch if both engines shared a wrong constant)."""
-    from youtube_etl_automated_pipeline_spark.plans.queries_extra import (
+    from youtube_etl_automated_pipeline_spark.plans.queries_joins_aggs import (
         STRAT_FRACTIONS,
         stratified_sample_events,
     )
@@ -340,3 +340,30 @@ def test_no_vacuously_empty_gate_queries(spark):
         f"{sorted(unexpected)} — a 0-row oracle match proves nothing; "
         "fix the predicate or allowlist with evidence from sf0.01"
     )
+
+
+def test_registry_one_query_per_name_and_oracles_pair():
+    """``@query`` registers each name once: a second function under a
+    registered name raises and leaves the first in place. Only the
+    three sketch-random queries go without an oracle, and every oracle
+    belongs to a registered query."""
+    import pytest
+
+    import __spark_entry__ as entry
+    from youtube_etl_automated_pipeline_spark.plans.registry import query
+
+    qs = entry.queries()
+    oracles = entry.oracle_sql()
+
+    def pipeline_e2e(spark, sf_dir):
+        raise AssertionError("never registered")
+
+    with pytest.raises(ValueError, match="pipeline_e2e"):
+        query(oracle=None)(pipeline_e2e)
+    assert entry.queries()["pipeline_e2e"] is qs["pipeline_e2e"]
+    assert sorted(set(qs) - set(oracles)) == [
+        "approx_distinct_customers",
+        "approx_percentile_stats",
+        "streaming_windowed_distinct_users",
+    ]
+    assert set(oracles) <= set(qs)

@@ -1,18 +1,14 @@
-"""Semantics tests for the engine5e batch (leakage-safe split /
-compaction planner) beyond the DuckDB oracle gate."""
+"""Semantics of the curation queries (plans/queries_curation.py) beyond
+the DuckDB oracle gate."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
-from youtube_etl_automated_pipeline_spark.plans.queries_engine5e import (
-    COMPACT_TARGET_ROWS,
+from youtube_etl_automated_pipeline_spark.plans.queries_curation import (
     LS_TRAIN_PCT,
     LS_VAL_PCT,
-    compaction_bin_packing,
-    compaction_plan,
-    file_census,
     leakage_safe_split,
 )
 
@@ -90,44 +86,3 @@ def test_leakage_split_differs_from_doc_keyed_split(spark):
         (b_doc < LS_TRAIN_PCT) != (b_cl < LS_TRAIN_PCT)
     ).count()
     assert diverging > 0
-
-
-def test_compaction_packs_multifile_table(spark, tmp_path):
-    """Real multi-file packing: 7 files of known sizes against a
-    1000-row target must produce first-fit-by-prefix-sum bins, and
-    every bin except the last per table stays under target + its
-    first file's slack."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    sizes = [900, 800, 400, 300, 200, 100, 50]
-    d = tmp_path / "t"
-    d.mkdir()
-    for i, n in enumerate(sizes):
-        pq.write_table(
-            pa.table({"x": list(range(n))}), str(d / f"part-{i:02d}.parquet")
-        )
-    files = file_census(spark, {"t": str(d)})
-    got = {
-        r["file_name"]: (r["n_rows"], r["bin_id"])
-        for r in compaction_plan(files, 1000).collect()
-    }
-    assert len(got) == len(sizes)
-    # python referee: sort by (rows desc, name asc), next-fit rule
-    names = sorted(got, key=lambda f: (-got[f][0], f))
-    cum = 0
-    for f in names:
-        n, b = got[f]
-        assert b == cum // 1000, (f, n, b, cum)
-        cum += n
-
-
-def test_compaction_gate_layout_single_file_per_table(spark):
-    """On driver testdata every table is one file, so every file is
-    bin 0 of its table and counts equal the table row counts."""
-    rows = compaction_bin_packing(spark, SF_SMOKE).collect()
-    assert rows
-    for r in rows:
-        assert r["file_name"] == f"{r['table_name']}.parquet"
-        assert r["bin_id"] == 0
-        assert 0 < r["n_rows"] < COMPACT_TARGET_ROWS

@@ -6,7 +6,8 @@ wires via env — this test pins the caller-provided-session path
 (``session.ensure_protobuf_on_session``: addPyFile + sc.environment).
 
 Runs in a SUBPROCESS so the bare JVM cannot inherit this pytest
-session's already-wired environment.
+session's already-wired environment, from a directory outside the
+repo so nothing resolves the package through the working directory.
 """
 
 from __future__ import annotations
@@ -36,13 +37,14 @@ spark.stop()
 """
 
 
-def test_bare_session_runs_tws_query():
+def test_bare_session_runs_tws_query(tmp_path):
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     script = _SCRIPT.format(repo=repo, sf="/root/testdata/sf0.001")
     proc = subprocess.run(
         [sys.executable, "-c", script],
         env=env,
+        cwd=tmp_path,
         capture_output=True,
         text=True,
         timeout=420,

@@ -15,9 +15,7 @@ def test_kappa_matches_exact_formula(spark):
     from youtube_etl_automated_pipeline_spark.plans.queries_eval import (
         cohens_kappa_langid,
     )
-    from youtube_etl_automated_pipeline_spark.plans.queries_ext import (
-        text_lang_id,
-    )
+    from youtube_etl_automated_pipeline_spark.plans.queries_curation import text_lang_id
 
     # text_lang_id is itself strict-oracle-verified; rebuild the
     # confusion matrix from its output and recompute kappa exactly.

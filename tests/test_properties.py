@@ -135,7 +135,7 @@ def test_winnowing_recovers_planted_substring_copies(spark):
         WIN_W,
         WS_CHARS,
     )
-    from youtube_etl_automated_pipeline_spark.plans.queries_ext import (
+    from youtube_etl_automated_pipeline_spark.plans.queries_dedup_adv import (
         PLANT_EVERY_SUB,
         PLANT_OFFSET_SUB,
         dedup_repeated_substring,
@@ -170,8 +170,8 @@ def test_prefix_filter_is_exact_at_threshold(spark):
     import duckdb
 
     from tests.conftest import SF_SMOKE
-    from youtube_etl_automated_pipeline_spark.plans.oracles_ext import _SH_HASHES
-    from youtube_etl_automated_pipeline_spark.plans.queries_ext import (
+    from youtube_etl_automated_pipeline_spark.plans.queries_dedup_adv import _SH_HASHES
+    from youtube_etl_automated_pipeline_spark.plans.queries_dedup_adv import (
         JAC_DEN,
         JAC_NUM,
         dedup_prefix_filter,

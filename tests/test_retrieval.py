@@ -11,6 +11,13 @@ import hashlib
 import math
 import re
 
+from pyspark.sql import functions as F
+
+from tests.conftest import SF_SMOKE
+from youtube_etl_automated_pipeline_spark.plans.queries_retrieval import (
+    postings_delta_encode,
+)
+
 SF = "/root/testdata/sf0.001"
 
 _WS_RE = re.compile(r"[ \t\n\r\f\x0b]+")
@@ -219,3 +226,102 @@ def test_rrf_matches_python_reimplementation(spark):
     for r in got:
         assert r.rank_rel == rank_rel.get(r.doc_id)
         assert r.rank_qual == rank_qual.get(r.doc_id)
+
+
+def test_postings_census_matches_python_referee(spark):
+    """Bit-width census equals a from-scratch Python computation over
+    the same postings (distinct (token, doc_id), gaps within token)."""
+    from youtube_etl_automated_pipeline_spark.ext.textstats import (
+        normalized_text,
+        tokens,
+    )
+    from youtube_etl_automated_pipeline_spark.sources import load_wide
+
+    docs = load_wide(spark, SF_SMOKE, "documents").filter(
+        F.col("text").isNotNull() & F.col("doc_id").isNotNull()
+    )
+    postings = (
+        docs.select(
+            F.explode(tokens(normalized_text(F.col("text")))).alias("t"),
+            "doc_id",
+        )
+        .filter(F.col("t") != "")
+        .distinct()
+        .collect()
+    )
+    by_token: dict[str, list[int]] = {}
+    for r in postings:
+        by_token.setdefault(r["t"], []).append(r["doc_id"])
+    expected: dict[int, list[int]] = {}
+    for ids in by_token.values():
+        prev = 0
+        for d in sorted(ids):
+            gap = d - prev
+            prev = d
+            w = max(1, gap.bit_length())  # bin(0) = '0' has length 1
+            agg = expected.setdefault(w, [0, 0])
+            agg[0] += 1
+            agg[1] += 2 * w - 1
+    got = {
+        r["bit_width"]: (r["n_gaps"], r["elias_gamma_bits"], r["fixed64_bits"])
+        for r in postings_delta_encode(spark, SF_SMOKE).collect()
+    }
+    assert set(got) == set(expected)
+    for w, (n, gamma) in expected.items():
+        assert got[w] == (n, gamma, 64 * n), w
+
+
+def test_kneser_ney_matches_pure_python(spark):
+    """The distributed KN census must equal an independent pure-Python
+    computation of the same formula over the same tokenization."""
+    import re
+    from collections import Counter, defaultdict
+
+    from youtube_etl_automated_pipeline_spark.ext.textstats import WS_CHARS
+    from youtube_etl_automated_pipeline_spark.plans.queries_retrieval import (
+        KN_TOP,
+        kneser_ney_bigrams,
+    )
+    from youtube_etl_automated_pipeline_spark.sources import load_table
+
+    docs = load_table(spark, SF_SMOKE, "documents").collect()
+    ws = re.compile("[" + WS_CHARS + "]+")
+    cab: Counter = Counter()
+    for r in docs:
+        t = r["text"]
+        if t is None or t.strip() == "":
+            continue
+        toks = ws.split(ws.sub(" ", t.strip()).lower())
+        for a, b in zip(toks, toks[1:]):
+            cab[(a, b)] += 1
+    c_a: Counter = Counter()
+    n1_a: Counter = Counter()
+    n1_b: Counter = Counter()
+    for (a, b), c in cab.items():
+        c_a[a] += c
+        n1_a[a] += 1
+        n1_b[b] += 1
+    T = len(cab)
+    want = {}
+    for (a, b), c in cab.items():
+        want[(a, b)] = (
+            c,
+            (max(4 * c - 3, 0) * T + 3 * n1_a[a] * n1_b[b])
+            * 1_000_000
+            // (4 * c_a[a] * T),
+        )
+    top = sorted(want.items(), key=lambda kv: (-kv[1][0], kv[0]))[:KN_TOP]
+
+    got = [
+        ((r["from_tok"], r["to_tok"]), (r["n_ab"], r["p_kn_ppm"]))
+        for r in kneser_ney_bigrams(spark, SF_SMOKE).collect()
+    ]
+    assert got == top and len(got) == KN_TOP
+    # smoothing sanity: every prob in (0, 1e6); observed mass per
+    # context is below 1 (unseen mass is reserved by the discount)
+    per_a = defaultdict(int)
+    for (a, _b), (_c, p) in got:
+        assert 0 < p < 1_000_000
+        per_a[a] += p
+    # contexts fully inside the top slice can't exceed the ppm unit
+    assert all(v <= 1_000_000 for v in per_a.values())

@@ -17,7 +17,7 @@ from youtube_etl_automated_pipeline_spark.ext.kmeans import (
     TRAIN_PER_CENTROID,
     derive_k,
 )
-from youtube_etl_automated_pipeline_spark.plans import queries_curation2 as qc2
+from youtube_etl_automated_pipeline_spark.plans import queries_curation as qcur
 from youtube_etl_automated_pipeline_spark.plans import (
     queries_similarity as qsim,
 )
@@ -94,7 +94,7 @@ def test_blocked_groups_bounded_and_cover_each_pair_once(spark):
     off-diagonal: cross-block only)."""
     cap = 8
     m = _tiny_members(spark, n=100, n_clusters=3)
-    blocked = qc2.blocked_pair_groups(m, cap).persist()
+    blocked = qcur.blocked_pair_groups(m, cap).persist()
     sizes = (
         blocked.groupBy("cluster_id", "blk_lo", "blk_hi")
         .count()
@@ -139,14 +139,14 @@ def test_semdedup_census_invariant_under_block_cap(spark, monkeypatch):
     backstop safe to rely on at 100 TB."""
     baseline = [
         tuple(r)
-        for r in qc2.semantic_dedup_prune(spark, SF_SMOKE).collect()
+        for r in qcur.semantic_dedup_prune(spark, SF_SMOKE).collect()
     ]
     assert sum(r[1] for r in baseline) > 0  # non-trivial corpus
     assert sum(r[2] for r in baseline) > 0  # some planted dups dropped
-    monkeypatch.setattr(qc2, "SEMDEDUP_BLOCK_CAP", 16)
+    monkeypatch.setattr(qcur, "SEMDEDUP_BLOCK_CAP", 16)
     forced = [
         tuple(r)
-        for r in qc2.semantic_dedup_prune(spark, SF_SMOKE).collect()
+        for r in qcur.semantic_dedup_prune(spark, SF_SMOKE).collect()
     ]
     assert forced == baseline
 

@@ -230,3 +230,135 @@ def test_hard_negatives_are_hardest_cross_label(spark):
             (r.negative_id, r.cos_sim)
             for r in sorted(rs, key=lambda r: r.rank)
         ] == expect
+
+
+def test_random_projection_preserves_distances(spark):
+    """The JL property for ±1 signs: E||y_a - y_b||^2 = D_OUT *
+    ||x_a - x_b||^2 (in micro-units^2). With D_OUT=8 individual pairs
+    fluctuate, so assert the MEDIAN per-pair ratio over consecutive-id
+    pairs sits well inside [0.3, 3] and the MEAN within [0.7, 1.4]."""
+    from youtube_etl_automated_pipeline_spark.plans.queries_similarity import (
+        RP_D_OUT,
+        embedding_random_projection,
+    )
+    from youtube_etl_automated_pipeline_spark.sources import load_table
+
+    proj = {
+        r["vec_id"]: [r[f"y_{j}"] for j in range(RP_D_OUT)]
+        for r in embedding_random_projection(spark, SF_SMOKE).collect()
+    }
+    # quantization identical to the query: floor(v*1e6+0.5)
+    import math
+
+    orig = {
+        k: [math.floor(float(v) * 1e6 + 0.5) for v in r]
+        for k, r in {
+            r["vec_id"]: r["embedding"]
+            for r in load_table(spark, SF_SMOKE, "embeddings").collect()
+        }.items()
+    }
+    ids = sorted(proj)
+    ratios = []
+    for a, b in zip(ids, ids[1:]):
+        dx2 = sum((xa - xb) ** 2 for xa, xb in zip(orig[a], orig[b]))
+        dy2 = sum((ya - yb) ** 2 for ya, yb in zip(proj[a], proj[b]))
+        if dx2 > 0:
+            ratios.append(dy2 / (RP_D_OUT * dx2))
+    ratios.sort()
+    assert len(ratios) > 100
+    median = ratios[len(ratios) // 2]
+    mean = sum(ratios) / len(ratios)
+    assert 0.3 < median < 3.0, median
+    assert 0.7 < mean < 1.4, mean
+
+
+def test_power_component_dominates_random_directions(spark):
+    """Spectral sanity: after POW_ITERS rounds the returned loading
+    vector's Rayleigh quotient on the centered data must beat every
+    one of 25 deterministic pseudo-random directions (md5-seeded) —
+    i.e. the iteration actually climbed toward the dominant
+    eigenvector instead of stalling at the all-ones start."""
+    import hashlib
+
+    import numpy as np
+
+    from youtube_etl_automated_pipeline_spark.plans.queries_similarity import (
+        embedding_power_component,
+    )
+    from youtube_etl_automated_pipeline_spark.sources import load_table
+
+    rows = embedding_power_component(spark, SF_SMOKE).collect()
+    v = np.array(
+        [r["loading_micro"] for r in sorted(rows, key=lambda r: r["dim_idx"])],
+        dtype=np.float64,
+    )
+    X = np.array(
+        [
+            r["embedding"]
+            for r in load_table(spark, SF_SMOKE, "embeddings").collect()
+        ],
+        dtype=np.float64,
+    )
+    X = X - X.mean(axis=0)
+
+    def rayleigh(u):
+        u = u / np.linalg.norm(u)
+        return float(np.sum((X @ u) ** 2))
+
+    r_v = rayleigh(v)
+    # direct spectral bound: within 10% of the true top eigenvalue
+    # (the synthetic embeddings are near-isotropic — l2/l1 ~ 0.89 —
+    # which is the hard case for power iteration)
+    top = float(np.linalg.eigvalsh(X.T @ X)[-1])
+    assert r_v >= 0.9 * top, (r_v, top)
+    for k in range(25):
+        h = hashlib.md5(f"dir|{k}".encode()).digest() * 32
+        u = np.frombuffer(
+            h[: X.shape[1] * 8], dtype=np.uint64
+        ).astype(np.float64)
+        u = (u / 2**64) - 0.5
+        assert r_v >= rayleigh(u), k
+
+
+def test_kcenter_matches_python_greedy(spark):
+    """The engine's K rounds must replay the exact Python greedy
+    (same quantization, same min-vec_id seed, same tie-breaks), and
+    the coverage radius must be non-increasing with distinct centers."""
+    from youtube_etl_automated_pipeline_spark.plans.queries_similarity import (
+        _KC_ROUNDS,
+        coreset_kcenter_sample,
+    )
+    from youtube_etl_automated_pipeline_spark.sources import load_table
+
+    import math
+
+    vecs = {
+        int(r["vec_id"]): [
+            int(math.floor(float(x) * 1e6 + 0.5)) for x in r["embedding"]
+        ]
+        for r in load_table(spark, SF_SMOKE, "embeddings").collect()
+    }
+    ids = sorted(vecs)
+    centers = [ids[0]]
+    mind = {
+        i: sum((a - b) ** 2 for a, b in zip(vecs[i], vecs[centers[0]]))
+        for i in ids
+    }
+    expect = []
+    for r in range(1, _KC_ROUNDS + 1):
+        far = min(ids, key=lambda i: (-mind[i], i))
+        expect.append((r, centers[-1], mind[far]))
+        if r < _KC_ROUNDS:
+            centers.append(far)
+            for i in ids:
+                d = sum((a - b) ** 2 for a, b in zip(vecs[i], vecs[far]))
+                if d < mind[i]:
+                    mind[i] = d
+    got = [
+        (r["round"], r["center_vec_id"], r["radius_q"])
+        for r in coreset_kcenter_sample(spark, SF_SMOKE).collect()
+    ]
+    assert got == expect
+    radii = [g[2] for g in got]
+    assert radii == sorted(radii, reverse=True)
+    assert len({g[1] for g in got}) == _KC_ROUNDS

@@ -11,6 +11,12 @@ from pyspark.sql import functions as F
 from youtube_etl_automated_pipeline_spark.operators.joins import lookup_enrich
 from tests.conftest import SF_SMOKE
 from youtube_etl_automated_pipeline_spark.sources import load_json_dim
+from youtube_etl_automated_pipeline_spark.plans.queries_sources import (
+    COMPACT_TARGET_ROWS,
+    compaction_bin_packing,
+    compaction_plan,
+    file_census,
+)
 
 
 def test_json_dim_last_wins_and_nulls(spark, tmp_path):
@@ -123,3 +129,44 @@ def test_paged_api_source_partitions_and_determinism(spark):
     assert rows[0].item_id == 0 and rows[-1].item_id == 39
     assert rows[1].video_code == "VID%09d" % (2654435761 % 100_000_007)
     assert rows[7].score == ((7 * 7919) % 1000) / 10.0
+
+
+def test_compaction_packs_multifile_table(spark, tmp_path):
+    """Real multi-file packing: 7 files of known sizes against a
+    1000-row target must produce first-fit-by-prefix-sum bins, and
+    every bin except the last per table stays under target + its
+    first file's slack."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sizes = [900, 800, 400, 300, 200, 100, 50]
+    d = tmp_path / "t"
+    d.mkdir()
+    for i, n in enumerate(sizes):
+        pq.write_table(
+            pa.table({"x": list(range(n))}), str(d / f"part-{i:02d}.parquet")
+        )
+    files = file_census(spark, {"t": str(d)})
+    got = {
+        r["file_name"]: (r["n_rows"], r["bin_id"])
+        for r in compaction_plan(files, 1000).collect()
+    }
+    assert len(got) == len(sizes)
+    # python referee: sort by (rows desc, name asc), next-fit rule
+    names = sorted(got, key=lambda f: (-got[f][0], f))
+    cum = 0
+    for f in names:
+        n, b = got[f]
+        assert b == cum // 1000, (f, n, b, cum)
+        cum += n
+
+
+def test_compaction_gate_layout_single_file_per_table(spark):
+    """On driver testdata every table is one file, so every file is
+    bin 0 of its table and counts equal the table row counts."""
+    rows = compaction_bin_packing(spark, SF_SMOKE).collect()
+    assert rows
+    for r in rows:
+        assert r["file_name"] == f"{r['table_name']}.parquet"
+        assert r["bin_id"] == 0
+        assert 0 < r["n_rows"] < COMPACT_TARGET_ROWS

@@ -57,8 +57,3 @@ def keep_first(df: DataFrame, keys: Sequence[str], order_by: Sequence[Column | s
 def exact_distinct(df: DataFrame, keys: Sequence[str] | None = None) -> DataFrame:
     """Plain distinct (hash-aggregate shuffle). ``keys=None`` -> full row."""
     return df.distinct() if keys is None else df.dropDuplicates(list(keys))
-
-
-def dedup_audit(before: DataFrame, after: DataFrame) -> int:
-    """A4: duplicates-removed count (dataingestion1.py:167-170)."""
-    return before.count() - after.count()

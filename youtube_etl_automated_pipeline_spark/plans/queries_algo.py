@@ -1,4 +1,4 @@
-"""Round-3 algorithmic extensions: sorted-neighborhood dedup, BFS hop
+"""Algorithmic extensions: sorted-neighborhood dedup, BFS hop
 census over the trade graph, Pareto-frontier (skyline) extraction, and
 hashing-trick featurization.
 
@@ -27,21 +27,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from youtube_etl_automated_pipeline_spark.operators.windows import bounded_window
 
-from youtube_etl_automated_pipeline_spark.ext import textstats as TS
 from youtube_etl_automated_pipeline_spark.ext.dedup import shingle_hashes
+from youtube_etl_automated_pipeline_spark.ext import textstats as TS
 from youtube_etl_automated_pipeline_spark.functions.compat import hround
-from youtube_etl_automated_pipeline_spark.operators.lineage import (
-    truncate_lineage,
-)
-from youtube_etl_automated_pipeline_spark.operators.cache_registry import (
-    memo_persist,
-)
+from youtube_etl_automated_pipeline_spark.operators.cache_registry import memo_persist
+from youtube_etl_automated_pipeline_spark.operators.lineage import truncate_lineage
+from youtube_etl_automated_pipeline_spark.operators.windows import bounded_window
+from youtube_etl_automated_pipeline_spark.plans.registry import query
 from youtube_etl_automated_pipeline_spark.sources import load_table, load_wide
-
-QUERIES_ALGO: dict = {}
-ORACLES_ALGO: dict[str, str] = {}
 
 
 # ------------------------------------------------------------------
@@ -55,6 +49,45 @@ SNM_WINDOW = 6  # compare to up to 5 sort-order predecessors
 SNM_THRESHOLD = 0.2  # Jaccard cutoff, same bar as dedup_ngram_jaccard
 
 
+def _snm_oracle() -> str:
+    from youtube_etl_automated_pipeline_spark.plans.queries_dedup_adv import (
+        _NORM,
+        _r,
+        _SH_HASHES,
+    )
+
+    ow = "(PARTITION BY lang, c1 ORDER BY p40, doc_id)"
+    lags = "\n  UNION ALL ".join(
+        f"SELECT doc_id, hash_set, lag(doc_id, {i}) OVER {ow} AS pid,"
+        f" lag(hash_set, {i}) OVER {ow} AS pset FROM base"
+        for i in range(1, SNM_WINDOW)
+    )
+    jac = "CASE WHEN n_union > 0 THEN n_inter / n_union ELSE 0 END"
+    return f"""
+WITH base AS (
+  SELECT doc_id, coalesce(lang, '??') AS lang,
+    substr({_NORM}, 1, 1) AS c1, substr({_NORM}, 1, 40) AS p40,
+    {_SH_HASHES} AS hash_set
+  FROM documents
+  WHERE len({_SH_HASHES}) >= 3
+),
+lagged AS (
+  {lags}
+),
+pairs AS (
+  SELECT least(doc_id, pid) AS doc_a, greatest(doc_id, pid) AS doc_b,
+    len(list_intersect(hash_set, pset)) AS n_inter,
+    len(list_distinct(list_concat(hash_set, pset))) AS n_union
+  FROM lagged WHERE pid IS NOT NULL
+)
+SELECT DISTINCT doc_a, doc_b, {_r(jac, 4)} AS jaccard
+FROM pairs
+WHERE ({_r(jac, 4)}) >= {SNM_THRESHOLD}
+ORDER BY doc_a, doc_b
+"""
+
+
+@query(oracle=_snm_oracle())
 def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs via the sorted-neighborhood method: records sort
     by (40-char normalized prefix, doc_id) inside coarse partitions of
@@ -118,50 +151,6 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_ALGO["dedup_sorted_neighborhood"] = dedup_sorted_neighborhood
-
-
-def _snm_oracle() -> str:
-    from youtube_etl_automated_pipeline_spark.plans.oracles_ext import (
-        _NORM,
-        _r,
-        _SH_HASHES,
-    )
-
-    ow = "(PARTITION BY lang, c1 ORDER BY p40, doc_id)"
-    lags = "\n  UNION ALL ".join(
-        f"SELECT doc_id, hash_set, lag(doc_id, {i}) OVER {ow} AS pid,"
-        f" lag(hash_set, {i}) OVER {ow} AS pset FROM base"
-        for i in range(1, SNM_WINDOW)
-    )
-    jac = "CASE WHEN n_union > 0 THEN n_inter / n_union ELSE 0 END"
-    return f"""
-WITH base AS (
-  SELECT doc_id, coalesce(lang, '??') AS lang,
-    substr({_NORM}, 1, 1) AS c1, substr({_NORM}, 1, 40) AS p40,
-    {_SH_HASHES} AS hash_set
-  FROM documents
-  WHERE len({_SH_HASHES}) >= 3
-),
-lagged AS (
-  {lags}
-),
-pairs AS (
-  SELECT least(doc_id, pid) AS doc_a, greatest(doc_id, pid) AS doc_b,
-    len(list_intersect(hash_set, pset)) AS n_inter,
-    len(list_distinct(list_concat(hash_set, pset))) AS n_union
-  FROM lagged WHERE pid IS NOT NULL
-)
-SELECT DISTINCT doc_a, doc_b, {_r(jac, 4)} AS jaccard
-FROM pairs
-WHERE ({_r(jac, 4)}) >= {SNM_THRESHOLD}
-ORDER BY doc_a, doc_b
-"""
-
-
-ORACLES_ALGO["dedup_sorted_neighborhood"] = _snm_oracle()
-
-
 # ------------------------------------------------------------------
 # Single-source BFS over the customer<->supplier trade graph: hop
 # distances from the minimum node id, H frontier expansions.
@@ -169,6 +158,39 @@ ORACLES_ALGO["dedup_sorted_neighborhood"] = _snm_oracle()
 BFS_HOPS = 3
 
 
+def _bfs_oracle() -> str:
+    from youtube_etl_automated_pipeline_spark.plans.queries_graph import SUPP_NODE_BASE
+
+    return f"""
+WITH RECURSIVE eo AS (
+  SELECT DISTINCT o_custkey AS c, l_suppkey + {SUPP_NODE_BASE} AS s
+  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+),
+edges AS (
+  SELECT c AS src, s AS dst FROM eo
+  UNION ALL
+  SELECT s AS src, c AS dst FROM eo
+),
+bfs(node, hops) AS (
+  SELECT min(src), 0 FROM edges
+  UNION
+  SELECT e.dst, b.hops + 1
+  FROM bfs b JOIN edges e ON e.src = b.node
+  WHERE b.hops < {BFS_HOPS}
+),
+dist AS (SELECT node, min(hops) AS hops FROM bfs GROUP BY node)
+SELECT CAST(hops AS INT) AS hops,
+  CAST(count(*) AS BIGINT) AS n_nodes,
+  CAST(min(node) AS BIGINT) AS min_node,
+  CAST(max(node) AS BIGINT) AS max_node,
+  CAST(sum(node) AS BIGINT) AS sum_node
+FROM dist
+GROUP BY hops
+ORDER BY hops
+"""
+
+
+@query(oracle=_bfs_oracle())
 def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-hop census of BFS from the minimum node of the symmetrized
     trade graph (queries_graph._edges): (hops, n_nodes, min_node,
@@ -221,46 +243,6 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_ALGO["graph_bfs_hops"] = graph_bfs_hops
-
-
-def _bfs_oracle() -> str:
-    from youtube_etl_automated_pipeline_spark.plans.queries_graph import (
-        SUPP_NODE_BASE,
-    )
-
-    return f"""
-WITH RECURSIVE eo AS (
-  SELECT DISTINCT o_custkey AS c, l_suppkey + {SUPP_NODE_BASE} AS s
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-),
-edges AS (
-  SELECT c AS src, s AS dst FROM eo
-  UNION ALL
-  SELECT s AS src, c AS dst FROM eo
-),
-bfs(node, hops) AS (
-  SELECT min(src), 0 FROM edges
-  UNION
-  SELECT e.dst, b.hops + 1
-  FROM bfs b JOIN edges e ON e.src = b.node
-  WHERE b.hops < {BFS_HOPS}
-),
-dist AS (SELECT node, min(hops) AS hops FROM bfs GROUP BY node)
-SELECT CAST(hops AS INT) AS hops,
-  CAST(count(*) AS BIGINT) AS n_nodes,
-  CAST(min(node) AS BIGINT) AS min_node,
-  CAST(max(node) AS BIGINT) AS max_node,
-  CAST(sum(node) AS BIGINT) AS sum_node
-FROM dist
-GROUP BY hops
-ORDER BY hops
-"""
-
-
-ORACLES_ALGO["graph_bfs_hops"] = _bfs_oracle()
-
-
 # ------------------------------------------------------------------
 # Pareto frontier (skyline): orders maximizing (totalprice, orderdate)
 # with neither coordinate dominated. Two-phase pareto-of-paretos: any
@@ -282,6 +264,30 @@ def skyline_prune(pdf, x_col: str, y_col: str):
     return pdf[run.isna() | (pdf[y_col] > run)]
 
 
+@query(
+    oracle="""
+WITH pts AS (
+  SELECT CAST(round(o_totalprice * 100.0) AS BIGINT) AS price_cents,
+         o_orderdate,
+         CAST(count(*) AS BIGINT) AS n_orders,
+         CAST(min(o_orderkey) AS BIGINT) AS min_orderkey
+  FROM orders
+  GROUP BY 1, 2
+),
+ranked AS (
+  SELECT *,
+    max(o_orderdate) OVER (
+      ORDER BY price_cents DESC, o_orderdate DESC
+      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+    ) AS maxd
+  FROM pts
+)
+SELECT price_cents, o_orderdate, n_orders, min_orderkey
+FROM ranked
+WHERE maxd IS NULL OR maxd < o_orderdate
+ORDER BY price_cents DESC
+"""
+)
 def pareto_frontier_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skyline of distinct (price_cents, o_orderdate) points —
     maximize both — with per-point order count and min orderkey.
@@ -330,32 +336,6 @@ def pareto_frontier_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_ALGO["pareto_frontier_orders"] = pareto_frontier_orders
-
-ORACLES_ALGO["pareto_frontier_orders"] = """
-WITH pts AS (
-  SELECT CAST(round(o_totalprice * 100.0) AS BIGINT) AS price_cents,
-         o_orderdate,
-         CAST(count(*) AS BIGINT) AS n_orders,
-         CAST(min(o_orderkey) AS BIGINT) AS min_orderkey
-  FROM orders
-  GROUP BY 1, 2
-),
-ranked AS (
-  SELECT *,
-    max(o_orderdate) OVER (
-      ORDER BY price_cents DESC, o_orderdate DESC
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-    ) AS maxd
-  FROM pts
-)
-SELECT price_cents, o_orderdate, n_orders, min_orderkey
-FROM ranked
-WHERE maxd IS NULL OR maxd < o_orderdate
-ORDER BY price_cents DESC
-"""
-
-
 # ------------------------------------------------------------------
 # Hashing-trick featurization: token -> md5 bucket in a fixed
 # FH_DIM-dimensional feature space, plus the collision census that
@@ -364,6 +344,25 @@ ORDER BY price_cents DESC
 FH_DIM = 128
 
 
+def _fh_oracle() -> str:
+    from youtube_etl_automated_pipeline_spark.plans.queries_dedup_adv import _h8, _TOKS
+
+    return f"""
+WITH toks AS (
+  SELECT unnest({_TOKS}) AS tok FROM documents
+  WHERE text IS NOT NULL AND trim(text) <> ''
+)
+SELECT ({_h8("tok")}) % {FH_DIM} AS bucket,
+  CAST(count(*) AS BIGINT) AS n_occurrences,
+  CAST(count(DISTINCT tok) AS BIGINT) AS n_types
+FROM toks
+WHERE tok <> ''
+GROUP BY 1
+ORDER BY bucket
+"""
+
+
+@query(oracle=_fh_oracle())
 def feature_hashing_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-bucket census of the hashed feature map over all document
     tokens: (bucket, n_occurrences, n_types) for every non-empty
@@ -391,33 +390,6 @@ def feature_hashing_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_ALGO["feature_hashing_census"] = feature_hashing_census
-
-
-def _fh_oracle() -> str:
-    from youtube_etl_automated_pipeline_spark.plans.oracles_ext import (
-        _h8,
-        _TOKS,
-    )
-
-    return f"""
-WITH toks AS (
-  SELECT unnest({_TOKS}) AS tok FROM documents
-  WHERE text IS NOT NULL AND trim(text) <> ''
-)
-SELECT ({_h8("tok")}) % {FH_DIM} AS bucket,
-  CAST(count(*) AS BIGINT) AS n_occurrences,
-  CAST(count(DISTINCT tok) AS BIGINT) AS n_types
-FROM toks
-WHERE tok <> ''
-GROUP BY 1
-ORDER BY bucket
-"""
-
-
-ORACLES_ALGO["feature_hashing_census"] = _fh_oracle()
-
-
 # ------------------------------------------------------------------
 # Retrieval primitives over a positional inverted index: conjunctive
 # (AND) term search and exact phrase search. The posting lists are
@@ -429,37 +401,8 @@ SEARCH_TERMS = ("data", "table", "join")  # conjunctive query
 PHRASE = ("data", "table")  # exact-adjacency phrase query
 
 
-def boolean_search_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Documents containing ALL of SEARCH_TERMS, with per-term
-    occurrence counts — the conjunctive boolean-retrieval primitive.
-
-    Plan: one scan, explode filtered to the query terms ONLY (the
-    predicate lands before the shuffle, so posting-list size is the
-    query's selectivity, not the corpus), one (doc_id)-keyed agg with
-    conditional counts, then the all-terms filter. No joins at all —
-    at 100 TB this is a scan + one small shuffle."""
-    docs = load_wide(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(TS.tokens(F.col("text"))).alias("term")
-    ).filter(F.col("term").isin(*SEARCH_TERMS))
-    aggs = [
-        F.count_if(F.col("term") == t).alias(f"occ_{t}") for t in SEARCH_TERMS
-    ]
-    out = toks.groupBy("doc_id").agg(*aggs)
-    cond = None
-    for t in SEARCH_TERMS:
-        c = F.col(f"occ_{t}") > 0
-        cond = c if cond is None else (cond & c)
-    # no trailing orderBy (r08): range-sampling re-executed the
-    # tokenize+agg subtree; driver compare is order-insensitive
-    return out.filter(cond)
-
-
-QUERIES_ALGO["boolean_search_docs"] = boolean_search_docs
-
-
 def _bool_search_oracle() -> str:
-    from youtube_etl_automated_pipeline_spark.plans.oracles_ext import _TOKS
+    from youtube_etl_automated_pipeline_spark.plans.queries_dedup_adv import _TOKS
 
     in_list = ", ".join(f"'{t}'" for t in SEARCH_TERMS)
     occs = ",\n  ".join(
@@ -486,9 +429,56 @@ ORDER BY doc_id
 """
 
 
-ORACLES_ALGO["boolean_search_docs"] = _bool_search_oracle()
+@query(oracle=_bool_search_oracle())
+def boolean_search_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Documents containing ALL of SEARCH_TERMS, with per-term
+    occurrence counts — the conjunctive boolean-retrieval primitive.
+
+    Plan: one scan, explode filtered to the query terms ONLY (the
+    predicate lands before the shuffle, so posting-list size is the
+    query's selectivity, not the corpus), one (doc_id)-keyed agg with
+    conditional counts, then the all-terms filter. No joins at all —
+    at 100 TB this is a scan + one small shuffle."""
+    docs = load_wide(spark, sf_dir, "documents")
+    toks = docs.select(
+        "doc_id", F.explode(TS.tokens(F.col("text"))).alias("term")
+    ).filter(F.col("term").isin(*SEARCH_TERMS))
+    aggs = [
+        F.count_if(F.col("term") == t).alias(f"occ_{t}") for t in SEARCH_TERMS
+    ]
+    out = toks.groupBy("doc_id").agg(*aggs)
+    cond = None
+    for t in SEARCH_TERMS:
+        c = F.col(f"occ_{t}") > 0
+        cond = c if cond is None else (cond & c)
+    # no trailing orderBy (r08): range-sampling re-executed the
+    # tokenize+agg subtree; driver compare is order-insensitive
+    return out.filter(cond)
 
 
+def _phrase_search_oracle() -> str:
+    from youtube_etl_automated_pipeline_spark.plans.queries_dedup_adv import _TOKS
+
+    return f"""
+WITH tok AS (
+  SELECT doc_id, {_TOKS} AS toks FROM documents
+  WHERE text IS NOT NULL AND trim(text) <> ''
+),
+pos AS (
+  SELECT doc_id, toks[i] AS term, i - 1 AS pos
+  FROM tok, UNNEST(generate_series(1, len(toks))) AS t(i)
+  WHERE toks[i] IN ('{PHRASE[0]}', '{PHRASE[1]}')
+)
+SELECT a.doc_id, CAST(count(*) AS BIGINT) AS n_phrase_hits
+FROM pos a JOIN pos b
+  ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
+WHERE a.term = '{PHRASE[0]}' AND b.term = '{PHRASE[1]}'
+GROUP BY a.doc_id
+ORDER BY a.doc_id
+"""
+
+
+@query(oracle=_phrase_search_oracle())
 def phrase_search_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Documents containing the exact phrase PHRASE (adjacent tokens),
     with hit counts — positional-index retrieval: posting lists carry
@@ -517,34 +507,6 @@ def phrase_search_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_ALGO["phrase_search_docs"] = phrase_search_docs
-
-
-def _phrase_search_oracle() -> str:
-    from youtube_etl_automated_pipeline_spark.plans.oracles_ext import _TOKS
-
-    return f"""
-WITH tok AS (
-  SELECT doc_id, {_TOKS} AS toks FROM documents
-  WHERE text IS NOT NULL AND trim(text) <> ''
-),
-pos AS (
-  SELECT doc_id, toks[i] AS term, i - 1 AS pos
-  FROM tok, UNNEST(generate_series(1, len(toks))) AS t(i)
-  WHERE toks[i] IN ('{PHRASE[0]}', '{PHRASE[1]}')
-)
-SELECT a.doc_id, CAST(count(*) AS BIGINT) AS n_phrase_hits
-FROM pos a JOIN pos b
-  ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-WHERE a.term = '{PHRASE[0]}' AND b.term = '{PHRASE[1]}'
-GROUP BY a.doc_id
-ORDER BY a.doc_id
-"""
-
-
-ORACLES_ALGO["phrase_search_docs"] = _phrase_search_oracle()
-
-
 # ------------------------------------------------------------------
 # Equi-depth histogram: per-nation order-value quartiles. Exact
 # cross-engine because the inputs are integer cents: type-7 linear
@@ -553,6 +515,25 @@ ORACLES_ALGO["phrase_search_docs"] = _phrase_search_oracle()
 # quality_outlier_mad).
 
 
+@query(
+    oracle="""
+WITH base AS (
+  SELECT n.n_name, CAST(round(o_totalprice * 100.0) AS BIGINT) AS cents
+  FROM orders o
+  JOIN customer c ON o.o_custkey = c.c_custkey
+  JOIN nation n ON c.c_nationkey = n.n_nationkey
+)
+SELECT n_name,
+  CAST(count(*) AS BIGINT) AS n_orders,
+  quantile_cont(cents, 0.25) AS q1_cents,
+  quantile_cont(cents, 0.5) AS med_cents,
+  quantile_cont(cents, 0.75) AS q3_cents,
+  quantile_cont(cents, 0.75) - quantile_cont(cents, 0.25) AS iqr_cents
+FROM base
+GROUP BY n_name
+ORDER BY n_name
+"""
+)
 def equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-nation quartile boundaries of order value (cents): the
     equi-DEPTH complement to revenue_histogram's equi-width buckets —
@@ -598,27 +579,6 @@ def equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_ALGO["equi_depth_histogram"] = equi_depth_histogram
-
-ORACLES_ALGO["equi_depth_histogram"] = """
-WITH base AS (
-  SELECT n.n_name, CAST(round(o_totalprice * 100.0) AS BIGINT) AS cents
-  FROM orders o
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN nation n ON c.c_nationkey = n.n_nationkey
-)
-SELECT n_name,
-  CAST(count(*) AS BIGINT) AS n_orders,
-  quantile_cont(cents, 0.25) AS q1_cents,
-  quantile_cont(cents, 0.5) AS med_cents,
-  quantile_cont(cents, 0.75) AS q3_cents,
-  quantile_cont(cents, 0.75) - quantile_cont(cents, 0.25) AS iqr_cents
-FROM base
-GROUP BY n_name
-ORDER BY n_name
-"""
-
-
 # ------------------------------------------------------------------
 # Fixed-size weighted sample: exactly-K documents drawn with
 # weight-biased priorities — the "give me a 10k-doc quality-weighted
@@ -629,6 +589,30 @@ ORDER BY n_name
 SAMPLE_K = 200
 
 
+def _wsample_oracle() -> str:
+    from youtube_etl_automated_pipeline_spark.plans.queries_dedup_adv import _TOKS
+
+    ntok = f"CASE WHEN trim(text) = '' OR text IS NULL THEN 0 ELSE len({_TOKS}) END"
+    bucket = (
+        "CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)"
+        " % 1000000"
+    )
+    return f"""
+WITH base AS (
+  SELECT doc_id, coalesce(lang, '??') AS lang,
+         CAST({ntok} + 1 AS BIGINT) AS w,
+         {bucket} AS bucket
+  FROM documents
+)
+SELECT doc_id, lang, w,
+       CAST((bucket * 1000000) // w AS BIGINT) AS priority_ppb
+FROM base
+ORDER BY priority_ppb, doc_id
+LIMIT {SAMPLE_K}
+"""
+
+
+@query(oracle=_wsample_oracle())
 def weighted_topk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-K weight-biased sample of documents: priority_ppb =
     (md5_bucket * 1_000_000) DIV weight with weight = n_tokens + 1
@@ -664,35 +648,6 @@ def weighted_topk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_ALGO["weighted_topk_sample"] = weighted_topk_sample
-
-
-def _wsample_oracle() -> str:
-    from youtube_etl_automated_pipeline_spark.plans.oracles_ext import _TOKS
-
-    ntok = f"CASE WHEN trim(text) = '' OR text IS NULL THEN 0 ELSE len({_TOKS}) END"
-    bucket = (
-        "CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)"
-        " % 1000000"
-    )
-    return f"""
-WITH base AS (
-  SELECT doc_id, coalesce(lang, '??') AS lang,
-         CAST({ntok} + 1 AS BIGINT) AS w,
-         {bucket} AS bucket
-  FROM documents
-)
-SELECT doc_id, lang, w,
-       CAST((bucket * 1000000) // w AS BIGINT) AS priority_ppb
-FROM base
-ORDER BY priority_ppb, doc_id
-LIMIT {SAMPLE_K}
-"""
-
-
-ORACLES_ALGO["weighted_topk_sample"] = _wsample_oracle()
-
-
 # ------------------------------------------------------------------
 # GDPR / right-to-be-forgotten cascade: given a deterministic set of
 # customers to forget, propagate the delete through the FK chain
@@ -702,6 +657,40 @@ ORACLES_ALGO["weighted_topk_sample"] = _wsample_oracle()
 FORGET_MOD = 97  # customers with c_custkey % 97 == 0 request deletion
 
 
+@query(
+    oracle=f"""
+WITH forget AS (
+  SELECT c_custkey FROM customer WHERE c_custkey % {FORGET_MOD} = 0
+),
+del_orders AS (
+  SELECT o_orderkey FROM orders
+  WHERE o_custkey IN (SELECT c_custkey FROM forget)
+),
+census AS (
+  SELECT 'customer' AS table_name,
+    CAST(count(*) AS BIGINT) AS n_total,
+    CAST(sum(CASE WHEN c_custkey % {FORGET_MOD} = 0 THEN 1 ELSE 0 END)
+         AS BIGINT) AS n_deleted
+  FROM customer
+  UNION ALL
+  SELECT 'orders',
+    CAST(count(*) AS BIGINT),
+    CAST(sum(CASE WHEN o_custkey IN (SELECT c_custkey FROM forget)
+             THEN 1 ELSE 0 END) AS BIGINT)
+  FROM orders
+  UNION ALL
+  SELECT 'lineitem',
+    CAST(count(*) AS BIGINT),
+    CAST(sum(CASE WHEN l_orderkey IN (SELECT o_orderkey FROM del_orders)
+             THEN 1 ELSE 0 END) AS BIGINT)
+  FROM lineitem
+)
+SELECT table_name, n_total, n_deleted,
+       CAST(n_total - n_deleted AS BIGINT) AS n_surviving
+FROM census
+ORDER BY table_name
+"""
+)
 def gdpr_delete_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-table delete-cascade audit: (table_name, n_total,
     n_deleted, n_surviving) for customer/orders/lineitem when every
@@ -761,42 +750,6 @@ def gdpr_delete_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_ALGO["gdpr_delete_cascade"] = gdpr_delete_cascade
-
-ORACLES_ALGO["gdpr_delete_cascade"] = f"""
-WITH forget AS (
-  SELECT c_custkey FROM customer WHERE c_custkey % {FORGET_MOD} = 0
-),
-del_orders AS (
-  SELECT o_orderkey FROM orders
-  WHERE o_custkey IN (SELECT c_custkey FROM forget)
-),
-census AS (
-  SELECT 'customer' AS table_name,
-    CAST(count(*) AS BIGINT) AS n_total,
-    CAST(sum(CASE WHEN c_custkey % {FORGET_MOD} = 0 THEN 1 ELSE 0 END)
-         AS BIGINT) AS n_deleted
-  FROM customer
-  UNION ALL
-  SELECT 'orders',
-    CAST(count(*) AS BIGINT),
-    CAST(sum(CASE WHEN o_custkey IN (SELECT c_custkey FROM forget)
-             THEN 1 ELSE 0 END) AS BIGINT)
-  FROM orders
-  UNION ALL
-  SELECT 'lineitem',
-    CAST(count(*) AS BIGINT),
-    CAST(sum(CASE WHEN l_orderkey IN (SELECT o_orderkey FROM del_orders)
-             THEN 1 ELSE 0 END) AS BIGINT)
-  FROM lineitem
-)
-SELECT table_name, n_total, n_deleted,
-       CAST(n_total - n_deleted AS BIGINT) AS n_surviving
-FROM census
-ORDER BY table_name
-"""
-
-
 # ------------------------------------------------------------------
 # CUSUM change detection: the sequential-recursion monitor (S_t =
 # max(0, S_{t-1} + x_t - target - k)) no window function expresses —
@@ -806,6 +759,49 @@ ORDER BY table_name
 CUSUM_EPOCH = "1990-01-01"
 
 
+@query(
+    oracle=f"""
+WITH RECURSIVE weekly AS (
+  SELECT o_orderpriority AS priority,
+         CAST(datediff('day', DATE '{CUSUM_EPOCH}', o_orderdate) // 7
+              AS BIGINT) AS week,
+         CAST(sum(CAST(round(o_totalprice * 100.0) AS BIGINT)) AS BIGINT) AS x
+  FROM orders
+  WHERE o_orderdate IS NOT NULL AND o_totalprice IS NOT NULL
+  GROUP BY 1, 2
+),
+tgt AS (
+  SELECT priority, CAST(sum(x) // count(*) AS BIGINT) AS target
+  FROM weekly GROUP BY priority
+),
+seq AS (
+  SELECT w.priority, w.week, w.x, t.target,
+         row_number() OVER (PARTITION BY w.priority ORDER BY w.week) AS rn
+  FROM weekly w JOIN tgt t USING (priority)
+),
+r AS (
+  SELECT priority, rn, week, target,
+         greatest(CAST(0 AS BIGINT),
+                  x - target - target // 20) AS s
+  FROM seq WHERE rn = 1
+  UNION ALL
+  SELECT seq.priority, seq.rn, seq.week, seq.target,
+         greatest(CAST(0 AS BIGINT),
+                  r.s + seq.x - seq.target - seq.target // 20)
+  FROM r JOIN seq ON seq.priority = r.priority AND seq.rn = r.rn + 1
+)
+SELECT priority,
+  CAST(count(*) AS BIGINT) AS n_weeks,
+  any_value(target) AS target_cents,
+  CAST(sum(CASE WHEN s > target THEN 1 ELSE 0 END) AS BIGINT) AS n_alarms,
+  CAST(max(s) AS BIGINT) AS max_s_cents,
+  CAST(coalesce(min(CASE WHEN s > target THEN week END), -1) AS BIGINT)
+    AS first_alarm_week
+FROM r
+GROUP BY priority
+ORDER BY priority
+"""
+)
 def cusum_weekly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-priority upward-shift CUSUM over weekly revenue: target =
     mean weekly cents (integer div), allowance k = target DIV 20,
@@ -897,51 +893,6 @@ def cusum_weekly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("priority")
 
 
-QUERIES_ALGO["cusum_weekly_revenue"] = cusum_weekly_revenue
-
-ORACLES_ALGO["cusum_weekly_revenue"] = f"""
-WITH RECURSIVE weekly AS (
-  SELECT o_orderpriority AS priority,
-         CAST(datediff('day', DATE '{CUSUM_EPOCH}', o_orderdate) // 7
-              AS BIGINT) AS week,
-         CAST(sum(CAST(round(o_totalprice * 100.0) AS BIGINT)) AS BIGINT) AS x
-  FROM orders
-  WHERE o_orderdate IS NOT NULL AND o_totalprice IS NOT NULL
-  GROUP BY 1, 2
-),
-tgt AS (
-  SELECT priority, CAST(sum(x) // count(*) AS BIGINT) AS target
-  FROM weekly GROUP BY priority
-),
-seq AS (
-  SELECT w.priority, w.week, w.x, t.target,
-         row_number() OVER (PARTITION BY w.priority ORDER BY w.week) AS rn
-  FROM weekly w JOIN tgt t USING (priority)
-),
-r AS (
-  SELECT priority, rn, week, target,
-         greatest(CAST(0 AS BIGINT),
-                  x - target - target // 20) AS s
-  FROM seq WHERE rn = 1
-  UNION ALL
-  SELECT seq.priority, seq.rn, seq.week, seq.target,
-         greatest(CAST(0 AS BIGINT),
-                  r.s + seq.x - seq.target - seq.target // 20)
-  FROM r JOIN seq ON seq.priority = r.priority AND seq.rn = r.rn + 1
-)
-SELECT priority,
-  CAST(count(*) AS BIGINT) AS n_weeks,
-  any_value(target) AS target_cents,
-  CAST(sum(CASE WHEN s > target THEN 1 ELSE 0 END) AS BIGINT) AS n_alarms,
-  CAST(max(s) AS BIGINT) AS max_s_cents,
-  CAST(coalesce(min(CASE WHEN s > target THEN week END), -1) AS BIGINT)
-    AS first_alarm_week
-FROM r
-GROUP BY priority
-ORDER BY priority
-"""
-
-
 # ------------------------------------------------------------------
 # Winsorized statistics: clip at the p05/p95 boundaries, then exact
 # integer means over the clipped values — the robust-mean transform a
@@ -950,6 +901,40 @@ ORDER BY priority
 # by 4 into exact integers so the mean is one bigint division.
 
 
+@query(
+    oracle="""
+WITH base AS (
+  SELECT n.n_name, CAST(round(o_totalprice * 100.0) AS BIGINT) AS cents
+  FROM orders o
+  JOIN customer c ON o.o_custkey = c.c_custkey
+  JOIN nation n ON c.c_nationkey = n.n_nationkey
+),
+bounds AS (
+  SELECT n_name,
+         quantile_cont(cents, 0.05) AS p05,
+         quantile_cont(cents, 0.95) AS p95
+  FROM base GROUP BY n_name
+),
+clipped AS (
+  SELECT b.n_name, bo.p05, bo.p95,
+         CAST(least(greatest(b.cents * 4.0, bo.p05 * 4), bo.p95 * 4)
+              AS BIGINT) AS c4,
+         b.cents < bo.p05 AS lo,
+         b.cents > bo.p95 AS hi
+  FROM base b JOIN bounds bo USING (n_name)
+)
+SELECT n_name,
+  CAST(count(*) AS BIGINT) AS n_orders,
+  any_value(p05) AS p05_cents,
+  any_value(p95) AS p95_cents,
+  CAST(sum(CASE WHEN lo THEN 1 ELSE 0 END) AS BIGINT) AS n_clipped_low,
+  CAST(sum(CASE WHEN hi THEN 1 ELSE 0 END) AS BIGINT) AS n_clipped_high,
+  CAST(sum(c4) // (4 * count(*)) AS BIGINT) AS winsorized_mean_cents
+FROM clipped
+GROUP BY n_name
+ORDER BY n_name
+"""
+)
 def winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-nation winsorized order-value stats: p05/p95 boundaries,
     counts clipped low/high, and the winsorized mean in exact cents.
@@ -1008,42 +993,6 @@ def winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_ALGO["winsorized_stats"] = winsorized_stats
-
-ORACLES_ALGO["winsorized_stats"] = """
-WITH base AS (
-  SELECT n.n_name, CAST(round(o_totalprice * 100.0) AS BIGINT) AS cents
-  FROM orders o
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN nation n ON c.c_nationkey = n.n_nationkey
-),
-bounds AS (
-  SELECT n_name,
-         quantile_cont(cents, 0.05) AS p05,
-         quantile_cont(cents, 0.95) AS p95
-  FROM base GROUP BY n_name
-),
-clipped AS (
-  SELECT b.n_name, bo.p05, bo.p95,
-         CAST(least(greatest(b.cents * 4.0, bo.p05 * 4), bo.p95 * 4)
-              AS BIGINT) AS c4,
-         b.cents < bo.p05 AS lo,
-         b.cents > bo.p95 AS hi
-  FROM base b JOIN bounds bo USING (n_name)
-)
-SELECT n_name,
-  CAST(count(*) AS BIGINT) AS n_orders,
-  any_value(p05) AS p05_cents,
-  any_value(p95) AS p95_cents,
-  CAST(sum(CASE WHEN lo THEN 1 ELSE 0 END) AS BIGINT) AS n_clipped_low,
-  CAST(sum(CASE WHEN hi THEN 1 ELSE 0 END) AS BIGINT) AS n_clipped_high,
-  CAST(sum(c4) // (4 * count(*)) AS BIGINT) AS winsorized_mean_cents
-FROM clipped
-GROUP BY n_name
-ORDER BY n_name
-"""
-
-
 # ------------------------------------------------------------------
 # KMV sketch SET OPERATIONS: union/intersection distinct estimates
 # from two K-Minimum-Values sketches (Bar-Yossef et al. / theta-sketch
@@ -1056,6 +1005,74 @@ KMVOP_DOMAIN = float(1 << 60)
 KMV_ERA_SPLIT = "1998-01-01"  # era A: orders before; era B: after
 
 
+def _kmvop_oracle() -> str:
+    k = KMVOP_K
+    dom = KMVOP_DOMAIN
+    est = (
+        "CASE WHEN {n} < %d THEN CAST({n} AS BIGINT) ELSE "
+        "CAST(floor(%r * (%r / CAST({kth} AS DOUBLE)) + 0.5) AS BIGINT) END"
+        % (k, float(k - 1), dom)
+    )
+    return f"""
+WITH tagged AS (
+  SELECT CASE WHEN o_orderdate < TIMESTAMP '{KMV_ERA_SPLIT}' THEN 'A'
+              ELSE 'B' END AS era,
+         CAST('0x' || substr(md5(CAST(o_custkey AS VARCHAR)), 1, 15)
+              AS BIGINT) AS hv,
+         o_custkey
+  FROM orders
+),
+h AS (SELECT DISTINCT era, hv FROM tagged),
+kept AS (
+  SELECT era, hv FROM (
+    SELECT era, hv, row_number() OVER (PARTITION BY era ORDER BY hv) AS rn
+    FROM h
+  ) WHERE rn <= {k}
+),
+per_era AS (
+  SELECT era, count(*) AS n_kept, max(hv) AS kth FROM kept GROUP BY era
+),
+ukept AS (
+  SELECT hv FROM (
+    SELECT hv, row_number() OVER (ORDER BY hv) AS rn
+    FROM (SELECT DISTINCT hv FROM kept)
+  ) WHERE rn <= {k}
+),
+usk AS (SELECT count(*) AS u_kept, max(hv) AS u_kth FROM ukept),
+rho AS (
+  SELECT count(*) AS rho FROM ukept u
+  WHERE u.hv IN (SELECT hv FROM kept WHERE era = 'A')
+    AND u.hv IN (SELECT hv FROM kept WHERE era = 'B')
+),
+exact AS (
+  SELECT
+    count(DISTINCT CASE WHEN era = 'A' THEN o_custkey END) AS exact_a,
+    count(DISTINCT CASE WHEN era = 'B' THEN o_custkey END) AS exact_b,
+    count(DISTINCT o_custkey) AS exact_union
+  FROM tagged
+),
+inter_exact AS (
+  SELECT count(DISTINCT o_custkey) AS exact_inter
+  FROM tagged WHERE era = 'A' AND o_custkey IN
+    (SELECT o_custkey FROM tagged WHERE era = 'B')
+),
+ea AS (SELECT n_kept AS a_kept, kth AS a_kth FROM per_era WHERE era = 'A'),
+eb AS (SELECT n_kept AS b_kept, kth AS b_kth FROM per_era WHERE era = 'B')
+SELECT CAST(exact_a AS BIGINT) AS exact_a,
+  CAST(exact_b AS BIGINT) AS exact_b,
+  CAST(exact_union AS BIGINT) AS exact_union,
+  CAST(exact_inter AS BIGINT) AS exact_inter,
+  {est.format(n="a_kept", kth="a_kth")} AS est_a,
+  {est.format(n="b_kept", kth="b_kth")} AS est_b,
+  {est.format(n="u_kept", kth="u_kth")} AS est_union,
+  CAST(floor(CAST(rho AS DOUBLE)
+             * CAST({est.format(n="u_kept", kth="u_kth")} AS DOUBLE)
+             / {float(k)!r} + 0.5) AS BIGINT) AS est_inter
+FROM exact, inter_exact, ea, eb, usk, rho
+"""
+
+
+@query(oracle=_kmvop_oracle())
 def kmv_set_operations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row census: exact and KMV-estimated distinct customers for
     era A (orders < KMV_ERA_SPLIT), era B (>=), their union and their
@@ -1173,79 +1190,6 @@ def kmv_set_operations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_ALGO["kmv_set_operations"] = kmv_set_operations
-
-
-def _kmvop_oracle() -> str:
-    k = KMVOP_K
-    dom = KMVOP_DOMAIN
-    est = (
-        "CASE WHEN {n} < %d THEN CAST({n} AS BIGINT) ELSE "
-        "CAST(floor(%r * (%r / CAST({kth} AS DOUBLE)) + 0.5) AS BIGINT) END"
-        % (k, float(k - 1), dom)
-    )
-    return f"""
-WITH tagged AS (
-  SELECT CASE WHEN o_orderdate < TIMESTAMP '{KMV_ERA_SPLIT}' THEN 'A'
-              ELSE 'B' END AS era,
-         CAST('0x' || substr(md5(CAST(o_custkey AS VARCHAR)), 1, 15)
-              AS BIGINT) AS hv,
-         o_custkey
-  FROM orders
-),
-h AS (SELECT DISTINCT era, hv FROM tagged),
-kept AS (
-  SELECT era, hv FROM (
-    SELECT era, hv, row_number() OVER (PARTITION BY era ORDER BY hv) AS rn
-    FROM h
-  ) WHERE rn <= {k}
-),
-per_era AS (
-  SELECT era, count(*) AS n_kept, max(hv) AS kth FROM kept GROUP BY era
-),
-ukept AS (
-  SELECT hv FROM (
-    SELECT hv, row_number() OVER (ORDER BY hv) AS rn
-    FROM (SELECT DISTINCT hv FROM kept)
-  ) WHERE rn <= {k}
-),
-usk AS (SELECT count(*) AS u_kept, max(hv) AS u_kth FROM ukept),
-rho AS (
-  SELECT count(*) AS rho FROM ukept u
-  WHERE u.hv IN (SELECT hv FROM kept WHERE era = 'A')
-    AND u.hv IN (SELECT hv FROM kept WHERE era = 'B')
-),
-exact AS (
-  SELECT
-    count(DISTINCT CASE WHEN era = 'A' THEN o_custkey END) AS exact_a,
-    count(DISTINCT CASE WHEN era = 'B' THEN o_custkey END) AS exact_b,
-    count(DISTINCT o_custkey) AS exact_union
-  FROM tagged
-),
-inter_exact AS (
-  SELECT count(DISTINCT o_custkey) AS exact_inter
-  FROM tagged WHERE era = 'A' AND o_custkey IN
-    (SELECT o_custkey FROM tagged WHERE era = 'B')
-),
-ea AS (SELECT n_kept AS a_kept, kth AS a_kth FROM per_era WHERE era = 'A'),
-eb AS (SELECT n_kept AS b_kept, kth AS b_kth FROM per_era WHERE era = 'B')
-SELECT CAST(exact_a AS BIGINT) AS exact_a,
-  CAST(exact_b AS BIGINT) AS exact_b,
-  CAST(exact_union AS BIGINT) AS exact_union,
-  CAST(exact_inter AS BIGINT) AS exact_inter,
-  {est.format(n="a_kept", kth="a_kth")} AS est_a,
-  {est.format(n="b_kept", kth="b_kth")} AS est_b,
-  {est.format(n="u_kept", kth="u_kth")} AS est_union,
-  CAST(floor(CAST(rho AS DOUBLE)
-             * CAST({est.format(n="u_kept", kth="u_kth")} AS DOUBLE)
-             / {float(k)!r} + 0.5) AS BIGINT) AS est_inter
-FROM exact, inter_exact, ea, eb, usk, rho
-"""
-
-
-ORACLES_ALGO["kmv_set_operations"] = _kmvop_oracle()
-
-
 # ------------------------------------------------------------------
 # Bounded k-core peeling: iteratively remove nodes of degree < K from
 # the trade graph and report the (nodes, arcs) trajectory — the
@@ -1257,6 +1201,51 @@ KCORE_K = 48
 KCORE_ROUNDS = 4
 
 
+def _kcore_oracle() -> str:
+    from youtube_etl_automated_pipeline_spark.plans.queries_graph import SUPP_NODE_BASE
+
+    parts = [
+        f"""eo AS (
+  SELECT DISTINCT o_custkey AS c, l_suppkey + {SUPP_NODE_BASE} AS s
+  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+),
+arcs0 AS MATERIALIZED (
+  SELECT c AS src, s AS dst FROM eo
+  UNION ALL
+  SELECT s AS src, c AS dst FROM eo
+)"""
+    ]
+    for i in range(1, KCORE_ROUNDS + 1):
+        prev = f"arcs{i - 1}"
+        parts.append(
+            f"""keep{i} AS MATERIALIZED (
+  SELECT src AS node FROM {prev} GROUP BY src HAVING count(*) >= {KCORE_K}
+)"""
+        )
+        parts.append(
+            f"""arcs{i} AS MATERIALIZED (
+  SELECT a.src, a.dst FROM {prev} a
+  WHERE a.src IN (SELECT node FROM keep{i})
+    AND a.dst IN (SELECT node FROM keep{i})
+)"""
+        )
+    union = "\n  UNION ALL ".join(
+        f"SELECT {i} AS round,"
+        f" (SELECT count(DISTINCT src) FROM arcs{i}) AS n_nodes,"
+        f" (SELECT count(*) FROM arcs{i}) AS n_arcs"
+        for i in range(1, KCORE_ROUNDS + 1)
+    )
+    return f"""
+WITH {", ".join(parts)}
+SELECT CAST(round AS INT) AS round,
+       CAST(n_nodes AS BIGINT) AS n_nodes,
+       CAST(n_arcs AS BIGINT) AS n_arcs
+FROM ({union})
+ORDER BY round
+"""
+
+
+@query(oracle=_kcore_oracle())
 def kcore_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(round, n_nodes, n_arcs) after each of KCORE_ROUNDS peeling
     rounds with threshold KCORE_K over the symmetrized trade graph
@@ -1300,55 +1289,3 @@ def kcore_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     for r in rows[1:]:
         out = out.unionByName(r)
     return out.orderBy("round")
-
-
-QUERIES_ALGO["kcore_trade_graph"] = kcore_trade_graph
-
-
-def _kcore_oracle() -> str:
-    from youtube_etl_automated_pipeline_spark.plans.queries_graph import (
-        SUPP_NODE_BASE,
-    )
-
-    parts = [
-        f"""eo AS (
-  SELECT DISTINCT o_custkey AS c, l_suppkey + {SUPP_NODE_BASE} AS s
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-),
-arcs0 AS MATERIALIZED (
-  SELECT c AS src, s AS dst FROM eo
-  UNION ALL
-  SELECT s AS src, c AS dst FROM eo
-)"""
-    ]
-    for i in range(1, KCORE_ROUNDS + 1):
-        prev = f"arcs{i - 1}"
-        parts.append(
-            f"""keep{i} AS MATERIALIZED (
-  SELECT src AS node FROM {prev} GROUP BY src HAVING count(*) >= {KCORE_K}
-)"""
-        )
-        parts.append(
-            f"""arcs{i} AS MATERIALIZED (
-  SELECT a.src, a.dst FROM {prev} a
-  WHERE a.src IN (SELECT node FROM keep{i})
-    AND a.dst IN (SELECT node FROM keep{i})
-)"""
-        )
-    union = "\n  UNION ALL ".join(
-        f"SELECT {i} AS round,"
-        f" (SELECT count(DISTINCT src) FROM arcs{i}) AS n_nodes,"
-        f" (SELECT count(*) FROM arcs{i}) AS n_arcs"
-        for i in range(1, KCORE_ROUNDS + 1)
-    )
-    return f"""
-WITH {", ".join(parts)}
-SELECT CAST(round AS INT) AS round,
-       CAST(n_nodes AS BIGINT) AS n_nodes,
-       CAST(n_arcs AS BIGINT) AS n_arcs
-FROM ({union})
-ORDER BY round
-"""
-
-
-ORACLES_ALGO["kcore_trade_graph"] = _kcore_oracle()

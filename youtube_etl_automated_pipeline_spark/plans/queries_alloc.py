@@ -24,16 +24,47 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
 from youtube_etl_automated_pipeline_spark.operators.windows import bounded_window
-
+from youtube_etl_automated_pipeline_spark.plans.registry import query
 from youtube_etl_automated_pipeline_spark.sources import load_table, load_wide
-
-QUERIES_ALLOC: dict = {}
-ORACLES_ALLOC: dict[str, str] = {}
 
 ATTR_WINDOW_DAYS = 7
 
 
+@query(
+    oracle=f"""
+WITH ev AS (
+  SELECT user_id, event_id, date_trunc('microseconds', ts) AS ts,
+         event_type, value
+  FROM events
+), purchases AS (
+  SELECT user_id, event_id AS purchase_id, ts AS p_ts,
+         CAST(floor(value * 1e2 + 5e-1) AS BIGINT) AS cents
+  FROM ev WHERE event_type = 'purchase'
+), clicks AS (
+  SELECT user_id, event_id AS click_id, ts AS c_ts
+  FROM ev WHERE event_type = 'click'
+), pairs AS (
+  SELECT p.purchase_id, p.cents, c.click_id, c.c_ts
+  FROM purchases p JOIN clicks c USING (user_id)
+  WHERE c.c_ts < p.p_ts
+    AND c.c_ts >= p.p_ts - INTERVAL {ATTR_WINDOW_DAYS} DAYS
+), credited AS (
+  SELECT CAST(c_ts AS DATE) AS click_day,
+         cents // count(*) OVER (PARTITION BY purchase_id)
+         + CASE WHEN row_number() OVER (PARTITION BY purchase_id
+                    ORDER BY c_ts DESC, click_id ASC)
+                <= cents % count(*) OVER (PARTITION BY purchase_id)
+                THEN 1 ELSE 0 END AS credit_cents
+  FROM pairs
+)
+SELECT click_day,
+       CAST(count(*) AS BIGINT) AS n_credited_clicks,
+       CAST(sum(credit_cents) AS BIGINT) AS credit_cents
+FROM credited GROUP BY click_day
+"""
+)
 def attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily credited-revenue report under linear multi-touch
     attribution: for each purchase, every click by the same user in
@@ -94,47 +125,40 @@ def attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_ALLOC["attribution_linear"] = attribution_linear
-
-ORACLES_ALLOC["attribution_linear"] = f"""
-WITH ev AS (
-  SELECT user_id, event_id, date_trunc('microseconds', ts) AS ts,
-         event_type, value
-  FROM events
-), purchases AS (
-  SELECT user_id, event_id AS purchase_id, ts AS p_ts,
-         CAST(floor(value * 1e2 + 5e-1) AS BIGINT) AS cents
-  FROM ev WHERE event_type = 'purchase'
-), clicks AS (
-  SELECT user_id, event_id AS click_id, ts AS c_ts
-  FROM ev WHERE event_type = 'click'
-), pairs AS (
-  SELECT p.purchase_id, p.cents, c.click_id, c.c_ts
-  FROM purchases p JOIN clicks c USING (user_id)
-  WHERE c.c_ts < p.p_ts
-    AND c.c_ts >= p.p_ts - INTERVAL {ATTR_WINDOW_DAYS} DAYS
-), credited AS (
-  SELECT CAST(c_ts AS DATE) AS click_day,
-         cents // count(*) OVER (PARTITION BY purchase_id)
-         + CASE WHEN row_number() OVER (PARTITION BY purchase_id
-                    ORDER BY c_ts DESC, click_id ASC)
-                <= cents % count(*) OVER (PARTITION BY purchase_id)
-                THEN 1 ELSE 0 END AS credit_cents
-  FROM pairs
-)
-SELECT click_day,
-       CAST(count(*) AS BIGINT) AS n_credited_clicks,
-       CAST(sum(credit_cents) AS BIGINT) AS credit_cents
-FROM credited GROUP BY click_day
-"""
-
-
 # ------------------------------------------------------------------
 # Hamilton apportionment of a document budget across corpus cells.
 
 CORPUS_BUDGET = 10_000
 
 
+@query(
+    oracle=f"""
+WITH cells AS (
+  SELECT COALESCE(lang, '??') AS lang, COALESCE(source, '??') AS source,
+         CAST(sum(length(text)) AS BIGINT) AS mass
+  FROM documents WHERE text IS NOT NULL
+  GROUP BY 1, 2
+), sized AS (
+  SELECT lang, source, mass,
+         sum(mass) OVER () AS total_mass,
+         CAST(CAST(mass AS HUGEINT) * {CORPUS_BUDGET}
+              // sum(mass) OVER () AS BIGINT) AS base,
+         CAST(CAST(mass AS HUGEINT) * {CORPUS_BUDGET}
+              % sum(mass) OVER () AS BIGINT) AS rem
+  FROM cells
+), ranked AS (
+  SELECT *,
+         {CORPUS_BUDGET} - sum(base) OVER () AS leftover,
+         row_number() OVER (ORDER BY rem DESC, lang ASC, source ASC)
+           AS rem_rank
+  FROM sized
+)
+SELECT lang, source, mass,
+       base + CASE WHEN rem_rank <= leftover THEN 1 ELSE 0 END
+         AS quota_docs
+FROM ranked
+"""
+)
 def corpus_budget_apportion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer per-(lang, source) document quotas apportioning
     CORPUS_BUDGET proportional to character mass, largest-remainder
@@ -190,33 +214,3 @@ def corpus_budget_apportion(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("quota_docs"),
         )
     )
-
-
-QUERIES_ALLOC["corpus_budget_apportion"] = corpus_budget_apportion
-
-ORACLES_ALLOC["corpus_budget_apportion"] = f"""
-WITH cells AS (
-  SELECT COALESCE(lang, '??') AS lang, COALESCE(source, '??') AS source,
-         CAST(sum(length(text)) AS BIGINT) AS mass
-  FROM documents WHERE text IS NOT NULL
-  GROUP BY 1, 2
-), sized AS (
-  SELECT lang, source, mass,
-         sum(mass) OVER () AS total_mass,
-         CAST(CAST(mass AS HUGEINT) * {CORPUS_BUDGET}
-              // sum(mass) OVER () AS BIGINT) AS base,
-         CAST(CAST(mass AS HUGEINT) * {CORPUS_BUDGET}
-              % sum(mass) OVER () AS BIGINT) AS rem
-  FROM cells
-), ranked AS (
-  SELECT *,
-         {CORPUS_BUDGET} - sum(base) OVER () AS leftover,
-         row_number() OVER (ORDER BY rem DESC, lang ASC, source ASC)
-           AS rem_rank
-  FROM sized
-)
-SELECT lang, source, mass,
-       base + CASE WHEN rem_rank <= leftover THEN 1 ELSE 0 END
-         AS quota_docs
-FROM ranked
-"""

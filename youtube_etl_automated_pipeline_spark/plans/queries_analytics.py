@@ -17,15 +17,41 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from youtube_etl_automated_pipeline_spark.operators.windows import bounded_window
 
 from youtube_etl_automated_pipeline_spark.functions.compat import (
+    hround,
+    sql_hround,
     sql_xsum,
     xsum,
 )
-from youtube_etl_automated_pipeline_spark.sources import load_table, load_wide, widen_scan
+from youtube_etl_automated_pipeline_spark.operators.windows import bounded_window
+from youtube_etl_automated_pipeline_spark.plans.registry import query
+from youtube_etl_automated_pipeline_spark.sources import (
+    load_table,
+    load_wide,
+    widen_scan,
+)
 
 
+@query(
+    oracle="""
+WITH per_user AS (
+  SELECT user_id,
+    min(CASE WHEN event_type = 'view' THEN ts END) AS t_view,
+    min(CASE WHEN event_type = 'click' THEN ts END) AS t_click,
+    min(CASE WHEN event_type = 'purchase' THEN ts END) AS t_purchase
+  FROM events GROUP BY user_id
+)
+SELECT count(*) AS n_users,
+  count(*) FILTER (t_view IS NOT NULL) AS n_viewed,
+  count(*) FILTER (t_view IS NOT NULL AND t_click IS NOT NULL
+                   AND t_click >= t_view) AS n_clicked,
+  count(*) FILTER (t_view IS NOT NULL AND t_click IS NOT NULL
+                   AND t_click >= t_view AND t_purchase IS NOT NULL
+                   AND t_purchase >= t_click) AS n_purchased
+FROM per_user
+"""
+)
 def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered first-touch funnel view -> click -> purchase.
 
@@ -56,6 +82,21 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(
+    oracle="""
+WITH days AS (
+  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events
+),
+first AS (
+  SELECT user_id, min(day) AS cohort_day FROM days GROUP BY user_id
+)
+SELECT cohort_day,
+       CAST(datediff('day', cohort_day, day) // 7 AS BIGINT) AS week,
+       count(DISTINCT d.user_id) AS n_users
+FROM days d JOIN first f ON d.user_id = f.user_id
+GROUP BY 1, 2 ORDER BY 1, 2
+"""
+)
 def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort-retention matrix: users grouped by first-activity date,
     counted per whole-week offset of later activity.
@@ -83,6 +124,16 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(
+    oracle=f"""
+SELECT CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) // 2500000 AS bucket,
+       (CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) // 2500000) * 25000
+         AS bucket_lo_dollars,
+       count(*) AS n_orders,
+       {sql_xsum("o_totalprice", 2)} AS bucket_revenue
+FROM orders GROUP BY 1 ORDER BY 1
+"""
+)
 def revenue_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width histogram of order value in exact integer cents:
     bucket = cents DIV 2_500_000 ($25k buckets). Integer floor-div on
@@ -111,6 +162,30 @@ def revenue_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(
+    oracle="""
+WITH flagged AS (
+  SELECT o_custkey, o_orderpriority, CAST(o_orderdate AS DATE) AS day,
+         o_orderkey,
+         CASE WHEN lag(o_orderpriority) OVER w
+                   IS DISTINCT FROM o_orderpriority
+              THEN 1 ELSE 0 END AS chg
+  FROM orders
+  WINDOW w AS (PARTITION BY o_custkey
+               ORDER BY o_orderdate ASC NULLS LAST, o_orderkey)
+),
+seg AS (
+  SELECT *, CAST(sum(chg) OVER (
+    PARTITION BY o_custkey ORDER BY day ASC NULLS LAST, o_orderkey
+    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS segment
+  FROM flagged
+)
+SELECT o_custkey, segment, o_orderpriority,
+       min(day) AS valid_from, max(day) AS valid_to,
+       count(*) AS n_orders
+FROM seg GROUP BY 1, 2, 3 ORDER BY o_custkey, segment
+"""
+)
 def scd2_priority_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2 (slowly-changing-dimension type 2) interval build: collapse
     each customer's order-priority history into [valid_from, valid_to]
@@ -162,6 +237,27 @@ def scd2_priority_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(
+    oracle="""
+WITH wide AS (
+  SELECT count(*) AS n_rows,
+    count(o_custkey) AS c1_nn, count(DISTINCT o_custkey) AS c1_nd,
+    min(CAST(o_custkey AS VARCHAR)) AS c1_min, max(CAST(o_custkey AS VARCHAR)) AS c1_max,
+    count(o_orderstatus) AS c2_nn, count(DISTINCT o_orderstatus) AS c2_nd,
+    min(o_orderstatus) AS c2_min, max(o_orderstatus) AS c2_max,
+    count(o_orderpriority) AS c3_nn, count(DISTINCT o_orderpriority) AS c3_nd,
+    min(o_orderpriority) AS c3_min, max(o_orderpriority) AS c3_max
+  FROM orders
+)
+SELECT 'o_custkey' AS "column", n_rows, n_rows - c1_nn AS n_null,
+       c1_nd AS n_distinct, c1_min AS min_value, c1_max AS max_value FROM wide
+UNION ALL
+SELECT 'o_orderstatus', n_rows, n_rows - c2_nn, c2_nd, c2_min, c2_max FROM wide
+UNION ALL
+SELECT 'o_orderpriority', n_rows, n_rows - c3_nn, c3_nd, c3_min, c3_max FROM wide
+ORDER BY "column"
+"""
+)
 def data_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-pass column profiling (the DESCRIBE/summary surface):
     per-column row count, null count, distinct count, min/max as
@@ -197,6 +293,21 @@ def data_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("column")
 
 
+@query(
+    oracle="""
+WITH d AS (
+  SELECT doc_id, lang, n_chars // 32 AS len_bucket,
+         substr(lower(text), 1, 64) AS prefix
+  FROM documents
+)
+SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+       CAST(levenshtein(a.prefix, b.prefix) AS BIGINT) AS edit_dist
+FROM d a JOIN d b
+  ON a.lang = b.lang AND a.len_bucket = b.len_bucket AND a.doc_id < b.doc_id
+WHERE levenshtein(a.prefix, b.prefix) <= 20
+ORDER BY doc_a, doc_b
+"""
+)
 def dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit-distance near-dup pairs over documents, made scalable by
     blocking: candidates must share (lang, n_chars DIV 32) — an
@@ -241,6 +352,14 @@ def dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(
+    oracle="""
+SELECT token, count(*) AS n
+FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS token
+      FROM documents)
+GROUP BY token ORDER BY n DESC, token LIMIT 100
+"""
+)
 def vocabulary_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus vocabulary build: explode ASCII word tokens, count, rank,
     keep the top 100 by (count desc, token asc) — the deterministic
@@ -257,118 +376,6 @@ def vocabulary_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     counts = tokens.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
     return counts.orderBy(F.col("n").desc(), F.col("token")).limit(100)
-
-
-QUERIES_ANALYTICS = {
-    "funnel_conversion": funnel_conversion,
-    "cohort_retention": cohort_retention,
-    "revenue_histogram": revenue_histogram,
-    "scd2_priority_intervals": scd2_priority_intervals,
-    "data_profile_orders": data_profile_orders,
-    "dedup_levenshtein": dedup_levenshtein,
-    "vocabulary_topk": vocabulary_topk,
-}
-
-ORACLES_ANALYTICS = {
-    "funnel_conversion": """
-WITH per_user AS (
-  SELECT user_id,
-    min(CASE WHEN event_type = 'view' THEN ts END) AS t_view,
-    min(CASE WHEN event_type = 'click' THEN ts END) AS t_click,
-    min(CASE WHEN event_type = 'purchase' THEN ts END) AS t_purchase
-  FROM events GROUP BY user_id
-)
-SELECT count(*) AS n_users,
-  count(*) FILTER (t_view IS NOT NULL) AS n_viewed,
-  count(*) FILTER (t_view IS NOT NULL AND t_click IS NOT NULL
-                   AND t_click >= t_view) AS n_clicked,
-  count(*) FILTER (t_view IS NOT NULL AND t_click IS NOT NULL
-                   AND t_click >= t_view AND t_purchase IS NOT NULL
-                   AND t_purchase >= t_click) AS n_purchased
-FROM per_user
-""",
-    "cohort_retention": """
-WITH days AS (
-  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events
-),
-first AS (
-  SELECT user_id, min(day) AS cohort_day FROM days GROUP BY user_id
-)
-SELECT cohort_day,
-       CAST(datediff('day', cohort_day, day) // 7 AS BIGINT) AS week,
-       count(DISTINCT d.user_id) AS n_users
-FROM days d JOIN first f ON d.user_id = f.user_id
-GROUP BY 1, 2 ORDER BY 1, 2
-""",
-    "revenue_histogram": f"""
-SELECT CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) // 2500000 AS bucket,
-       (CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) // 2500000) * 25000
-         AS bucket_lo_dollars,
-       count(*) AS n_orders,
-       {sql_xsum("o_totalprice", 2)} AS bucket_revenue
-FROM orders GROUP BY 1 ORDER BY 1
-""",
-    "scd2_priority_intervals": """
-WITH flagged AS (
-  SELECT o_custkey, o_orderpriority, CAST(o_orderdate AS DATE) AS day,
-         o_orderkey,
-         CASE WHEN lag(o_orderpriority) OVER w
-                   IS DISTINCT FROM o_orderpriority
-              THEN 1 ELSE 0 END AS chg
-  FROM orders
-  WINDOW w AS (PARTITION BY o_custkey
-               ORDER BY o_orderdate ASC NULLS LAST, o_orderkey)
-),
-seg AS (
-  SELECT *, CAST(sum(chg) OVER (
-    PARTITION BY o_custkey ORDER BY day ASC NULLS LAST, o_orderkey
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS segment
-  FROM flagged
-)
-SELECT o_custkey, segment, o_orderpriority,
-       min(day) AS valid_from, max(day) AS valid_to,
-       count(*) AS n_orders
-FROM seg GROUP BY 1, 2, 3 ORDER BY o_custkey, segment
-""",
-    "data_profile_orders": """
-WITH wide AS (
-  SELECT count(*) AS n_rows,
-    count(o_custkey) AS c1_nn, count(DISTINCT o_custkey) AS c1_nd,
-    min(CAST(o_custkey AS VARCHAR)) AS c1_min, max(CAST(o_custkey AS VARCHAR)) AS c1_max,
-    count(o_orderstatus) AS c2_nn, count(DISTINCT o_orderstatus) AS c2_nd,
-    min(o_orderstatus) AS c2_min, max(o_orderstatus) AS c2_max,
-    count(o_orderpriority) AS c3_nn, count(DISTINCT o_orderpriority) AS c3_nd,
-    min(o_orderpriority) AS c3_min, max(o_orderpriority) AS c3_max
-  FROM orders
-)
-SELECT 'o_custkey' AS "column", n_rows, n_rows - c1_nn AS n_null,
-       c1_nd AS n_distinct, c1_min AS min_value, c1_max AS max_value FROM wide
-UNION ALL
-SELECT 'o_orderstatus', n_rows, n_rows - c2_nn, c2_nd, c2_min, c2_max FROM wide
-UNION ALL
-SELECT 'o_orderpriority', n_rows, n_rows - c3_nn, c3_nd, c3_min, c3_max FROM wide
-ORDER BY "column"
-""",
-    "dedup_levenshtein": """
-WITH d AS (
-  SELECT doc_id, lang, n_chars // 32 AS len_bucket,
-         substr(lower(text), 1, 64) AS prefix
-  FROM documents
-)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       CAST(levenshtein(a.prefix, b.prefix) AS BIGINT) AS edit_dist
-FROM d a JOIN d b
-  ON a.lang = b.lang AND a.len_bucket = b.len_bucket AND a.doc_id < b.doc_id
-WHERE levenshtein(a.prefix, b.prefix) <= 20
-ORDER BY doc_a, doc_b
-""",
-    "vocabulary_topk": """
-SELECT token, count(*) AS n
-FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS token
-      FROM documents)
-GROUP BY token ORDER BY n DESC, token LIMIT 100
-""",
-}
 
 
 EWMA_SCHEMA = "user_id bigint, n_events bigint, ewma_cents bigint, ewma double"
@@ -423,6 +430,31 @@ def _ewma_partition_kernel(batches):
     )
 
 
+_EWMA_SQL = """
+WITH RECURSIVE ev AS (
+  SELECT user_id,
+         CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS c,
+         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
+  FROM events
+  WHERE value IS NOT NULL
+),
+r AS (
+  SELECT user_id, rn, c AS e FROM ev WHERE rn = 1
+  UNION ALL
+  SELECT ev.user_id, ev.rn, (3 * r.e + ev.c) // 4
+  FROM r JOIN ev ON ev.user_id = r.user_id AND ev.rn = r.rn + 1
+)
+SELECT user_id,
+       CAST(max(rn) AS BIGINT) AS n_events,
+       arg_max(e, rn) AS ewma_cents,
+       CAST(arg_max(e, rn) AS DOUBLE) / 100.0 AS ewma
+FROM r
+GROUP BY user_id
+ORDER BY user_id
+"""
+
+
+@query(oracle=_EWMA_SQL)
 def ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user exponentially weighted moving average of event value —
     the sequential-recursion shape no window function expresses
@@ -452,32 +484,34 @@ def ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     return parted.mapInPandas(_ewma_partition_kernel, EWMA_SCHEMA)
 
 
-QUERIES_ANALYTICS["ewma_user_value"] = ewma_user_value
-
-ORACLES_ANALYTICS["ewma_user_value"] = """
-WITH RECURSIVE ev AS (
-  SELECT user_id,
-         CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS c,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-  FROM events
-  WHERE value IS NOT NULL
-),
-r AS (
-  SELECT user_id, rn, c AS e FROM ev WHERE rn = 1
+@query(
+    oracle="""
+WITH checks AS (
+  SELECT 'nonpositive_price' AS constraint,
+         CAST(sum(CASE WHEN o_totalprice <= 0 THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_violations
+  FROM orders
   UNION ALL
-  SELECT ev.user_id, ev.rn, (3 * r.e + ev.c) // 4
-  FROM r JOIN ev ON ev.user_id = r.user_id AND ev.rn = r.rn + 1
+  SELECT 'null_orderdate',
+         CAST(sum(CASE WHEN o_orderdate IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+  FROM orders
+  UNION ALL
+  SELECT 'bad_status_domain',
+         CAST(sum(CASE WHEN o_orderstatus NOT IN ('O','F','P') THEN 1 ELSE 0 END)
+              AS BIGINT)
+  FROM orders
+  UNION ALL
+  SELECT 'orphan_order_custkey',
+         CAST(count(*) AS BIGINT)
+  FROM orders WHERE o_custkey NOT IN (SELECT c_custkey FROM customer)
+  UNION ALL
+  SELECT 'duplicate_custkey', CAST(count(*) AS BIGINT) FROM (
+    SELECT c_custkey FROM customer GROUP BY c_custkey HAVING count(*) > 1
+  )
 )
-SELECT user_id,
-       CAST(max(rn) AS BIGINT) AS n_events,
-       arg_max(e, rn) AS ewma_cents,
-       CAST(arg_max(e, rn) AS DOUBLE) / 100.0 AS ewma
-FROM r
-GROUP BY user_id
-ORDER BY user_id
+SELECT "constraint", n_violations FROM checks ORDER BY "constraint"
 """
-
-
+)
 def constraint_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-quality expectations as a first-class query (the dbt-test
     / Delta-constraint pattern): one row per declared constraint with
@@ -538,36 +572,31 @@ def constraint_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return melted.unionByName(orphans).unionByName(dup_keys).orderBy("constraint")
 
 
-QUERIES_ANALYTICS["constraint_violations"] = constraint_violations
-
-ORACLES_ANALYTICS["constraint_violations"] = """
-WITH checks AS (
-  SELECT 'nonpositive_price' AS constraint,
-         CAST(sum(CASE WHEN o_totalprice <= 0 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_violations
-  FROM orders
-  UNION ALL
-  SELECT 'null_orderdate',
-         CAST(sum(CASE WHEN o_orderdate IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-  FROM orders
-  UNION ALL
-  SELECT 'bad_status_domain',
-         CAST(sum(CASE WHEN o_orderstatus NOT IN ('O','F','P') THEN 1 ELSE 0 END)
-              AS BIGINT)
-  FROM orders
-  UNION ALL
-  SELECT 'orphan_order_custkey',
-         CAST(count(*) AS BIGINT)
-  FROM orders WHERE o_custkey NOT IN (SELECT c_custkey FROM customer)
-  UNION ALL
-  SELECT 'duplicate_custkey', CAST(count(*) AS BIGINT) FROM (
-    SELECT c_custkey FROM customer GROUP BY c_custkey HAVING count(*) > 1
-  )
+@query(
+    oracle="""
+WITH c AS (
+  SELECT event_type,
+         CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS cents
+  FROM events
+  WHERE value IS NOT NULL
+),
+r AS (
+  SELECT event_type, cents,
+         row_number() OVER (PARTITION BY event_type ORDER BY cents) AS rn,
+         count(*) OVER (PARTITION BY event_type) AS n,
+         sum(cents) OVER (PARTITION BY event_type) AS tot
+  FROM c
 )
-SELECT "constraint", n_violations FROM checks ORDER BY "constraint"
+SELECT event_type,
+       CAST(max(n) AS BIGINT) AS n,
+       CASE WHEN max(n) = 0 OR max(tot) = 0 THEN 0.0
+            ELSE CAST(CAST(sum((2*rn - n - 1) * cents) AS BIGINT) AS DOUBLE)
+                 / CAST(max(n) * max(tot) AS DOUBLE) END AS gini
+FROM r
+GROUP BY event_type
+ORDER BY event_type
 """
-
-
+)
 def gini_value_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type Gini coefficient of event values through a GROUPED-AGG
     pandas UDF — the vectorized-UDAF flavor of the Pandas API surface
@@ -623,33 +652,28 @@ def gini_value_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_ANALYTICS["gini_value_concentration"] = gini_value_concentration
-
-ORACLES_ANALYTICS["gini_value_concentration"] = """
-WITH c AS (
-  SELECT event_type,
-         CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS cents
+_TRANSITION_SQL = """
+WITH ordered AS (
+  SELECT user_id, event_type,
+         lead(event_type) OVER (
+           PARTITION BY user_id
+           ORDER BY date_trunc('microseconds', ts), event_id) AS next_type
   FROM events
-  WHERE value IS NOT NULL
 ),
-r AS (
-  SELECT event_type, cents,
-         row_number() OVER (PARTITION BY event_type ORDER BY cents) AS rn,
-         count(*) OVER (PARTITION BY event_type) AS n,
-         sum(cents) OVER (PARTITION BY event_type) AS tot
-  FROM c
+t AS (
+  SELECT event_type AS from_type, next_type AS to_type,
+         CAST(count(*) AS BIGINT) AS n_transitions
+  FROM ordered WHERE next_type IS NOT NULL GROUP BY 1, 2
 )
-SELECT event_type,
-       CAST(max(n) AS BIGINT) AS n,
-       CASE WHEN max(n) = 0 OR max(tot) = 0 THEN 0.0
-            ELSE CAST(CAST(sum((2*rn - n - 1) * cents) AS BIGINT) AS DOUBLE)
-                 / CAST(max(n) * max(tot) AS DOUBLE) END AS gini
-FROM r
-GROUP BY event_type
-ORDER BY event_type
+SELECT from_type, to_type, n_transitions,
+  CAST(CAST(n_transitions AS BIGINT) * 1000000
+       // sum(n_transitions) OVER (PARTITION BY from_type) AS BIGINT)
+    AS share_ppm
+FROM t ORDER BY from_type, to_type
 """
 
 
+@query(oracle=_TRANSITION_SQL)
 def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Markov transition matrix over per-user event sequences: for
     each (from_type, to_type) pair, how often to_type immediately
@@ -699,29 +723,31 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_ANALYTICS["event_transition_matrix"] = event_transition_matrix
-
-ORACLES_ANALYTICS["event_transition_matrix"] = """
+@query(
+    oracle="""
 WITH ordered AS (
-  SELECT user_id, event_type,
-         lead(event_type) OVER (
-           PARTITION BY user_id
-           ORDER BY date_trunc('microseconds', ts), event_id) AS next_type
+  SELECT user_id, event_id, event_type,
+    epoch_us(date_trunc('microseconds', ts)) AS us,
+    last_value(CASE WHEN event_type = 'click'
+                    THEN epoch_us(date_trunc('microseconds', ts)) END
+               IGNORE NULLS) OVER (
+      PARTITION BY user_id
+      ORDER BY date_trunc('microseconds', ts), event_id
+      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS click_us,
+    last_value(CASE WHEN event_type = 'click' THEN event_id END
+               IGNORE NULLS) OVER (
+      PARTITION BY user_id
+      ORDER BY date_trunc('microseconds', ts), event_id
+      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS click_event_id
   FROM events
-),
-t AS (
-  SELECT event_type AS from_type, next_type AS to_type,
-         CAST(count(*) AS BIGINT) AS n_transitions
-  FROM ordered WHERE next_type IS NOT NULL GROUP BY 1, 2
 )
-SELECT from_type, to_type, n_transitions,
-  CAST(CAST(n_transitions AS BIGINT) * 1000000
-       // sum(n_transitions) OVER (PARTITION BY from_type) AS BIGINT)
-    AS share_ppm
-FROM t ORDER BY from_type, to_type
+SELECT event_id AS purchase_event_id, user_id,
+  CAST(coalesce(click_event_id, -1) AS BIGINT) AS click_event_id,
+  CAST(coalesce(us - click_us, -1) AS BIGINT) AS gap_us
+FROM ordered WHERE event_type = 'purchase'
+ORDER BY purchase_event_id
 """
-
-
+)
 def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LAST-TOUCH attribution: every purchase event attributed to the
     most recent PRECEDING click by the same user — the marketing-
@@ -770,33 +796,26 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_ANALYTICS["attribution_last_touch"] = attribution_last_touch
-
-ORACLES_ANALYTICS["attribution_last_touch"] = """
-WITH ordered AS (
-  SELECT user_id, event_id, event_type,
-    epoch_us(date_trunc('microseconds', ts)) AS us,
-    last_value(CASE WHEN event_type = 'click'
-                    THEN epoch_us(date_trunc('microseconds', ts)) END
-               IGNORE NULLS) OVER (
-      PARTITION BY user_id
-      ORDER BY date_trunc('microseconds', ts), event_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS click_us,
-    last_value(CASE WHEN event_type = 'click' THEN event_id END
-               IGNORE NULLS) OVER (
-      PARTITION BY user_id
-      ORDER BY date_trunc('microseconds', ts), event_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS click_event_id
+@query(
+    oracle="""
+WITH g AS (
+  SELECT event_type,
+    epoch_us(date_trunc('microseconds', ts))
+      - lag(epoch_us(date_trunc('microseconds', ts))) OVER (
+          PARTITION BY user_id
+          ORDER BY date_trunc('microseconds', ts), event_id) AS gap_us
   FROM events
 )
-SELECT event_id AS purchase_event_id, user_id,
-  CAST(coalesce(click_event_id, -1) AS BIGINT) AS click_event_id,
-  CAST(coalesce(us - click_us, -1) AS BIGINT) AS gap_us
-FROM ordered WHERE event_type = 'purchase'
-ORDER BY purchase_event_id
+SELECT event_type,
+  CAST(CASE WHEN gap_us <= 0 THEN 0 ELSE length(bin(gap_us)) END AS INT)
+    AS bucket,
+  CAST(count(*) AS BIGINT) AS n_gaps,
+  CAST(min(gap_us) AS BIGINT) AS min_gap_us,
+  CAST(max(gap_us) AS BIGINT) AS max_gap_us
+FROM g WHERE gap_us IS NOT NULL
+GROUP BY 1, 2 ORDER BY event_type, bucket
 """
-
-
+)
 def interevent_gap_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Log2-bucketed histogram of inter-event gaps per event type —
     the latency/burstiness profile behind session-gap tuning and bot
@@ -837,33 +856,35 @@ def interevent_gap_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_ANALYTICS["interevent_gap_histogram"] = interevent_gap_histogram
-
-ORACLES_ANALYTICS["interevent_gap_histogram"] = """
-WITH g AS (
-  SELECT event_type,
-    epoch_us(date_trunc('microseconds', ts))
-      - lag(epoch_us(date_trunc('microseconds', ts))) OVER (
-          PARTITION BY user_id
-          ORDER BY date_trunc('microseconds', ts), event_id) AS gap_us
-  FROM events
-)
-SELECT event_type,
-  CAST(CASE WHEN gap_us <= 0 THEN 0 ELSE length(bin(gap_us)) END AS INT)
-    AS bucket,
-  CAST(count(*) AS BIGINT) AS n_gaps,
-  CAST(min(gap_us) AS BIGINT) AS min_gap_us,
-  CAST(max(gap_us) AS BIGINT) AS max_gap_us
-FROM g WHERE gap_us IS NOT NULL
-GROUP BY 1, 2 ORDER BY event_type, bucket
-"""
-
-
 DRIFT_SPLIT_DATE = "1998-01-01"
 DRIFT_BUCKET_CENTS = 2_000_000  # $20k price buckets
 DRIFT_BUCKET_CAP = 20
 
 
+@query(
+    oracle=f"""
+WITH cells AS (
+  SELECT least(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) // {DRIFT_BUCKET_CENTS},
+               {DRIFT_BUCKET_CAP}) AS bucket,
+    CAST(sum(CASE WHEN o_orderdate < '{DRIFT_SPLIT_DATE}' THEN 1 ELSE 0 END) AS BIGINT)
+      AS n_early,
+    CAST(sum(CASE WHEN o_orderdate < '{DRIFT_SPLIT_DATE}' THEN 0 ELSE 1 END) AS BIGINT)
+      AS n_late
+  FROM orders GROUP BY 1
+),
+tot AS (
+  SELECT CAST(sum(n_early) AS BIGINT) AS tot_early,
+         CAST(sum(n_late) AS BIGINT) AS tot_late FROM cells
+)
+SELECT bucket, n_early, n_late,
+  CAST((n_early * 1000000) // tot_early AS BIGINT) AS share_early_ppm,
+  CAST((n_late * 1000000) // tot_late AS BIGINT) AS share_late_ppm,
+  CAST(abs((n_early * 1000000) // tot_early
+           - (n_late * 1000000) // tot_late) AS BIGINT) AS abs_diff_ppm
+FROM cells CROSS JOIN tot
+ORDER BY bucket
+"""
+)
 def distribution_drift_l1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution-drift monitor between two eras of the orders
     stream (the data-quality check behind 'did the upstream change
@@ -925,32 +946,26 @@ def distribution_drift_l1(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_ANALYTICS["distribution_drift_l1"] = distribution_drift_l1
-
-ORACLES_ANALYTICS["distribution_drift_l1"] = f"""
-WITH cells AS (
-  SELECT least(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) // {DRIFT_BUCKET_CENTS},
-               {DRIFT_BUCKET_CAP}) AS bucket,
-    CAST(sum(CASE WHEN o_orderdate < '{DRIFT_SPLIT_DATE}' THEN 1 ELSE 0 END) AS BIGINT)
-      AS n_early,
-    CAST(sum(CASE WHEN o_orderdate < '{DRIFT_SPLIT_DATE}' THEN 0 ELSE 1 END) AS BIGINT)
-      AS n_late
-  FROM orders GROUP BY 1
+@query(
+    oracle="""
+WITH per_min AS (
+  SELECT user_id, date_trunc('minute', ts) AS minute,
+         CAST(count(*) AS BIGINT) AS n_min
+  FROM events GROUP BY 1, 2
 ),
-tot AS (
-  SELECT CAST(sum(n_early) AS BIGINT) AS tot_early,
-         CAST(sum(n_late) AS BIGINT) AS tot_late FROM cells
+per_user AS (
+  SELECT user_id,
+         CAST(sum(n_min) AS BIGINT) AS n_events,
+         CAST(max(n_min) AS BIGINT) AS peak_per_min,
+         CAST(count(*) AS BIGINT) AS n_active_minutes
+  FROM per_min GROUP BY user_id
 )
-SELECT bucket, n_early, n_late,
-  CAST((n_early * 1000000) // tot_early AS BIGINT) AS share_early_ppm,
-  CAST((n_late * 1000000) // tot_late AS BIGINT) AS share_late_ppm,
-  CAST(abs((n_early * 1000000) // tot_early
-           - (n_late * 1000000) // tot_late) AS BIGINT) AS abs_diff_ppm
-FROM cells CROSS JOIN tot
-ORDER BY bucket
+SELECT user_id, n_events, peak_per_min, n_active_minutes,
+  CAST((peak_per_min * 1000000) // n_events AS BIGINT) AS burst_ppm
+FROM per_user
+ORDER BY peak_per_min DESC, n_events DESC, user_id ASC LIMIT 20
 """
-
-
+)
 def user_burst_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Burst detection: each user's PEAK events-per-minute vs their
     lifetime event count — the rate-limit / bot-flagging primitive.
@@ -988,28 +1003,30 @@ def user_burst_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_ANALYTICS["user_burst_rates"] = user_burst_rates
-
-ORACLES_ANALYTICS["user_burst_rates"] = """
-WITH per_min AS (
-  SELECT user_id, date_trunc('minute', ts) AS minute,
-         CAST(count(*) AS BIGINT) AS n_min
-  FROM events GROUP BY 1, 2
+@query(
+    oracle="""
+WITH rev AS (
+  SELECT n.n_name AS nation, s.s_suppkey,
+    CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
+      AS rev_cents
+  FROM lineitem l
+  JOIN supplier s ON l.l_suppkey = s.s_suppkey
+  JOIN nation n ON s.s_nationkey = n.n_nationkey
+  GROUP BY 1, 2
 ),
-per_user AS (
-  SELECT user_id,
-         CAST(sum(n_min) AS BIGINT) AS n_events,
-         CAST(max(n_min) AS BIGINT) AS peak_per_min,
-         CAST(count(*) AS BIGINT) AS n_active_minutes
-  FROM per_min GROUP BY user_id
+shares AS (
+  SELECT nation,
+    CAST((rev_cents * 1000000)
+         // sum(rev_cents) OVER (PARTITION BY nation) AS BIGINT) AS share_ppm
+  FROM rev
 )
-SELECT user_id, n_events, peak_per_min, n_active_minutes,
-  CAST((peak_per_min * 1000000) // n_events AS BIGINT) AS burst_ppm
-FROM per_user
-ORDER BY peak_per_min DESC, n_events DESC, user_id ASC LIMIT 20
+SELECT nation,
+  CAST(count(*) AS BIGINT) AS n_suppliers,
+  CAST(max(share_ppm) AS BIGINT) AS top_share_ppm,
+  CAST(sum(share_ppm * share_ppm) // 1000000 AS BIGINT) AS hhi
+FROM shares GROUP BY nation ORDER BY nation
 """
-
-
+)
 def hhi_supplier_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Herfindahl-Hirschman concentration index of supplier revenue
     within each nation — the market-concentration complement of
@@ -1058,32 +1075,27 @@ def hhi_supplier_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_ANALYTICS["hhi_supplier_concentration"] = hhi_supplier_concentration
-
-ORACLES_ANALYTICS["hhi_supplier_concentration"] = """
-WITH rev AS (
-  SELECT n.n_name AS nation, s.s_suppkey,
-    CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
+@query(
+    oracle="""
+WITH per_dow AS (
+  SELECT CAST(date_part('dow', o_orderdate) + 1 AS INT) AS dow,
+    CAST(count(*) AS BIGINT) AS n_orders,
+    CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
       AS rev_cents
-  FROM lineitem l
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN nation n ON s.s_nationkey = n.n_nationkey
-  GROUP BY 1, 2
+  FROM orders GROUP BY 1
 ),
-shares AS (
-  SELECT nation,
-    CAST((rev_cents * 1000000)
-         // sum(rev_cents) OVER (PARTITION BY nation) AS BIGINT) AS share_ppm
-  FROM rev
+tot AS (
+  SELECT CAST(sum(n_orders) AS BIGINT) AS tot_orders,
+         CAST(sum(rev_cents) AS BIGINT) AS tot_cents FROM per_dow
 )
-SELECT nation,
-  CAST(count(*) AS BIGINT) AS n_suppliers,
-  CAST(max(share_ppm) AS BIGINT) AS top_share_ppm,
-  CAST(sum(share_ppm * share_ppm) // 1000000 AS BIGINT) AS hhi
-FROM shares GROUP BY nation ORDER BY nation
+SELECT dow, n_orders, rev_cents,
+  CAST((n_orders * 1000000) // tot_orders AS BIGINT) AS order_share_ppm,
+  CAST((rev_cents * 1000000) // tot_cents - 1000000 // 7 AS BIGINT)
+    AS rev_dev_ppm
+FROM per_dow CROSS JOIN tot
+ORDER BY dow
 """
-
-
+)
 def seasonality_dow_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calendar seasonality profile: order volume and revenue share
     by day-of-week, with each day's deviation from the uniform 1/7
@@ -1128,29 +1140,23 @@ def seasonality_dow_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_ANALYTICS["seasonality_dow_profile"] = seasonality_dow_profile
-
-ORACLES_ANALYTICS["seasonality_dow_profile"] = """
-WITH per_dow AS (
-  SELECT CAST(date_part('dow', o_orderdate) + 1 AS INT) AS dow,
-    CAST(count(*) AS BIGINT) AS n_orders,
-    CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
-      AS rev_cents
-  FROM orders GROUP BY 1
-),
-tot AS (
-  SELECT CAST(sum(n_orders) AS BIGINT) AS tot_orders,
-         CAST(sum(rev_cents) AS BIGINT) AS tot_cents FROM per_dow
+@query(
+    oracle="""
+WITH marked AS (
+  SELECT user_id, CAST(ts AS DATE) AS day,
+         min(CAST(ts AS DATE)) OVER (PARTITION BY user_id) AS first_day
+  FROM events
 )
-SELECT dow, n_orders, rev_cents,
-  CAST((n_orders * 1000000) // tot_orders AS BIGINT) AS order_share_ppm,
-  CAST((rev_cents * 1000000) // tot_cents - 1000000 // 7 AS BIGINT)
-    AS rev_dev_ppm
-FROM per_dow CROSS JOIN tot
-ORDER BY dow
+SELECT day,
+  CAST(count(DISTINCT user_id) AS BIGINT) AS n_active,
+  CAST(count(DISTINCT CASE WHEN day = first_day THEN user_id END) AS BIGINT)
+    AS n_new,
+  CAST(count(DISTINCT user_id)
+       - count(DISTINCT CASE WHEN day = first_day THEN user_id END) AS BIGINT)
+    AS n_returning
+FROM marked GROUP BY day ORDER BY day
 """
-
-
+)
 def daily_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Growth-analytics split of daily active users into NEW (first
     ever activity that day) vs RETURNING: per-user first-seen day via
@@ -1186,28 +1192,35 @@ def daily_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_ANALYTICS["daily_new_vs_returning"] = daily_new_vs_returning
-
-ORACLES_ANALYTICS["daily_new_vs_returning"] = """
-WITH marked AS (
-  SELECT user_id, CAST(ts AS DATE) AS day,
-         min(CAST(ts AS DATE)) OVER (PARTITION BY user_id) AS first_day
-  FROM events
-)
-SELECT day,
-  CAST(count(DISTINCT user_id) AS BIGINT) AS n_active,
-  CAST(count(DISTINCT CASE WHEN day = first_day THEN user_id END) AS BIGINT)
-    AS n_new,
-  CAST(count(DISTINCT user_id)
-       - count(DISTINCT CASE WHEN day = first_day THEN user_id END) AS BIGINT)
-    AS n_returning
-FROM marked GROUP BY day ORDER BY day
-"""
-
-
 RFM_REF_DATE = "2001-08-02"  # day after the fixture's max order date
 
 
+@query(
+    oracle=f"""
+WITH per_cust AS (
+  SELECT o_custkey,
+    max(CAST(o_orderdate AS DATE)) AS last_day,
+    CAST(count(*) AS BIGINT) AS n_orders,
+    CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS cents
+  FROM orders GROUP BY 1
+),
+scored AS (
+  SELECT
+    CASE WHEN date_diff('day', last_day, DATE '{RFM_REF_DATE}') <= 180 THEN 3
+         WHEN date_diff('day', last_day, DATE '{RFM_REF_DATE}') <= 720 THEN 2
+         ELSE 1 END AS r_score,
+    CASE WHEN n_orders >= 20 THEN 3 WHEN n_orders >= 8 THEN 2 ELSE 1 END AS f_score,
+    CASE WHEN cents >= 300000000 THEN 3 WHEN cents >= 100000000 THEN 2
+         ELSE 1 END AS m_score,
+    cents
+  FROM per_cust
+)
+SELECT r_score, f_score, m_score,
+  CAST(count(*) AS BIGINT) AS n_customers,
+  CAST(sum(cents) AS BIGINT) AS segment_cents
+FROM scored GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
+"""
+)
 def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM segmentation — the classic customer-value grid: per
     customer, Recency (days since last order, from a FIXED reference
@@ -1253,34 +1266,22 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_ANALYTICS["rfm_customer_segments"] = rfm_customer_segments
-
-ORACLES_ANALYTICS["rfm_customer_segments"] = f"""
-WITH per_cust AS (
-  SELECT o_custkey,
-    max(CAST(o_orderdate AS DATE)) AS last_day,
-    CAST(count(*) AS BIGINT) AS n_orders,
-    CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS cents
-  FROM orders GROUP BY 1
-),
-scored AS (
-  SELECT
-    CASE WHEN date_diff('day', last_day, DATE '{RFM_REF_DATE}') <= 180 THEN 3
-         WHEN date_diff('day', last_day, DATE '{RFM_REF_DATE}') <= 720 THEN 2
-         ELSE 1 END AS r_score,
-    CASE WHEN n_orders >= 20 THEN 3 WHEN n_orders >= 8 THEN 2 ELSE 1 END AS f_score,
-    CASE WHEN cents >= 300000000 THEN 3 WHEN cents >= 100000000 THEN 2
-         ELSE 1 END AS m_score,
-    cents
-  FROM per_cust
+@query(
+    oracle="""
+WITH seq AS (
+  SELECT event_type AS t1,
+    lead(event_type, 1) OVER (PARTITION BY user_id
+      ORDER BY date_trunc('microseconds', ts), event_id) AS t2,
+    lead(event_type, 2) OVER (PARTITION BY user_id
+      ORDER BY date_trunc('microseconds', ts), event_id) AS t3
+  FROM events
 )
-SELECT r_score, f_score, m_score,
-  CAST(count(*) AS BIGINT) AS n_customers,
-  CAST(sum(cents) AS BIGINT) AS segment_cents
-FROM scored GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
+SELECT t1, t2, t3, CAST(count(*) AS BIGINT) AS n_paths
+FROM seq WHERE t2 IS NOT NULL AND t3 IS NOT NULL
+GROUP BY 1, 2, 3
+ORDER BY n_paths DESC, t1, t2, t3 LIMIT 20
 """
-
-
+)
 def top_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top 3-step behavioral paths: the most common (t1 -> t2 -> t3)
     event-type sequences across users — the second-order companion of
@@ -1309,24 +1310,29 @@ def top_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_ANALYTICS["top_event_paths"] = top_event_paths
-
-ORACLES_ANALYTICS["top_event_paths"] = """
-WITH seq AS (
-  SELECT event_type AS t1,
-    lead(event_type, 1) OVER (PARTITION BY user_id
-      ORDER BY date_trunc('microseconds', ts), event_id) AS t2,
-    lead(event_type, 2) OVER (PARTITION BY user_id
-      ORDER BY date_trunc('microseconds', ts), event_id) AS t3
-  FROM events
+@query(
+    oracle="""
+WITH per_cust AS (
+  SELECT o_custkey,
+    CAST(count(*) AS BIGINT) AS n_orders,
+    min(CAST(o_orderdate AS DATE)) AS first_day,
+    max(CAST(o_orderdate AS DATE)) AS last_day
+  FROM orders GROUP BY 1
+),
+repeat AS (
+  SELECT n_orders,
+    CAST(date_diff('day', first_day, last_day) // (n_orders - 1) AS BIGINT)
+      AS mean_gap_days
+  FROM per_cust WHERE n_orders >= 2
 )
-SELECT t1, t2, t3, CAST(count(*) AS BIGINT) AS n_paths
-FROM seq WHERE t2 IS NOT NULL AND t3 IS NOT NULL
-GROUP BY 1, 2, 3
-ORDER BY n_paths DESC, t1, t2, t3 LIMIT 20
+SELECT CAST(least(mean_gap_days // 30, 12) AS INT) AS month_bucket,
+  CAST(count(*) AS BIGINT) AS n_customers,
+  CAST(min(mean_gap_days) AS BIGINT) AS min_gap,
+  CAST(max(mean_gap_days) AS BIGINT) AS max_gap,
+  CAST(sum(n_orders) AS BIGINT) AS n_orders_covered
+FROM repeat GROUP BY 1 ORDER BY month_bucket
 """
-
-
+)
 def customer_order_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Purchase-cadence census: per repeat customer, the mean days
     between consecutive orders (exact integer: date-span DIV gap
@@ -1360,31 +1366,22 @@ def customer_order_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_ANALYTICS["customer_order_cadence"] = customer_order_cadence
-
-ORACLES_ANALYTICS["customer_order_cadence"] = """
-WITH per_cust AS (
-  SELECT o_custkey,
-    CAST(count(*) AS BIGINT) AS n_orders,
-    min(CAST(o_orderdate AS DATE)) AS first_day,
-    max(CAST(o_orderdate AS DATE)) AS last_day
-  FROM orders GROUP BY 1
+@query(
+    oracle="""
+WITH cells AS (
+  SELECT CAST(date_part('dow', ts) + 1 AS INT) AS dow,
+         CAST(date_part('hour', ts) AS INT) AS hour,
+         CAST(count(*) AS BIGINT) AS n_events,
+         CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
+  FROM events GROUP BY 1, 2
 ),
-repeat AS (
-  SELECT n_orders,
-    CAST(date_diff('day', first_day, last_day) // (n_orders - 1) AS BIGINT)
-      AS mean_gap_days
-  FROM per_cust WHERE n_orders >= 2
-)
-SELECT CAST(least(mean_gap_days // 30, 12) AS INT) AS month_bucket,
-  CAST(count(*) AS BIGINT) AS n_customers,
-  CAST(min(mean_gap_days) AS BIGINT) AS min_gap,
-  CAST(max(mean_gap_days) AS BIGINT) AS max_gap,
-  CAST(sum(n_orders) AS BIGINT) AS n_orders_covered
-FROM repeat GROUP BY 1 ORDER BY month_bucket
+tot AS (SELECT CAST(sum(n_events) AS BIGINT) AS total FROM cells)
+SELECT dow, hour, n_events, n_users,
+  CAST((n_events * 1000000) // total AS BIGINT) AS share_ppm
+FROM cells CROSS JOIN tot
+ORDER BY dow, hour
 """
-
-
+)
 def activity_heatmap_dow_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekday × hour activity heatmap of the event stream (the
     capacity-planning grid): per (dow, hour) cell, event count,
@@ -1421,19 +1418,377 @@ def activity_heatmap_dow_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_ANALYTICS["activity_heatmap_dow_hour"] = activity_heatmap_dow_hour
+# --- pattern match --------------------------------------------------
+STEP_GAP_SECONDS = 86400  # each step within a day of the next (testdata event cadence ~2/user/day)
 
-ORACLES_ANALYTICS["activity_heatmap_dow_hour"] = """
-WITH cells AS (
-  SELECT CAST(date_part('dow', ts) + 1 AS INT) AS dow,
-         CAST(date_part('hour', ts) AS INT) AS hour,
-         CAST(count(*) AS BIGINT) AS n_events,
-         CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-  FROM events GROUP BY 1, 2
+
+@query(
+    oracle=f"""
+WITH ev AS (
+  SELECT event_id, user_id, event_type,
+         -- integer floor-division of microseconds: Spark's
+         -- unix_timestamp() FLOORS to seconds, while CAST(epoch(..)
+         -- AS BIGINT) would ROUND half-up — off by one on late-
+         -- half-second events
+         epoch_us(ts) // 1000000 AS sec
+  FROM events
 ),
-tot AS (SELECT CAST(sum(n_events) AS BIGINT) AS total FROM cells)
-SELECT dow, hour, n_events, n_users,
-  CAST((n_events * 1000000) // total AS BIGINT) AS share_ppm
-FROM cells CROSS JOIN tot
-ORDER BY dow, hour
+clicks AS (
+  SELECT user_id, v_id, v_sec, c_id, c_sec FROM (
+    SELECT c.user_id, v.event_id AS v_id, v.sec AS v_sec,
+           c.event_id AS c_id, c.sec AS c_sec,
+           row_number() OVER (
+             PARTITION BY c.event_id ORDER BY v.sec DESC, v.event_id DESC
+           ) AS rn
+    FROM ev c JOIN ev v
+      ON v.user_id = c.user_id
+     AND v.sec <= c.sec AND c.sec - v.sec <= {STEP_GAP_SECONDS}
+    WHERE c.event_type = 'click' AND v.event_type = 'view'
+  ) WHERE rn = 1
+),
+chains AS (
+  SELECT user_id, p_sec - v_sec AS span_sec FROM (
+    SELECT c.user_id, c.v_sec, p.sec AS p_sec,
+           row_number() OVER (
+             PARTITION BY p.event_id ORDER BY c.c_sec DESC, c.c_id DESC
+           ) AS rn
+    FROM clicks c JOIN ev p
+      ON p.user_id = c.user_id
+     AND c.c_sec <= p.sec AND p.sec - c.c_sec <= {STEP_GAP_SECONDS}
+    WHERE p.event_type = 'purchase'
+  ) WHERE rn = 1
+)
+SELECT user_id,
+       count(*) AS n_chains,
+       CAST(sum(span_sec) AS BIGINT) AS sum_span_sec,
+       max(span_sec) AS max_span_sec,
+       {sql_hround(
+           "CAST(sum(span_sec) AS DOUBLE) / CAST(count(*) AS DOUBLE)", 4
+       )} AS avg_span_sec
+FROM chains GROUP BY user_id ORDER BY user_id
 """
+)
+def pattern_match_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CEP sequence pattern over the event stream: every completed
+    view -> click -> purchase chain where each step happens within
+    STEP_GAP_SECONDS of the next, per user. Matching policy: each
+    purchase anchors to its LATEST qualifying click, each click to
+    its LATEST qualifying view (ties by event_id) — the relational
+    decomposition of MATCH_RECOGNIZE's "last event per pattern
+    variable" with AFTER MATCH overlap allowed. ``funnel_conversion``
+    counts users passing first-occurrence stages; this counts every
+    chain INSTANCE and measures spans.
+
+    Plan: two chained banded joins (user equi-key + time band in the
+    join condition), each followed by a keep-first window — per-key
+    fan-out is bounded by events-per-user-per-gap-window, so both shuffles
+    stay key-sized at 100 TB; no per-user collect, no cross product.
+    Seconds are exact integer epoch differences; the mean span is the
+    one double division at the end.
+    """
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id",
+        "user_id",
+        "event_type",
+        F.unix_timestamp("ts").alias("sec"),
+    )
+
+    def typed(t: str, tag: str) -> DataFrame:
+        # self-join lineage: every side gets its OWN user column name
+        # (a shared `user_id` from one parent scan is ambiguous after
+        # the join even with DataFrame-qualified references)
+        return ev.filter(F.col("event_type") == t).select(
+            F.col("event_id").alias(f"{tag}_id"),
+            F.col("user_id").alias(f"{tag}_user"),
+            F.col("sec").alias(f"{tag}_sec"),
+        )
+
+    v, c, p = typed("view", "v"), typed("click", "c"), typed("purchase", "p")
+    vc = v.join(
+        c,
+        (F.col("v_user") == F.col("c_user"))
+        & (F.col("v_sec") <= F.col("c_sec"))
+        & (F.col("c_sec") - F.col("v_sec") <= STEP_GAP_SECONDS),
+    )
+    w_click = Window.partitionBy("c_id").orderBy(
+        F.desc("v_sec"), F.desc("v_id")
+    )
+    clicks = (
+        vc.withColumn("_rn", F.row_number().over(w_click))
+        .filter(F.col("_rn") == 1)
+        .select(
+            F.col("c_user").alias("user_id"), "v_id", "v_sec", "c_id", "c_sec"
+        )
+    )
+    cp = clicks.join(
+        p,
+        (F.col("user_id") == F.col("p_user"))
+        & (F.col("c_sec") <= F.col("p_sec"))
+        & (F.col("p_sec") - F.col("c_sec") <= STEP_GAP_SECONDS),
+    )
+    w_buy = Window.partitionBy("p_id").orderBy(F.desc("c_sec"), F.desc("c_id"))
+    chains = (
+        cp.withColumn("_rn", F.row_number().over(w_buy))
+        .filter(F.col("_rn") == 1)
+        .select(
+            "user_id", (F.col("p_sec") - F.col("v_sec")).alias("span_sec")
+        )
+    )
+    return (
+        chains.groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_chains"),
+            F.sum("span_sec").alias("sum_span_sec"),
+            F.max("span_sec").alias("max_span_sec"),
+            hround(
+                F.sum("span_sec").cast("double")
+                / F.count(F.lit(1)).cast("double"),
+                4,
+            ).alias("avg_span_sec"),
+        )
+        .orderBy("user_id")
+    )
+
+
+# --- round-5 batch 6 -------------------------------------------------
+MAU_WINDOW_DAYS = 7  # trailing activity window (inclusive of the day)
+
+
+@query(
+    oracle=f"""
+WITH active AS (
+  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
+  FROM events WHERE ts IS NOT NULL
+),
+days AS (SELECT DISTINCT day FROM active),
+targets AS (
+  SELECT DISTINCT user_id, t.day
+  FROM active,
+    unnest(generate_series(day, day + {MAU_WINDOW_DAYS - 1},
+                           INTERVAL 1 DAY)) AS g(d),
+    LATERAL (SELECT CAST(g.d AS DATE) AS day) t
+  WHERE t.day IN (SELECT day FROM days)
+),
+dau AS (SELECT day, count(*) AS dau FROM active GROUP BY day),
+mau AS (SELECT day, count(*) AS active_7d FROM targets GROUP BY day)
+SELECT day, dau, active_7d
+FROM dau JOIN mau USING (day)
+ORDER BY day
+"""
+)
+def rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXACT trailing-7-day active users per day (the WAU/MAU rollup)
+    — the sliding COUNT DISTINCT that resists window functions,
+    re-expressed as a linear explode: each (user, active day)
+    contributes to the MAU_WINDOW_DAYS target days it keeps the user
+    'active' for, then one distinct + one count per target day.
+    Reported for every day that itself has activity.
+
+    Scale shape: distinct (user, day) first (dedupe within day), a
+    7x map-side fan-out, distinct (user, target), and a two-level
+    count agg — every stage linear and hash-keyed; no window, no
+    self-join, no approximate sketch. The day restriction is a
+    semi-join against the observed-day set (equi, broadcast-able).
+    """
+    ev = load_wide(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
+    active = ev.select(
+        "user_id", F.to_date("ts").alias("day")
+    ).distinct()
+    days = active.select("day").distinct()
+    targets = (
+        active.select(
+            "user_id",
+            F.explode(
+                F.expr(
+                    f"sequence(day, date_add(day, {MAU_WINDOW_DAYS - 1}),"
+                    " interval 1 day)"
+                )
+            ).alias("day"),
+        )
+        .join(days, "day", "left_semi")
+        .distinct()
+    )
+    dau = active.groupBy("day").agg(
+        F.count(F.lit(1)).alias("dau")
+    )
+    mau = targets.groupBy("day").agg(
+        F.count(F.lit(1)).alias("active_7d")
+    )
+    return (
+        dau.join(mau, "day")
+        .select("day", "dau", "active_7d")
+        .orderBy("day")
+    )
+
+
+# --- round-5 batch 7 -------------------------------------------------
+ABSENCE_WINDOW_SECONDS = 86_400  # purchase must follow the view within 1 day
+
+
+@query(
+    oracle=f"""
+WITH ev AS (
+  SELECT user_id, event_id, event_type,
+    CAST(epoch_us(date_trunc('microseconds', ts)) AS BIGINT) AS us
+  FROM events WHERE ts IS NOT NULL
+),
+views AS (
+  SELECT user_id AS v_user, event_id AS view_id, us AS v_us
+  FROM ev WHERE event_type = 'view'
+),
+purchases AS (
+  SELECT user_id AS p_user, us AS p_us FROM ev
+  WHERE event_type = 'purchase'
+),
+per_view AS (
+  SELECT v_user, view_id,
+    max(CASE WHEN p_us IS NOT NULL THEN 1 ELSE 0 END) AS converted
+  FROM views LEFT JOIN purchases
+    ON v_user = p_user AND p_us > v_us
+   AND p_us <= v_us + CAST({ABSENCE_WINDOW_SECONDS} AS BIGINT) * 1000000
+  GROUP BY 1, 2
+)
+SELECT v_user AS user_id,
+  count(*) AS n_views,
+  CAST(sum(CASE WHEN converted = 0 THEN 1 ELSE 0 END) AS BIGINT)
+    AS n_abandoned,
+  CAST(CAST(sum(CASE WHEN converted = 0 THEN 1 ELSE 0 END) AS HUGEINT)
+       * 1000000 // count(*) AS BIGINT) AS abandon_ppm
+FROM per_view GROUP BY v_user ORDER BY user_id
+"""
+)
+def cep_absence_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Negative CEP pattern: views with NO purchase by the same user
+    within the next day — the absence/timeout branch of the
+    view->click->purchase chain pattern_match_funnel matches
+    positively. Per user: views, abandoned views, abandonment ppm.
+
+    Scale shape: Catalyst extracts the user equality as the join key
+    of a LEFT join (the time band stays a post-filter), the
+    unmatched-view census is one hash rollup — the relational
+    MATCH_RECOGNIZE absence pattern with per-key fan-out bounded by
+    events-per-user-per-day, never a nested loop.
+    """
+    ev = load_wide(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    views = ev.filter(F.col("event_type") == "view").select(
+        F.col("user_id").alias("v_user"),
+        F.col("event_id").alias("view_id"),
+        us.alias("v_us"),
+    )
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        F.col("user_id").alias("p_user"),
+        us.alias("p_us"),
+    )
+    matched = views.join(
+        purchases,
+        (F.col("v_user") == F.col("p_user"))
+        & (F.col("p_us") > F.col("v_us"))
+        & (F.col("p_us") <= F.col("v_us") + ABSENCE_WINDOW_SECONDS * 1_000_000),
+        "left",
+    )
+    per_view = matched.groupBy("v_user", "view_id").agg(
+        F.max(F.when(F.col("p_us").isNotNull(), 1).otherwise(0)).alias(
+            "converted"
+        )
+    )
+    return (
+        per_view.groupBy(F.col("v_user").alias("user_id"))
+        .agg(
+            F.count(F.lit(1)).alias("n_views"),
+            F.sum(
+                F.when(F.col("converted") == 0, 1).otherwise(0)
+            ).alias("n_abandoned"),
+        )
+        .select(
+            "user_id",
+            "n_views",
+            "n_abandoned",
+            F.expr(
+                "CAST(CAST(n_abandoned AS DECIMAL(38,0)) * 1000000"
+                " DIV n_views AS BIGINT)"
+            ).alias("abandon_ppm"),
+        )
+        .orderBy("user_id")
+    )
+
+
+# -------------------------------------------- sequence regex funnel
+_FUNNEL_RE = "V[CE]*P"
+
+_FUNNEL_SQL = f"""
+WITH seqs AS (
+  SELECT user_id,
+         string_agg(upper(substring(event_type, 1, 1)), ''
+                    ORDER BY ts, event_id) AS seq
+  FROM events
+  WHERE user_id IS NOT NULL AND ts IS NOT NULL AND event_type IS NOT NULL
+  GROUP BY user_id
+)
+SELECT user_id,
+       CAST(length(seq) AS INT) AS seq_len,
+       CAST(length(regexp_extract_all(seq, '{_FUNNEL_RE}'))
+            AS INT) AS n_conversions,
+       CAST(coalesce((SELECT max(length(m))
+                      FROM unnest(regexp_extract_all(seq, '{_FUNNEL_RE}'))
+                        AS u(m)), 0) AS INT) AS longest_run
+FROM seqs
+ORDER BY user_id
+"""
+
+
+@query(oracle=_FUNNEL_SQL)
+def sequence_funnel_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MATCH_RECOGNIZE-lite: regex pattern matching over per-user
+    event-type sequences.
+
+    Each user's history compresses to one char per event (C/E/P/S/V —
+    the five event types have distinct initials), ordered by
+    (ts, event_id); `V[CE]*P` then counts non-overlapping
+    view->(click|error)*->purchase conversion runs, and the longest
+    run length is the max over extracted matches. The pattern's match
+    extent is UNIQUE at any start (the [CE]* run can only terminate at
+    the literal P), so Java regex (Spark) and RE2 (DuckDB) agree
+    bit-for-bit; a planted-sequence test pins the semantics.
+
+    Scale: one hash shuffle on user_id builds the per-user string via
+    grouped aggregation (sequence length = that user's activity, the
+    same per-key bound every sessionization query in the engine
+    carries); the regex runs JVM-side per row — no Python, no second
+    shuffle. Output is one row per user with >=1 event.
+    """
+    ev = (
+        load_table(spark, sf_dir, "events")
+        .filter(
+            F.col("user_id").isNotNull()
+            & F.col("ts").isNotNull()
+            & F.col("event_type").isNotNull()
+        )
+        .select(
+            "user_id",
+            "ts",
+            "event_id",
+            F.expr("upper(substring(event_type, 1, 1))").alias("sym"),
+        )
+    )
+    seqs = ev.groupBy("user_id").agg(
+        F.expr(
+            "array_join(transform(array_sort("
+            "collect_list(struct(ts, event_id, sym))), x -> x.sym), '')"
+        ).alias("seq")
+    )
+    return (
+        seqs.select(
+            "user_id",
+            F.length("seq").alias("seq_len"),
+            F.expr(f"regexp_count(seq, '{_FUNNEL_RE}')").alias(
+                "n_conversions"
+            ),
+            F.expr(
+                "coalesce(array_max(transform("
+                f"regexp_extract_all(seq, '{_FUNNEL_RE}', 0),"
+                " x -> length(x))), 0)"
+            ).alias("longest_run"),
+        )
+        .orderBy("user_id")
+    )

@@ -29,12 +29,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
 from youtube_etl_automated_pipeline_spark.operators.windows import bounded_window
-
+from youtube_etl_automated_pipeline_spark.plans.registry import query
 from youtube_etl_automated_pipeline_spark.sources import load_wide
-
-QUERIES_EVAL: dict = {}
-ORACLES_EVAL: dict[str, str] = {}
 
 
 # ------------------------------------------------------------------
@@ -66,6 +64,31 @@ SELECT CAST(n AS BIGINT) AS n_docs,
 FROM tot CROSS JOIN pe"""
 
 
+def _kappa_oracle() -> str:
+    from youtube_etl_automated_pipeline_spark.ext.textstats import (
+        LANG_PRIORITY,
+    )
+    from youtube_etl_automated_pipeline_spark.plans.queries_curation import (
+        _marker_cnt,
+        _predicted_lang_case,
+    )
+
+    cnt_cols = ", ".join(
+        f"{_marker_cnt(lang)} AS cnt_{lang}" for lang in LANG_PRIORITY
+    )
+    return f"""
+WITH counted AS (
+  SELECT lang AS actual, {cnt_cols}
+  FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL
+), conf AS (
+  SELECT actual, {_predicted_lang_case()} AS pred,
+         CAST(count(*) AS BIGINT) AS n
+  FROM counted GROUP BY 1, 2
+), {_KAPPA_TAIL.format(conf="conf")}
+"""
+
+
+@query(oracle=_kappa_oracle())
 def cohens_kappa_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row kappa readout: label count, agreement count, and
     Cohen's kappa (micro) between lang labels and the marker
@@ -94,36 +117,6 @@ def cohens_kappa_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql("WITH " + _KAPPA_TAIL.format(conf="_kappa_conf"))
 
 
-QUERIES_EVAL["cohens_kappa_langid"] = cohens_kappa_langid
-
-
-def _kappa_oracle() -> str:
-    from youtube_etl_automated_pipeline_spark.ext.textstats import (
-        LANG_PRIORITY,
-    )
-    from youtube_etl_automated_pipeline_spark.plans.oracles_ext import (
-        _marker_cnt,
-        _predicted_lang_case,
-    )
-
-    cnt_cols = ", ".join(
-        f"{_marker_cnt(lang)} AS cnt_{lang}" for lang in LANG_PRIORITY
-    )
-    return f"""
-WITH counted AS (
-  SELECT lang AS actual, {cnt_cols}
-  FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL
-), conf AS (
-  SELECT actual, {_predicted_lang_case()} AS pred,
-         CAST(count(*) AS BIGINT) AS n
-  FROM counted GROUP BY 1, 2
-), {_KAPPA_TAIL.format(conf="conf")}
-"""
-
-
-ORACLES_EVAL["cohens_kappa_langid"] = _kappa_oracle()
-
-
 # ------------------------------------------------------------------
 # Vocabulary coverage curve: what share of total token mass the top-k
 # vocabulary covers, for the tokenizer-budget ks. The rank/cumsum
@@ -133,6 +126,44 @@ ORACLES_EVAL["cohens_kappa_langid"] = _kappa_oracle()
 VOCAB_KS = (10, 100, 1000)
 
 
+def _vocab_oracle() -> str:
+    from youtube_etl_automated_pipeline_spark.ext.textstats import WS_CLASS
+
+    norm = f"lower(regexp_replace(trim(text), '{WS_CLASS}+', ' ', 'g'))"
+    ks = ", ".join(str(k) for k in VOCAB_KS)
+    return f"""
+WITH toks AS (
+  SELECT unnest(list_filter(
+           string_split_regex({norm}, '{WS_CLASS}+'), x -> x <> ''))
+    AS token
+  FROM documents WHERE text IS NOT NULL
+), counts AS (
+  SELECT token, CAST(count(*) AS BIGINT) AS n FROM toks GROUP BY token
+), ranked AS (
+  SELECT n,
+         CAST(row_number() OVER (ORDER BY n DESC, token ASC) AS INTEGER)
+           AS rank
+  FROM counts
+), cums AS (
+  SELECT rank,
+         CAST(sum(n) OVER (ORDER BY rank
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+           AS cum
+  FROM ranked
+), totals AS (
+  SELECT CAST(max(rank) AS INTEGER) AS v, CAST(sum(n) AS BIGINT) AS total
+  FROM ranked
+), ks AS (
+  SELECT unnest([{ks}]) AS k, v, total FROM totals
+)
+SELECT k, least(k, v) AS vocab_used,
+       CAST(CAST(cum AS HUGEINT) * 1000000 // total AS BIGINT)
+         AS coverage_ppm
+FROM ks JOIN cums ON cums.rank = least(ks.k, ks.v)
+"""
+
+
+@query(oracle=_vocab_oracle())
 def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(k, vocab_used, coverage_ppm) for each budget k: the share of
     all token occurrences covered by the k most-frequent tokens
@@ -199,49 +230,6 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_EVAL["vocab_coverage_curve"] = vocab_coverage_curve
-
-
-def _vocab_oracle() -> str:
-    from youtube_etl_automated_pipeline_spark.ext.textstats import WS_CLASS
-
-    norm = f"lower(regexp_replace(trim(text), '{WS_CLASS}+', ' ', 'g'))"
-    ks = ", ".join(str(k) for k in VOCAB_KS)
-    return f"""
-WITH toks AS (
-  SELECT unnest(list_filter(
-           string_split_regex({norm}, '{WS_CLASS}+'), x -> x <> ''))
-    AS token
-  FROM documents WHERE text IS NOT NULL
-), counts AS (
-  SELECT token, CAST(count(*) AS BIGINT) AS n FROM toks GROUP BY token
-), ranked AS (
-  SELECT n,
-         CAST(row_number() OVER (ORDER BY n DESC, token ASC) AS INTEGER)
-           AS rank
-  FROM counts
-), cums AS (
-  SELECT rank,
-         CAST(sum(n) OVER (ORDER BY rank
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-           AS cum
-  FROM ranked
-), totals AS (
-  SELECT CAST(max(rank) AS INTEGER) AS v, CAST(sum(n) AS BIGINT) AS total
-  FROM ranked
-), ks AS (
-  SELECT unnest([{ks}]) AS k, v, total FROM totals
-)
-SELECT k, least(k, v) AS vocab_used,
-       CAST(CAST(cum AS HUGEINT) * 1000000 // total AS BIGINT)
-         AS coverage_ppm
-FROM ks JOIN cums ON cums.rank = least(ks.k, ks.v)
-"""
-
-
-ORACLES_EVAL["vocab_coverage_curve"] = _vocab_oracle()
-
-
 # ------------------------------------------------------------------
 # Retrieval ranking eval: DCG@10 / IDCG / NDCG@10 + reciprocal rank
 # for the BM25 ranking, graded relevance = number of distinct query
@@ -287,6 +275,26 @@ SELECT dcg_micro, idcg_micro,
 FROM dcg CROSS JOIN idcg CROSS JOIN rr"""
 
 
+def _rank_eval_oracle() -> str:
+    from youtube_etl_automated_pipeline_spark.plans.queries_retrieval import (
+        _BM25_SCORED,
+        _bm25_base_cte,
+        BM25_TERMS,
+    )
+
+    return (
+        "WITH "
+        + _bm25_base_cte()
+        + ", "
+        + _BM25_SCORED.format(tf="tf", stats="stats")
+        + ", "
+        + _RANK_EVAL_TAIL.format(
+            tf="tf", at=EVAL_AT, n_terms=len(BM25_TERMS)
+        )
+    )
+
+
+@query(oracle=_rank_eval_oracle())
 def retrieval_rank_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row ranking-quality readout for the BM25 ranking:
     DCG@10, ideal DCG, NDCG@10, and the reciprocal rank of the first
@@ -313,31 +321,6 @@ def retrieval_rank_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             tf="_bm25_tf", at=EVAL_AT, n_terms=len(BM25_TERMS)
         )
     )
-
-
-QUERIES_EVAL["retrieval_rank_eval"] = retrieval_rank_eval
-
-
-def _rank_eval_oracle() -> str:
-    from youtube_etl_automated_pipeline_spark.plans.queries_retrieval import (
-        _BM25_SCORED,
-        _bm25_base_cte,
-        BM25_TERMS,
-    )
-
-    return (
-        "WITH "
-        + _bm25_base_cte()
-        + ", "
-        + _BM25_SCORED.format(tf="tf", stats="stats")
-        + ", "
-        + _RANK_EVAL_TAIL.format(
-            tf="tf", at=EVAL_AT, n_terms=len(BM25_TERMS)
-        )
-    )
-
-
-ORACLES_EVAL["retrieval_rank_eval"] = _rank_eval_oracle()
 
 
 # ------------------------------------------------------------------
@@ -370,6 +353,21 @@ SELECT bin, n_early, n_late,
 FROM {cells} CROSS JOIN tot"""
 
 
+@query(
+    oracle=f"""
+WITH cells AS (
+  SELECT least(CAST(floor(o_totalprice * 1e2 + 5e-1) AS BIGINT)
+               // {PSI_BIN_CENTS}, {PSI_MAX_BIN}) AS bin,
+         CAST(sum(CASE WHEN o_orderdate < '{PSI_SPLIT_DATE}'
+                       THEN 1 ELSE 0 END) AS BIGINT) AS n_early,
+         CAST(sum(CASE WHEN o_orderdate < '{PSI_SPLIT_DATE}'
+                       THEN 0 ELSE 1 END) AS BIGINT) AS n_late
+  FROM orders
+  WHERE o_totalprice IS NOT NULL
+  GROUP BY 1
+), {_PSI_TAIL.format(cells="cells")}
+"""
+)
 def psi_revenue_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-bin PSI decomposition of order-value drift between the
     early (< PSI_SPLIT_DATE) and late eras: (bin, era counts, the
@@ -409,20 +407,3 @@ def psi_revenue_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cells.createOrReplaceTempView("_psi_cells")
     return spark.sql("WITH " + _PSI_TAIL.format(cells="_psi_cells"))
-
-
-QUERIES_EVAL["psi_revenue_drift"] = psi_revenue_drift
-
-ORACLES_EVAL["psi_revenue_drift"] = f"""
-WITH cells AS (
-  SELECT least(CAST(floor(o_totalprice * 1e2 + 5e-1) AS BIGINT)
-               // {PSI_BIN_CENTS}, {PSI_MAX_BIN}) AS bin,
-         CAST(sum(CASE WHEN o_orderdate < '{PSI_SPLIT_DATE}'
-                       THEN 1 ELSE 0 END) AS BIGINT) AS n_early,
-         CAST(sum(CASE WHEN o_orderdate < '{PSI_SPLIT_DATE}'
-                       THEN 0 ELSE 1 END) AS BIGINT) AS n_late
-  FROM orders
-  WHERE o_totalprice IS NOT NULL
-  GROUP BY 1
-), {_PSI_TAIL.format(cells="cells")}
-"""

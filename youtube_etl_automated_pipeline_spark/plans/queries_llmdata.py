@@ -16,7 +16,8 @@ from pyspark.sql import functions as F
 
 from youtube_etl_automated_pipeline_spark.ext import textstats as TS
 from youtube_etl_automated_pipeline_spark.functions.compat import hround
-from youtube_etl_automated_pipeline_spark.sources import load_table, load_wide, widen_scan
+from youtube_etl_automated_pipeline_spark.plans.registry import query
+from youtube_etl_automated_pipeline_spark.sources import load_table, load_wide
 
 CHUNK_CHARS = 200
 CHUNK_OVERLAP = 40
@@ -36,6 +37,43 @@ CONTAM_EVAL_MOD = 97  # doc_id % MOD == 0 -> held-out "benchmark" doc
 QUOTA_PER_LANG = 40
 
 
+def _pii_augmented() -> F.Column:
+    """Deterministically plant a contact line on every PII_MOD-th doc
+    (the corpus itself is synthetic word soup with zero PII, so the
+    scrubber would otherwise be a vacuous no-op). Pure function of
+    (text, doc_id) that the oracle reproduces bit-for-bit."""
+    planted = F.concat(
+        F.col("text"),
+        F.lit(" contact user"),
+        F.col("doc_id").cast("string"),
+        F.lit("@example.com code "),
+        (F.lit(PII_CODE_BASE) + F.col("doc_id")).cast("string"),
+    )
+    return F.when(F.col("doc_id") % PII_MOD == 0, planted).otherwise(F.col("text"))
+
+
+# ---------------------------------------------------------------- oracles
+
+_TOKS = f"string_split_regex(trim(text), '{TS.WS_CLASS}+')"
+
+
+def _h(expr: str, n: int = 8) -> str:
+    return f"CAST('0x' || substr(md5({expr}), 1, {n}) AS BIGINT)"
+
+
+@query(
+    oracle=f"""
+SELECT doc_id,
+  CAST((s - 1) // {CHUNK_STRIDE} AS BIGINT) AS chunk_idx,
+  CAST(s AS BIGINT) AS chunk_start,
+  CAST(length(substr(text, s, {CHUNK_CHARS})) AS BIGINT) AS chunk_len,
+  {_h(f"substr(text, s, {CHUNK_CHARS})", 15)} AS chunk_hash
+FROM documents,
+  unnest(generate_series(1, greatest(length(text), 1), {CHUNK_STRIDE})) AS t(s)
+WHERE text IS NOT NULL
+ORDER BY doc_id, chunk_idx
+"""
+)
 def doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-size character chunking with overlap (the LLM context-
     window prep step):each doc explodes into ceil(len/stride) chunks of
@@ -68,21 +106,86 @@ def doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pii_augmented() -> F.Column:
-    """Deterministically plant a contact line on every PII_MOD-th doc
-    (the corpus itself is synthetic word soup with zero PII, so the
-    scrubber would otherwise be a vacuous no-op). Pure function of
-    (text, doc_id) that the oracle reproduces bit-for-bit."""
-    planted = F.concat(
-        F.col("text"),
-        F.lit(" contact user"),
-        F.col("doc_id").cast("string"),
-        F.lit("@example.com code "),
-        (F.lit(PII_CODE_BASE) + F.col("doc_id")).cast("string"),
+@query(
+    oracle=f"""
+WITH ranked AS (
+  SELECT doc_id, lang,
+    {_h("CAST(doc_id AS VARCHAR)")} AS sample_hash,
+    CAST(row_number() OVER (
+      PARTITION BY lang
+      ORDER BY {_h("CAST(doc_id AS VARCHAR)")}, doc_id
+    ) AS BIGINT) AS sample_rank
+  FROM documents
+)
+SELECT doc_id, lang, sample_hash, sample_rank
+FROM ranked
+WHERE sample_rank <= {QUOTA_PER_LANG}
+ORDER BY lang, sample_rank
+"""
+)
+def corpus_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Domain-mixing quota sample: keep QUOTA_PER_LANG docs per
+    language, chosen by a deterministic portable hash of doc_id (a
+    seedless reservoir both engines reproduce exactly).
+
+    Scale shape: one window shuffle on lang; at 100 TB with few
+    partitions per key this is the skew case — there, pre-filter with
+    an approximate per-lang hash threshold (keep hash < quantile
+    estimate) before the exact window so the shuffle carries ~quota
+    rows per lang, not the full corpus."""
+    docs = load_wide(spark, sf_dir, "documents")
+    h = TS.md5_long(F.col("doc_id").cast("string"))
+    w = Window.partitionBy("lang").orderBy(h.asc(), F.col("doc_id").asc())
+    return (
+        docs.select("doc_id", "lang", h.alias("sample_hash"))
+        .withColumn("sample_rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("sample_rank") <= QUOTA_PER_LANG)
+        .orderBy("lang", "sample_rank")
     )
-    return F.when(F.col("doc_id") % PII_MOD == 0, planted).otherwise(F.col("text"))
 
 
+def _r(expr: str, dp: int) -> str:
+    p = float(10**dp)
+    return f"floor(({expr}) * {p!r} + 0.5) / {p!r}"
+
+
+def _grams(n: int) -> str:
+    """Token n-gram strings (DuckDB twin of TS.shingles)."""
+    return (
+        f"list_transform(generate_series(1, len({_TOKS}) - {n - 1}),"
+        f" i -> array_to_string(({_TOKS})[i:i+{n - 1}], ' '))"
+    )
+
+
+_PII_AUG = (
+    f"CASE WHEN doc_id % {PII_MOD} = 0 THEN"
+    f" text || ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com code '"
+    f" || CAST({PII_CODE_BASE} + doc_id AS VARCHAR)"
+    f" ELSE text END"
+)
+
+
+@query(
+    oracle=f"""
+WITH aug AS (
+  SELECT doc_id, {_PII_AUG} AS a FROM documents WHERE text IS NOT NULL
+),
+s1 AS (
+  SELECT doc_id, a,
+    regexp_replace(a, '{PII_EMAIL_RE}', '<EMAIL>', 'g') AS after_email
+  FROM aug
+)
+SELECT doc_id,
+  CAST(len(regexp_extract_all(a, '{PII_EMAIL_RE}')) AS BIGINT) AS n_emails,
+  CAST(len(regexp_extract_all(after_email, '{PII_NUM_RE}')) AS BIGINT) AS n_numbers,
+  CAST(length(regexp_replace(after_email, '{PII_NUM_RE}', '<NUM>', 'g')) AS BIGINT)
+    AS scrubbed_len,
+  {_h(f"regexp_replace(after_email, '{PII_NUM_RE}', '<NUM>', 'g')", 15)}
+    AS scrubbed_hash
+FROM s1
+ORDER BY doc_id
+"""
+)
 def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII redaction: emails -> <EMAIL>, then long digit runs ->
     <NUM> (order matters — emails may embed digits, so the number pass
@@ -110,6 +213,44 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
+_TOP_FRAC = "CAST(top_token_cnt AS DOUBLE) / n_tokens"
+_DUP_FRAC = (
+    "CASE WHEN n_bigrams > 0"
+    " THEN 1.0 - CAST(n_distinct_bigrams AS DOUBLE) / n_bigrams"
+    " ELSE 0.0 END"
+)
+
+
+@query(
+    oracle=f"""
+WITH base AS (
+  SELECT doc_id, {_TOKS} AS toks FROM documents
+  WHERE text IS NOT NULL AND len({_TOKS}) >= 1
+),
+stats AS (
+  SELECT doc_id,
+    CAST(len(toks) AS BIGINT) AS n_tokens,
+    CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct_tokens,
+    CAST(list_max(list_transform(list_distinct(toks),
+      t -> len(list_filter(toks, x -> x = t)))) AS BIGINT) AS top_token_cnt,
+    CAST(CASE WHEN len(toks) >= 2 THEN len(toks) - 1 ELSE 0 END AS BIGINT)
+      AS n_bigrams,
+    CAST(CASE WHEN len(toks) >= 2 THEN len(list_distinct(
+      list_transform(generate_series(1, len(toks) - 1),
+        i -> array_to_string(toks[i:i+1], ' ')))) ELSE 0 END AS BIGINT)
+      AS n_distinct_bigrams
+  FROM base
+)
+SELECT doc_id, n_tokens, n_distinct_tokens, top_token_cnt,
+  n_bigrams, n_distinct_bigrams,
+  {_r(_TOP_FRAC, 6)} AS top_token_frac,
+  {_r(_DUP_FRAC, 6)} AS dup_bigram_frac,
+  (({_r(_TOP_FRAC, 6)}) > {TOP_FRAC_FLAG}
+   OR ({_r(_DUP_FRAC, 6)}) > {DUP_BIGRAM_FLAG}) AS repetition_flag
+FROM stats
+ORDER BY doc_id
+"""
+)
 def quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher/C4-style repetition signals per document: top-token
     dominance (max single-token frequency / n_tokens) and duplicate-
@@ -179,6 +320,31 @@ def quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_CONTAM_HASHES = f"list_distinct(list_transform({_grams(CONTAM_N)}, s -> {_h('s')}))"
+
+
+@query(
+    oracle=f"""
+WITH base AS (
+  SELECT doc_id, {_CONTAM_HASHES} AS hs
+  FROM documents
+  WHERE text IS NOT NULL AND len({_TOKS}) >= {CONTAM_N}
+),
+eval_set AS (
+  SELECT DISTINCT unnest(hs) AS sh FROM base WHERE doc_id % {CONTAM_EVAL_MOD} = 0
+),
+train AS (
+  SELECT doc_id, CAST(len(hs) AS BIGINT) AS n_shingles, unnest(hs) AS sh
+  FROM base WHERE doc_id % {CONTAM_EVAL_MOD} <> 0
+)
+SELECT doc_id, n_shingles,
+  CAST(count(*) AS BIGINT) AS n_matched,
+  {_r("CAST(count(*) AS DOUBLE) / n_shingles", 6)} AS contamination
+FROM train JOIN eval_set USING (sh)
+GROUP BY doc_id, n_shingles
+ORDER BY doc_id
+"""
+)
 def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark-contamination check: which training docs share token
     4-gram shingles with the held-out set (doc_id % 97 == 0 stands in
@@ -232,182 +398,36 @@ def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def corpus_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Domain-mixing quota sample: keep QUOTA_PER_LANG docs per
-    language, chosen by a deterministic portable hash of doc_id (a
-    seedless reservoir both engines reproduce exactly).
-
-    Scale shape: one window shuffle on lang; at 100 TB with few
-    partitions per key this is the skew case — there, pre-filter with
-    an approximate per-lang hash threshold (keep hash < quantile
-    estimate) before the exact window so the shuffle carries ~quota
-    rows per lang, not the full corpus."""
-    docs = load_wide(spark, sf_dir, "documents")
-    h = TS.md5_long(F.col("doc_id").cast("string"))
-    w = Window.partitionBy("lang").orderBy(h.asc(), F.col("doc_id").asc())
-    return (
-        docs.select("doc_id", "lang", h.alias("sample_hash"))
-        .withColumn("sample_rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("sample_rank") <= QUOTA_PER_LANG)
-        .orderBy("lang", "sample_rank")
-    )
-
-
-QUERIES_LLMDATA = {
-    "doc_chunking": doc_chunking,
-    "text_pii_scrub": text_pii_scrub,
-    "quality_repetition": quality_repetition,
-    "contamination_ngram_overlap": contamination_ngram_overlap,
-    "corpus_quota_sample": corpus_quota_sample,
-}
-
-
-# ---------------------------------------------------------------- oracles
-
-_TOKS = f"string_split_regex(trim(text), '{TS.WS_CLASS}+')"
-
-
-def _h(expr: str, n: int = 8) -> str:
-    return f"CAST('0x' || substr(md5({expr}), 1, {n}) AS BIGINT)"
-
-
-def _r(expr: str, dp: int) -> str:
-    p = float(10**dp)
-    return f"floor(({expr}) * {p!r} + 0.5) / {p!r}"
-
-
-def _grams(n: int) -> str:
-    """Token n-gram strings (DuckDB twin of TS.shingles)."""
-    return (
-        f"list_transform(generate_series(1, len({_TOKS}) - {n - 1}),"
-        f" i -> array_to_string(({_TOKS})[i:i+{n - 1}], ' '))"
-    )
-
-
-ORACLES_LLMDATA: dict[str, str] = {}
-
-ORACLES_LLMDATA["doc_chunking"] = f"""
-SELECT doc_id,
-  CAST((s - 1) // {CHUNK_STRIDE} AS BIGINT) AS chunk_idx,
-  CAST(s AS BIGINT) AS chunk_start,
-  CAST(length(substr(text, s, {CHUNK_CHARS})) AS BIGINT) AS chunk_len,
-  {_h(f"substr(text, s, {CHUNK_CHARS})", 15)} AS chunk_hash
-FROM documents,
-  unnest(generate_series(1, greatest(length(text), 1), {CHUNK_STRIDE})) AS t(s)
-WHERE text IS NOT NULL
-ORDER BY doc_id, chunk_idx
-"""
-
-_PII_AUG = (
-    f"CASE WHEN doc_id % {PII_MOD} = 0 THEN"
-    f" text || ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com code '"
-    f" || CAST({PII_CODE_BASE} + doc_id AS VARCHAR)"
-    f" ELSE text END"
-)
-
-ORACLES_LLMDATA["text_pii_scrub"] = f"""
-WITH aug AS (
-  SELECT doc_id, {_PII_AUG} AS a FROM documents WHERE text IS NOT NULL
-),
-s1 AS (
-  SELECT doc_id, a,
-    regexp_replace(a, '{PII_EMAIL_RE}', '<EMAIL>', 'g') AS after_email
-  FROM aug
-)
-SELECT doc_id,
-  CAST(len(regexp_extract_all(a, '{PII_EMAIL_RE}')) AS BIGINT) AS n_emails,
-  CAST(len(regexp_extract_all(after_email, '{PII_NUM_RE}')) AS BIGINT) AS n_numbers,
-  CAST(length(regexp_replace(after_email, '{PII_NUM_RE}', '<NUM>', 'g')) AS BIGINT)
-    AS scrubbed_len,
-  {_h(f"regexp_replace(after_email, '{PII_NUM_RE}', '<NUM>', 'g')", 15)}
-    AS scrubbed_hash
-FROM s1
-ORDER BY doc_id
-"""
-
-_TOP_FRAC = "CAST(top_token_cnt AS DOUBLE) / n_tokens"
-_DUP_FRAC = (
-    "CASE WHEN n_bigrams > 0"
-    " THEN 1.0 - CAST(n_distinct_bigrams AS DOUBLE) / n_bigrams"
-    " ELSE 0.0 END"
-)
-
-ORACLES_LLMDATA["quality_repetition"] = f"""
-WITH base AS (
-  SELECT doc_id, {_TOKS} AS toks FROM documents
-  WHERE text IS NOT NULL AND len({_TOKS}) >= 1
-),
-stats AS (
-  SELECT doc_id,
-    CAST(len(toks) AS BIGINT) AS n_tokens,
-    CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct_tokens,
-    CAST(list_max(list_transform(list_distinct(toks),
-      t -> len(list_filter(toks, x -> x = t)))) AS BIGINT) AS top_token_cnt,
-    CAST(CASE WHEN len(toks) >= 2 THEN len(toks) - 1 ELSE 0 END AS BIGINT)
-      AS n_bigrams,
-    CAST(CASE WHEN len(toks) >= 2 THEN len(list_distinct(
-      list_transform(generate_series(1, len(toks) - 1),
-        i -> array_to_string(toks[i:i+1], ' ')))) ELSE 0 END AS BIGINT)
-      AS n_distinct_bigrams
-  FROM base
-)
-SELECT doc_id, n_tokens, n_distinct_tokens, top_token_cnt,
-  n_bigrams, n_distinct_bigrams,
-  {_r(_TOP_FRAC, 6)} AS top_token_frac,
-  {_r(_DUP_FRAC, 6)} AS dup_bigram_frac,
-  (({_r(_TOP_FRAC, 6)}) > {TOP_FRAC_FLAG}
-   OR ({_r(_DUP_FRAC, 6)}) > {DUP_BIGRAM_FLAG}) AS repetition_flag
-FROM stats
-ORDER BY doc_id
-"""
-
-_CONTAM_HASHES = f"list_distinct(list_transform({_grams(CONTAM_N)}, s -> {_h('s')}))"
-
-ORACLES_LLMDATA["contamination_ngram_overlap"] = f"""
-WITH base AS (
-  SELECT doc_id, {_CONTAM_HASHES} AS hs
-  FROM documents
-  WHERE text IS NOT NULL AND len({_TOKS}) >= {CONTAM_N}
-),
-eval_set AS (
-  SELECT DISTINCT unnest(hs) AS sh FROM base WHERE doc_id % {CONTAM_EVAL_MOD} = 0
-),
-train AS (
-  SELECT doc_id, CAST(len(hs) AS BIGINT) AS n_shingles, unnest(hs) AS sh
-  FROM base WHERE doc_id % {CONTAM_EVAL_MOD} <> 0
-)
-SELECT doc_id, n_shingles,
-  CAST(count(*) AS BIGINT) AS n_matched,
-  {_r("CAST(count(*) AS DOUBLE) / n_shingles", 6)} AS contamination
-FROM train JOIN eval_set USING (sh)
-GROUP BY doc_id, n_shingles
-ORDER BY doc_id
-"""
-
-ORACLES_LLMDATA["corpus_quota_sample"] = f"""
-WITH ranked AS (
-  SELECT doc_id, lang,
-    {_h("CAST(doc_id AS VARCHAR)")} AS sample_hash,
-    CAST(row_number() OVER (
-      PARTITION BY lang
-      ORDER BY {_h("CAST(doc_id AS VARCHAR)")}, doc_id
-    ) AS BIGINT) AS sample_rank
-  FROM documents
-)
-SELECT doc_id, lang, sample_hash, sample_rank
-FROM ranked
-WHERE sample_rank <= {QUOTA_PER_LANG}
-ORDER BY lang, sample_rank
-"""
-
-
 # ------------------------------------------------- split & packing
 
 SPLIT_TRAIN_PCT = 80  # hash-bucket boundaries: [0,80) train,
 SPLIT_VAL_PCT = 90  # [80,90) val, [90,100) test
 SEQ_LEN = 512  # context window (tokens) for sequence packing
 
+# CASE-guarded token count: Spark's tokens('') is [], DuckDB's
+# string_split_regex('') is [''] — the guard pins both to 0.
+_NTOKS = (
+    "CASE WHEN trim(text) = '' THEN 0"
+    f" ELSE len({_TOKS}) END"
+)
 
+
+@query(
+    oracle=f"""
+WITH b AS (
+  SELECT doc_id, n_chars, {_NTOKS} AS n_tokens,
+    CASE WHEN {_h("CAST(doc_id AS VARCHAR)")} % 100 < {SPLIT_TRAIN_PCT} THEN 'train'
+         WHEN {_h("CAST(doc_id AS VARCHAR)")} % 100 < {SPLIT_VAL_PCT} THEN 'val'
+         ELSE 'test' END AS split
+  FROM documents WHERE text IS NOT NULL
+)
+SELECT split, count(*) AS n_docs,
+  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
+  CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
+  min(doc_id) AS min_doc, max(doc_id) AS max_doc
+FROM b GROUP BY split ORDER BY split
+"""
+)
 def train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic train/val/test assignment by content-independent
     key hash — the reproducible-split primitive every training corpus
@@ -447,6 +467,25 @@ def train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(
+    oracle=f"""
+WITH toks AS (
+  SELECT lang, doc_id, CAST({_NTOKS} AS BIGINT) AS n_tokens
+  FROM documents WHERE text IS NOT NULL
+),
+packed AS (
+  SELECT lang, doc_id, n_tokens,
+    CAST((sum(n_tokens) OVER (
+       PARTITION BY lang ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
+       - n_tokens) // {SEQ_LEN} AS BIGINT) AS bin_id
+  FROM toks
+)
+SELECT lang, bin_id, count(*) AS n_docs,
+  CAST(sum(n_tokens) AS BIGINT) AS bin_tokens,
+  min(doc_id) AS first_doc, max(doc_id) AS last_doc
+FROM packed GROUP BY lang, bin_id ORDER BY lang, bin_id
+"""
+)
 def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pack documents into fixed SEQ_LEN-token context windows by
     contiguous greedy assignment: within each lang, docs in doc_id
@@ -483,47 +522,3 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("lang", "bin_id")
     )
-
-
-QUERIES_LLMDATA["train_val_test_split"] = train_val_test_split
-QUERIES_LLMDATA["sequence_packing"] = sequence_packing
-
-# CASE-guarded token count: Spark's tokens('') is [], DuckDB's
-# string_split_regex('') is [''] — the guard pins both to 0.
-_NTOKS = (
-    "CASE WHEN trim(text) = '' THEN 0"
-    f" ELSE len({_TOKS}) END"
-)
-
-ORACLES_LLMDATA["train_val_test_split"] = f"""
-WITH b AS (
-  SELECT doc_id, n_chars, {_NTOKS} AS n_tokens,
-    CASE WHEN {_h("CAST(doc_id AS VARCHAR)")} % 100 < {SPLIT_TRAIN_PCT} THEN 'train'
-         WHEN {_h("CAST(doc_id AS VARCHAR)")} % 100 < {SPLIT_VAL_PCT} THEN 'val'
-         ELSE 'test' END AS split
-  FROM documents WHERE text IS NOT NULL
-)
-SELECT split, count(*) AS n_docs,
-  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-  CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
-  min(doc_id) AS min_doc, max(doc_id) AS max_doc
-FROM b GROUP BY split ORDER BY split
-"""
-
-ORACLES_LLMDATA["sequence_packing"] = f"""
-WITH toks AS (
-  SELECT lang, doc_id, CAST({_NTOKS} AS BIGINT) AS n_tokens
-  FROM documents WHERE text IS NOT NULL
-),
-packed AS (
-  SELECT lang, doc_id, n_tokens,
-    CAST((sum(n_tokens) OVER (
-       PARTITION BY lang ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
-       - n_tokens) // {SEQ_LEN} AS BIGINT) AS bin_id
-  FROM toks
-)
-SELECT lang, bin_id, count(*) AS n_docs,
-  CAST(sum(n_tokens) AS BIGINT) AS bin_tokens,
-  min(doc_id) AS first_doc, max(doc_id) AS last_doc
-FROM packed GROUP BY lang, bin_id ORDER BY lang, bin_id
-"""

@@ -23,9 +23,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from youtube_etl_automated_pipeline_spark.plans.registry import query
 from youtube_etl_automated_pipeline_spark.sources import load_table
 
 
+@query(
+    oracle="""
+WITH basket AS (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem)
+SELECT a.l_suppkey AS s1, b.l_suppkey AS s2, count(*) AS n_orders
+FROM basket a JOIN basket b
+  ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
+GROUP BY s1, s2
+ORDER BY n_orders DESC, s1, s2
+LIMIT 50
+"""
+)
 def copurchase_supplier_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-50 supplier pairs by number of orders both appear in
     (pairwise frequent-itemset mining, basket = order).
@@ -59,6 +71,22 @@ def copurchase_supplier_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(
+    oracle="""
+WITH deg AS (
+  SELECT o_custkey, count(*) AS degree FROM (
+    SELECT DISTINCT o_custkey, l_suppkey
+    FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+  ) GROUP BY o_custkey
+)
+SELECT least(degree - (degree % 10), 100) AS degree_bucket,
+       count(*) AS n_customers,
+       CAST(sum(degree) AS BIGINT) AS sum_degree
+FROM deg
+GROUP BY degree_bucket
+ORDER BY degree_bucket
+"""
+)
 def customer_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree histogram of the customer->supplier trade graph: how
     many customers trade with exactly d distinct suppliers (d capped
@@ -84,6 +112,32 @@ def customer_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(
+    oracle="""
+WITH daily AS (
+  SELECT o_orderpriority,
+         date_diff('day', DATE '1990-01-01', o_orderdate) AS day,
+         CAST(sum(CAST(round(o_totalprice * 100.0) AS BIGINT)) AS BIGINT) AS y
+  FROM orders GROUP BY o_orderpriority, day
+),
+pts AS (
+  SELECT o_orderpriority,
+         CAST(day - (SELECT min(day) FROM daily) AS BIGINT) AS x, y
+  FROM daily
+),
+acc AS (
+  SELECT o_orderpriority, count(*) AS n,
+         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
+         CAST(sum(x * y) AS BIGINT) AS sxy, CAST(sum(x * x) AS BIGINT) AS sxx
+  FROM pts GROUP BY o_orderpriority
+)
+SELECT o_orderpriority AS priority, n AS n_days,
+       CAST(n * sxy - sx * sy AS DOUBLE) / CAST(n * sxx - sx * sx AS DOUBLE)
+         AS slope_cents_per_day
+FROM acc
+ORDER BY priority
+"""
+)
 def trend_daily_revenue_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Least-squares slope of daily revenue per order priority
     (cents/day): aggregate to (priority, day) points, then the
@@ -121,67 +175,35 @@ def trend_daily_revenue_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("priority")
 
 
-QUERIES_MINING = {
-    "copurchase_supplier_pairs": copurchase_supplier_pairs,
-    "customer_degree_distribution": customer_degree_distribution,
-    "trend_daily_revenue_slope": trend_daily_revenue_slope,
-}
-
-ORACLES_MINING = {
-    "copurchase_supplier_pairs": """
-WITH basket AS (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem)
-SELECT a.l_suppkey AS s1, b.l_suppkey AS s2, count(*) AS n_orders
-FROM basket a JOIN basket b
-  ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
-GROUP BY s1, s2
-ORDER BY n_orders DESC, s1, s2
-LIMIT 50
-""",
-    "customer_degree_distribution": """
-WITH deg AS (
-  SELECT o_custkey, count(*) AS degree FROM (
-    SELECT DISTINCT o_custkey, l_suppkey
-    FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-  ) GROUP BY o_custkey
-)
-SELECT least(degree - (degree % 10), 100) AS degree_bucket,
-       count(*) AS n_customers,
-       CAST(sum(degree) AS BIGINT) AS sum_degree
-FROM deg
-GROUP BY degree_bucket
-ORDER BY degree_bucket
-""",
-    "trend_daily_revenue_slope": """
-WITH daily AS (
-  SELECT o_orderpriority,
-         date_diff('day', DATE '1990-01-01', o_orderdate) AS day,
-         CAST(sum(CAST(round(o_totalprice * 100.0) AS BIGINT)) AS BIGINT) AS y
-  FROM orders GROUP BY o_orderpriority, day
-),
-pts AS (
-  SELECT o_orderpriority,
-         CAST(day - (SELECT min(day) FROM daily) AS BIGINT) AS x, y
-  FROM daily
-),
-acc AS (
-  SELECT o_orderpriority, count(*) AS n,
-         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(x * y) AS BIGINT) AS sxy, CAST(sum(x * x) AS BIGINT) AS sxx
-  FROM pts GROUP BY o_orderpriority
-)
-SELECT o_orderpriority AS priority, n AS n_days,
-       CAST(n * sxy - sx * sy AS DOUBLE) / CAST(n * sxx - sx * sx AS DOUBLE)
-         AS slope_cents_per_day
-FROM acc
-ORDER BY priority
-""",
-}
-
-
 LIFT_VOCAB_K = 32
 LIFT_TOP = 50
 
 
+@query(
+    oracle=f"""
+WITH tok AS (
+  SELECT DISTINCT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS token
+  FROM documents
+),
+dfc AS (SELECT token, CAST(count(*) AS BIGINT) AS df FROM tok GROUP BY token),
+vocab AS (SELECT token, df FROM dfc ORDER BY df DESC, token ASC LIMIT {LIFT_VOCAB_K}),
+vtok AS (SELECT t.doc_id, t.token FROM tok t JOIN vocab v USING (token)),
+n_ab AS (
+  SELECT x.token AS a, y.token AS b, CAST(count(*) AS BIGINT) AS n_ab
+  FROM vtok x JOIN vtok y ON x.doc_id = y.doc_id AND x.token < y.token
+  GROUP BY 1, 2
+),
+total AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents)
+SELECT a AS token_a, b AS token_b, n_ab,
+  va.df AS n_a, vb.df AS n_b,
+  CAST((n_ab * n_docs * 1000000) // (va.df * vb.df) AS BIGINT) AS lift_ppm
+FROM n_ab
+JOIN vocab va ON va.token = a
+JOIN vocab vb ON vb.token = b
+CROSS JOIN total
+ORDER BY lift_ppm DESC, token_a, token_b LIMIT {LIFT_TOP}
+"""
+)
 def token_lift_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token co-occurrence association mining: lift of the top-vocab
     token pairs across documents — PMI's ratio without its log, so
@@ -263,28 +285,135 @@ def token_lift_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_MINING["token_lift_pairs"] = token_lift_pairs
+# --- round-5 batch 5 -------------------------------------------------
+AR_MIN_SUPPORT = 5  # min co-basket count for a rule
+AR_TOP = 50  # rules kept (by lift, deterministic tiebreak)
 
-ORACLES_MINING["token_lift_pairs"] = f"""
-WITH tok AS (
-  SELECT DISTINCT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS token
-  FROM documents
+
+@query(
+    oracle=f"""
+WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+nb AS (SELECT count(DISTINCT l_orderkey) AS n_baskets FROM lineitem),
+item_n AS (SELECT l_partkey, count(*) AS item_n FROM items GROUP BY 1),
+pairs AS (
+  SELECT a.l_partkey AS a, b.l_partkey AS b, count(*) AS pair_n
+  FROM items a JOIN items b
+    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+  GROUP BY 1, 2 HAVING count(*) >= {AR_MIN_SUPPORT}
 ),
-dfc AS (SELECT token, CAST(count(*) AS BIGINT) AS df FROM tok GROUP BY token),
-vocab AS (SELECT token, df FROM dfc ORDER BY df DESC, token ASC LIMIT {LIFT_VOCAB_K}),
-vtok AS (SELECT t.doc_id, t.token FROM tok t JOIN vocab v USING (token)),
-n_ab AS (
-  SELECT x.token AS a, y.token AS b, CAST(count(*) AS BIGINT) AS n_ab
-  FROM vtok x JOIN vtok y ON x.doc_id = y.doc_id AND x.token < y.token
-  GROUP BY 1, 2
-),
-total AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents)
-SELECT a AS token_a, b AS token_b, n_ab,
-  va.df AS n_a, vb.df AS n_b,
-  CAST((n_ab * n_docs * 1000000) // (va.df * vb.df) AS BIGINT) AS lift_ppm
-FROM n_ab
-JOIN vocab va ON va.token = a
-JOIN vocab vb ON vb.token = b
-CROSS JOIN total
-ORDER BY lift_ppm DESC, token_a, token_b LIMIT {LIFT_TOP}
+directed AS (
+  SELECT a, b, pair_n FROM pairs
+  UNION ALL
+  SELECT b AS a, a AS b, pair_n FROM pairs
+)
+SELECT d.a AS antecedent, d.b AS consequent, d.pair_n AS support,
+  CAST(CAST(d.pair_n AS HUGEINT) * 1000000 // na.item_n AS BIGINT)
+    AS confidence_ppm,
+  CAST(CAST(d.pair_n AS HUGEINT) * n_baskets * 1000000
+       // (CAST(na.item_n AS HUGEINT) * nb2.item_n) AS BIGINT)
+    AS lift_ppm
+FROM directed d
+JOIN item_n na ON na.l_partkey = d.a
+JOIN item_n nb2 ON nb2.l_partkey = d.b
+CROSS JOIN nb
+ORDER BY lift_ppm DESC, antecedent, consequent
+LIMIT {AR_TOP}
 """
+)
+def association_rules_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Association-rule mining over order baskets (basket = order,
+    item = part): for every directed rule A -> B with co-basket
+    support >= AR_MIN_SUPPORT, confidence = P(B|A) and lift =
+    P(A,B)/(P(A)P(B)) in exact ppm; top-AR_TOP rules by lift. The
+    market-basket step AFTER pair counting (copurchase_supplier_pairs)
+    — rules rank by conditional strength, not raw co-occurrence.
+
+    Scale shape: one shuffle builds per-order distinct item sets,
+    pairs expand JVM-side (C(basket,2), basket bounded by order line
+    count), one shuffle counts pairs; item supports are one agg
+    broadcast back (catalog-bounded). Directed rules double the pair
+    rows AFTER aggregation — 2 x pair-census, never 2 x corpus. Lift
+    multiplies through decimal(38,0) (pair_n·N·1e6 wraps bigint at
+    fleet scale); TakeOrderedAndProject finishes.
+    """
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey"
+    )
+    baskets = li.groupBy("l_orderkey").agg(
+        F.sort_array(F.collect_set("l_partkey")).alias("parts")
+    )
+    n_baskets = baskets.select(
+        F.count(F.lit(1)).alias("n_baskets")
+    )
+    from youtube_etl_automated_pipeline_spark.operators.cache_registry import (
+        memo_persist,
+    )
+
+    # catalog-bounded, consumed by TWO broadcast builds (antecedent
+    # and consequent sides) — each re-ran the distinct+count scan (r08)
+    item_n = memo_persist(
+        spark,
+        ("ar_item_n", sf_dir),
+        lambda: li.distinct()
+        .groupBy("l_partkey")
+        .agg(F.count(F.lit(1)).alias("item_n")),
+    )
+    # chained Generate instead of nested higher-order transforms: the
+    # HOF fan-out is CodegenFallback (interpreted per element); the
+    # posexplode + tail-slice explode emits the identical (a, b)
+    # pairs inside whole-stage codegen (r08, guide section 4.1)
+    pairs = (
+        baskets.select(
+            F.posexplode("parts").alias("i", "a"), "parts"
+        )
+        .select(
+            "a",
+            F.explode(
+                F.expr("slice(parts, i + 2, size(parts))")
+            ).alias("b"),
+        )
+        .groupBy("a", "b")
+        .agg(F.count(F.lit(1)).alias("pair_n"))
+        .filter(F.col("pair_n") >= AR_MIN_SUPPORT)
+    )
+    # support-filtered pair census, consumed by BOTH direction arms —
+    # unpersisted, the basket pair-expansion ran twice (r08)
+    pairs_df = pairs
+    pairs = memo_persist(
+        spark, ("ar_pairs", sf_dir), lambda: pairs_df
+    )
+    directed = pairs.select("a", "b", "pair_n").unionAll(
+        pairs.select(
+            F.col("b").alias("a"), F.col("a").alias("b"), "pair_n"
+        )
+    )
+    return (
+        directed.join(
+            F.broadcast(item_n.withColumnRenamed("l_partkey", "a")
+                        .withColumnRenamed("item_n", "n_a")),
+            "a",
+        )
+        .join(
+            F.broadcast(item_n.withColumnRenamed("l_partkey", "b")
+                        .withColumnRenamed("item_n", "n_b")),
+            "b",
+        )
+        .crossJoin(F.broadcast(n_baskets))
+        .select(
+            F.col("a").alias("antecedent"),
+            F.col("b").alias("consequent"),
+            F.col("pair_n").alias("support"),
+            F.expr(
+                "CAST(CAST(pair_n AS DECIMAL(38,0)) * 1000000"
+                " DIV n_a AS BIGINT)"
+            ).alias("confidence_ppm"),
+            F.expr(
+                "CAST(CAST(pair_n AS DECIMAL(38,0)) * n_baskets * 1000000"
+                " DIV (CAST(n_a AS DECIMAL(38,0)) * n_b) AS BIGINT)"
+            ).alias("lift_ppm"),
+        )
+        .orderBy(
+            F.desc("lift_ppm"), "antecedent", "consequent"
+        )
+        .limit(AR_TOP)
+    )

@@ -41,10 +41,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from youtube_etl_automated_pipeline_spark.functions.compat import units
+from youtube_etl_automated_pipeline_spark.plans.registry import query
 from youtube_etl_automated_pipeline_spark.sources import load_table
-
-QUERIES_RESAMPLE: dict = {}
-ORACLES_RESAMPLE: dict[str, str] = {}
 
 
 def _uniform_from(h32: str) -> str:
@@ -62,6 +60,35 @@ def _uniform_from(h32: str) -> str:
 DP_SALT = "dp1"
 
 
+def _dp_h(tag: str) -> str:
+    return (
+        "CAST('0x' || substr(md5('"
+        + DP_SALT
+        + "|"
+        + tag
+        + "|' || CAST(c_nationkey AS VARCHAR) || '|'"
+        " || COALESCE(c_mktsegment, '<null>')), 1, 8) AS BIGINT)"
+    )
+
+
+@query(
+    oracle=f"""
+WITH counts AS (
+  SELECT c_nationkey, c_mktsegment, CAST(count(*) AS BIGINT) AS n
+  FROM customer GROUP BY 1, 2
+), seeded AS (
+  SELECT c_nationkey, c_mktsegment, n,
+         {_dp_h("a")} AS h1,
+         {_dp_h("b")} AS h2
+  FROM counts
+)
+SELECT c_nationkey, c_mktsegment,
+       n + CAST(floor(-ln({_uniform_from('h1')}))
+            - floor(-ln({_uniform_from('h2')})) AS BIGINT)
+         AS noisy_count
+FROM seeded
+"""
+)
 def dp_noise_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(nation, segment) counts released under the eps=1 geometric
     mechanism: ``noisy_count = count + G1 - G2``.
@@ -108,38 +135,6 @@ def dp_noise_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_RESAMPLE["dp_noise_histogram"] = dp_noise_histogram
-
-
-def _dp_h(tag: str) -> str:
-    return (
-        "CAST('0x' || substr(md5('"
-        + DP_SALT
-        + "|"
-        + tag
-        + "|' || CAST(c_nationkey AS VARCHAR) || '|'"
-        " || COALESCE(c_mktsegment, '<null>')), 1, 8) AS BIGINT)"
-    )
-
-
-ORACLES_RESAMPLE["dp_noise_histogram"] = f"""
-WITH counts AS (
-  SELECT c_nationkey, c_mktsegment, CAST(count(*) AS BIGINT) AS n
-  FROM customer GROUP BY 1, 2
-), seeded AS (
-  SELECT c_nationkey, c_mktsegment, n,
-         {_dp_h("a")} AS h1,
-         {_dp_h("b")} AS h2
-  FROM counts
-)
-SELECT c_nationkey, c_mktsegment,
-       n + CAST(floor(-ln({_uniform_from('h1')}))
-            - floor(-ln({_uniform_from('h2')})) AS BIGINT)
-         AS noisy_count
-FROM seeded
-"""
-
-
 # ------------------------------------------------------------------
 # Poisson bootstrap. Each (order, replicate) pair draws w ~ Poisson(1)
 # by inverse-CDF over an md5 uniform; the CDF thresholds are exact
@@ -170,6 +165,52 @@ BOOT_LO_RN = int(BOOT_R * 0.025) + 1  # 2   (1-based order statistic)
 BOOT_HI_RN = BOOT_R - int(BOOT_R * 0.025)  # 39
 
 
+def _boot_oracle() -> str:
+    hx = (
+        "md5('"
+        + BOOT_SALT
+        + "|' || CAST(o_orderkey AS VARCHAR) || '|'"
+        " || CAST(g.blk AS VARCHAR))"
+    )
+    return f"""
+WITH blocks AS (
+  SELECT o_orderkey, c_nationkey,
+         CAST(floor(o_totalprice * 1e2 + 5e-1) AS BIGINT) AS cents,
+         g.blk AS blk,
+         {hx} AS hx
+  FROM orders
+  JOIN customer ON o_custkey = c_custkey,
+  generate_series(0, {BOOT_R // 4 - 1}) g(blk)
+), expanded AS (
+  SELECT o_orderkey, c_nationkey, cents,
+         blk * 4 + s.slot AS r,
+         CAST('0x' || substr(hx, 1 + 8 * s.slot, 8) AS BIGINT) AS h32
+  FROM blocks, generate_series(0, 3) s(slot)
+), weighted AS (
+  SELECT c_nationkey, r, {_boot_weight_sql("h32")} AS w, cents
+  FROM expanded
+), reps AS (
+  SELECT c_nationkey, r,
+         CAST(floor(CAST(sum(w * cents) AS DOUBLE)
+               / CAST(sum(w) AS DOUBLE) * 1e4 + 5e-1) AS BIGINT)
+           AS mean_sub
+  FROM weighted GROUP BY 1, 2
+  HAVING sum(w) > 0
+), ranked AS (
+  SELECT c_nationkey, mean_sub,
+         row_number() OVER (PARTITION BY c_nationkey
+                            ORDER BY mean_sub, r) AS rn
+  FROM reps
+)
+SELECT c_nationkey,
+       CAST(count(*) AS BIGINT) AS n_reps,
+       min(CASE WHEN rn = {BOOT_LO_RN} THEN mean_sub END) AS ci_lo_sub,
+       min(CASE WHEN rn = {BOOT_HI_RN} THEN mean_sub END) AS ci_hi_sub
+FROM ranked GROUP BY c_nationkey
+"""
+
+
+@query(oracle=_boot_oracle())
 def bootstrap_ci_nation_revenue(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -275,54 +316,3 @@ def bootstrap_ci_nation_revenue(
             "ci_hi_sub"
         ),
     )
-
-
-QUERIES_RESAMPLE["bootstrap_ci_nation_revenue"] = bootstrap_ci_nation_revenue
-
-
-def _boot_oracle() -> str:
-    hx = (
-        "md5('"
-        + BOOT_SALT
-        + "|' || CAST(o_orderkey AS VARCHAR) || '|'"
-        " || CAST(g.blk AS VARCHAR))"
-    )
-    return f"""
-WITH blocks AS (
-  SELECT o_orderkey, c_nationkey,
-         CAST(floor(o_totalprice * 1e2 + 5e-1) AS BIGINT) AS cents,
-         g.blk AS blk,
-         {hx} AS hx
-  FROM orders
-  JOIN customer ON o_custkey = c_custkey,
-  generate_series(0, {BOOT_R // 4 - 1}) g(blk)
-), expanded AS (
-  SELECT o_orderkey, c_nationkey, cents,
-         blk * 4 + s.slot AS r,
-         CAST('0x' || substr(hx, 1 + 8 * s.slot, 8) AS BIGINT) AS h32
-  FROM blocks, generate_series(0, 3) s(slot)
-), weighted AS (
-  SELECT c_nationkey, r, {_boot_weight_sql("h32")} AS w, cents
-  FROM expanded
-), reps AS (
-  SELECT c_nationkey, r,
-         CAST(floor(CAST(sum(w * cents) AS DOUBLE)
-               / CAST(sum(w) AS DOUBLE) * 1e4 + 5e-1) AS BIGINT)
-           AS mean_sub
-  FROM weighted GROUP BY 1, 2
-  HAVING sum(w) > 0
-), ranked AS (
-  SELECT c_nationkey, mean_sub,
-         row_number() OVER (PARTITION BY c_nationkey
-                            ORDER BY mean_sub, r) AS rn
-  FROM reps
-)
-SELECT c_nationkey,
-       CAST(count(*) AS BIGINT) AS n_reps,
-       min(CASE WHEN rn = {BOOT_LO_RN} THEN mean_sub END) AS ci_lo_sub,
-       min(CASE WHEN rn = {BOOT_HI_RN} THEN mean_sub END) AS ci_hi_sub
-FROM ranked GROUP BY c_nationkey
-"""
-
-
-ORACLES_RESAMPLE["bootstrap_ci_nation_revenue"] = _boot_oracle()

@@ -5,7 +5,11 @@ and embedding-cosine near-dup pairs (label-blocked).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import hashlib
+from typing import Iterator
+
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from youtube_etl_automated_pipeline_spark.ext.similarity import (
@@ -13,15 +17,16 @@ from youtube_etl_automated_pipeline_spark.ext.similarity import (
     _unit_rows_exact,
     as_double,
     cosine_unit_cols,
+    dot_unrolled_sql,
     embedding_dim,
     label_norm_stats,
     topk_by_query,
     unit,
 )
-from youtube_etl_automated_pipeline_spark.operators.cache_registry import (
-    memo_persist,
-)
-from youtube_etl_automated_pipeline_spark.sources import load_table, load_wide, widen_scan
+from youtube_etl_automated_pipeline_spark.functions.compat import hround, sql_hround
+from youtube_etl_automated_pipeline_spark.operators.cache_registry import memo_persist
+from youtube_etl_automated_pipeline_spark.plans.registry import query
+from youtube_etl_automated_pipeline_spark.sources import load_table, load_wide
 
 N_QUERIES = 5
 # Coarse-quantizer k is NOT a constant: it is derived from the
@@ -36,97 +41,6 @@ TRAIN_MOD = 2  # k-means trains on the deterministic 1-in-2 modulo sample
 IVF_QUERY_LO, IVF_QUERY_HI = 8, 13
 
 
-def similarity_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN baseline: exact cosine top-10 for each query vector
-    (vec_id < 5) against the rest of the corpus.
-
-    Scale shape: the query side is tiny and broadcast, the corpus is
-    scanned once (no shuffle of the corpus); per-query top-k is a
-    window on the join result. At 100 TB the corpus scan dominates and
-    parallelizes perfectly; this is the exact-recall yardstick the IVF
-    path is judged against.
-    """
-    emb = load_wide(spark, sf_dir, "embeddings")
-    dim = embedding_dim(emb)
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), unit(F.col("embedding")).alias("q_u")
-    )
-    corpus = emb.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"), unit(F.col("embedding")).alias("c_u")
-    )
-    scored = corpus.crossJoin(F.broadcast(queries)).select(
-        "query_id",
-        "neighbor_id",
-        cosine_unit_cols("q_u", "c_u", dim).alias("cos_sim"),
-    )
-    return (
-        topk_by_query(scored, "query_id", "cos_sim", "neighbor_id", 10)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-        .orderBy("query_id", "rank")
-    )
-
-
-def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN with a REAL trained index: k-means centroids from 3
-    distributed Lloyd iterations (ext/kmeans.py), corpus bucketed to
-    its nearest centroid, each query probing its NPROBE=2 nearest
-    buckets — the classic recall-vs-candidates trade, measured by
-    tests/test_similarity_scale.py against the brute-force yardstick.
-
-    Scale shape: training is iters× (map pass + k·dim-row shuffle +
-    kilobyte driver collect) — the MLlib treeAggregate shape;
-    assignment is map-only (centroids live in the kernel closure);
-    the candidate join shuffles on cluster_id only. At 100 TB the
-    corpus is scanned iters+1 times and nothing quadratic exists.
-    """
-    from youtube_etl_automated_pipeline_spark.ext.kmeans import assign_nearest
-
-    emb = load_wide(spark, sf_dir, "embeddings")
-    dim = embedding_dim(emb)
-    # persist: the double-cast vector table feeds k-means training
-    # (iters passes), both assignment passes, and both unit-vector
-    # projections — one compute, six cached reads.
-    all_d = memo_persist(
-        spark,
-        ("sim_all_d", sf_dir),
-        lambda: emb.select(
-            F.col("vec_id").alias("emb_id"),
-            as_double(F.col("embedding")).alias("v"),
-        ),
-    )
-    cents = _coarse_cents(sf_dir, all_d, dim)
-
-    q = all_d.filter(
-        (F.col("emb_id") >= IVF_QUERY_LO) & (F.col("emb_id") < IVF_QUERY_HI)
-    )
-    c = all_d.filter(F.col("emb_id") >= IVF_QUERY_HI)
-    q_probes = (
-        assign_nearest(q, "emb_id", cents, nprobe=NPROBE)
-        .select(F.col("emb_id").alias("query_id"), "cluster_id")
-    )
-    c_assign = assign_nearest(c, "emb_id", cents, nprobe=1).select(
-        F.col("emb_id").alias("neighbor_id"), "cluster_id"
-    )
-    qu = q.select(F.col("emb_id").alias("query_id"), unit(F.col("v")).alias("q_u"))
-    cu = c.select(F.col("emb_id").alias("neighbor_id"), unit(F.col("v")).alias("c_u"))
-    candidates = (
-        c_assign.join(F.broadcast(q_probes), "cluster_id")
-        .join(F.broadcast(qu), "query_id")
-        .join(cu, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cluster_id",
-            cosine_unit_cols("q_u", "c_u", dim).alias("cos_sim"),
-        )
-    )
-    return (
-        topk_by_query(candidates, "query_id", "cos_sim", "neighbor_id", 5)
-        .select("query_id", "cluster_id", "neighbor_id", "cos_sim", "rank")
-        .orderBy("query_id", "rank")
-    )
-
-
 # Fail-fast ceiling for the exact within-label sweep: the self-join
 # evaluates block² pairs, so a block over this limit means the caller
 # picked the wrong operator for the corpus — raise with the LSH
@@ -134,110 +48,6 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ≈ 2.1e9 pairs is roughly the largest sweep a 32-core batch window
 # absorbs; past that only the banded path has a defensible cost.
 EXACT_BLOCK_LIMIT = 65_536
-
-
-def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs, blocked by label — the EXACT
-    within-block baseline. The scale path (global, no blocking key
-    needed, candidates ≪ n²) is ``dedup_embedding_lsh`` below; this
-    form remains for corpora where an exact per-block sweep over a
-    small natural cluster key is acceptable — and FAILS FAST (one
-    cheap count agg before the quadratic stage) when any label block
-    exceeds EXACT_BLOCK_LIMIT rather than letting the all-pairs join
-    grow O(n²/L) unbounded."""
-    emb = load_wide(spark, sf_dir, "embeddings")
-    biggest = (
-        # NULL-labeled rows never survive the equi-join below (join on
-        # "label" drops them), so they can't contribute pairs — exclude
-        # them from the guard count or a large NULL block would fail
-        # fast over a quadratic stage that would never execute.
-        emb.filter(F.col("label").isNotNull())
-        .groupBy("label")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.max("n").alias("m"))
-        .first()
-    )
-    if biggest and biggest.m and biggest.m > EXACT_BLOCK_LIMIT:
-        raise ValueError(
-            f"dedup_embedding_cosine: largest label block has "
-            f"{biggest.m} vectors (> {EXACT_BLOCK_LIMIT}); the exact "
-            "within-block sweep is O(block^2) — use "
-            "dedup_embedding_lsh (banded candidates) at this scale."
-        )
-
-    # r09 optimization (guide section 4.2): the label-blocked
-    # self-join evaluated the dim-term cosine expression per joined
-    # pair row (block² rows materialized through the join, scored in
-    # the JVM row-at-a-time). Now ONE grouped Arrow kernel per label
-    # block computes the block's pair scores as vectorized numpy row
-    # tiles and emits only the qualifying pairs. BIT-EXACT, not
-    # approximate: the kernel replays Spark's IEEE-754 float64 op
-    # sequence term by term (see _unit_rows_exact/_dot_rounded_exact)
-    # and applies the same rounded >= 0.3 predicate, so the emitted
-    # (label, vec_a, vec_b, cos_sim) set is bitwise the self-join's.
-    # The shuffle moves |rows| vectors once (groupBy label) instead
-    # of block² joined pair rows; the O(block²) compute itself is
-    # unchanged — that is this query's declared exact contract, with
-    # the EXACT_BLOCK_LIMIT guard above bounding it (the banded LSH
-    # sibling is the scale path).
-    import numpy as np
-    import pandas as pd
-
-    def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        order = np.argsort(ids)  # deterministic tiling, ids ascending
-        ids = ids[order]
-        u = _unit_rows_exact(
-            np.stack(
-                [
-                    np.asarray(v, dtype=np.float64)
-                    for v in pdf["embedding"].iloc[order]
-                ]
-            )
-        )
-        label = int(pdf["label"].iloc[0])
-        n = len(ids)
-        # row tiles bound the (tile, n) score matrix to ~32 MB even at
-        # the 65536-row guard ceiling
-        tile = max(1, (1 << 22) // max(1, n))
-        outs = []
-        for lo in range(0, n, tile):
-            hi = min(lo + tile, n)
-            r = _dot_rounded_exact(u[lo:hi], u)  # (hi-lo, n) rounded
-            ia, ib = np.nonzero(
-                (r >= 0.3) & (ids[lo:hi, None] < ids[None, :])
-            )
-            if len(ia):
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "label": np.full(len(ia), label, dtype=np.int32),
-                            "vec_a": ids[lo + ia],
-                            "vec_b": ids[ib],
-                            "cos_sim": r[ia, ib],
-                        }
-                    )
-                )
-        if not outs:
-            return pd.DataFrame(
-                {
-                    "label": np.array([], dtype=np.int32),
-                    "vec_a": np.array([], dtype=np.int64),
-                    "vec_b": np.array([], dtype=np.int64),
-                    "cos_sim": np.array([], dtype=np.float64),
-                }
-            )
-        return pd.concat(outs, ignore_index=True)
-
-    return (
-        emb.filter(F.col("label").isNotNull())
-        .select("label", "vec_id", "embedding")
-        .groupBy("label")
-        .applyInPandas(
-            block_pairs,
-            "label int, vec_a bigint, vec_b bigint, cos_sim double",
-        )
-    )
 
 
 DUP_EVERY = 20
@@ -284,58 +94,32 @@ def planted_corpus(spark: SparkSession, sf_dir: str):
     return corpus, uall, dim
 
 
-def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup pairs via random-hyperplane LSH — the
-    GLOBAL scale path (no label/all-pairs blocking anywhere).
-
-    The synthetic corpus has no natural near-dups (max pairwise cos
-    ≈ 0.55), so the query deterministically plants one perturbed copy
-    of every DUP_EVERY-th vector (±3% per-element scale, a pure
-    function of vec_id and element index that the oracle reproduces
-    bit-for-bit) — giving a ground truth the recall test in
-    tests/test_similarity_scale.py checks against.
-
-    Plan shape: signature pass is map-only (an Arrow-batched
-    mapInPandas kernel — 32 hyperplane dots as one batch×dim numpy
-    sweep, left-to-right over dim so signs match the oracle's
-    list_sum fold bit-for-bit); candidates come from an equi-join on
-    (band, key); exact cosine runs on candidates only. Candidate
-    pairs ≈ true dups + ~B·n²/2^R_BITS random collisions ≪ n²/2 —
-    the same banding cut `dedup_minhash_lsh` makes for text.
-    """
-    from youtube_etl_automated_pipeline_spark.ext.embed_lsh import signatures
-
-    corpus, uall, dim = planted_corpus(spark, sf_dir)
-    # persist the LSH signatures: both self-join sides consume them,
-    # and unpersisted each side re-ran the hyperplane kernel over the
-    # whole corpus (r08); B_BANDS small ints per vector
-    sig = memo_persist(
-        spark,
-        ("emb_lsh_sig", sf_dir),
-        lambda: signatures(corpus, dim),
-    )
-    a = sig.select(F.col("emb_id").alias("vec_a"), "band", "key")
-    b = sig.select(F.col("emb_id").alias("vec_b"), "band", "key")
-    cand = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b")
-        .distinct()
-    )
-    ua = uall.select(F.col("emb_id").alias("vec_a"), F.col("u").alias("u_a"))
-    ub = uall.select(F.col("emb_id").alias("vec_b"), F.col("u").alias("u_b"))
-    return (
-        cand.join(ua, "vec_a")
-        .join(ub, "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            cosine_unit_cols("u_a", "u_b", dim).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= LSH_THRESH)
-    )
-
-
+@query(
+    oracle="""
+WITH base AS (
+  SELECT vec_id, embedding,
+    list_max(list_transform(generate_series(1, len(embedding)),
+      i -> abs(CAST(embedding[i] AS DOUBLE)))) AS amax
+  FROM embeddings
+), q AS (
+  SELECT vec_id, len(embedding) AS n_dims,
+    CASE WHEN amax > 0 THEN amax / 127.0 ELSE 0.0 END AS scale,
+    CASE WHEN amax > 0 THEN
+      list_transform(generate_series(1, len(embedding)), i ->
+        CAST(greatest(-127, least(127,
+          floor(CAST(embedding[i] AS DOUBLE) / (amax / 127.0) + 0.5))) AS BIGINT))
+    ELSE list_transform(generate_series(1, len(embedding)), i -> CAST(0 AS BIGINT))
+    END AS qv
+  FROM base
+)
+SELECT vec_id, CAST(n_dims AS INTEGER) AS n_dims, scale,
+  array_to_string(qv, ',') AS q_str,
+  CAST(list_sum(qv) AS BIGINT) AS sum_q,
+  CAST(list_sum(list_transform(qv, x -> abs(x))) AS BIGINT) AS sum_abs_q
+FROM q
+ORDER BY vec_id
+"""
+)
 def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric int8 quantization of the embedding column — the
     storage/serving compression step of an LLM retrieval pipeline
@@ -375,25 +159,6 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("vec_id")
     )
-
-
-def embedding_label_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped-map applyInPandas over the embeddings table: per-label
-    norm statistics (the Pandas-UDF grouped-map surface)."""
-    emb = load_wide(spark, sf_dir, "embeddings")
-    # no trailing orderBy (r08): range-sampling re-executed the
-    # grouped Arrow kernel; driver compare is order-insensitive
-    return label_norm_stats(emb)
-
-
-QUERIES_SIMILARITY = {
-    "similarity_bruteforce_topk": similarity_bruteforce_topk,
-    "similarity_ivf_topk": similarity_ivf_topk,
-    "dedup_embedding_cosine": dedup_embedding_cosine,
-    "dedup_embedding_lsh": dedup_embedding_lsh,
-    "embedding_label_stats": embedding_label_stats,
-    "embedding_quantize_int8": embedding_quantize_int8,
-}
 
 
 PQ_M = 4  # subspaces
@@ -500,6 +265,549 @@ def _best_sql(vcol: str, off: int, sub: int, book: list[list[float]]) -> str:
     )
 
 
+KNN_HOLDOUT_MOD = 5  # vec_id % 5 == 0 -> held-out eval set
+KNN_K = 3
+
+
+INGEST_MOD = 7  # emb_id % 7 == 3 -> the newly-ingested batch
+OVERFULL_X = 2  # bucket > 2x the post-ingest mean -> rebalance signal
+
+
+HN_ANCHORS = 8  # anchors = vec_id < HN_ANCHORS (bounded, broadcastable)
+HN_TOPK = 3
+
+
+# DuckDB oracles for the similarity queries. Cosine is computed
+# manually (generate_series index walk, double-cast elements) rather
+# than via list_cosine_similarity so the arithmetic matches Spark's
+# zip_with/aggregate kernel; both sides round to 6dp before any
+# ordering or thresholding.
+
+def _norm(a: str) -> str:
+    return (
+        f"sqrt(list_sum(list_transform(generate_series(1, len({a})),"
+        f" i -> CAST({a}[i] AS DOUBLE) * CAST({a}[i] AS DOUBLE))))"
+    )
+
+
+def _cos_unit(a: str, b: str, dp: int = 6) -> str:
+    """Twin of Spark's unit()+dot_unrolled(): each element divided by
+    its vector norm, products summed left-to-right — term-identical
+    IEEE arithmetic to the engine's normalize-then-dot kernel."""
+    p = float(10**dp)
+    na, nb = _norm(a), _norm(b)
+    dot = (
+        f"list_sum(list_transform(generate_series(1, len({a})),"
+        f" i -> (CAST({a}[i] AS DOUBLE) / {na}) * (CAST({b}[i] AS DOUBLE) / {nb})))"
+    )
+    raw = f"CASE WHEN {na} > 0 AND {nb} > 0 THEN {dot} ELSE 0 END"
+    return f"floor(({raw}) * {p!r} + 0.5) / {p!r}"
+
+
+@query(
+    oracle=f"""
+WITH q AS (
+  SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings
+  WHERE vec_id < {N_QUERIES}
+),
+c AS (
+  SELECT vec_id AS neighbor_id, embedding AS c_emb FROM embeddings
+  WHERE vec_id >= {N_QUERIES}
+),
+scored AS (
+  SELECT query_id, neighbor_id, {_cos_unit("q_emb", "c_emb")} AS cos_sim
+  FROM c CROSS JOIN q
+)
+SELECT query_id, neighbor_id, cos_sim, rank FROM (
+  SELECT *, CAST(row_number() OVER (
+      PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS INTEGER) AS rank
+  FROM scored
+) WHERE rank <= 10
+ORDER BY query_id, rank
+"""
+)
+def similarity_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ANN baseline: exact cosine top-10 for each query vector
+    (vec_id < 5) against the rest of the corpus.
+
+    Scale shape: the query side is tiny and broadcast, the corpus is
+    scanned once (no shuffle of the corpus); per-query top-k is a
+    window on the join result. At 100 TB the corpus scan dominates and
+    parallelizes perfectly; this is the exact-recall yardstick the IVF
+    path is judged against.
+    """
+    emb = load_wide(spark, sf_dir, "embeddings")
+    dim = embedding_dim(emb)
+    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), unit(F.col("embedding")).alias("q_u")
+    )
+    corpus = emb.filter(F.col("vec_id") >= N_QUERIES).select(
+        F.col("vec_id").alias("neighbor_id"), unit(F.col("embedding")).alias("c_u")
+    )
+    scored = corpus.crossJoin(F.broadcast(queries)).select(
+        "query_id",
+        "neighbor_id",
+        cosine_unit_cols("q_u", "c_u", dim).alias("cos_sim"),
+    )
+    return (
+        topk_by_query(scored, "query_id", "cos_sim", "neighbor_id", 10)
+        .select("query_id", "neighbor_id", "cos_sim", "rank")
+        .orderBy("query_id", "rank")
+    )
+
+
+@query(
+    oracle=f"""
+SELECT label, vec_a, vec_b, cos_sim FROM (
+  SELECT a.label, a.vec_id AS vec_a, b.vec_id AS vec_b,
+         {_cos_unit("a.embedding", "b.embedding")} AS cos_sim
+  FROM embeddings a JOIN embeddings b
+    ON a.label = b.label AND a.vec_id < b.vec_id
+)
+WHERE cos_sim >= 0.3
+ORDER BY vec_a, vec_b
+"""
+)
+def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-cosine near-dup pairs, blocked by label — the EXACT
+    within-block baseline. The scale path (global, no blocking key
+    needed, candidates ≪ n²) is ``dedup_embedding_lsh`` below; this
+    form remains for corpora where an exact per-block sweep over a
+    small natural cluster key is acceptable — and FAILS FAST (one
+    cheap count agg before the quadratic stage) when any label block
+    exceeds EXACT_BLOCK_LIMIT rather than letting the all-pairs join
+    grow O(n²/L) unbounded."""
+    emb = load_wide(spark, sf_dir, "embeddings")
+    biggest = (
+        # NULL-labeled rows never survive the equi-join below (join on
+        # "label" drops them), so they can't contribute pairs — exclude
+        # them from the guard count or a large NULL block would fail
+        # fast over a quadratic stage that would never execute.
+        emb.filter(F.col("label").isNotNull())
+        .groupBy("label")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .agg(F.max("n").alias("m"))
+        .first()
+    )
+    if biggest and biggest.m and biggest.m > EXACT_BLOCK_LIMIT:
+        raise ValueError(
+            f"dedup_embedding_cosine: largest label block has "
+            f"{biggest.m} vectors (> {EXACT_BLOCK_LIMIT}); the exact "
+            "within-block sweep is O(block^2) — use "
+            "dedup_embedding_lsh (banded candidates) at this scale."
+        )
+
+    # r09 optimization (guide section 4.2): the label-blocked
+    # self-join evaluated the dim-term cosine expression per joined
+    # pair row (block² rows materialized through the join, scored in
+    # the JVM row-at-a-time). Now ONE grouped Arrow kernel per label
+    # block computes the block's pair scores as vectorized numpy row
+    # tiles and emits only the qualifying pairs. BIT-EXACT, not
+    # approximate: the kernel replays Spark's IEEE-754 float64 op
+    # sequence term by term (see _unit_rows_exact/_dot_rounded_exact)
+    # and applies the same rounded >= 0.3 predicate, so the emitted
+    # (label, vec_a, vec_b, cos_sim) set is bitwise the self-join's.
+    # The shuffle moves |rows| vectors once (groupBy label) instead
+    # of block² joined pair rows; the O(block²) compute itself is
+    # unchanged — that is this query's declared exact contract, with
+    # the EXACT_BLOCK_LIMIT guard above bounding it (the banded LSH
+    # sibling is the scale path).
+    import numpy as np
+    import pandas as pd
+
+    def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+        order = np.argsort(ids)  # deterministic tiling, ids ascending
+        ids = ids[order]
+        u = _unit_rows_exact(
+            np.stack(
+                [
+                    np.asarray(v, dtype=np.float64)
+                    for v in pdf["embedding"].iloc[order]
+                ]
+            )
+        )
+        label = int(pdf["label"].iloc[0])
+        n = len(ids)
+        # row tiles bound the (tile, n) score matrix to ~32 MB even at
+        # the 65536-row guard ceiling
+        tile = max(1, (1 << 22) // max(1, n))
+        outs = []
+        for lo in range(0, n, tile):
+            hi = min(lo + tile, n)
+            r = _dot_rounded_exact(u[lo:hi], u)  # (hi-lo, n) rounded
+            ia, ib = np.nonzero(
+                (r >= 0.3) & (ids[lo:hi, None] < ids[None, :])
+            )
+            if len(ia):
+                outs.append(
+                    pd.DataFrame(
+                        {
+                            "label": np.full(len(ia), label, dtype=np.int32),
+                            "vec_a": ids[lo + ia],
+                            "vec_b": ids[ib],
+                            "cos_sim": r[ia, ib],
+                        }
+                    )
+                )
+        if not outs:
+            return pd.DataFrame(
+                {
+                    "label": np.array([], dtype=np.int32),
+                    "vec_a": np.array([], dtype=np.int64),
+                    "vec_b": np.array([], dtype=np.int64),
+                    "cos_sim": np.array([], dtype=np.float64),
+                }
+            )
+        return pd.concat(outs, ignore_index=True)
+
+    return (
+        emb.filter(F.col("label").isNotNull())
+        .select("label", "vec_id", "embedding")
+        .groupBy("label")
+        .applyInPandas(
+            block_pairs,
+            "label int, vec_a bigint, vec_b bigint, cos_sim double",
+        )
+    )
+
+
+def _ivf_oracle(dim: int = 64) -> str:
+    """Twin of the k-means-trained IVF query: unrolls the same Lloyd
+    iterations as CTEs (ext/kmeans.sql_kmeans_ctes — same left-to-
+    right distance folds, same exact-integer centroid means), then
+    nprobe=2 query probing and nearest-bucket corpus assignment."""
+    from youtube_etl_automated_pipeline_spark.ext.kmeans import (
+        sql_derive_k,
+        sql_dist2,
+        sql_kmeans_ctes,
+    )
+
+    final = f"cent{KMEANS_ITERS}"
+    du = (
+        "list_sum(list_transform(generate_series(1, %d),"
+        " i -> (a.v[i] / a.n) * (b.v[i] / b.n)))" % dim
+    )
+    cos_unit = (
+        f"floor((CASE WHEN a.n > 0 AND b.n > 0 THEN {du} ELSE 0 END)"
+        " * 1000000.0 + 0.5) / 1000000.0"
+    )
+    return f"""
+WITH corpus AS (
+  SELECT vec_id AS emb_id,
+         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+  FROM embeddings
+),
+train AS (
+  SELECT * FROM corpus WHERE emb_id % {TRAIN_MOD} = 0
+),
+{sql_kmeans_ctes(dim, k=sql_derive_k("train"), iters=KMEANS_ITERS, train_src="train")},
+q_probes AS (
+  SELECT emb_id AS query_id, cid AS cluster_id FROM (
+    SELECT e.emb_id, c.cid,
+           row_number() OVER (PARTITION BY e.emb_id
+             ORDER BY {sql_dist2("e.v", "c.cvec", dim)} ASC, c.cid ASC) AS _rn
+    FROM corpus e CROSS JOIN {final} c
+    WHERE e.emb_id >= {IVF_QUERY_LO} AND e.emb_id < {IVF_QUERY_HI}
+  ) WHERE _rn <= {NPROBE}
+),
+c_assign AS (
+  SELECT emb_id AS neighbor_id, cid AS cluster_id FROM (
+    SELECT e.emb_id, c.cid,
+           row_number() OVER (PARTITION BY e.emb_id
+             ORDER BY {sql_dist2("e.v", "c.cvec", dim)} ASC, c.cid ASC) AS _rn
+    FROM corpus e CROSS JOIN {final} c
+    WHERE e.emb_id >= {IVF_QUERY_HI}
+  ) WHERE _rn = 1
+),
+un AS (
+  SELECT emb_id, v,
+         sqrt(list_sum(list_transform(v, x -> x * x))) AS n
+  FROM corpus
+),
+cand AS (
+  SELECT q.query_id, c.cluster_id, c.neighbor_id, {cos_unit} AS cos_sim
+  FROM c_assign c
+  JOIN q_probes q USING (cluster_id)
+  JOIN un a ON a.emb_id = q.query_id
+  JOIN un b ON b.emb_id = c.neighbor_id
+)
+SELECT query_id, cluster_id, neighbor_id, cos_sim, rank FROM (
+  SELECT *, CAST(row_number() OVER (
+      PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS INTEGER) AS rank
+  FROM cand
+) WHERE rank <= 5
+ORDER BY query_id, rank
+"""
+
+
+@query(oracle=_ivf_oracle())
+def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF ANN with a REAL trained index: k-means centroids from 3
+    distributed Lloyd iterations (ext/kmeans.py), corpus bucketed to
+    its nearest centroid, each query probing its NPROBE=2 nearest
+    buckets — the classic recall-vs-candidates trade, measured by
+    tests/test_similarity_scale.py against the brute-force yardstick.
+
+    Scale shape: training is iters× (map pass + k·dim-row shuffle +
+    kilobyte driver collect) — the MLlib treeAggregate shape;
+    assignment is map-only (centroids live in the kernel closure);
+    the candidate join shuffles on cluster_id only. At 100 TB the
+    corpus is scanned iters+1 times and nothing quadratic exists.
+    """
+    from youtube_etl_automated_pipeline_spark.ext.kmeans import assign_nearest
+
+    emb = load_wide(spark, sf_dir, "embeddings")
+    dim = embedding_dim(emb)
+    # persist: the double-cast vector table feeds k-means training
+    # (iters passes), both assignment passes, and both unit-vector
+    # projections — one compute, six cached reads.
+    all_d = memo_persist(
+        spark,
+        ("sim_all_d", sf_dir),
+        lambda: emb.select(
+            F.col("vec_id").alias("emb_id"),
+            as_double(F.col("embedding")).alias("v"),
+        ),
+    )
+    cents = _coarse_cents(sf_dir, all_d, dim)
+
+    q = all_d.filter(
+        (F.col("emb_id") >= IVF_QUERY_LO) & (F.col("emb_id") < IVF_QUERY_HI)
+    )
+    c = all_d.filter(F.col("emb_id") >= IVF_QUERY_HI)
+    q_probes = (
+        assign_nearest(q, "emb_id", cents, nprobe=NPROBE)
+        .select(F.col("emb_id").alias("query_id"), "cluster_id")
+    )
+    c_assign = assign_nearest(c, "emb_id", cents, nprobe=1).select(
+        F.col("emb_id").alias("neighbor_id"), "cluster_id"
+    )
+    qu = q.select(F.col("emb_id").alias("query_id"), unit(F.col("v")).alias("q_u"))
+    cu = c.select(F.col("emb_id").alias("neighbor_id"), unit(F.col("v")).alias("c_u"))
+    candidates = (
+        c_assign.join(F.broadcast(q_probes), "cluster_id")
+        .join(F.broadcast(qu), "query_id")
+        .join(cu, "neighbor_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            "cluster_id",
+            cosine_unit_cols("q_u", "c_u", dim).alias("cos_sim"),
+        )
+    )
+    return (
+        topk_by_query(candidates, "query_id", "cos_sim", "neighbor_id", 5)
+        .select("query_id", "cluster_id", "neighbor_id", "cos_sim", "rank")
+        .orderBy("query_id", "rank")
+    )
+
+
+def _lsh_oracle(dim: int = 64) -> str:
+    """Twin of queries_similarity.dedup_embedding_lsh: same planted
+    dups (pure function of vec_id, i), same md5-derived hyperplane
+    literals, same left-to-right dot/norm arithmetic — so bands,
+    candidates and verified pairs agree bit-for-bit."""
+    from youtube_etl_automated_pipeline_spark.ext.embed_lsh import sql_band_keys
+
+    k0, k1 = sql_band_keys("v", dim)
+    return f"""
+WITH base AS (
+  SELECT vec_id AS emb_id,
+         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+  FROM embeddings
+),
+dups AS (
+  SELECT vec_id + {DUP_OFFSET} AS emb_id,
+         list_transform(generate_series(1, {dim}),
+           i -> CAST(embedding[i] AS DOUBLE)
+                * (1.0 + CAST((vec_id + i) % 7 - 3 AS DOUBLE) * 0.01)) AS v
+  FROM embeddings WHERE vec_id % {DUP_EVERY} = 0
+),
+corpus AS (SELECT * FROM base UNION ALL SELECT * FROM dups),
+sig AS (
+  SELECT emb_id, 0 AS band, {k0} AS key FROM corpus
+  UNION ALL
+  SELECT emb_id, 1 AS band, {k1} AS key FROM corpus
+),
+cand AS (
+  SELECT DISTINCT a.emb_id AS vec_a, b.emb_id AS vec_b
+  FROM sig a JOIN sig b
+    ON a.band = b.band AND a.key = b.key AND a.emb_id < b.emb_id
+),
+un AS (
+  SELECT emb_id, v,
+         sqrt(list_sum(list_transform(v, x -> x * x))) AS n
+  FROM corpus
+)
+SELECT vec_a, vec_b, cos_sim FROM (
+  SELECT c.vec_a, c.vec_b,
+    floor((CASE WHEN a.n > 0 AND b.n > 0 THEN
+      list_sum(list_transform(generate_series(1, {dim}),
+        i -> (a.v[i] / a.n) * (b.v[i] / b.n)))
+      ELSE 0 END) * 1000000.0 + 0.5) / 1000000.0 AS cos_sim
+  FROM cand c
+  JOIN un a ON c.vec_a = a.emb_id
+  JOIN un b ON c.vec_b = b.emb_id
+)
+WHERE cos_sim >= {LSH_THRESH}
+ORDER BY vec_a, vec_b
+"""
+
+
+@query(oracle=_lsh_oracle())
+def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding near-dup pairs via random-hyperplane LSH — the
+    GLOBAL scale path (no label/all-pairs blocking anywhere).
+
+    The synthetic corpus has no natural near-dups (max pairwise cos
+    ≈ 0.55), so the query deterministically plants one perturbed copy
+    of every DUP_EVERY-th vector (±3% per-element scale, a pure
+    function of vec_id and element index that the oracle reproduces
+    bit-for-bit) — giving a ground truth the recall test in
+    tests/test_similarity_scale.py checks against.
+
+    Plan shape: signature pass is map-only (an Arrow-batched
+    mapInPandas kernel — 32 hyperplane dots as one batch×dim numpy
+    sweep, left-to-right over dim so signs match the oracle's
+    list_sum fold bit-for-bit); candidates come from an equi-join on
+    (band, key); exact cosine runs on candidates only. Candidate
+    pairs ≈ true dups + ~B·n²/2^R_BITS random collisions ≪ n²/2 —
+    the same banding cut `dedup_minhash_lsh` makes for text.
+    """
+    from youtube_etl_automated_pipeline_spark.ext.embed_lsh import signatures
+
+    corpus, uall, dim = planted_corpus(spark, sf_dir)
+    # persist the LSH signatures: both self-join sides consume them,
+    # and unpersisted each side re-ran the hyperplane kernel over the
+    # whole corpus (r08); B_BANDS small ints per vector
+    sig = memo_persist(
+        spark,
+        ("emb_lsh_sig", sf_dir),
+        lambda: signatures(corpus, dim),
+    )
+    a = sig.select(F.col("emb_id").alias("vec_a"), "band", "key")
+    b = sig.select(F.col("emb_id").alias("vec_b"), "band", "key")
+    cand = (
+        a.join(b, ["band", "key"])
+        .filter(F.col("vec_a") < F.col("vec_b"))
+        .select("vec_a", "vec_b")
+        .distinct()
+    )
+    ua = uall.select(F.col("emb_id").alias("vec_a"), F.col("u").alias("u_a"))
+    ub = uall.select(F.col("emb_id").alias("vec_b"), F.col("u").alias("u_b"))
+    return (
+        cand.join(ua, "vec_a")
+        .join(ub, "vec_b")
+        .select(
+            "vec_a",
+            "vec_b",
+            cosine_unit_cols("u_a", "u_b", dim).alias("cos_sim"),
+        )
+        .filter(F.col("cos_sim") >= LSH_THRESH)
+    )
+
+
+_NORM_D = (
+    "sqrt(list_sum(list_transform(generate_series(1, len(embedding)),"
+    " i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))))"
+)
+
+
+def _r6(expr: str) -> str:
+    return f"floor(({expr}) * 1000000.0 + 0.5) / 1000000.0"
+
+
+@query(
+    oracle=f"""
+WITH n AS (
+  SELECT label, {_NORM_D} AS nrm FROM embeddings
+)
+SELECT label, count(*) AS n_vecs,
+  {_r6("min(nrm)")} AS min_norm,
+  {_r6("max(nrm)")} AS max_norm,
+  {_r6("sum(nrm) / count(*)")} AS mean_norm
+FROM n GROUP BY label
+ORDER BY label
+"""
+)
+def embedding_label_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Grouped-map applyInPandas over the embeddings table: per-label
+    norm statistics (the Pandas-UDF grouped-map surface)."""
+    emb = load_wide(spark, sf_dir, "embeddings")
+    # no trailing orderBy (r08): range-sampling re-executed the
+    # grouped Arrow kernel; driver compare is order-insensitive
+    return label_norm_stats(emb)
+
+
+def _pq_oracle(dim: int = 64) -> str:
+    """Twin of embedding_product_quantize: per-subspace k-means CTE
+    chains (prefixed so 4 trainings share one WITH clause), nearest
+    sub-centroid assignment with the cid-ASC tiebreak matching
+    array_position-first-match, and the same floor(d*1e6+0.5) error
+    units summed across subspaces."""
+    from youtube_etl_automated_pipeline_spark.ext.kmeans import (
+        sql_dist2,
+        sql_kmeans_ctes,
+    )
+
+    sub = dim // PQ_M
+    parts = [
+        """corpus AS (
+  SELECT vec_id AS emb_id,
+         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+  FROM embeddings
+)""",
+        f"sample AS (SELECT * FROM corpus WHERE emb_id % {TRAIN_MOD} = 0)",
+    ]
+    assigns = []
+    for m in range(PQ_M):
+        off = m * sub
+        parts.append(
+            f"tr{m} AS (SELECT emb_id, v[{off + 1}:{off + sub}] AS v FROM sample)"
+        )
+        parts.append(
+            sql_kmeans_ctes(sub, k=PQ_K, iters=PQ_ITERS, train_src=f"tr{m}",
+                            prefix=f"pq{m}")
+        )
+        parts.append(
+            f"""pq{m}d AS (
+  SELECT e.emb_id, c.cid,
+         {sql_dist2(f"e.v[{off + 1}:{off + sub}]", "c.cvec", sub)} AS d
+  FROM corpus e CROSS JOIN pq{m}cent{PQ_ITERS} c
+)"""
+        )
+        parts.append(
+            f"""pq{m}a AS (
+  SELECT emb_id, cid, d FROM (
+    SELECT emb_id, cid, d,
+           row_number() OVER (PARTITION BY emb_id ORDER BY d ASC, cid ASC) AS _rn
+    FROM pq{m}d
+  ) WHERE _rn = 1
+)"""
+        )
+        assigns.append(f"pq{m}a")
+    code_cols = ",\n       ".join(
+        f"CAST(pq{m}a.cid AS INT) AS code_{m}" for m in range(PQ_M)
+    )
+    err_sum = " + ".join(
+        f"CAST(floor(pq{m}a.d * 1000000.0 + 0.5) AS BIGINT)" for m in range(PQ_M)
+    )
+    joins = "".join(
+        f" JOIN pq{m}a ON pq0a.emb_id = pq{m}a.emb_id" for m in range(1, PQ_M)
+    )
+    with_body = ",\n".join(parts)
+    return f"""
+WITH {with_body}
+SELECT pq0a.emb_id AS emb_id,
+       {code_cols},
+       CAST({err_sum} AS BIGINT) AS err_units
+FROM pq0a{joins}
+ORDER BY emb_id
+"""
+
+
+@query(oracle=_pq_oracle())
 def embedding_product_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product quantization — the ANN compression workhorse (IVF-PQ):
     the 64-dim vector splits into PQ_M=4 16-dim subspaces, each with
@@ -562,9 +870,109 @@ def embedding_product_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return staged.select(*out_cols)
 
 
-QUERIES_SIMILARITY["embedding_product_quantize"] = embedding_product_quantize
+def _ivfpq_oracle(dim: int = 64) -> str:
+    """Twin of similarity_ivfpq_topk: coarse kmeans chain (prefix cs)
+    + per-subspace codebook chains (prefix pq{m}) + IVF candidate join
+    + ADC from codes. Ranks by the floored integer units (exactly the
+    Spark sort key), ties by neighbor_id."""
+    from youtube_etl_automated_pipeline_spark.ext.kmeans import (
+        sql_derive_k,
+        sql_dist2,
+        sql_kmeans_ctes,
+    )
+
+    sub = dim // PQ_M
+    parts = [
+        """rawcorpus AS (
+  SELECT vec_id AS emb_id,
+         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+  FROM embeddings
+)""",
+        # unit-normalize exactly like ext.similarity.unit: norm is the
+        # in-order fold of squares, zero vectors stay zero
+        """corpus AS (
+  SELECT emb_id,
+         CASE WHEN n > 0 THEN list_transform(v, x -> x / n)
+              ELSE list_transform(v, x -> 0.0) END AS v
+  FROM (SELECT emb_id, v,
+               sqrt(list_sum(list_transform(v, x -> x * x))) AS n
+        FROM rawcorpus)
+)""",
+        f"sample AS (SELECT * FROM corpus WHERE emb_id % {TRAIN_MOD} = 0)",
+        sql_kmeans_ctes(dim, k=sql_derive_k("sample"), iters=KMEANS_ITERS,
+                        train_src="sample", prefix="cs"),
+    ]
+    for m in range(PQ_M):
+        off = m * sub
+        parts.append(
+            f"tr{m} AS (SELECT emb_id, v[{off + 1}:{off + sub}] AS v FROM sample)"
+        )
+        parts.append(
+            sql_kmeans_ctes(sub, k=PQ_K, iters=PQ_ITERS, train_src=f"tr{m}",
+                            prefix=f"pq{m}")
+        )
+        parts.append(f"""pq{m}a AS (
+  SELECT emb_id, cid FROM (
+    SELECT e.emb_id, c.cid,
+           row_number() OVER (PARTITION BY e.emb_id ORDER BY
+             {sql_dist2(f"e.v[{off + 1}:{off + sub}]", "c.cvec", sub)} ASC,
+             c.cid ASC) AS _rn
+    FROM corpus e CROSS JOIN pq{m}cent{PQ_ITERS} c
+    WHERE e.emb_id >= {IVF_QUERY_HI}
+  ) WHERE _rn = 1
+)""")
+    parts.append(f"""c_assign AS (
+  SELECT emb_id AS neighbor_id, cid AS cluster_id FROM (
+    SELECT e.emb_id, c.cid,
+           row_number() OVER (PARTITION BY e.emb_id ORDER BY
+             {sql_dist2("e.v", "c.cvec", dim)} ASC, c.cid ASC) AS _rn
+    FROM corpus e CROSS JOIN cscent{KMEANS_ITERS} c
+    WHERE e.emb_id >= {IVF_QUERY_HI}
+  ) WHERE _rn = 1
+)""")
+    parts.append(f"""q_probes AS (
+  SELECT emb_id AS query_id, cid AS cluster_id FROM (
+    SELECT e.emb_id, c.cid,
+           row_number() OVER (PARTITION BY e.emb_id ORDER BY
+             {sql_dist2("e.v", "c.cvec", dim)} ASC, c.cid ASC) AS _rn
+    FROM corpus e CROSS JOIN cscent{KMEANS_ITERS} c
+    WHERE e.emb_id >= {IVF_QUERY_LO} AND e.emb_id < {IVF_QUERY_HI}
+  ) WHERE _rn <= {NPROBE}
+)""")
+    parts.append(f"""q_vec AS (
+  SELECT emb_id AS query_id, v AS q_v FROM corpus
+  WHERE emb_id >= {IVF_QUERY_LO} AND emb_id < {IVF_QUERY_HI}
+)""")
+    adc_terms = " + ".join(
+        sql_dist2(f"q.q_v[{m * sub + 1}:{m * sub + sub}]", f"cb{m}.cvec", sub)
+        for m in range(PQ_M)
+    )
+    code_joins = "".join(
+        f"\n  JOIN pq{m}a ON pq{m}a.emb_id = ca.neighbor_id"
+        f"\n  JOIN pq{m}cent{PQ_ITERS} cb{m} ON cb{m}.cid = pq{m}a.cid"
+        for m in range(PQ_M)
+    )
+    parts.append(f"""scored AS (
+  SELECT qp.query_id, ca.neighbor_id,
+         CAST(floor(({adc_terms}) * 1000000.0 + 0.5) AS BIGINT) AS adc_units
+  FROM c_assign ca
+  JOIN q_probes qp ON ca.cluster_id = qp.cluster_id
+  JOIN q_vec q ON q.query_id = qp.query_id{code_joins}
+)""")
+    with_body = ",\n".join(parts)
+    return f"""
+WITH {with_body}
+SELECT query_id, neighbor_id, adc_units, CAST(rank AS INT) AS rank FROM (
+  SELECT query_id, neighbor_id, adc_units,
+         row_number() OVER (PARTITION BY query_id
+           ORDER BY adc_units ASC, neighbor_id ASC) AS rank
+  FROM scored
+) WHERE rank <= 5
+ORDER BY query_id, rank
+"""
 
 
+@query(oracle=_ivfpq_oracle())
 def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ: the full large-scale ANN serving path — coarse IVF
     bucketing prunes candidates, then distances are approximated from
@@ -676,9 +1084,58 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_SIMILARITY["similarity_ivfpq_topk"] = similarity_ivfpq_topk
+def _purity_oracle(dim: int = 64) -> str:
+    """Same trained k-means (shared CTE builder), every vector
+    assigned to its nearest centroid (cid ASC tiebreak), then the
+    per-cluster majority-label census in integer ppm."""
+    from youtube_etl_automated_pipeline_spark.ext.kmeans import (
+        sql_derive_k,
+        sql_dist2,
+        sql_kmeans_ctes,
+    )
+
+    final = f"cent{KMEANS_ITERS}"
+    return f"""
+WITH corpus AS (
+  SELECT vec_id AS emb_id,
+         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
+         label
+  FROM embeddings
+),
+train AS (
+  SELECT emb_id, v FROM corpus WHERE emb_id % {TRAIN_MOD} = 0
+),
+{sql_kmeans_ctes(dim, k=sql_derive_k("train"), iters=KMEANS_ITERS, train_src="train")},
+assigned AS (
+  SELECT emb_id, cid AS cluster_id FROM (
+    SELECT e.emb_id, c.cid,
+           row_number() OVER (PARTITION BY e.emb_id
+             ORDER BY {sql_dist2("e.v", "c.cvec", dim)} ASC, c.cid ASC) AS _rn
+    FROM corpus e CROSS JOIN {final} c
+  ) WHERE _rn = 1
+),
+cells AS (
+  SELECT a.cluster_id, e.label, CAST(count(*) AS BIGINT) AS n
+  FROM assigned a JOIN corpus e USING (emb_id)
+  GROUP BY 1, 2
+),
+ranked AS (
+  SELECT cluster_id, label, n,
+    CAST(sum(n) OVER (PARTITION BY cluster_id) AS BIGINT) AS n_vecs,
+    row_number() OVER (PARTITION BY cluster_id
+                       ORDER BY n DESC, label ASC) AS rn
+  FROM cells
+)
+SELECT cluster_id, n_vecs,
+  CAST(label AS INT) AS top_label,
+  n AS top_label_n,
+  CAST((n * 1000000) // n_vecs AS BIGINT) AS purity_ppm
+FROM ranked WHERE rn = 1
+ORDER BY cluster_id
+"""
 
 
+@query(oracle=_purity_oracle())
 def cluster_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-quality evaluation of the trained IVF index: assign
     EVERY vector to its nearest k-means centroid and measure each
@@ -743,9 +1200,66 @@ def cluster_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_SIMILARITY["cluster_label_purity"] = cluster_label_purity
+def _two_level_oracle(dim: int = 64) -> str:
+    """Twin of kmeans_two_level_assign: the full coarse-then-fine
+    training chain (ext/kmeans.sql_kmeans_two_level_ctes — kc/kf
+    derived in SQL exactly like derive_two_level_k), corpus argmin
+    restricted to active buckets, fine argmin within bucket, census +
+    exact-integer centroid checksums."""
+    from youtube_etl_automated_pipeline_spark.ext.kmeans import (
+        sql_dist2,
+        sql_kmeans_two_level_ctes,
+    )
+
+    return f"""
+WITH corpus AS (
+  SELECT vec_id AS emb_id,
+         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+  FROM embeddings
+),
+train AS (
+  SELECT * FROM corpus WHERE emb_id % {TRAIN_MOD} = 0
+),
+{sql_kmeans_two_level_ctes(dim, train_src="train", coarse_iters=2, fine_iters=2, prefix="tl")},
+active AS (SELECT DISTINCT b FROM tlbase),
+cassign AS (
+  SELECT emb_id, cid AS bucket FROM (
+    SELECT e.emb_id, c.cid,
+           row_number() OVER (PARTITION BY e.emb_id
+             ORDER BY {sql_dist2("e.v", "c.cvec", dim)} ASC, c.cid ASC) AS _rn
+    FROM corpus e CROSS JOIN tlccent2 c
+    WHERE c.cid IN (SELECT b FROM active)
+  ) WHERE _rn = 1
+),
+fassign AS (
+  SELECT emb_id, bucket, f AS fine_cid FROM (
+    SELECT a.emb_id, a.bucket, c.f,
+           row_number() OVER (PARTITION BY a.emb_id
+             ORDER BY {sql_dist2("e.v", "c.cvec", dim)} ASC, c.f ASC) AS _rn
+    FROM cassign a
+    JOIN corpus e USING (emb_id)
+    JOIN tlfcent2 c ON c.b = a.bucket
+  ) WHERE _rn = 1
+),
+census AS (
+  SELECT bucket, fine_cid, count(*) AS n FROM fassign GROUP BY 1, 2
+),
+checks AS (
+  SELECT b AS bucket, f AS fine_cid,
+         CAST(list_sum(list_transform(cvec,
+           x -> CAST(floor(x * 1000000.0 + 0.5) AS BIGINT))) AS BIGINT)
+           AS cent_checksum
+  FROM tlfcent2
+)
+SELECT c.bucket, c.fine_cid,
+       CAST(coalesce(n.n, 0) AS BIGINT) AS n_members,
+       c.cent_checksum
+FROM checks c LEFT JOIN census n USING (bucket, fine_cid)
+ORDER BY bucket, fine_cid
+"""
 
 
+@query(oracle=_two_level_oracle())
 def kmeans_two_level_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-level (coarse/fine) k-means — the TRAINING-cost half of the
     scale story the derived-k queries rely on: single-level Lloyd at
@@ -818,13 +1332,49 @@ def kmeans_two_level_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_SIMILARITY["kmeans_two_level_assign"] = kmeans_two_level_assign
+def _knn_confusion_oracle() -> str:
+    return f"""
+WITH hold AS (
+  SELECT vec_id AS query_id, label AS actual, embedding AS q_emb
+  FROM embeddings
+  WHERE vec_id % {KNN_HOLDOUT_MOD} = 0 AND label IS NOT NULL
+),
+ref AS (
+  SELECT vec_id AS neighbor_id, label AS neighbor_label,
+         embedding AS c_emb
+  FROM embeddings
+  WHERE vec_id % {KNN_HOLDOUT_MOD} <> 0 AND label IS NOT NULL
+),
+scored AS (
+  SELECT query_id, actual, neighbor_id, neighbor_label,
+         {_cos_unit("q_emb", "c_emb")} AS cos_sim
+  FROM ref CROSS JOIN hold
+),
+top AS (
+  SELECT * FROM (
+    SELECT *, row_number() OVER (
+      PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rn
+    FROM scored
+  ) WHERE rn <= {KNN_K}
+),
+votes AS (
+  SELECT query_id, actual, neighbor_label, count(*) AS n_votes
+  FROM top GROUP BY 1, 2, 3
+),
+pred AS (
+  SELECT query_id, actual, neighbor_label AS predicted FROM (
+    SELECT *, row_number() OVER (
+      PARTITION BY query_id ORDER BY n_votes DESC, neighbor_label ASC) AS rn
+    FROM votes
+  ) WHERE rn = 1
+)
+SELECT actual, predicted, CAST(count(*) AS BIGINT) AS n
+FROM pred GROUP BY 1, 2
+ORDER BY actual, predicted
+"""
 
 
-KNN_HOLDOUT_MOD = 5  # vec_id % 5 == 0 -> held-out eval set
-KNN_K = 3
-
-
+@query(oracle=_knn_confusion_oracle())
 def knn_label_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kNN label-recovery eval of the embedding space: hold out every
     KNN_HOLDOUT_MOD-th vector, predict its label by majority vote of
@@ -945,13 +1495,57 @@ def knn_label_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_SIMILARITY["knn_label_confusion"] = knn_label_confusion
+def _ivf_incremental_oracle(dim: int = 64) -> str:
+    from youtube_etl_automated_pipeline_spark.ext.kmeans import (
+        sql_derive_k,
+        sql_dist2,
+        sql_kmeans_ctes,
+    )
+
+    final = f"cent{KMEANS_ITERS}"
+    return f"""
+WITH corpus AS (
+  SELECT vec_id AS emb_id,
+         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+  FROM embeddings
+),
+base AS (SELECT * FROM corpus WHERE emb_id % {INGEST_MOD} <> 3),
+batch AS (SELECT * FROM corpus WHERE emb_id % {INGEST_MOD} = 3),
+train AS (SELECT * FROM base WHERE emb_id % {TRAIN_MOD} = 0),
+{sql_kmeans_ctes(dim, k=sql_derive_k("train"), iters=KMEANS_ITERS, train_src="train")},
+a_base AS (
+  SELECT cid AS cluster_id, count(*) AS n_base FROM (
+    SELECT e.emb_id, c.cid,
+           row_number() OVER (PARTITION BY e.emb_id
+             ORDER BY {sql_dist2("e.v", "c.cvec", dim)} ASC, c.cid ASC) AS _rn
+    FROM base e CROSS JOIN {final} c
+  ) WHERE _rn = 1 GROUP BY 1
+),
+a_add AS (
+  SELECT cid AS cluster_id, count(*) AS n_added FROM (
+    SELECT e.emb_id, c.cid,
+           row_number() OVER (PARTITION BY e.emb_id
+             ORDER BY {sql_dist2("e.v", "c.cvec", dim)} ASC, c.cid ASC) AS _rn
+    FROM batch e CROSS JOIN {final} c
+  ) WHERE _rn = 1 GROUP BY 1
+),
+census AS (
+  SELECT coalesce(b.cluster_id, a.cluster_id) AS cluster_id,
+         CAST(coalesce(b.n_base, 0) AS BIGINT) AS n_base,
+         CAST(coalesce(a.n_added, 0) AS BIGINT) AS n_added,
+         CAST(coalesce(b.n_base, 0) + coalesce(a.n_added, 0) AS BIGINT)
+           AS n_total
+  FROM a_base b FULL JOIN a_add a USING (cluster_id)
+),
+tot AS (SELECT sum(n_total) AS grand, count(*) AS k FROM census)
+SELECT cluster_id, n_base, n_added, n_total,
+       (n_total * k > {OVERFULL_X} * grand) AS overfull
+FROM census CROSS JOIN tot
+ORDER BY cluster_id
+"""
 
 
-INGEST_MOD = 7  # emb_id % 7 == 3 -> the newly-ingested batch
-OVERFULL_X = 2  # bucket > 2x the post-ingest mean -> rebalance signal
-
-
+@query(oracle=_ivf_incremental_oracle())
 def ivf_index_incremental_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF index MAINTENANCE: a new ingest batch is added to an
     EXISTING index by assigning against the frozen centroids (no
@@ -1035,13 +1629,37 @@ def ivf_index_incremental_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_SIMILARITY["ivf_index_incremental_update"] = ivf_index_incremental_update
+def _hn_oracle() -> str:
+    return f"""
+WITH a AS (
+  SELECT vec_id AS anchor_id, label AS anchor_label,
+         embedding AS a_emb
+  FROM embeddings WHERE vec_id < {HN_ANCHORS}
+),
+c AS (
+  SELECT vec_id AS negative_id, label AS negative_label,
+         embedding AS c_emb
+  FROM embeddings WHERE vec_id >= {HN_ANCHORS}
+),
+scored AS (
+  SELECT anchor_id, anchor_label, negative_id, negative_label,
+         {_cos_unit("a_emb", "c_emb")} AS cos_sim
+  FROM c CROSS JOIN a
+  WHERE negative_label <> anchor_label
+)
+SELECT anchor_id, anchor_label, negative_id, negative_label,
+       cos_sim, rank
+FROM (
+  SELECT *, CAST(row_number() OVER (
+      PARTITION BY anchor_id
+      ORDER BY cos_sim DESC, negative_id ASC) AS INTEGER) AS rank
+  FROM scored
+) WHERE rank <= {HN_TOPK}
+ORDER BY anchor_id, rank
+"""
 
 
-HN_ANCHORS = 8  # anchors = vec_id < HN_ANCHORS (bounded, broadcastable)
-HN_TOPK = 3
-
-
+@query(oracle=_hn_oracle())
 def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contrastive-training data prep: for each anchor vector, the
     top-k most-similar vectors with a DIFFERENT label — the "hard
@@ -1095,4 +1713,862 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_SIMILARITY["hard_negative_mining"] = hard_negative_mining
+# --- bitext margin mining -------------------------------------------
+BITEXT_K = 4  # neighborhood size in the margin denominator
+BITEXT_Q_LO, BITEXT_Q_HI = 10, 26  # 8 even vec_ids form the query batch
+
+
+def _micro_cos(a: str, b: str) -> str:
+    """Integer micro-cosine twin of the engine's unit()+dot_unrolled()
+    + floor(c*1e6+0.5) kernel: identical normalize-then-dot term
+    order, identical rounding op."""
+    na, nb = _norm(a), _norm(b)
+    dot = (
+        f"list_sum(list_transform(generate_series(1, len({a})),"
+        f" i -> (CAST({a}[i] AS DOUBLE) / {na}) * (CAST({b}[i] AS DOUBLE) / {nb})))"
+    )
+    raw = f"CASE WHEN {na} > 0 AND {nb} > 0 THEN {dot} ELSE 0 END"
+    return f"CAST(floor(({raw}) * 1000000.0 + 0.5) AS BIGINT)"
+
+
+@query(
+    oracle=f"""
+WITH q AS (
+  SELECT vec_id AS src_id, embedding AS q_emb FROM embeddings
+  WHERE vec_id % 2 = 0 AND vec_id >= {BITEXT_Q_LO} AND vec_id < {BITEXT_Q_HI}
+),
+tgt AS (
+  SELECT vec_id AS tgt_id, embedding AS t_emb FROM embeddings
+  WHERE vec_id % 2 = 1
+),
+src AS (
+  SELECT vec_id AS nbr_id, embedding AS s_emb FROM embeddings
+  WHERE vec_id % 2 = 0
+),
+s1 AS (
+  SELECT src_id, tgt_id, {_micro_cos("q_emb", "t_emb")} AS micro
+  FROM tgt CROSS JOIN q
+),
+top_fwd AS (
+  SELECT *, row_number() OVER (
+      PARTITION BY src_id ORDER BY micro DESC, tgt_id ASC) AS rank
+  FROM s1
+),
+kept AS (SELECT * FROM top_fwd WHERE rank <= {BITEXT_K}),
+sum_x AS (
+  SELECT src_id, CAST(sum(micro) AS BIGINT) AS sum_x FROM kept GROUP BY src_id
+),
+best AS (
+  SELECT src_id, tgt_id, micro AS micro_xy FROM kept WHERE rank = 1
+),
+cand AS (
+  SELECT DISTINCT k.tgt_id, t.t_emb FROM kept k JOIN tgt t USING (tgt_id)
+),
+s2 AS (
+  SELECT cand.tgt_id, src.nbr_id, {_micro_cos("t_emb", "s_emb")} AS micro
+  FROM src CROSS JOIN cand
+),
+sum_y AS (
+  SELECT tgt_id, CAST(sum(micro) AS BIGINT) AS sum_y FROM (
+    SELECT *, row_number() OVER (
+        PARTITION BY tgt_id ORDER BY micro DESC, nbr_id ASC) AS rank
+    FROM s2
+  ) WHERE rank <= {BITEXT_K} GROUP BY tgt_id
+)
+SELECT b.src_id, b.tgt_id,
+       b.micro_xy / 1000000.0 AS cos_sim,
+       CASE WHEN sum_x + sum_y > 0 THEN
+         {sql_hround(f"b.micro_xy * 2.0 * {BITEXT_K} / (sum_x + sum_y)", 6)}
+       END AS margin,
+       CASE WHEN sum_x + sum_y > 0 THEN
+         {sql_hround(f"b.micro_xy * 2.0 * {BITEXT_K} / (sum_x + sum_y)", 6)} >= 1.0
+       END AS accepted
+FROM best b
+JOIN sum_x USING (src_id)
+JOIN sum_y USING (tgt_id)
+ORDER BY src_id
+"""
+)
+def bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Margin-based bitext candidate mining over the embeddings table,
+    with even vec_ids playing the source language and odd vec_ids the
+    target. For each query x the best target y is scored by
+
+        margin(x, y) = cos(x, y) / ((avg_k(x) + avg_k(y)) / 2)
+
+    where avg_k is the mean cosine of the side's k-nearest
+    neighborhood (ratio margin, Artetxe & Schwenk 2019 §3) — the
+    score that suppresses hub vectors a raw-cosine threshold accepts.
+
+    Scale shape: stage 1 broadcasts the bounded query batch against
+    one full scan of the target side (per-query top-k window, k·|Q|
+    rows survive); stage 2 broadcasts the <= k·|Q| surviving
+    candidates against one full scan of the source side for their
+    backward neighborhoods. Both stages are broadcast-join + scan —
+    the corpus never shuffles and nothing is quadratic in corpus
+    size, which is the published recipe's FAISS-sharded shape done
+    with DataFrame ops.
+
+    Exactness: cosines collapse to integer micro-units
+    (floor(c*1e6+0.5) as BIGINT) before any window or sum, so the
+    top-k sets, the neighborhood sums and the final single division
+    are bit-identical across engines.
+    """
+    emb = load_wide(spark, sf_dir, "embeddings")
+    dim = embedding_dim(emb)
+    src = emb.filter(F.col("vec_id") % 2 == 0)
+    tgt = emb.filter(F.col("vec_id") % 2 == 1)
+    q = src.filter(
+        (F.col("vec_id") >= BITEXT_Q_LO) & (F.col("vec_id") < BITEXT_Q_HI)
+    ).select(F.col("vec_id").alias("src_id"), unit(F.col("embedding")).alias("q_u"))
+    tgt_u = tgt.select(
+        F.col("vec_id").alias("tgt_id"), unit(F.col("embedding")).alias("t_u")
+    )
+    micro1 = F.floor(
+        F.expr(dot_unrolled_sql("q_u", "t_u", dim)) * 1e6 + F.lit(0.5)
+    ).cast("long")
+    s1 = tgt_u.crossJoin(F.broadcast(q)).select(
+        "src_id", "tgt_id", micro1.alias("micro")
+    )
+    w1 = Window.partitionBy("src_id").orderBy(F.desc("micro"), F.asc("tgt_id"))
+    from youtube_etl_automated_pipeline_spark.operators.cache_registry import (
+        memo_persist,
+    )
+
+    # k x |Q| rows, consumed by THREE arms (forward sums, best pick,
+    # backward candidate set) — unpersisted, the stage-1 scan + window
+    # re-executes per arm (r08, guide section 1.2)
+    top_fwd = memo_persist(
+        spark,
+        ("bitext_top_fwd", sf_dir),
+        lambda: s1.withColumn("rank", F.row_number().over(w1)).filter(
+            F.col("rank") <= BITEXT_K
+        ),
+    )
+    sum_x = top_fwd.groupBy("src_id").agg(F.sum("micro").alias("sum_x"))
+    best = top_fwd.filter(F.col("rank") == 1).select(
+        "src_id", "tgt_id", F.col("micro").alias("micro_xy")
+    )
+    cand = top_fwd.select("tgt_id").distinct().join(tgt_u, "tgt_id")
+    src_u = src.select(
+        F.col("vec_id").alias("nbr_id"), unit(F.col("embedding")).alias("s_u")
+    )
+    micro2 = F.floor(
+        F.expr(dot_unrolled_sql("t_u", "s_u", dim)) * 1e6 + F.lit(0.5)
+    ).cast("long")
+    s2 = src_u.crossJoin(F.broadcast(cand)).select(
+        "tgt_id", "nbr_id", micro2.alias("micro")
+    )
+    w2 = Window.partitionBy("tgt_id").orderBy(F.desc("micro"), F.asc("nbr_id"))
+    sum_y = (
+        s2.withColumn("rank", F.row_number().over(w2))
+        .filter(F.col("rank") <= BITEXT_K)
+        .groupBy("tgt_id")
+        .agg(F.sum("micro").alias("sum_y"))
+    )
+    denom = F.col("sum_x") + F.col("sum_y")
+    margin = F.when(
+        denom > 0,
+        hround(F.col("micro_xy") * F.lit(2.0) * F.lit(BITEXT_K) / denom, 6),
+    )
+    return (
+        best.join(sum_x, "src_id")
+        .join(sum_y, "tgt_id")
+        .select(
+            "src_id",
+            "tgt_id",
+            (F.col("micro_xy") / F.lit(1.0e6)).alias("cos_sim"),
+            margin.alias("margin"),
+            (margin >= 1.0).alias("accepted"),
+        )
+        .orderBy("src_id")
+    )
+
+
+# Johnson–Lindenstrauss projection audit and MMR
+# diversity re-ranking — two more published-technique operators with
+# DuckDB oracle twins.
+#
+# - ``embedding_jl_projection`` — random-sign (Achlioptas 2003) JL
+#   projection 64 -> 16 dims with a pairwise-distance distortion audit:
+#   the cheap dimensionality-reduction step a 100 TB embedding pipeline
+#   runs before clustering/LSH, plus the census that certifies the
+#   distance-preservation the JL lemma promises. The sign matrix is
+#   derived from md5 (pure-Python at import), so both engines share the
+#   identical literal matrix.
+# - ``retrieval_mmr_rerank`` — Maximal Marginal Relevance re-ranking
+#   (Carbonell & Goldstein, SIGIR 1998): greedy selection maximizing
+#   λ·relevance − (1−λ)·max-similarity-to-already-selected over a
+#   bounded top-C candidate pool — the diversity pass a retrieval stack
+#   runs after ANN candidate generation. Greedy steps are unrolled
+#   (fixed k) in both engines.
+#
+# Cross-engine exactness: every score collapses to integer micro-units
+# before any argmax/threshold; float arithmetic is term-identical
+# (mirrored unrolled sums, same operand order).
+
+# --- JL projection ---------------------------------------------------
+JL_IN_DIM = 64
+JL_OUT_DIM = 16
+JL_N_PAIRS = 24  # audit pairs (2t, 2t+1), t < JL_N_PAIRS
+
+
+def _jl_sign(i: int, j: int) -> int:
+    """Deterministic ±1 from md5 — identical constant in both engines
+    (computed once at import, embedded as literals)."""
+    h = hashlib.md5(f"jl:{i}:{j}".encode()).hexdigest()
+    return 1 if int(h[0], 16) < 8 else -1
+
+
+JL_SIGNS = [
+    [_jl_sign(i, j) for j in range(JL_OUT_DIM)] for i in range(JL_IN_DIM)
+]
+
+
+def _proj_diff_term(j: int, elem: str) -> str:
+    """Unrolled Σ_i sign_ij · diff_i as one left-associative SQL sum
+    (projection is linear, so project the pair DIFFERENCE once).
+    ``elem`` formats the i-th diff element, 1-based."""
+    parts = []
+    for i in range(JL_IN_DIM):
+        s = JL_SIGNS[i][j]
+        e = elem.format(i=i + 1)
+        parts.append(f"({e})" if s == 1 else f"(-({e}))")
+    return " + ".join(parts)
+
+
+def _jl_oracle() -> str:
+    elem = "(CAST(va[{i}] AS DOUBLE) - CAST(vb[{i}] AS DOUBLE))"
+    d2_orig = " + ".join(
+        f"({elem.format(i=i + 1)}) * ({elem.format(i=i + 1)})"
+        for i in range(JL_IN_DIM)
+    )
+    proj_sq = " + ".join(
+        f"(({_proj_diff_term(j, elem)}) * ({_proj_diff_term(j, elem)}))"
+        for j in range(JL_OUT_DIM)
+    )
+    ratio = (
+        f"CASE WHEN ({d2_orig}) > 0 THEN"
+        f" CAST(FLOOR((({proj_sq}) / {JL_OUT_DIM}) / ({d2_orig})"
+        f" * 1000000.0 + 0.5) AS BIGINT) END"
+    )
+    return f"""
+WITH a AS (
+  SELECT CAST(vec_id / 2 AS INT) AS pair_id, embedding AS va
+  FROM embeddings WHERE vec_id % 2 = 0 AND vec_id < {2 * JL_N_PAIRS}
+),
+b AS (
+  SELECT CAST((vec_id - 1) / 2 AS INT) AS pair_id, embedding AS vb
+  FROM embeddings WHERE vec_id % 2 = 1 AND vec_id < {2 * JL_N_PAIRS}
+)
+SELECT pair_id, ratio_micro,
+       CAST(ratio_micro // 100000 AS INT) AS ratio_decile
+FROM (
+  SELECT pair_id, {ratio} AS ratio_micro
+  FROM a JOIN b USING (pair_id)
+)
+ORDER BY pair_id
+"""
+
+
+@query(oracle=_jl_oracle())
+def embedding_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """JL random-sign projection distortion audit: project each audit
+    pair's difference vector through the shared ±1 matrix and compare
+    squared distances, ratio = (||R·(a-b)||²/OUT_DIM) / ||a-b||² in
+    integer micro-units (JL lemma: concentrated near 1).
+
+    Scale shape: the projection is a pure map — an Arrow-batched
+    numpy kernel (mapInPandas), vectorized ACROSS rows with the
+    dim-axis accumulated sequentially so the double-add order is
+    bit-reproducible (a 2048-term unrolled SQL expression computes
+    the same thing but blows past the JVM codegen method limit and
+    falls back to per-row interpretation — measured 7s vs sub-second
+    for the kernel). The audit joins consecutive vec_ids (equi-join,
+    O(n) pairs in general). This is the certify-then-trust step
+    before swapping 64-dim vectors for 16-dim ones in downstream
+    clustering/LSH: 4× less shuffle volume everywhere after.
+
+    Exactness: both engines evaluate the SAME sequential-order sums
+    over the SAME literal matrix; one double division, then the
+    micro-unit floor.
+    """
+    import numpy as np
+    import pandas as pd
+
+    emb = load_wide(spark, sf_dir, "embeddings")
+    dim = embedding_dim(emb)
+    assert dim == JL_IN_DIM, f"JL matrix is {JL_IN_DIM}-dim, got {dim}"
+    a = emb.filter(
+        (F.col("vec_id") % 2 == 0) & (F.col("vec_id") < 2 * JL_N_PAIRS)
+    ).select((F.col("vec_id") / 2).cast("int").alias("pair_id"),
+             F.col("embedding").alias("va"))
+    b = emb.filter(
+        (F.col("vec_id") % 2 == 1) & (F.col("vec_id") < 2 * JL_N_PAIRS)
+    ).select(((F.col("vec_id") - 1) / 2).cast("int").alias("pair_id"),
+             F.col("embedding").alias("vb"))
+    signs = np.array(JL_SIGNS, dtype=np.float64)  # (IN, OUT)
+
+    def kernel(batches):
+        # Arrow-vectorized across rows; the i/j accumulations loop
+        # SEQUENTIALLY so every double add happens in the exact order
+        # the oracle's left-associative list_sum folds use (np.sum's
+        # pairwise summation would diverge in the last ulp).
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            va = np.stack(
+                [np.asarray(v, dtype=np.float64) for v in pdf["va"]]
+            )
+            vb = np.stack(
+                [np.asarray(v, dtype=np.float64) for v in pdf["vb"]]
+            )
+            dv = va - vb  # (rows, IN) — same IEEE subtract per element
+            d2 = np.zeros(len(pdf))
+            for i in range(JL_IN_DIM):
+                d2 += dv[:, i] * dv[:, i]
+            proj = np.zeros((len(pdf), JL_OUT_DIM))
+            for i in range(JL_IN_DIM):
+                # per output dim j the i-terms accumulate in ascending
+                # i order, matching the unrolled SQL sum term order
+                proj += dv[:, i][:, None] * signs[i][None, :]
+            psq = np.zeros(len(pdf))
+            for j in range(JL_OUT_DIM):
+                psq += proj[:, j] * proj[:, j]
+            ratio = np.floor((psq / JL_OUT_DIM) / d2 * 1e6 + 0.5)
+            out = pd.DataFrame(
+                {
+                    "pair_id": pdf["pair_id"],
+                    "ratio_micro": pd.array(
+                        np.where(d2 > 0, ratio, np.nan), dtype="Int64"
+                    ),
+                }
+            )
+            yield out
+
+    paired = a.join(b, "pair_id")
+    projected = paired.mapInPandas(
+        kernel, schema="pair_id int, ratio_micro long"
+    )
+    return (
+        # integer DIV, not `/`+cast: Spark casts double->int by
+        # truncation while DuckDB ROUNDS — 11.5 would split 11 vs 12
+        projected.withColumn(
+            "ratio_decile", F.expr("CAST(ratio_micro DIV 100000 AS INT)")
+        )
+        .orderBy("pair_id")
+    )
+
+
+OUTLIER_TOP = 5  # outliers reported per label
+
+
+@query(
+    oracle=f"""
+WITH micro AS (
+  SELECT vec_id, label,
+    list_transform(embedding,
+      x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)) AS m
+  FROM embeddings WHERE label IS NOT NULL
+),
+dims AS (
+  SELECT label, d, sum(CAST(m[d] AS HUGEINT)) AS sd
+  FROM micro, unnest(generate_series(1, len(m))) AS t(d)
+  GROUP BY 1, 2
+),
+counts AS (SELECT label, count(*) AS n FROM micro GROUP BY label),
+scored AS (
+  SELECT mi.label, mi.vec_id, c.n,
+    sum((CAST(c.n AS HUGEINT) * mi.m[dd.d] - dd.sd)
+      * (CAST(c.n AS HUGEINT) * mi.m[dd.d] - dd.sd)) AS dist2
+  FROM micro mi
+  JOIN counts c ON c.label = mi.label
+  JOIN dims dd ON dd.label = mi.label
+  GROUP BY 1, 2, 3
+),
+ranked AS (
+  SELECT *, row_number() OVER (
+    PARTITION BY label ORDER BY dist2 DESC, vec_id) AS rnk
+  FROM scored QUALIFY rnk <= {OUTLIER_TOP}
+)
+SELECT label, CAST(rnk AS BIGINT) AS rnk, vec_id, n,
+  CAST(dist2 // (CAST(n AS HUGEINT) * n) AS BIGINT) AS msd_micro2
+FROM ranked ORDER BY label, rnk
+"""
+)
+def embedding_label_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Label-error detection: the OUTLIER_TOP vectors farthest from
+    their own label's centroid — the curation signal for mislabeled
+    or contaminated examples (Northcutt et al.'s confident-learning
+    intuition reduced to its geometric core).
+
+    Exactness: embeddings quantize to integer micro-units m_d; the
+    centroid never materializes as a float — squared distance to the
+    mean clears the division, per dim: (n·m_d − s_d)² summed over
+    dims, on decimal(38,0). Ranking happens on that exact integer;
+    the reported mean-squared deviation divides once (DIV n²).
+
+    Scale shape: per-label dim sums are one posexplode + hash agg
+    collapsed to |labels| rows (s array rebuilt in dim order), then
+    broadcast back onto ONE corpus scan — the distance is a 64-term
+    unrolled expression, no per-dim shuffle, no self-join. Top-5 per
+    label via WindowGroupLimit.
+    """
+    from youtube_etl_automated_pipeline_spark.ext.similarity import (
+        embedding_dim,
+    )
+
+    emb = load_wide(spark, sf_dir, "embeddings").filter(
+        F.col("label").isNotNull()
+    )
+    dim = embedding_dim(emb)
+    micro = emb.select(
+        "vec_id",
+        "label",
+        F.transform(
+            "embedding",
+            lambda x: F.floor(x.cast("double") * 1e6 + F.lit(0.5)).cast(
+                "long"
+            ),
+        ).alias("m"),
+    )
+    sums = (
+        micro.select(
+            "label", F.posexplode("m").alias("d", "md")
+        )
+        .groupBy("label", "d")
+        .agg(F.sum(F.col("md").cast("decimal(38,0)")).alias("sd"))
+        .groupBy("label")
+        .agg(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(F.struct(F.col("d"), F.col("sd")))
+                ),
+                lambda st: st.getField("sd"),
+            ).alias("s"),
+        )
+    )
+    counts = micro.groupBy("label").agg(F.count(F.lit(1)).alias("n"))
+    term = " + ".join(
+        f"(CAST(n AS DECIMAL(38,0)) * element_at(m, {i}) -"
+        f" element_at(s, {i})) * (CAST(n AS DECIMAL(38,0)) *"
+        f" element_at(m, {i}) - element_at(s, {i}))"
+        for i in range(1, dim + 1)
+    )
+    scored = (
+        micro.join(F.broadcast(sums), "label")
+        .join(F.broadcast(counts), "label")
+        .select(
+            "label",
+            "vec_id",
+            "n",
+            F.expr(f"CAST(({term}) AS DECIMAL(38,0))").alias("dist2"),
+        )
+    )
+    wr = Window.partitionBy("label").orderBy(
+        F.desc("dist2"), F.col("vec_id")
+    )
+    return (
+        scored.withColumn("rnk", F.row_number().over(wr))
+        .filter(F.col("rnk") <= OUTLIER_TOP)
+        .select(
+            "label",
+            F.col("rnk").cast("long").alias("rnk"),
+            "vec_id",
+            "n",
+            F.expr("CAST(dist2 DIV (CAST(n AS DECIMAL(38,0)) * n)"
+                   " AS BIGINT)").alias("msd_micro2"),
+        )
+        .orderBy("label", "rnk")
+    )
+
+
+# --------------------------------------------------------------- JL
+RP_D_IN = 64
+RP_D_OUT = 8
+
+# Deterministic ±1 sign matrix: bit 0 of md5("rp|i|j"). Computed once
+# here and INLINED into both plans — Catalyst constant-folds the
+# literal arrays, DuckDB sees the same integers spelled out. No
+# runtime hashing, no materialized matrix.
+RP_SIGNS = [
+    [
+        1
+        if int(hashlib.md5(f"rp|{i}|{j}".encode()).hexdigest(), 16) & 1
+        else -1
+        for j in range(RP_D_OUT)
+    ]
+    for i in range(RP_D_IN)
+]
+
+
+def _rp_oracle() -> str:
+    comps = []
+    for j in range(RP_D_OUT):
+        terms = " ".join(
+            ("+ " if RP_SIGNS[i][j] > 0 else "- ") + f"xi[{i + 1}]"
+            for i in range(RP_D_IN)
+        )
+        comps.append(f"CAST(0 {terms} AS BIGINT) AS y_{j}")
+    return f"""
+WITH q AS (
+  SELECT vec_id,
+    list_transform(embedding,
+      v -> CAST(floor(CAST(v AS DOUBLE) * 1e6 + 0.5) AS BIGINT)) AS xi
+  FROM embeddings
+)
+SELECT vec_id, {", ".join(comps)}
+FROM q
+ORDER BY vec_id
+"""
+
+
+@query(oracle=_rp_oracle())
+def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """vec_id + the RP_D_OUT exact-integer projected components.
+
+    Plan: ONE map stage, zero shuffle, zero joins — each component is
+    a fold over zip_with(quantized vector, inlined sign literals).
+    At 100 TB this fuses into the reading scan; the projected table is
+    dim/8 the size and feeds LSH/clustering downstream."""
+    emb = load_wide(spark, sf_dir, "embeddings")
+    # float32 -> double is exact; micro-unit quantization makes every
+    # downstream op integer (bit-identical in both engines)
+    xi = F.transform(
+        F.col("embedding"),
+        lambda v: F.floor(v.cast("double") * 1e6 + F.lit(0.5)).cast("bigint"),
+    )
+    out = emb.select("vec_id", xi.alias("xi"))
+    for j in range(RP_D_OUT):
+        signs = F.array(
+            *[F.lit(RP_SIGNS[i][j]).cast("bigint") for i in range(RP_D_IN)]
+        )
+        out = out.withColumn(
+            f"y_{j}",
+            F.aggregate(
+                F.zip_with(F.col("xi"), signs, lambda a, b: a * b),
+                F.lit(0).cast("bigint"),
+                lambda acc, v: acc + v,
+            ),
+        )
+    # no trailing orderBy (r08): range-sampling re-executed the
+    # projection map stage; driver compare is order-insensitive
+    return out.drop("xi")
+
+
+# ------------------------------------------------- power iteration
+POW_ITERS = 16  # flat synthetic spectrum (l2/l1 ~ 0.89) needs the extra rounds
+POW_MICRO = 1_000_000
+
+
+def _power_oracle() -> str:
+    iters = []
+    prev = "v0"
+    for t in range(1, POW_ITERS + 1):
+        iters.append(
+            f"""y{t} AS MATERIALIZED (
+  SELECT g.i, sum(CAST(g.g AS HUGEINT) * w.m) AS y
+  FROM gram g JOIN {prev} w ON w.i = g.j GROUP BY g.i
+),
+v{t} AS MATERIALIZED (
+  SELECT i, CAST(y // (SELECT greatest(max(abs(y)) // {POW_MICRO}, 1)
+                       FROM y{t}) AS BIGINT) AS m
+  FROM y{t}
+)"""
+        )
+        prev = f"v{t}"
+    return f"""
+WITH q AS (
+  SELECT vec_id,
+    list_transform(embedding,
+      v -> CAST(floor(CAST(v AS DOUBLE) * {POW_MICRO} + 0.5) AS BIGINT)) AS xi
+  FROM embeddings
+),
+flat AS MATERIALIZED (
+  SELECT vec_id, u.i - 1 AS i, q.xi[u.i] AS x
+  FROM q, unnest(generate_series(1, {RP_D_IN})) AS u(i)
+),
+means AS (
+  SELECT i, CAST(sum(x) // count(*) AS BIGINT) AS mu FROM flat GROUP BY i
+),
+cx AS MATERIALIZED (
+  SELECT f.vec_id, f.i, CAST(f.x - m.mu AS BIGINT) AS cx
+  FROM flat f JOIN means m USING (i)
+),
+gram AS MATERIALIZED (
+  SELECT a.i AS i, b.i AS j, CAST(sum(a.cx * b.cx) AS BIGINT) AS g
+  FROM cx a JOIN cx b USING (vec_id)
+  GROUP BY 1, 2
+),
+v0 AS (SELECT u.i - 1 AS i, CAST({POW_MICRO} AS HUGEINT) AS m
+       FROM unnest(generate_series(1, {RP_D_IN})) AS u(i)),
+{",".join(iters)}
+SELECT i AS dim_idx, CAST(m AS BIGINT) AS loading_micro
+FROM {prev} ORDER BY dim_idx
+"""
+
+
+@query(oracle=_power_oracle())
+def embedding_power_component(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dominant principal component of the embedding column — the
+    spectral step under PCA whitening / spectral dedup — via the
+    one-pass Gram decomposition: ONE distributed scan computes the
+    EXACT integer Gram matrix G = sum_vec cx cx^T (an Arrow-batched
+    numpy kernel emits per-partition partial Grams; a 4096-key agg
+    folds them), and the POW_ITERS power rounds y = G v then run on
+    the dim x dim matrix, which is driver-held — bounded by
+    DIMENSION^2, the same bounded-collect class as the k-means
+    centroid table, never by corpus size. At 100 TB this is the only
+    shape that works: the corpus is scanned ONCE no matter how many
+    rounds, and each round is 64x64 integer arithmetic.
+
+    Exactness: embeddings quantized to integer micro-units; per-dim
+    means use truncating division (deterministic centering); G is an
+    exact int64 sum (|cx| <= ~4e6 so G_ij <= ~1.6e13 * n — inside
+    int64 through sf10); the rounds run in arbitrary-precision Python
+    integers and the oracle replays them in DuckDB HUGEINT — y terms
+    reach ~1e24, exact in both. Each iterate renormalizes by max|y|
+    with TRUNCATING division (DuckDB // truncates toward zero;
+    matched explicitly — no sqrt anywhere).
+
+    Output: one row per dimension with the final integer loading —
+    64 rows, fully oracle-gated, sign fixed by the all-ones start."""
+    import pandas as pd
+
+    from youtube_etl_automated_pipeline_spark.operators.cache_registry import (
+        memo_persist,
+    )
+    from youtube_etl_automated_pipeline_spark.sources import table_fingerprint
+
+    def tdiv(a: int, b: int) -> int:
+        quo = abs(a) // b
+        return quo if a >= 0 else -quo
+
+    def build_gram() -> DataFrame:
+        import numpy as np
+
+        emb = load_wide(spark, sf_dir, "embeddings")
+        xi = F.transform(
+            F.col("embedding"),
+            lambda v: F.floor(v.cast("double") * POW_MICRO + F.lit(0.5)).cast(
+                "bigint"
+            ),
+        )
+        q = emb.select(xi.alias("xi"))
+        sums = q.agg(
+            F.count(F.lit(1)).alias("n"),
+            *[
+                F.sum(F.element_at("xi", i + 1)).alias(f"s_{i}")
+                for i in range(RP_D_IN)
+            ],
+        ).collect()[0]
+        n = int(sums["n"])
+        mu_py = [tdiv(int(sums[f"s_{i}"]), n) for i in range(RP_D_IN)]
+        mu = F.array(*[F.lit(m).cast("bigint") for m in mu_py])
+        cx = q.select(F.zip_with("xi", mu, lambda a, b: a - b).alias("cx"))
+
+        def gram_kernel(batches):
+            acc = np.zeros((RP_D_IN, RP_D_IN), dtype=np.int64)
+            for pdf in batches:
+                if not len(pdf):  # zero-row Arrow batch: nothing to stack
+                    continue
+                m = np.stack(pdf["cx"].to_numpy()).astype(np.int64)
+                acc += m.T @ m
+            idx = np.arange(RP_D_IN * RP_D_IN, dtype=np.int32)
+            yield pd.DataFrame({"idx": idx, "g": acc.reshape(-1)})
+
+        # per-partition partial Grams -> one 4096-key fold
+        return cx.mapInPandas(gram_kernel, "idx int, g long").groupBy(
+            "idx"
+        ).agg(F.sum("g").alias("g"))
+
+    gram_df = memo_persist(
+        spark,
+        ("power_gram", sf_dir),
+        build_gram,
+        fingerprint=table_fingerprint(sf_dir, "embeddings"),
+    )
+    G: dict[int, int] = {
+        int(r["idx"]): int(r["g"]) for r in gram_df.collect()
+    }  # dim^2 = 4096 entries — bounded by construction
+
+    v = [POW_MICRO] * RP_D_IN
+    for _ in range(POW_ITERS):
+        y = [
+            sum(G.get(i * RP_D_IN + j, 0) * v[j] for j in range(RP_D_IN))
+            for i in range(RP_D_IN)
+        ]
+        ymax = max(abs(t) for t in y) or 1
+        # renormalize back to ~micro scale via TRUNCATING division
+        # with a descaled (positive) denominator — DuckDB's // also
+        # truncates toward zero, so the paths stay bit-identical
+        denom = max(ymax // POW_MICRO, 1)
+        v = [tdiv(t, denom) for t in y]
+
+    rows = [(i, v[i]) for i in range(RP_D_IN)]
+    return spark.createDataFrame(
+        rows, "dim_idx INT, loading_micro BIGINT"
+    ).orderBy("dim_idx")
+
+
+# ------------------------------------------- k-center coreset pick
+_KC_ROUNDS = 8
+
+
+def _kcenter_oracle() -> str:
+    parts = [
+        """
+WITH q AS MATERIALIZED (
+  SELECT vec_id,
+         list_transform(embedding,
+           v -> CAST(floor(CAST(v AS DOUBLE) * 1e6 + 0.5) AS BIGINT)) AS xi
+  FROM embeddings
+),
+c1 AS MATERIALIZED (
+  SELECT vec_id, xi FROM q ORDER BY vec_id LIMIT 1
+),
+mind1 AS MATERIALIZED (
+  SELECT q.vec_id,
+         (SELECT SUM((q.xi[u.i] - c.xi[u.i]) * (q.xi[u.i] - c.xi[u.i]))
+          FROM unnest(generate_series(1, len(q.xi))) AS u(i)) AS d
+  FROM q, c1 c
+)"""
+    ]
+    for r in range(1, _KC_ROUNDS):
+        parts.append(
+            f""",
+c{r + 1} AS MATERIALIZED (
+  SELECT q.vec_id, q.xi
+  FROM q JOIN (SELECT vec_id FROM mind{r}
+               ORDER BY d DESC, vec_id ASC LIMIT 1) p
+    ON q.vec_id = p.vec_id
+),
+mind{r + 1} AS MATERIALIZED (
+  SELECT m.vec_id,
+         least(m.d,
+           (SELECT SUM((q.xi[u.i] - c.xi[u.i]) * (q.xi[u.i] - c.xi[u.i]))
+            FROM unnest(generate_series(1, len(q.xi))) AS u(i))) AS d
+  FROM mind{r} m JOIN q ON m.vec_id = q.vec_id, c{r + 1} c
+)"""
+        )
+    selects = []
+    for r in range(1, _KC_ROUNDS + 1):
+        selects.append(
+            f"SELECT {r} AS round, (SELECT vec_id FROM c{r}) AS"
+            f" center_vec_id, (SELECT MAX(d) FROM mind{r}) AS radius_q"
+        )
+    return "\n".join(parts) + "\n" + "\nUNION ALL\n".join(selects) + (
+        "\nORDER BY round"
+    )
+
+
+@query(oracle=_kcenter_oracle())
+def coreset_kcenter_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """K-center greedy coreset selection over the embedding corpus —
+    the classic data-pruning / active-learning picker: seed with the
+    min vec_id, then K-1 farthest-point rounds; each round's farthest
+    distance IS the coverage radius of the current center set, so the
+    output (round, center_vec_id, radius_q) doubles as the coverage
+    curve a curation pipeline reads to choose its budget.
+
+    Exactness: embeddings quantize to micro-units (the engine-wide
+    convention), distances are exact integer squared-L2 folds, and the
+    farthest pick breaks ties to the min vec_id — both engines walk
+    the identical argmax path. Oracle = K unrolled MATERIALIZED CTEs.
+
+    Scale: each round is ONE narrow Arrow map pass + TakeOrdered over
+    an INCREMENTAL min-distance relation — (vec_id, xi, d) persists
+    across rounds, each round folds least(d, dist-to-the-one-NEW
+    -center) (the oracle's mind{r} chain), so total distance work is
+    K passes of n x dim, not K^2/2. The squared-L2 fold runs as a
+    vectorized numpy kernel (the new center is a 64-long closure
+    constant — kilobytes shipped per round, the corpus is NEVER
+    shuffled); exact int64 arithmetic, no overflow (quantized
+    |coord| <= ~1e7 -> per-distance sum <= ~3e16 << 2^63). The
+    TakeOrdered(1) action that picks the next center evaluates every
+    partition, so it doubles as the materialization of that round's
+    persisted relation; the previous round's is unpersisted
+    immediately. The only collect is one (vec_id, xi, radius) row
+    per round. r08 optimization (guide sections 2.4, 4.1): was
+    all-centers nested array lambdas (CodegenFallback, interpreted
+    per element — an unrolled 64-term SQL expression was ALSO
+    measured interpreted at ~1.9 s/round, too many nodes for
+    codegen) recomputed from scratch per round — 8.5 -> 4.7 s at
+    sf0.1 (isolated min-of-3; the residual is K+1 sequential
+    job-latency floors, the price of exact greedy selection).
+    """
+    import numpy as np
+
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        F.transform(
+            "embedding",
+            lambda v: F.floor(v.cast("double") * 1e6 + F.lit(0.5)).cast(
+                "bigint"
+            ),
+        ).alias("xi"),
+    )
+
+    def fold_kernel(center_xi: list, first: bool):
+        """One pass of the incremental min-distance carry: compute
+        each row's exact int64 squared-L2 to the ONE new center and
+        fold it into the carried d with np.minimum (exact on int64 —
+        the oracle's least(m.d, dist) term by term). Round 1 has no
+        carry; every later round reads the previous round's persisted
+        d column."""
+
+        def kernel(
+            batches: Iterator[pd.DataFrame],
+        ) -> Iterator[pd.DataFrame]:
+            c = np.asarray(center_xi, dtype=np.int64)  # (dim,)
+            for pdf in batches:
+                if not len(pdf):
+                    continue
+                x = np.stack(
+                    [np.asarray(v, dtype=np.int64) for v in pdf["xi"]]
+                )
+                diff = x - c
+                dj = (diff * diff).sum(axis=1)
+                if not first:
+                    dj = np.minimum(dj, pdf["d"].to_numpy())
+                yield pd.DataFrame(
+                    {"vec_id": pdf["vec_id"], "xi": pdf["xi"], "d": dj}
+                )
+
+        return kernel
+
+    schema = "vec_id bigint, xi array<bigint>, d bigint"
+    emb = emb.persist()
+    cur = None
+    try:
+        seed = emb.orderBy("vec_id").limit(1).collect()[0]
+        centers = [(int(seed["vec_id"]), list(seed["xi"]))]
+        out_rows = []
+        for r in range(1, _KC_ROUNDS + 1):
+            src = emb if cur is None else cur
+            nxt = src.mapInPandas(
+                fold_kernel(centers[-1][1], first=cur is None), schema
+            ).persist()
+            # TakeOrdered(1) by (d DESC, vec_id ASC) — per-partition
+            # top-1 then a driver merge of partition winners — is the
+            # action that ALSO materializes this round's persisted
+            # relation; the previous round's carry is dropped
+            # immediately after.
+            far = (
+                nxt.orderBy(F.col("d").desc(), F.col("vec_id").asc())
+                .limit(1)
+                .collect()[0]
+            )
+            if cur is not None:
+                cur.unpersist()
+            cur = nxt
+            out_rows.append((r, centers[-1][0], int(far["d"])))
+            if r < _KC_ROUNDS:
+                centers.append((int(far["vec_id"]), list(far["xi"])))
+    finally:
+        emb.unpersist()
+        if cur is not None:
+            cur.unpersist()
+    return spark.createDataFrame(
+        out_rows, "round int, center_vec_id bigint, radius_q bigint"
+    ).orderBy("round")

@@ -23,59 +23,42 @@ from youtube_etl_automated_pipeline_spark.ext.textstats import (
     normalized_text,
     tokens,
 )
-from youtube_etl_automated_pipeline_spark.sources import load_table, load_wide, widen_scan
+from youtube_etl_automated_pipeline_spark.plans.registry import query
+from youtube_etl_automated_pipeline_spark.sources import load_table, load_wide
 
 CMS_DEPTH = 4
 CMS_WIDTH = 256
 HH_TOPK = 20
 TOP_TERMS = 3
 
-
-def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-Min-Sketch top-k heavy hitters over the event stream's
-    user ids: build a depth-4 x width-256 sketch, estimate each key as
-    the min over its 4 cells, report the top-20 keys by ESTIMATE
-    (ties broken by key — the classic CMS + heavy-hitter combination).
-
-    Scale shape: the raw stream is reduced per-key FIRST (map-side
-    combinable groupBy — the only pass over the 100 TB table), the
-    sketch is built from the per-key counts (4 rows per DISTINCT key,
-    not per event), and the final top-k is TakeOrderedAndProject over
-    the small estimate table. The true count rides along so the gate
-    also verifies the CMS guarantee est >= true (`overcount` is never
-    negative); at sf0.1 (1500 keys in 256 cells) the overcounts are
-    real, which is the point — width controls the error bound.
-    """
-    ev = load_wide(spark, sf_dir, "events")
-    per_key = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("cnt"))
-    rows = F.array(*[F.lit(r) for r in range(CMS_DEPTH)])
-    cells = per_key.select(
-        "user_id", "cnt", F.explode(rows).alias("r")
-    ).withColumn(
-        "cell",
-        md5_long(
-            F.concat_ws(":", F.col("r").cast("string"), F.col("user_id").cast("string"))
-        )
-        % CMS_WIDTH,
-    )
-    sketch = cells.groupBy("r", "cell").agg(F.sum("cnt").alias("cell_cnt"))
-    est = (
-        cells.join(sketch, ["r", "cell"])
-        .groupBy("user_id")
-        .agg(F.max("cnt").alias("true_cnt"), F.min("cell_cnt").alias("cms_est"))
-    )
-    return (
-        est.select(
-            "user_id",
-            "true_cnt",
-            "cms_est",
-            (F.col("cms_est") - F.col("true_cnt")).alias("overcount"),
-        )
-        .orderBy(F.desc("cms_est"), F.asc("user_id"))
-        .limit(HH_TOPK)
-    )
+_NORM = f"lower(regexp_replace(trim(text), '{WS_CLASS}+', ' ', 'g'))"
 
 
+@query(
+    oracle=f"""
+WITH terms AS (
+  SELECT doc_id, term FROM (
+    SELECT doc_id, unnest(string_split_regex({_NORM}, '{WS_CLASS}+')) AS term
+    FROM documents
+  ) WHERE term <> ''
+), tf AS (
+  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf FROM terms GROUP BY doc_id, term
+), dfreq AS (
+  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
+), scored AS (
+  SELECT doc_id, tf.term, tf, df,
+         CAST(floor(1000000 * tf / df) AS BIGINT) AS score_micro
+  FROM tf JOIN dfreq USING (term)
+), ranked AS (
+  SELECT *, CAST(row_number() OVER (
+    PARTITION BY doc_id ORDER BY score_micro DESC, term ASC) AS INTEGER) AS rank
+  FROM scored
+)
+SELECT doc_id, term, tf, df, score_micro, rank
+FROM ranked WHERE rank <= {TOP_TERMS}
+ORDER BY doc_id, rank
+"""
+)
 def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document top-3 distinctive terms, ranked by tf/df.
 
@@ -123,15 +106,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_SKETCH = {
-    "cms_heavy_hitters": cms_heavy_hitters,
-    "tfidf_top_terms": tfidf_top_terms,
-}
-
-_NORM = f"lower(regexp_replace(trim(text), '{WS_CLASS}+', ' ', 'g'))"
-
-ORACLES_SKETCH = {
-    "cms_heavy_hitters": f"""
+_CMS_SQL = f"""
 WITH per_key AS (
   SELECT user_id, count(*) AS cnt FROM events GROUP BY user_id
 ), cells AS (
@@ -154,36 +129,85 @@ SELECT user_id, true_cnt, cms_est,
 FROM est
 ORDER BY cms_est DESC, user_id ASC
 LIMIT {HH_TOPK}
-""",
-    "tfidf_top_terms": f"""
-WITH terms AS (
-  SELECT doc_id, term FROM (
-    SELECT doc_id, unnest(string_split_regex({_NORM}, '{WS_CLASS}+')) AS term
-    FROM documents
-  ) WHERE term <> ''
-), tf AS (
-  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf FROM terms GROUP BY doc_id, term
-), dfreq AS (
-  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-), scored AS (
-  SELECT doc_id, tf.term, tf, df,
-         CAST(floor(1000000 * tf / df) AS BIGINT) AS score_micro
-  FROM tf JOIN dfreq USING (term)
-), ranked AS (
-  SELECT *, CAST(row_number() OVER (
-    PARTITION BY doc_id ORDER BY score_micro DESC, term ASC) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT doc_id, term, tf, df, score_micro, rank
-FROM ranked WHERE rank <= {TOP_TERMS}
-ORDER BY doc_id, rank
-""",
-}
+"""
+
+
+@query(oracle=_CMS_SQL)
+def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Count-Min-Sketch top-k heavy hitters over the event stream's
+    user ids: build a depth-4 x width-256 sketch, estimate each key as
+    the min over its 4 cells, report the top-20 keys by ESTIMATE
+    (ties broken by key — the classic CMS + heavy-hitter combination).
+
+    Scale shape: the raw stream is reduced per-key FIRST (map-side
+    combinable groupBy — the only pass over the 100 TB table), the
+    sketch is built from the per-key counts (4 rows per DISTINCT key,
+    not per event), and the final top-k is TakeOrderedAndProject over
+    the small estimate table. The true count rides along so the gate
+    also verifies the CMS guarantee est >= true (`overcount` is never
+    negative); at sf0.1 (1500 keys in 256 cells) the overcounts are
+    real, which is the point — width controls the error bound.
+    """
+    ev = load_wide(spark, sf_dir, "events")
+    per_key = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("cnt"))
+    rows = F.array(*[F.lit(r) for r in range(CMS_DEPTH)])
+    cells = per_key.select(
+        "user_id", "cnt", F.explode(rows).alias("r")
+    ).withColumn(
+        "cell",
+        md5_long(
+            F.concat_ws(":", F.col("r").cast("string"), F.col("user_id").cast("string"))
+        )
+        % CMS_WIDTH,
+    )
+    sketch = cells.groupBy("r", "cell").agg(F.sum("cnt").alias("cell_cnt"))
+    est = (
+        cells.join(sketch, ["r", "cell"])
+        .groupBy("user_id")
+        .agg(F.max("cnt").alias("true_cnt"), F.min("cell_cnt").alias("cms_est"))
+    )
+    return (
+        est.select(
+            "user_id",
+            "true_cnt",
+            "cms_est",
+            (F.col("cms_est") - F.col("true_cnt")).alias("overcount"),
+        )
+        .orderBy(F.desc("cms_est"), F.asc("user_id"))
+        .limit(HH_TOPK)
+    )
 
 
 VOCAB_MIN_COUNT = 5
 
 
+@query(
+    oracle=f"""
+WITH terms AS (
+  SELECT doc_id, term FROM (
+    SELECT doc_id, unnest(string_split_regex({_NORM}, '{WS_CLASS}+')) AS term
+    FROM documents
+  ) WHERE term <> ''
+), counts AS (
+  SELECT term, CAST(count(*) AS BIGINT) AS c_t FROM terms GROUP BY term
+), vocab AS (
+  SELECT * FROM counts WHERE c_t >= {VOCAB_MIN_COUNT}
+), tot AS (
+  SELECT CAST(sum(c_t) AS BIGINT) AS t_total FROM counts
+), per_doc AS (
+  SELECT doc_id,
+         CAST(count(*) AS BIGINT) AS n_tokens,
+         CAST(sum(CASE WHEN v.c_t IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
+         CAST(sum(coalesce(v.c_t, 0)) AS BIGINT) AS sum_c
+  FROM terms LEFT JOIN vocab v USING (term)
+  GROUP BY doc_id
+)
+SELECT doc_id, n_tokens, n_oov,
+       CAST(floor(1000000 * sum_c / (n_tokens * t_total)) AS BIGINT) AS score_ppm
+FROM per_doc, tot
+ORDER BY doc_id
+"""
+)
 def quality_corpus_familiarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-statistics quality filter: score each document by how
     "familiar" its tokens are under the corpus's own unigram counts —
@@ -237,35 +261,17 @@ def quality_corpus_familiarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_SKETCH["quality_corpus_familiarity"] = quality_corpus_familiarity
-
-ORACLES_SKETCH["quality_corpus_familiarity"] = f"""
-WITH terms AS (
-  SELECT doc_id, term FROM (
-    SELECT doc_id, unnest(string_split_regex({_NORM}, '{WS_CLASS}+')) AS term
-    FROM documents
-  ) WHERE term <> ''
-), counts AS (
-  SELECT term, CAST(count(*) AS BIGINT) AS c_t FROM terms GROUP BY term
-), vocab AS (
-  SELECT * FROM counts WHERE c_t >= {VOCAB_MIN_COUNT}
-), tot AS (
-  SELECT CAST(sum(c_t) AS BIGINT) AS t_total FROM counts
-), per_doc AS (
-  SELECT doc_id,
-         CAST(count(*) AS BIGINT) AS n_tokens,
-         CAST(sum(CASE WHEN v.c_t IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
-         CAST(sum(coalesce(v.c_t, 0)) AS BIGINT) AS sum_c
-  FROM terms LEFT JOIN vocab v USING (term)
-  GROUP BY doc_id
-)
-SELECT doc_id, n_tokens, n_oov,
-       CAST(floor(1000000 * sum_c / (n_tokens * t_total)) AS BIGINT) AS score_ppm
-FROM per_doc, tot
-ORDER BY doc_id
+@query(
+    oracle="""
+SELECT event_type,
+       count(*) AS n_rows,
+       CAST(sum(CAST(floor(value * 100.0 + 0.5) AS BIGINT)) AS BIGINT) / 100.0
+         AS sum_value
+FROM events
+GROUP BY event_type
+ORDER BY event_type
 """
-
-
+)
 def skew_salted_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The skew-mitigation aggregation (operators/skew.py) as an
     oracle-visible gate: events rolled up by the LOW-CARDINALITY
@@ -295,19 +301,39 @@ def skew_salted_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-QUERIES_SKETCH["skew_salted_rollup"] = skew_salted_rollup
-
-ORACLES_SKETCH["skew_salted_rollup"] = """
-SELECT event_type,
+@query(
+    oracle="""
+WITH old AS (
+  SELECT o_orderkey AS k,
+         CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS old_cents
+  FROM orders
+), new AS (
+  SELECT k,
+         CAST(CASE WHEN k % 5 = 0 THEN floor(old_cents * 110 / 100.0)
+              ELSE old_cents END AS BIGINT) AS new_cents
+  FROM old WHERE k % 7 <> 0
+  UNION ALL
+  SELECT k + 10000000 AS k, old_cents AS new_cents
+  FROM old WHERE k % 11 = 0
+), diff AS (
+  SELECT coalesce(o.k, n.k) AS k,
+         CASE WHEN o.k IS NULL THEN 'added'
+              WHEN n.k IS NULL THEN 'removed'
+              WHEN o.old_cents <> n.new_cents THEN 'changed'
+              ELSE 'unchanged' END AS status,
+         coalesce(n.new_cents, 0) AS new_cents,
+         coalesce(o.old_cents, 0) AS old_cents
+  FROM old o FULL OUTER JOIN new n ON o.k = n.k
+)
+SELECT status,
        count(*) AS n_rows,
-       CAST(sum(CAST(floor(value * 100.0 + 0.5) AS BIGINT)) AS BIGINT) / 100.0
-         AS sum_value
-FROM events
-GROUP BY event_type
-ORDER BY event_type
+       CAST(sum(k) AS BIGINT) AS key_sum,
+       CAST(sum(new_cents - old_cents) AS BIGINT) AS delta_cents
+FROM diff
+GROUP BY status
+ORDER BY status
 """
-
-
+)
 def snapshot_diff_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot reconciliation via FULL OUTER join — the ETL diff
     operator (what changed between yesterday's and today's load?).
@@ -380,45 +406,42 @@ def snapshot_diff_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_SKETCH["snapshot_diff_reconcile"] = snapshot_diff_reconcile
-
-ORACLES_SKETCH["snapshot_diff_reconcile"] = """
-WITH old AS (
-  SELECT o_orderkey AS k,
-         CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS old_cents
-  FROM orders
-), new AS (
-  SELECT k,
-         CAST(CASE WHEN k % 5 = 0 THEN floor(old_cents * 110 / 100.0)
-              ELSE old_cents END AS BIGINT) AS new_cents
-  FROM old WHERE k % 7 <> 0
-  UNION ALL
-  SELECT k + 10000000 AS k, old_cents AS new_cents
-  FROM old WHERE k % 11 = 0
-), diff AS (
-  SELECT coalesce(o.k, n.k) AS k,
-         CASE WHEN o.k IS NULL THEN 'added'
-              WHEN n.k IS NULL THEN 'removed'
-              WHEN o.old_cents <> n.new_cents THEN 'changed'
-              ELSE 'unchanged' END AS status,
-         coalesce(n.new_cents, 0) AS new_cents,
-         coalesce(o.old_cents, 0) AS old_cents
-  FROM old o FULL OUTER JOIN new n ON o.k = n.k
-)
-SELECT status,
-       count(*) AS n_rows,
-       CAST(sum(k) AS BIGINT) AS key_sum,
-       CAST(sum(new_cents - old_cents) AS BIGINT) AS delta_cents
-FROM diff
-GROUP BY status
-ORDER BY status
-"""
-
-
 KMV_K = 64
 KMV_DOMAIN = float(1 << 60)  # md5_long(_, 15) range: [0, 2^60)
 
 
+@query(
+    oracle=f"""
+WITH h AS (
+  SELECT DISTINCT o_orderpriority AS priority,
+    CAST('0x' || substr(md5(CAST(o_custkey AS VARCHAR)), 1, 15) AS BIGINT) AS hv
+  FROM orders
+),
+ranked AS (
+  SELECT priority, hv,
+         row_number() OVER (PARTITION BY priority ORDER BY hv) AS rn
+  FROM h
+),
+kept AS (
+  SELECT priority, CAST(count(*) AS BIGINT) AS n_kept,
+         CAST(max(hv) AS BIGINT) AS kth_hash
+  FROM ranked WHERE rn <= {KMV_K} GROUP BY priority
+),
+ex AS (
+  SELECT o_orderpriority AS priority,
+         CAST(count(DISTINCT o_custkey) AS BIGINT) AS exact_distinct
+  FROM orders GROUP BY 1
+)
+SELECT k.priority, n_kept, kth_hash,
+  CASE WHEN n_kept < {KMV_K} THEN n_kept
+       ELSE CAST(floor({float(KMV_K - 1)!r} *
+                       ({KMV_DOMAIN!r} / CAST(kth_hash AS DOUBLE)) + 0.5)
+                 AS BIGINT) END AS est_distinct,
+  exact_distinct
+FROM kept k JOIN ex USING (priority)
+ORDER BY priority
+"""
+)
 def kmv_distinct_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-Minimum-Values distinct-count sketch per order priority — the
     DETERMINISTIC mergeable sketch alternative to HLL
@@ -481,11 +504,49 @@ def kmv_distinct_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_SKETCH["kmv_distinct_customers"] = kmv_distinct_customers
-
 KMV_Q_K = 256  # quantile-sketch sample size per group
 
 
+@query(
+    oracle=f"""
+WITH s AS (
+  SELECT event_type, event_id,
+         CAST('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 15) AS BIGINT) AS hv,
+         CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS cents
+  FROM events
+  WHERE value IS NOT NULL
+),
+keepr AS (
+  SELECT event_type, event_id, hv, cents,
+         row_number() OVER (PARTITION BY event_type ORDER BY hv, event_id) AS rn
+  FROM s
+),
+kept AS (
+  SELECT event_type, event_id, hv, cents FROM keepr WHERE rn <= {KMV_Q_K}
+),
+ranked AS (
+  SELECT event_type, cents,
+         row_number() OVER (
+           PARTITION BY event_type ORDER BY cents, hv, event_id) AS vr,
+         count(*) OVER (PARTITION BY event_type) AS n_kept
+  FROM kept
+),
+stats AS (
+  SELECT event_type,
+         CAST(max(n_kept) AS BIGINT) AS n_kept,
+         max(CASE WHEN vr = (50 * n_kept + 99) // 100 THEN cents END) AS p50_cents,
+         max(CASE WHEN vr = (95 * n_kept + 99) // 100 THEN cents END) AS p95_cents,
+         max(CASE WHEN vr = (99 * n_kept + 99) // 100 THEN cents END) AS p99_cents
+  FROM ranked GROUP BY event_type
+),
+totals AS (
+  SELECT event_type, count(*) AS n_events FROM events GROUP BY event_type
+)
+SELECT s.event_type, n_events, n_kept, p50_cents, p95_cents, p99_cents
+FROM stats s JOIN totals USING (event_type)
+ORDER BY s.event_type
+"""
+)
 def kmv_percentile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Percentiles per event_type from a DETERMINISTIC bottom-K
     priority sample — the oracle-gated twin of
@@ -566,75 +627,93 @@ def kmv_percentile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_SKETCH["kmv_percentile_stats"] = kmv_percentile_stats
+# -------------------------------------------- exact heavy hitters
+MG_CAPACITY = 2000  # Misra-Gries counters per partition (bounded memory)
+HH_FACTOR = 1000  # heavy = count * HH_FACTOR > corpus total
 
-ORACLES_SKETCH["kmv_percentile_stats"] = f"""
-WITH s AS (
-  SELECT event_type, event_id,
-         CAST('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 15) AS BIGINT) AS hv,
-         CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS cents
-  FROM events
-  WHERE value IS NOT NULL
-),
-keepr AS (
-  SELECT event_type, event_id, hv, cents,
-         row_number() OVER (PARTITION BY event_type ORDER BY hv, event_id) AS rn
-  FROM s
-),
-kept AS (
-  SELECT event_type, event_id, hv, cents FROM keepr WHERE rn <= {KMV_Q_K}
-),
-ranked AS (
-  SELECT event_type, cents,
-         row_number() OVER (
-           PARTITION BY event_type ORDER BY cents, hv, event_id) AS vr,
-         count(*) OVER (PARTITION BY event_type) AS n_kept
-  FROM kept
-),
-stats AS (
-  SELECT event_type,
-         CAST(max(n_kept) AS BIGINT) AS n_kept,
-         max(CASE WHEN vr = (50 * n_kept + 99) // 100 THEN cents END) AS p50_cents,
-         max(CASE WHEN vr = (95 * n_kept + 99) // 100 THEN cents END) AS p95_cents,
-         max(CASE WHEN vr = (99 * n_kept + 99) // 100 THEN cents END) AS p99_cents
-  FROM ranked GROUP BY event_type
-),
-totals AS (
-  SELECT event_type, count(*) AS n_events FROM events GROUP BY event_type
-)
-SELECT s.event_type, n_events, n_kept, p50_cents, p95_cents, p99_cents
-FROM stats s JOIN totals USING (event_type)
-ORDER BY s.event_type
+
+@query(
+    oracle=f"""
+WITH t AS (SELECT count(*) AS n FROM lineitem WHERE l_suppkey IS NOT NULL)
+SELECT l_suppkey,
+  CAST(count(*) AS BIGINT) AS n_rows,
+  CAST(count(*) * 1000000 // (SELECT n FROM t) AS BIGINT) AS share_ppm
+FROM lineitem
+WHERE l_suppkey IS NOT NULL
+GROUP BY l_suppkey
+HAVING count(*) * {HH_FACTOR} > (SELECT n FROM t)
+ORDER BY n_rows DESC, l_suppkey
 """
-
-
-ORACLES_SKETCH["kmv_distinct_customers"] = f"""
-WITH h AS (
-  SELECT DISTINCT o_orderpriority AS priority,
-    CAST('0x' || substr(md5(CAST(o_custkey AS VARCHAR)), 1, 15) AS BIGINT) AS hv
-  FROM orders
-),
-ranked AS (
-  SELECT priority, hv,
-         row_number() OVER (PARTITION BY priority ORDER BY hv) AS rn
-  FROM h
-),
-kept AS (
-  SELECT priority, CAST(count(*) AS BIGINT) AS n_kept,
-         CAST(max(hv) AS BIGINT) AS kth_hash
-  FROM ranked WHERE rn <= {KMV_K} GROUP BY priority
-),
-ex AS (
-  SELECT o_orderpriority AS priority,
-         CAST(count(DISTINCT o_custkey) AS BIGINT) AS exact_distinct
-  FROM orders GROUP BY 1
 )
-SELECT k.priority, n_kept, kth_hash,
-  CASE WHEN n_kept < {KMV_K} THEN n_kept
-       ELSE CAST(floor({float(KMV_K - 1)!r} *
-                       ({KMV_DOMAIN!r} / CAST(kth_hash AS DOUBLE)) + 0.5)
-                 AS BIGINT) END AS est_distinct,
-  exact_distinct
-FROM kept k JOIN ex USING (priority)
-ORDER BY priority
-"""
+def heavy_hitters_exact_twopass(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXACT heavy suppliers of the lineitem fact (count * 1000 >
+    total rows) via the Misra-Gries two-pass.
+
+    Pass 1 (bounded memory, no shuffle): each partition folds its rows
+    through an MG summary of MG_CAPACITY counters — a batch merge adds
+    the batch's counts then subtracts the (capacity+1)-th largest
+    count from everything and drops non-positives (the mergeable-
+    summaries formulation), so per-partition error < n_p/(capacity+1)
+    and the UNION of partition summaries provably retains every key
+    with global count > n/(capacity+1). With the threshold at
+    n/HH_FACTOR and capacity = 2*HH_FACTOR, no true heavy hitter can
+    be pruned (n/1000 > n/2001) — pinned by a planted-skew test with
+    25x more distinct keys than counters.
+
+    Pass 2: exact counts for CANDIDATE keys only (left-semi join), the
+    1-row corpus total broadcast (bounded BNL, allowlisted), threshold
+    filter. At 100 TB the wide aggregation never runs over the full
+    key space — only over (partitions x capacity) candidates — and
+    pass 1 is a pure map pass. The deterministic exact counterpart of
+    cms_heavy_hitters (sketch) / streaming_cms_heavy_hitters (state).
+
+    NULL keys are dropped explicitly in BOTH engines (a null is not a
+    key; the semi-join would drop it silently on one side otherwise).
+
+    Output: l_suppkey, n_rows, share_ppm."""
+    import pandas as pd
+
+    from youtube_etl_automated_pipeline_spark.sources import widen_scan
+
+    li = widen_scan(
+        load_table(spark, sf_dir, "lineitem").filter(
+            F.col("l_suppkey").isNotNull()
+        )
+    ).select("l_suppkey")
+    cap = MG_CAPACITY
+
+    def mg_kernel(batches):
+        counters: dict[int, int] = {}
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            for k, c in pdf["l_suppkey"].value_counts().items():
+                counters[int(k)] = counters.get(int(k), 0) + int(c)
+            if len(counters) > cap:
+                # batched MG decrement: subtract the (cap+1)-th largest
+                # count, keep strictly-positive survivors (<= cap keys)
+                cut = sorted(counters.values(), reverse=True)[cap]
+                counters = {
+                    k: v - cut for k, v in counters.items() if v > cut
+                }
+        yield pd.DataFrame({"l_suppkey": sorted(counters)})
+
+    cand = li.mapInPandas(mg_kernel, "l_suppkey bigint").distinct()
+    total = li.agg(F.count(F.lit(1)).alias("n_total"))
+    exact = (
+        li.join(cand, "l_suppkey", "left_semi")
+        .groupBy("l_suppkey")
+        .agg(F.count(F.lit(1)).alias("n_rows"))
+    )
+    return (
+        exact.crossJoin(F.broadcast(total))
+        .filter(F.col("n_rows") * HH_FACTOR > F.col("n_total"))
+        .select(
+            "l_suppkey",
+            F.col("n_rows").cast("bigint").alias("n_rows"),
+            F.expr("CAST(n_rows * 1000000 DIV n_total AS BIGINT)").alias(
+                "share_ppm"
+            ),
+        )
+        .orderBy(F.desc("n_rows"), "l_suppkey")
+    )

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from youtube_etl_automated_pipeline_spark.plans.registry import query
 from youtube_etl_automated_pipeline_spark.sources import (
     materialize_format,
     read_jsonl,
@@ -54,21 +55,6 @@ def _doc_rollup(docs: DataFrame) -> DataFrame:
     )
 
 
-def jsonl_documents_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = materialize_format(spark, sf_dir, "documents", "jsonl")
-    return _doc_rollup(read_jsonl(spark, path, DOCUMENTS_SCHEMA))
-
-
-def orc_documents_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = materialize_format(spark, sf_dir, "documents", "orc")
-    return _doc_rollup(read_orc(spark, path))
-
-
-QUERIES_SOURCES = {
-    "jsonl_documents_rollup": jsonl_documents_rollup,
-    "orc_documents_rollup": orc_documents_rollup,
-}
-
 _ROLLUP_SQL = """
 SELECT lang, source,
        count(*) AS n_docs,
@@ -81,12 +67,31 @@ GROUP BY lang, source
 ORDER BY lang, source
 """
 
-ORACLES_SOURCES = {
-    "jsonl_documents_rollup": _ROLLUP_SQL,
-    "orc_documents_rollup": _ROLLUP_SQL,
-}
+
+@query(oracle=_ROLLUP_SQL)
+def jsonl_documents_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    path = materialize_format(spark, sf_dir, "documents", "jsonl")
+    return _doc_rollup(read_jsonl(spark, path, DOCUMENTS_SCHEMA))
 
 
+@query(oracle=_ROLLUP_SQL)
+def orc_documents_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    path = materialize_format(spark, sf_dir, "documents", "orc")
+    return _doc_rollup(read_orc(spark, path))
+
+
+@query(
+    oracle="""
+SELECT CAST(ts AS DATE) AS event_date, event_type,
+       count(*) AS n_events,
+       CAST(sum(CAST(floor(value * 100.0 + 0.5) AS BIGINT)) AS BIGINT) / 100.0
+         AS sum_value
+FROM events
+WHERE CAST(ts AS DATE) BETWEEN DATE '2024-01-10' AND DATE '2024-01-12'
+GROUP BY 1, 2
+ORDER BY event_date, event_type
+"""
+)
 def partitioned_events_pruned_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date-range rollup over the DATE-PARTITIONED events layout: the
     filter on the partition column becomes directory pruning (the scan
@@ -113,20 +118,26 @@ def partitioned_events_pruned_rollup(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-QUERIES_SOURCES["partitioned_events_pruned_rollup"] = partitioned_events_pruned_rollup
-
-ORACLES_SOURCES["partitioned_events_pruned_rollup"] = """
-SELECT CAST(ts AS DATE) AS event_date, event_type,
-       count(*) AS n_events,
-       CAST(sum(CAST(floor(value * 100.0 + 0.5) AS BIGINT)) AS BIGINT) / 100.0
-         AS sum_value
-FROM events
-WHERE CAST(ts AS DATE) BETWEEN DATE '2024-01-10' AND DATE '2024-01-12'
-GROUP BY 1, 2
-ORDER BY event_date, event_type
+@query(
+    oracle="""
+WITH items AS (
+  SELECT CAST(floor(i / 500) AS INT) AS page,
+         i AS item_id,
+         printf('VID%09d', (i * 2654435761) % 100000007) AS video_code,
+         ((i * 7919) % 1000) / 10.0 AS score
+  FROM generate_series(0, 9999) t(i)
+)
+SELECT page,
+       count(*) AS n_items,
+       CAST(sum(item_id) AS BIGINT) AS sum_id,
+       min(video_code) AS min_code,
+       max(video_code) AS max_code,
+       CAST(sum(CAST(floor(score * 10.0 + 0.5) AS BIGINT)) AS BIGINT) / 10.0 AS sum_score
+FROM items
+GROUP BY page
+ORDER BY page
 """
-
-
+)
 def api_source_page_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate for the custom paginated-API connector (Python Data Source
     API, `sources/paged_api.py`): 20 pages x 500 items — the
@@ -165,28 +176,20 @@ def api_source_page_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_SOURCES["api_source_page_rollup"] = api_source_page_rollup
-
-ORACLES_SOURCES["api_source_page_rollup"] = """
-WITH items AS (
-  SELECT CAST(floor(i / 500) AS INT) AS page,
-         i AS item_id,
-         printf('VID%09d', (i * 2654435761) % 100000007) AS video_code,
-         ((i * 7919) % 1000) / 10.0 AS score
-  FROM generate_series(0, 9999) t(i)
-)
-SELECT page,
-       count(*) AS n_items,
-       CAST(sum(item_id) AS BIGINT) AS sum_id,
-       min(video_code) AS min_code,
-       max(video_code) AS max_code,
-       CAST(sum(CAST(floor(score * 10.0 + 0.5) AS BIGINT)) AS BIGINT) / 10.0 AS sum_score
-FROM items
-GROUP BY page
-ORDER BY page
+@query(
+    oracle="""
+SELECT o_orderpriority,
+       count(*) AS n_orders,
+       CAST(sum(o_custkey) AS BIGINT) AS custkey_sum,
+       CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) / 100.0
+         AS sum_total
+FROM orders
+WHERE o_custkey BETWEEN 100 AND 400
+  AND o_orderdate BETWEEN DATE '1996-01-01' AND DATE '1997-12-31'
+GROUP BY o_orderpriority
+ORDER BY o_orderpriority
 """
-
-
+)
 def zordered_orders_pruned_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-dimensional predicate over the Z-ORDERED orders layout
     (operators/layout.py): a custkey range AND a date range — the
@@ -219,22 +222,20 @@ def zordered_orders_pruned_rollup(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-QUERIES_SOURCES["zordered_orders_pruned_rollup"] = zordered_orders_pruned_rollup
-
-ORACLES_SOURCES["zordered_orders_pruned_rollup"] = """
-SELECT o_orderpriority,
-       count(*) AS n_orders,
-       CAST(sum(o_custkey) AS BIGINT) AS custkey_sum,
-       CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) / 100.0
-         AS sum_total
-FROM orders
-WHERE o_custkey BETWEEN 100 AND 400
-  AND o_orderdate BETWEEN DATE '1996-01-01' AND DATE '1997-12-31'
-GROUP BY o_orderpriority
-ORDER BY o_orderpriority
+@query(
+    oracle="""
+WITH tagged AS (
+  SELECT 'parquet' AS fmt, lang, n_chars FROM documents
+  UNION ALL SELECT 'jsonl' AS fmt, lang, n_chars FROM documents
+  UNION ALL SELECT 'orc' AS fmt, lang, n_chars FROM documents
+)
+SELECT fmt, lang, count(*) AS n_docs,
+       CAST(sum(n_chars) AS BIGINT) AS sum_chars
+FROM tagged
+GROUP BY fmt, lang
+ORDER BY fmt, lang
 """
-
-
+)
 def federated_format_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-format federation: ONE query unions the same logical
     table from parquet, JSONL, and ORC (each tagged with its format)
@@ -265,70 +266,22 @@ def federated_format_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_SOURCES["federated_format_union"] = federated_format_union
-
-ORACLES_SOURCES["federated_format_union"] = """
-WITH tagged AS (
-  SELECT 'parquet' AS fmt, lang, n_chars FROM documents
-  UNION ALL SELECT 'jsonl' AS fmt, lang, n_chars FROM documents
-  UNION ALL SELECT 'orc' AS fmt, lang, n_chars FROM documents
-)
-SELECT fmt, lang, count(*) AS n_docs,
-       CAST(sum(n_chars) AS BIGINT) AS sum_chars
-FROM tagged
-GROUP BY fmt, lang
-ORDER BY fmt, lang
+@query(
+    oracle="""
+SELECT doc_id % 4 AS doc_bucket,
+       count(*) AS n_files,
+       CAST(sum(strlen(coalesce(text, ''))) AS BIGINT) AS sum_bytes,
+       CAST(sum(CAST('0x' || substr(md5(coalesce(text, '')), 1, 8) AS BIGINT))
+            AS BIGINT) AS sum_hash
+FROM documents
+-- binaryFile SKIPS zero-byte files (no splittable content), so docs
+-- whose payload is empty (null/'' text) never appear in the scan —
+-- the oracle mirrors that source behavior explicitly
+WHERE doc_id < 40 AND strlen(coalesce(text, '')) > 0
+GROUP BY doc_bucket
+ORDER BY doc_bucket
 """
-
-
-def streaming_api_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The paginated-API connector consumed as a STREAM: the Python
-    Data Source's streamReader exposes the page cursor as the
-    checkpointable offset, one InputPartition per page inside each
-    micro-batch (restart = resume from committed page, exactly the
-    reference's persisted pageToken). availableNow drains the finite
-    simulated feed; the rollup equals the batch connector's, which
-    the arithmetic oracle reproduces."""
-    from youtube_etl_automated_pipeline_spark.functions.compat import units
-    from youtube_etl_automated_pipeline_spark.sources.paged_api import register
-    from youtube_etl_automated_pipeline_spark.streaming.incremental import (
-        run_stream_to_memory,
-    )
-
-    register(spark)
-    src = (
-        spark.readStream.format("paged_api_sim")
-        .option("pages", 20)
-        .option("page_size", 500)
-        .load()
-    )
-    rollup = src.groupBy("page").agg(
-        F.count(F.lit(1)).alias("n_items"),
-        F.sum("item_id").alias("sum_id"),
-        (F.sum(units(F.col("score"), 1)) / 1e1).alias("sum_score"),
-    )
-    return run_stream_to_memory(rollup, "api_stream_rollup").orderBy("page")
-
-
-QUERIES_SOURCES["streaming_api_source_rollup"] = streaming_api_source_rollup
-
-ORACLES_SOURCES["streaming_api_source_rollup"] = """
-WITH items AS (
-  SELECT CAST(floor(i / 500) AS INT) AS page,
-         i AS item_id,
-         ((i * 7919) % 1000) / 10.0 AS score
-  FROM generate_series(0, 9999) t(i)
 )
-SELECT page,
-       count(*) AS n_items,
-       CAST(sum(item_id) AS BIGINT) AS sum_id,
-       CAST(sum(CAST(floor(score * 10.0 + 0.5) AS BIGINT)) AS BIGINT) / 10.0 AS sum_score
-FROM items
-GROUP BY page
-ORDER BY page
-"""
-
-
 def binaryfile_media_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The raw-asset ingest connector multimodal pipelines start from:
     spark.read.format('binaryFile') lists a directory of opaque files
@@ -393,24 +346,23 @@ def binaryfile_media_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_SOURCES["binaryfile_media_rollup"] = binaryfile_media_rollup
-
-ORACLES_SOURCES["binaryfile_media_rollup"] = """
-SELECT doc_id % 4 AS doc_bucket,
-       count(*) AS n_files,
-       CAST(sum(strlen(coalesce(text, ''))) AS BIGINT) AS sum_bytes,
-       CAST(sum(CAST('0x' || substr(md5(coalesce(text, '')), 1, 8) AS BIGINT))
-            AS BIGINT) AS sum_hash
-FROM documents
--- binaryFile SKIPS zero-byte files (no splittable content), so docs
--- whose payload is empty (null/'' text) never appear in the scan —
--- the oracle mirrors that source behavior explicitly
-WHERE doc_id < 40 AND strlen(coalesce(text, '')) > 0
-GROUP BY doc_bucket
-ORDER BY doc_bucket
+@query(
+    oracle="""
+WITH merged AS (
+  SELECT event_id, event_type, NULL AS prop_k
+  FROM events WHERE event_id % 2 = 0
+  UNION ALL
+  SELECT event_id, event_type, CAST(json_extract(props, '$.k') AS INT) AS prop_k
+  FROM events WHERE event_id % 2 = 1
+)
+SELECT event_type, count(*) AS n_rows,
+       count(prop_k) AS n_with_k,
+       CAST(sum(prop_k) AS BIGINT) AS sum_k
+FROM merged
+GROUP BY event_type
+ORDER BY event_type
 """
-
-
+)
 def schema_drift_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-drift union: an old extract (no event props) unioned
     with a new extract (adds prop_k) via unionByName(
@@ -441,25 +393,7 @@ def schema_drift_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_SOURCES["schema_drift_union"] = schema_drift_union
-
-ORACLES_SOURCES["schema_drift_union"] = """
-WITH merged AS (
-  SELECT event_id, event_type, NULL AS prop_k
-  FROM events WHERE event_id % 2 = 0
-  UNION ALL
-  SELECT event_id, event_type, CAST(json_extract(props, '$.k') AS INT) AS prop_k
-  FROM events WHERE event_id % 2 = 1
-)
-SELECT event_type, count(*) AS n_rows,
-       count(prop_k) AS n_with_k,
-       CAST(sum(prop_k) AS BIGINT) AS sum_k
-FROM merged
-GROUP BY event_type
-ORDER BY event_type
-"""
-
-
+@query(oracle=_ROLLUP_SQL)
 def xml_documents_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark 4 NATIVE XML source: documents re-materialized as XML
     (<doc> row tag), scanned back with an explicit schema and rolled
@@ -480,11 +414,19 @@ def xml_documents_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _doc_rollup(docs)
 
 
-QUERIES_SOURCES["xml_documents_rollup"] = xml_documents_rollup
-
-ORACLES_SOURCES["xml_documents_rollup"] = _ROLLUP_SQL
-
-
+@query(
+    oracle="""
+SELECT event_type,
+       count(*) AS n_events,
+       min(event_id) AS min_event,
+       max(event_id) AS max_event,
+       CAST(sum(user_id) AS BIGINT) AS sum_users,
+       CAST(sum(CAST(round(value * 100.0) AS BIGINT)) AS BIGINT) AS value_cents
+FROM events
+GROUP BY event_type
+ORDER BY event_type
+"""
+)
 def api_sink_roundtrip_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Python Data Source WRITE path as an ORACLE-VISIBLE query:
     events published through the api_batch_sink connector (two-phase
@@ -528,21 +470,7 @@ def api_sink_roundtrip_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_SOURCES["api_sink_roundtrip_rollup"] = api_sink_roundtrip_rollup
-
-ORACLES_SOURCES["api_sink_roundtrip_rollup"] = """
-SELECT event_type,
-       count(*) AS n_events,
-       min(event_id) AS min_event,
-       max(event_id) AS max_event,
-       CAST(sum(user_id) AS BIGINT) AS sum_users,
-       CAST(sum(CAST(round(value * 100.0) AS BIGINT)) AS BIGINT) AS value_cents
-FROM events
-GROUP BY event_type
-ORDER BY event_type
-"""
-
-
+@query(oracle=_ROLLUP_SQL)
 def csv_documents_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV round-trip gate: documents written as quoted CSV (text
     bodies contain commas/quotes/newlines-as-escapes) and scanned back
@@ -571,10 +499,21 @@ def csv_documents_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _doc_rollup(docs)
 
 
-QUERIES_SOURCES["csv_documents_rollup"] = csv_documents_rollup
-ORACLES_SOURCES["csv_documents_rollup"] = _ROLLUP_SQL
-
-
+# Oracle on the ORIGINAL table: pre-evolution rows (even keys) AND
+# new rows whose priority is genuinely NULL both land under the
+# sentinel — exactly what coalesce sees after mergeSchema's null-fill.
+@query(
+    oracle="""
+SELECT CASE WHEN o_orderkey % 2 = 0 THEN '<pre-evolution>'
+            ELSE coalesce(o_orderpriority, '<pre-evolution>') END AS priority,
+       CAST(count(*) AS BIGINT) AS n_orders,
+       CAST(sum(CAST(floor(o_totalprice * 1e2 + 0.5) AS BIGINT)) AS BIGINT)
+         AS revenue_cents
+FROM orders
+GROUP BY 1
+ORDER BY 1
+"""
+)
 def parquet_schema_evolution_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parquet SCHEMA EVOLUTION via mergeSchema: an old extract
     written WITHOUT o_orderpriority sits in the same logical table as
@@ -631,18 +570,127 @@ def parquet_schema_evolution_rollup(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-QUERIES_SOURCES["parquet_schema_evolution_rollup"] = parquet_schema_evolution_rollup
+# Two lifecycle families —
+# a leakage-safe corpus split and a storage-maintenance planner — each
+# with a DuckDB oracle twin.
+#
+# - ``leakage_safe_split`` — train/val/test assignment keyed by the
+#   NEAR-DUP CLUSTER, not the document: if two near-duplicate docs land
+#   on opposite sides of a train/test split, the eval set is
+#   contaminated no matter how good the dedup report looks (the
+#   benchmark-leakage failure mode decontamination papers warn about —
+#   split-then-dedup is not dedup-then-split). Every doc inherits its
+#   LSH-connected-component id (singletons are their own cluster) and
+#   the md5 bucket of the CLUSTER id decides the split, so a whole
+#   duplicate group always moves together. Cross-split cluster
+#   integrity is contract-tested.
+# - ``compaction_bin_packing`` — the small-files maintenance planner:
+#   per-file row counts (via the ``_metadata`` hidden column — file
+#   identity without a filesystem listing) packed into target-sized
+#   compaction bins by size-descending prefix sum. At 100 TB the
+#   small-files problem is a scan-latency tax (every file opens a
+#   reader, footers dominate under ~32 MB); the planner emits which
+#   files merge into which output bin — the plan a compaction job
+#   executes. The bin rule (cumulative rows DIV target) is one window
+#   over the FILE relation, bounded by file count, never rows.
+#
+# The reference has no analogue for either (SURVEY §0); they extend
+# the corpus-lifecycle surface of the engine's LLM-data mandate.
+#
+# Cross-engine exactness: md5-bucket splits and integer row counts
+# only; the file relation joins Spark's ``_metadata.file_path`` to
+# DuckDB's ``filename=true`` via basename extraction.
 
-# Oracle on the ORIGINAL table: pre-evolution rows (even keys) AND
-# new rows whose priority is genuinely NULL both land under the
-# sentinel — exactly what coalesce sees after mergeSchema's null-fill.
-ORACLES_SOURCES["parquet_schema_evolution_rollup"] = """
-SELECT CASE WHEN o_orderkey % 2 = 0 THEN '<pre-evolution>'
-            ELSE coalesce(o_orderpriority, '<pre-evolution>') END AS priority,
-       CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(sum(CAST(floor(o_totalprice * 1e2 + 0.5) AS BIGINT)) AS BIGINT)
-         AS revenue_cents
-FROM orders
-GROUP BY 1
-ORDER BY 1
+# compaction: target rows per merged output file and the tables the
+# planner sweeps (the big fact tables where small files accumulate)
+COMPACT_TARGET_ROWS = 1_000_000
+COMPACT_TABLES = ("orders", "lineitem", "events")
+
+
+def file_census(spark: SparkSession, paths: dict[str, str]) -> DataFrame:
+    """Per-file row counts for each (table, parquet path): the
+    ``_metadata.file_path`` hidden column makes file identity a plain
+    grouping key — map-side combinable, no driver file listing. Only
+    the metadata column is projected, so no data column is decoded."""
+    per_table = []
+    for t, path in paths.items():
+        raw = spark.read.parquet(path)
+        per_table.append(
+            raw.select(
+                F.lit(t).alias("table_name"),
+                F.element_at(
+                    F.split(F.col("_metadata.file_path"), "/"), -1
+                ).alias("file_name"),
+            )
+            .groupBy("table_name", "file_name")
+            .agg(F.count(F.lit(1)).alias("n_rows"))
+        )
+    files = per_table[0]
+    for p in per_table[1:]:
+        files = files.unionByName(p)
+    return files
+
+
+def compaction_plan(files: DataFrame, target_rows: int) -> DataFrame:
+    """Pack a (table_name, file_name, n_rows) file census into
+    ``target_rows``-sized merge bins, size-descending, PER TABLE
+    (files never merge across tables). Bin id = (running row total −
+    own rows) DIV target — the deterministic next-fit-by-prefix-sum
+    rule. The DIV rule caps each bin's START offset, not its total:
+    a bin can exceed ``target_rows`` by up to its last file's rows
+    (e.g. files [900, 800] at target 1000 share bin 0 with 1700
+    rows), and a file larger than the target still gets a bin of its
+    own because its start offset alone fills a full DIV stride. The
+    overshoot bound is acceptable for merge planning (output files
+    land in [target, 2*target)); consumers needing a hard cap should
+    post-split oversized bins. One window over the file relation, which is bounded
+    by file count (10^4-10^5 entries for a 100 TB table — listing
+    scale, never data scale)."""
+    return files.select(
+        "table_name",
+        "file_name",
+        "n_rows",
+        F.expr(
+            "CAST((sum(n_rows) OVER (PARTITION BY table_name"
+            " ORDER BY n_rows DESC, file_name ASC"
+            " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_rows)"
+            f" DIV {target_rows} AS BIGINT)"
+        ).alias("bin_id"),
+    )
+
+
+ORACLE_COMPACTION = f"""
+WITH files AS (
+  {" UNION ALL ".join(
+    f"SELECT '{t}' AS table_name, '{t}.parquet' AS file_name,"
+    f" count(*) AS n_rows FROM {t}"
+    for t in COMPACT_TABLES
+  )}
+)
+SELECT table_name, file_name, CAST(n_rows AS BIGINT) AS n_rows,
+       CAST((sum(n_rows) OVER (PARTITION BY table_name
+             ORDER BY n_rows DESC, file_name ASC
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_rows)
+            // {COMPACT_TARGET_ROWS} AS BIGINT) AS bin_id
+FROM files ORDER BY table_name, file_name
 """
+
+
+@query(oracle=ORACLE_COMPACTION)
+def compaction_bin_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Compaction MAINTENANCE plan over the swept fact tables: which
+    parquet files merge into which target-sized output bin.
+
+    Gate-layout note: the driver testdata ships each table as ONE
+    parquet file (TESTDATA.md), so the oracle pins the file relation
+    as (table, '<table>.parquet', count(*)) over the registered
+    views; the Spark side computes the same census from the real
+    ``_metadata`` column and generalizes to many files per table —
+    the multi-file packing path is exercised by
+    ``tests/test_engine5e.py`` on a multi-file fixture.
+    """
+    base = sf_dir.rstrip("/")
+    files = file_census(
+        spark, {t: f"{base}/{t}.parquet" for t in COMPACT_TABLES}
+    )
+    return compaction_plan(files, COMPACT_TARGET_ROWS)

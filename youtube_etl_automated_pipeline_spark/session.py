@@ -188,12 +188,14 @@ def ensure_protobuf_on_session(spark: SparkSession) -> None:
     # transform_with_state_driver_worker) never applies task includes;
     # its PYTHONPATH comes from the PythonFunction's envVars, which
     # PySpark populates from sc.environment — so route the vendor dir
-    # through there for sessions whose JVM started without it.
-    env_pp = sc.environment.get("PYTHONPATH", "")
-    if vendor not in env_pp.split(os.pathsep):
-        sc.environment["PYTHONPATH"] = vendor + (
-            os.pathsep + env_pp if env_pp else ""
-        )
+    # through there for sessions whose JVM started without it. The
+    # package's parent goes there too: the TWS runner unpickles the
+    # processor, which imports this package, and a caller outside the
+    # repo root has no other path to it.
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    parts = sc.environment.get("PYTHONPATH", "").split(os.pathsep)
+    missing = [p for p in (vendor, repo_root) if p not in parts]
+    sc.environment["PYTHONPATH"] = os.pathsep.join(missing + [p for p in parts if p])
     setattr(sc, marker, True)
 
 
