@@ -347,10 +347,11 @@ def test_tws_user_peaks_or_env_gate(spark, tmp_path):
 
 def test_stream_state_posture_is_read_off_the_plan_and_restored(spark):
     """run_stream_to_memory picks the state posture from the plan: a
-    transformWithState plan runs on RocksDB at tws_state_partitions()
-    state partitions, any other stateful plan at width 2 on the
-    default provider. Every conf a posture touches is back to its
-    prior value afterwards, also when the query raises."""
+    transformWithState plan runs on RocksDB at one state partition
+    per core of the session (defaultParallelism), any other stateful
+    plan at width 2 on the default provider. Every conf a posture
+    touches is back to its prior value afterwards, also when the query
+    raises."""
     import json
     import time
 
@@ -360,7 +361,6 @@ def test_stream_state_posture_is_read_off_the_plan_and_restored(spark):
         read_events_stream,
         run_stream_to_memory,
         tumbling_window_agg,
-        tws_state_partitions,
     )
     from youtube_etl_automated_pipeline_spark.streaming.stateful import (
         tws_user_peaks,
@@ -431,7 +431,8 @@ def test_stream_state_posture_is_read_off_the_plan_and_restored(spark):
 
         tws = state_operators("posture_tws")
         assert tws and all(
-            op["numShufflePartitions"] == tws_state_partitions() and rocksdb(op)
+            op["numShufflePartitions"] == spark.sparkContext.defaultParallelism
+            and rocksdb(op)
             for op in tws
         ), tws
         window = state_operators("posture_window")

@@ -41,6 +41,11 @@ def tokens(text: Column) -> Column:
     ).otherwise(F.split(t, WS_CLASS + "+"))
 
 
+# Oracle-side (DuckDB) split of a ``text`` column on WS_CLASS runs; an
+# empty or NULL text is left to the caller's CASE.
+TOKENS_SQL = f"string_split_regex(trim(text), '{WS_CLASS}+')"
+
+
 def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
@@ -99,9 +104,18 @@ def md5_long(col: Column, hex_chars: int = 8) -> Column:
     return F.conv(F.substring(F.md5(col), 1, hex_chars), 16, 10).cast("long")
 
 
+def sql_md5_long(expr: str, hex_chars: int = 8) -> str:
+    """The DuckDB-side twin of :func:`md5_long`."""
+    return f"CAST('0x' || substr(md5({expr}), 1, {hex_chars}) AS BIGINT)"
+
+
 def normalized_text(text: Column) -> Column:
     """lowercase + collapse whitespace — the exact-dedup key basis."""
     return F.lower(F.regexp_replace(F.trim(text), WS_CLASS + "+", " "))
+
+
+# The DuckDB-side twin of normalized_text() over a ``text`` column.
+NORMALIZED_SQL = f"lower(regexp_replace(trim(text), '{WS_CLASS}+', ' ', 'g'))"
 
 
 def content_hash(text: Column) -> Column:

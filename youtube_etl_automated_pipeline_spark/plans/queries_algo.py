@@ -30,7 +30,12 @@ from pyspark.sql import functions as F
 
 from youtube_etl_automated_pipeline_spark.ext.dedup import shingle_hashes
 from youtube_etl_automated_pipeline_spark.ext import textstats as TS
-from youtube_etl_automated_pipeline_spark.functions.compat import hround
+from youtube_etl_automated_pipeline_spark.ext.textstats import (
+    NORMALIZED_SQL,
+    TOKENS_SQL,
+    sql_md5_long,
+)
+from youtube_etl_automated_pipeline_spark.functions.compat import hround, sql_hround
 from youtube_etl_automated_pipeline_spark.operators.cache_registry import memo_persist
 from youtube_etl_automated_pipeline_spark.operators.lineage import truncate_lineage
 from youtube_etl_automated_pipeline_spark.operators.windows import bounded_window
@@ -50,11 +55,7 @@ SNM_THRESHOLD = 0.2  # Jaccard cutoff, same bar as dedup_ngram_jaccard
 
 
 def _snm_oracle() -> str:
-    from youtube_etl_automated_pipeline_spark.plans.queries_dedup_adv import (
-        _NORM,
-        _r,
-        _SH_HASHES,
-    )
+    from youtube_etl_automated_pipeline_spark.plans.queries_dedup_adv import _SH_HASHES
 
     ow = "(PARTITION BY lang, c1 ORDER BY p40, doc_id)"
     lags = "\n  UNION ALL ".join(
@@ -66,7 +67,7 @@ def _snm_oracle() -> str:
     return f"""
 WITH base AS (
   SELECT doc_id, coalesce(lang, '??') AS lang,
-    substr({_NORM}, 1, 1) AS c1, substr({_NORM}, 1, 40) AS p40,
+    substr({NORMALIZED_SQL}, 1, 1) AS c1, substr({NORMALIZED_SQL}, 1, 40) AS p40,
     {_SH_HASHES} AS hash_set
   FROM documents
   WHERE len({_SH_HASHES}) >= 3
@@ -80,9 +81,9 @@ pairs AS (
     len(list_distinct(list_concat(hash_set, pset))) AS n_union
   FROM lagged WHERE pid IS NOT NULL
 )
-SELECT DISTINCT doc_a, doc_b, {_r(jac, 4)} AS jaccard
+SELECT DISTINCT doc_a, doc_b, {sql_hround(jac, 4)} AS jaccard
 FROM pairs
-WHERE ({_r(jac, 4)}) >= {SNM_THRESHOLD}
+WHERE ({sql_hround(jac, 4)}) >= {SNM_THRESHOLD}
 ORDER BY doc_a, doc_b
 """
 
@@ -345,14 +346,12 @@ FH_DIM = 128
 
 
 def _fh_oracle() -> str:
-    from youtube_etl_automated_pipeline_spark.plans.queries_dedup_adv import _h8, _TOKS
-
     return f"""
 WITH toks AS (
-  SELECT unnest({_TOKS}) AS tok FROM documents
+  SELECT unnest({TOKENS_SQL}) AS tok FROM documents
   WHERE text IS NOT NULL AND trim(text) <> ''
 )
-SELECT ({_h8("tok")}) % {FH_DIM} AS bucket,
+SELECT ({sql_md5_long("tok")}) % {FH_DIM} AS bucket,
   CAST(count(*) AS BIGINT) AS n_occurrences,
   CAST(count(DISTINCT tok) AS BIGINT) AS n_types
 FROM toks
@@ -402,8 +401,6 @@ PHRASE = ("data", "table")  # exact-adjacency phrase query
 
 
 def _bool_search_oracle() -> str:
-    from youtube_etl_automated_pipeline_spark.plans.queries_dedup_adv import _TOKS
-
     in_list = ", ".join(f"'{t}'" for t in SEARCH_TERMS)
     occs = ",\n  ".join(
         f"CAST(sum(CASE WHEN term = '{t}' THEN 1 ELSE 0 END) AS BIGINT)"
@@ -416,7 +413,7 @@ def _bool_search_oracle() -> str:
     )
     return f"""
 WITH toks AS (
-  SELECT doc_id, unnest({_TOKS}) AS term FROM documents
+  SELECT doc_id, unnest({TOKENS_SQL}) AS term FROM documents
   WHERE text IS NOT NULL AND trim(text) <> ''
 )
 SELECT doc_id,
@@ -457,11 +454,9 @@ def boolean_search_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _phrase_search_oracle() -> str:
-    from youtube_etl_automated_pipeline_spark.plans.queries_dedup_adv import _TOKS
-
     return f"""
 WITH tok AS (
-  SELECT doc_id, {_TOKS} AS toks FROM documents
+  SELECT doc_id, {TOKENS_SQL} AS toks FROM documents
   WHERE text IS NOT NULL AND trim(text) <> ''
 ),
 pos AS (
@@ -590,9 +585,7 @@ SAMPLE_K = 200
 
 
 def _wsample_oracle() -> str:
-    from youtube_etl_automated_pipeline_spark.plans.queries_dedup_adv import _TOKS
-
-    ntok = f"CASE WHEN trim(text) = '' OR text IS NULL THEN 0 ELSE len({_TOKS}) END"
+    ntok = f"CASE WHEN trim(text) = '' OR text IS NULL THEN 0 ELSE len({TOKENS_SQL}) END"
     bucket = (
         "CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)"
         " % 1000000"

@@ -18,20 +18,18 @@ from youtube_etl_automated_pipeline_spark.ext.textstats import (
     BPE_ISH_PATTERN,
     LANG_MARKERS,
     LANG_PRIORITY,
+    TOKENS_SQL,
     WS_CHARS,
     WS_CLASS,
     md5_long,
+    sql_md5_long,
 )
 from youtube_etl_automated_pipeline_spark.ext import curation as C
 from youtube_etl_automated_pipeline_spark.ext import textstats as TS
-from youtube_etl_automated_pipeline_spark.functions.compat import hround
+from youtube_etl_automated_pipeline_spark.functions.compat import hround, sql_hround
 from youtube_etl_automated_pipeline_spark.operators.cache_registry import memo_persist
 from youtube_etl_automated_pipeline_spark.operators.windows import bounded_window
-from youtube_etl_automated_pipeline_spark.plans.queries_dedup_adv import (
-    LDC_CHUNK,
-    _TOKS,
-    _r,
-)
+from youtube_etl_automated_pipeline_spark.plans.queries_dedup_adv import LDC_CHUNK
 from youtube_etl_automated_pipeline_spark.plans.registry import query
 from youtube_etl_automated_pipeline_spark.sources import load_table, load_wide
 
@@ -136,7 +134,6 @@ def corpus_sampling_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- DuckDB oracles ---------------------------------------------------
 
-_TOKS = f"string_split_regex(trim(text), '{WS_CLASS}+')"
 _NONEMPTY = "text IS NOT NULL AND trim(text) <> ''"
 
 
@@ -147,7 +144,7 @@ def _fp15(expr: str) -> str:
 @query(
     oracle=f"""
 WITH t AS (
-  SELECT doc_id, {_TOKS} AS toks FROM documents
+  SELECT doc_id, {TOKENS_SQL} AS toks FROM documents
   WHERE {_NONEMPTY}
 ),
 c AS (
@@ -172,10 +169,6 @@ def doc_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id, chunk index, chunk length, portable chunk fingerprint."""
     docs = load_wide(spark, sf_dir, "documents")
     return C.chunk_windows(docs)
-
-
-def _h8(expr: str) -> str:
-    return f"CAST('0x' || substr(md5({expr}), 1, 8) AS BIGINT)"
 
 
 _PII_TEXT = (
@@ -237,8 +230,8 @@ _BIGRAMS = (
 @query(
     oracle=f"""
 WITH t AS (
-  SELECT doc_id, {_TOKS} AS toks FROM documents
-  WHERE {_NONEMPTY} AND len({_TOKS}) >= 2
+  SELECT doc_id, {TOKENS_SQL} AS toks FROM documents
+  WHERE {_NONEMPTY} AND len({TOKENS_SQL}) >= 2
 ),
 bg AS (
   SELECT doc_id, unnest({_BIGRAMS}) AS bigram FROM t
@@ -282,12 +275,12 @@ _TRIGRAMS = (
 @query(
     oracle=f"""
 WITH t AS (
-  SELECT doc_id, {_TOKS} AS toks FROM documents
-  WHERE {_NONEMPTY} AND len({_TOKS}) >= {C.DECON_N}
+  SELECT doc_id, {TOKENS_SQL} AS toks FROM documents
+  WHERE {_NONEMPTY} AND len({TOKENS_SQL}) >= {C.DECON_N}
 ),
 sh AS (
   SELECT doc_id,
-    unnest(list_distinct(list_transform({_TRIGRAMS}, s -> {_h8('s')}))) AS shash
+    unnest(list_distinct(list_transform({_TRIGRAMS}, s -> {sql_md5_long('s')}))) AS shash
   FROM t
 ),
 ev AS (
@@ -340,7 +333,7 @@ def _logreg_oracle() -> str:
     FROM (
       SELECT doc_id,
         CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-             ELSE len({_TOKS}) END AS n_tokens,
+             ELSE len({TOKENS_SQL}) END AS n_tokens,
         ({marker}) AS stop_cnt,
         length(regexp_replace(text, '[A-Za-z0-9{WS_CHARS}]', '', 'g')) AS punct,
         length(text) AS text_len
@@ -449,7 +442,7 @@ sh AS MATERIALIZED (
   SELECT doc_id,
     list_distinct(list_transform({_F_SHINGLES},
       s -> CAST('0x' || substr(md5(s), 1, 8) AS BIGINT))) AS hs
-  FROM (SELECT doc_id, {_TOKS} AS toks, text FROM exact WHERE {_NONEMPTY})
+  FROM (SELECT doc_id, {TOKENS_SQL} AS toks, text FROM exact WHERE {_NONEMPTY})
   WHERE len(list_distinct(list_transform({_F_SHINGLES},
       s -> CAST('0x' || substr(md5(s), 1, 8) AS BIGINT)))) >= 3
 ),
@@ -470,7 +463,7 @@ shn AS MATERIALIZED (
     SELECT doc_id,
       list_distinct(list_transform({_F_SHINGLES},
         s -> CAST('0x' || substr(md5(s), 1, 8) AS BIGINT))) AS hs
-    FROM (SELECT doc_id, {_TOKS} AS toks, text FROM near WHERE {_NONEMPTY})
+    FROM (SELECT doc_id, {TOKENS_SQL} AS toks, text FROM near WHERE {_NONEMPTY})
   ) WHERE len(hs) >= 3
 ),
 contaminated AS (
@@ -673,7 +666,7 @@ WITH corpus AS (
   FROM documents WHERE doc_id % {CHUNK_DUP_EVERY} = 0
 ),
 t AS (
-  SELECT doc_id, {_TOKS} AS toks FROM corpus
+  SELECT doc_id, {TOKENS_SQL} AS toks FROM corpus
   WHERE {_NONEMPTY}
 ),
 c AS (
@@ -757,7 +750,7 @@ def _predicted_lang_case() -> str:
 @query(
     oracle=f"""
 SELECT doc_id, n_chars,
-  CASE WHEN text IS NULL OR trim(text) = '' THEN 0 ELSE len({_TOKS}) END AS n_tokens,
+  CASE WHEN text IS NULL OR trim(text) = '' THEN 0 ELSE len({TOKENS_SQL}) END AS n_tokens,
   len(regexp_extract_all(COALESCE(text, ''), '{BPE_ISH_PATTERN}'))
     AS n_bpe_tokens,
   length(regexp_replace(text, '[A-Za-z0-9{WS_CHARS}]', '', 'g')) AS n_punct,
@@ -785,7 +778,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH base AS (
   SELECT doc_id,
-    CASE WHEN text IS NULL OR trim(text) = '' THEN 0 ELSE len({_TOKS}) END AS n_tokens,
+    CASE WHEN text IS NULL OR trim(text) = '' THEN 0 ELSE len({TOKENS_SQL}) END AS n_tokens,
     {_marker_cnt("en")} AS stop_cnt,
     length(regexp_replace(text, '[A-Za-z0-9{WS_CHARS}]', '', 'g')) AS punct,
     length(text) AS text_len
@@ -799,11 +792,11 @@ ratios AS (
   FROM base
 )
 SELECT doc_id, n_tokens,
-  {_r("stop_ratio", 4)} AS stopword_ratio,
-  {_r("punct_ratio", 4)} AS punct_ratio,
-  {_r("stop_ratio * 0.3 + length_score * 0.4 + (1.0 - punct_ratio) * 0.3", 4)}
+  {sql_hround("stop_ratio", 4)} AS stopword_ratio,
+  {sql_hround("punct_ratio", 4)} AS punct_ratio,
+  {sql_hround("stop_ratio * 0.3 + length_score * 0.4 + (1.0 - punct_ratio) * 0.3", 4)}
     AS quality_score,
-  ({_r("stop_ratio * 0.3 + length_score * 0.4 + (1.0 - punct_ratio) * 0.3", 4)}) >= 0.5
+  ({sql_hround("stop_ratio * 0.3 + length_score * 0.4 + (1.0 - punct_ratio) * 0.3", 4)}) >= 0.5
     AS keep_flag
 FROM ratios
 ORDER BY doc_id
@@ -2048,13 +2041,9 @@ def semantic_dedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 RESAMPLE_BASE_PPM = 250_000  # floor: every doc keeps >= 25% chance
 RESAMPLE_SLOPE_PPM = 7_500  # + 0.75% per token up to the 100 cap
 
-_TOKS_SQL = None  # filled below from the shared oracle fragments
-
 
 def _resample_oracle() -> str:
-    from youtube_etl_automated_pipeline_spark.plans.queries_dedup_adv import _TOKS
-
-    ntok = f"len({_TOKS})"
+    ntok = f"len({TOKENS_SQL})"
     n_tokens = f"CASE WHEN trim(text) = '' OR text IS NULL THEN 0 ELSE {ntok} END"
     weight = (
         f"CAST({RESAMPLE_BASE_PPM} + {RESAMPLE_SLOPE_PPM}"
@@ -2136,15 +2125,12 @@ def corpus_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _novelty_oracle() -> str:
-    from youtube_etl_automated_pipeline_spark.plans.queries_dedup_adv import (
-        _SH_HASHES,
-        _TOKS,
-    )
+    from youtube_etl_automated_pipeline_spark.plans.queries_dedup_adv import _SH_HASHES
 
     return f"""
 WITH base AS (
   SELECT doc_id, {_SH_HASHES} AS hs
-  FROM documents WHERE len({_TOKS}) >= 3
+  FROM documents WHERE len({TOKENS_SQL}) >= 3
 ),
 ex AS (SELECT doc_id, unnest(hs) AS sh FROM base),
 first AS (SELECT sh, min(doc_id) AS first_doc FROM ex GROUP BY sh)
@@ -2278,7 +2264,6 @@ def _bpe_oracle() -> str:
         BPE_MERGES,
         BPE_MIN_LEN,
     )
-    from youtube_etl_automated_pipeline_spark.plans.queries_dedup_adv import _TOKS
 
     sy = "list_filter(string_split(syms, '|'), s -> s <> '')"
     fold = (
@@ -2292,7 +2277,7 @@ def _bpe_oracle() -> str:
   SELECT word, CAST(count(*) AS BIGINT) AS freq,
          '|' || array_to_string(list_transform(generate_series(1, len(word)),
                 i -> substr(word, i, 1)), '|') || '|' AS syms
-  FROM (SELECT unnest({_TOKS}) AS word FROM documents)
+  FROM (SELECT unnest({TOKENS_SQL}) AS word FROM documents)
   WHERE regexp_full_match(word, '[a-z]+')
     AND len(word) BETWEEN {BPE_MIN_LEN} AND {BPE_MAX_LEN}
   GROUP BY word
@@ -2361,7 +2346,6 @@ def _bpe_compression_oracle() -> str:
         BPE_MERGES,
         BPE_MIN_LEN,
     )
-    from youtube_etl_automated_pipeline_spark.plans.queries_dedup_adv import _TOKS
 
     sy = "list_filter(string_split(syms, '|'), s -> s <> '')"
     fold = (
@@ -2375,7 +2359,7 @@ def _bpe_compression_oracle() -> str:
   SELECT word, CAST(count(*) AS BIGINT) AS freq,
          '|' || array_to_string(list_transform(generate_series(1, len(word)),
                 i -> substr(word, i, 1)), '|') || '|' AS syms
-  FROM (SELECT unnest({_TOKS}) AS word FROM documents)
+  FROM (SELECT unnest({TOKENS_SQL}) AS word FROM documents)
   WHERE regexp_full_match(word, '[a-z]+')
     AND len(word) BETWEEN {BPE_MIN_LEN} AND {BPE_MAX_LEN}
   GROUP BY word

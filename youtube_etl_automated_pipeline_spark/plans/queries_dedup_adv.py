@@ -21,13 +21,16 @@ from youtube_etl_automated_pipeline_spark.ext.dedup import (
     with_minhash,
 )
 from youtube_etl_automated_pipeline_spark.ext.textstats import (
+    NORMALIZED_SQL,
     RABIN_B,
     RABIN_B2,
     RABIN_K,
     RABIN_M,
+    TOKENS_SQL,
     WIN_K,
     WIN_W,
     WS_CLASS,
+    sql_md5_long,
 )
 from youtube_etl_automated_pipeline_spark.ext import textstats as TS
 from youtube_etl_automated_pipeline_spark.functions.compat import hround, sql_hround
@@ -212,10 +215,9 @@ def shard_probe(corpus: DataFrame, shard: DataFrame) -> DataFrame:
 # permutation constant, band width, and threshold is imported from
 # ext.dedup so Spark and oracle cannot drift.
 
-_TOKS = f"string_split_regex(trim(text), '{WS_CLASS}+')"
 _SHINGLES = (
-    f"list_transform(generate_series(1, len({_TOKS}) - 2),"
-    f" i -> array_to_string(({_TOKS})[i:i+2], ' '))"
+    f"list_transform(generate_series(1, len({TOKENS_SQL}) - 2),"
+    f" i -> array_to_string(({TOKENS_SQL})[i:i+2], ' '))"
 )
 # distinct shingle hashes (8 hex chars = 32 bits, matches md5_long default)
 _SH_HASHES = (
@@ -237,7 +239,7 @@ def _sig(j: int, hashes_expr: str = "hs") -> str:
 # all votes 0 -> sketch 0 (mirrors Spark's aggregate-with-init-0).
 _TOK_HASHES = (
     "CASE WHEN text IS NULL OR trim(text) = '' THEN CAST([] AS BIGINT[]) "
-    f"ELSE list_transform(list_distinct({_TOKS}),"
+    f"ELSE list_transform(list_distinct({TOKENS_SQL}),"
     " t -> CAST('0x' || substr(md5(t), 1, 15) AS BIGINT)) END"
 )
 # CAST AS BIGINT is mandatory: DuckDB list_sum over integers returns
@@ -1036,25 +1038,12 @@ def dedup_minhash_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
 # recipes are generated from ext.textstats constants so the two sides
 # cannot drift.
 
-# WS_CLASS (explicit ASCII whitespace set) is shared with the Spark
-# expressions: Java `\s`, RE2 `\s`, and Python `\s` are three
-# different sets, a literal class is one.
-_NORM = f"lower(regexp_replace(trim(text), '{WS_CLASS}+', ' ', 'g'))"
-_CONTENT_FP = f"CAST('0x' || substr(md5({_NORM}), 1, 15) AS BIGINT)"
-
-
-def _h8(expr: str) -> str:
-    return f"CAST('0x' || substr(md5({expr}), 1, 8) AS BIGINT)"
-
-
-def _r(expr: str, dp: int) -> str:
-    p = float(10**dp)
-    return f"floor(({expr}) * {p!r} + 0.5) / {p!r}"
+_CONTENT_FP = sql_md5_long(NORMALIZED_SQL, 15)
 
 
 _MIN_SHINGLE_FP = (
-    f"CASE WHEN len({_TOKS}) >= 3 THEN"
-    f" list_min(list_transform({_SHINGLES}, s -> {_h8('s')}))"
+    f"CASE WHEN len({TOKENS_SQL}) >= 3 THEN"
+    f" list_min(list_transform({_SHINGLES}, s -> {sql_md5_long('s')}))"
     f" ELSE {_CONTENT_FP} END"
 )
 
@@ -1085,7 +1074,7 @@ def winnow_fp_ctes(src_cte: str, prefix: str = "") -> str:
     fingerprint sources (corpus index + streaming probes) can live in
     one WITH clause."""
     return f"""{prefix}nd AS (
-  SELECT doc_id, {_NORM} AS nrm FROM {src_cte}
+  SELECT doc_id, {NORMALIZED_SQL} AS nrm FROM {src_cte}
 ),
 {prefix}eligible AS (
   SELECT doc_id, nrm, length(nrm) AS n FROM {prefix}nd
@@ -1185,9 +1174,9 @@ pairs AS (
   FROM base a JOIN base b ON a.block_key = b.block_key AND a.doc_id < b.doc_id
 )
 SELECT doc_a, doc_b,
-  {_r("CASE WHEN n_union > 0 THEN n_inter / n_union ELSE 0 END", 4)} AS jaccard
+  {sql_hround("CASE WHEN n_union > 0 THEN n_inter / n_union ELSE 0 END", 4)} AS jaccard
 FROM pairs
-WHERE ({_r("CASE WHEN n_union > 0 THEN n_inter / n_union ELSE 0 END", 4)}) >= 0.2
+WHERE ({sql_hround("CASE WHEN n_union > 0 THEN n_inter / n_union ELSE 0 END", 4)}) >= 0.2
 ORDER BY doc_a, doc_b
 """
 )
@@ -1248,7 +1237,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH b AS (
   -- null text = empty document (the mapInPandas kernel treats None
   -- as '' -> zero hashes / zero length); COALESCE pins the twin
-  SELECT doc_id, COALESCE({_NORM}, '') AS nrm FROM documents
+  SELECT doc_id, COALESCE({NORMALIZED_SQL}, '') AS nrm FROM documents
 )
 SELECT doc_id,
   CAST(COALESCE({_FULL}, 0) AS BIGINT) AS rabin_full,
@@ -1544,10 +1533,6 @@ def dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 LDC_CHUNK = 80  # aligned chunk width, matches doc_chunking's unit
 
 
-def _h(expr: str, n: int = 8) -> str:
-    return f"CAST('0x' || substr(md5({expr}), 1, {n}) AS BIGINT)"
-
-
 _LDC_CHUNKS = f"""
   SELECT doc_id, source,
          CAST((s - 1) // {LDC_CHUNK} AS BIGINT) AS idx,
@@ -1577,7 +1562,7 @@ SELECT doc_id,
     AS n_dup_chunks,
   CAST(sum(CASE WHEN n_global = 1 THEN clen ELSE 0 END) AS BIGINT)
     AS kept_len,
-  {_h("string_agg(CASE WHEN n_global = 1 THEN h ELSE '_' END, '|' ORDER BY idx)", 15)}
+  {sql_md5_long("string_agg(CASE WHEN n_global = 1 THEN h ELSE '_' END, '|' ORDER BY idx)", 15)}
     AS kept_sig
 FROM marked GROUP BY doc_id ORDER BY doc_id
 """

@@ -15,7 +15,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from youtube_etl_automated_pipeline_spark.ext import textstats as TS
-from youtube_etl_automated_pipeline_spark.functions.compat import hround
+from youtube_etl_automated_pipeline_spark.ext.textstats import TOKENS_SQL, sql_md5_long
+from youtube_etl_automated_pipeline_spark.functions.compat import hround, sql_hround
 from youtube_etl_automated_pipeline_spark.plans.registry import query
 from youtube_etl_automated_pipeline_spark.sources import load_table, load_wide
 
@@ -54,12 +55,6 @@ def _pii_augmented() -> F.Column:
 
 # ---------------------------------------------------------------- oracles
 
-_TOKS = f"string_split_regex(trim(text), '{TS.WS_CLASS}+')"
-
-
-def _h(expr: str, n: int = 8) -> str:
-    return f"CAST('0x' || substr(md5({expr}), 1, {n}) AS BIGINT)"
-
 
 @query(
     oracle=f"""
@@ -67,7 +62,7 @@ SELECT doc_id,
   CAST((s - 1) // {CHUNK_STRIDE} AS BIGINT) AS chunk_idx,
   CAST(s AS BIGINT) AS chunk_start,
   CAST(length(substr(text, s, {CHUNK_CHARS})) AS BIGINT) AS chunk_len,
-  {_h(f"substr(text, s, {CHUNK_CHARS})", 15)} AS chunk_hash
+  {sql_md5_long(f"substr(text, s, {CHUNK_CHARS})", 15)} AS chunk_hash
 FROM documents,
   unnest(generate_series(1, greatest(length(text), 1), {CHUNK_STRIDE})) AS t(s)
 WHERE text IS NOT NULL
@@ -110,10 +105,10 @@ def doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH ranked AS (
   SELECT doc_id, lang,
-    {_h("CAST(doc_id AS VARCHAR)")} AS sample_hash,
+    {sql_md5_long("CAST(doc_id AS VARCHAR)")} AS sample_hash,
     CAST(row_number() OVER (
       PARTITION BY lang
-      ORDER BY {_h("CAST(doc_id AS VARCHAR)")}, doc_id
+      ORDER BY {sql_md5_long("CAST(doc_id AS VARCHAR)")}, doc_id
     ) AS BIGINT) AS sample_rank
   FROM documents
 )
@@ -144,16 +139,11 @@ def corpus_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _r(expr: str, dp: int) -> str:
-    p = float(10**dp)
-    return f"floor(({expr}) * {p!r} + 0.5) / {p!r}"
-
-
 def _grams(n: int) -> str:
     """Token n-gram strings (DuckDB twin of TS.shingles)."""
     return (
-        f"list_transform(generate_series(1, len({_TOKS}) - {n - 1}),"
-        f" i -> array_to_string(({_TOKS})[i:i+{n - 1}], ' '))"
+        f"list_transform(generate_series(1, len({TOKENS_SQL}) - {n - 1}),"
+        f" i -> array_to_string(({TOKENS_SQL})[i:i+{n - 1}], ' '))"
     )
 
 
@@ -180,7 +170,7 @@ SELECT doc_id,
   CAST(len(regexp_extract_all(after_email, '{PII_NUM_RE}')) AS BIGINT) AS n_numbers,
   CAST(length(regexp_replace(after_email, '{PII_NUM_RE}', '<NUM>', 'g')) AS BIGINT)
     AS scrubbed_len,
-  {_h(f"regexp_replace(after_email, '{PII_NUM_RE}', '<NUM>', 'g')", 15)}
+  {sql_md5_long(f"regexp_replace(after_email, '{PII_NUM_RE}', '<NUM>', 'g')", 15)}
     AS scrubbed_hash
 FROM s1
 ORDER BY doc_id
@@ -224,8 +214,8 @@ _DUP_FRAC = (
 @query(
     oracle=f"""
 WITH base AS (
-  SELECT doc_id, {_TOKS} AS toks FROM documents
-  WHERE text IS NOT NULL AND len({_TOKS}) >= 1
+  SELECT doc_id, {TOKENS_SQL} AS toks FROM documents
+  WHERE text IS NOT NULL AND len({TOKENS_SQL}) >= 1
 ),
 stats AS (
   SELECT doc_id,
@@ -243,10 +233,10 @@ stats AS (
 )
 SELECT doc_id, n_tokens, n_distinct_tokens, top_token_cnt,
   n_bigrams, n_distinct_bigrams,
-  {_r(_TOP_FRAC, 6)} AS top_token_frac,
-  {_r(_DUP_FRAC, 6)} AS dup_bigram_frac,
-  (({_r(_TOP_FRAC, 6)}) > {TOP_FRAC_FLAG}
-   OR ({_r(_DUP_FRAC, 6)}) > {DUP_BIGRAM_FLAG}) AS repetition_flag
+  {sql_hround(_TOP_FRAC, 6)} AS top_token_frac,
+  {sql_hround(_DUP_FRAC, 6)} AS dup_bigram_frac,
+  (({sql_hround(_TOP_FRAC, 6)}) > {TOP_FRAC_FLAG}
+   OR ({sql_hround(_DUP_FRAC, 6)}) > {DUP_BIGRAM_FLAG}) AS repetition_flag
 FROM stats
 ORDER BY doc_id
 """
@@ -320,7 +310,7 @@ def quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CONTAM_HASHES = f"list_distinct(list_transform({_grams(CONTAM_N)}, s -> {_h('s')}))"
+_CONTAM_HASHES = f"list_distinct(list_transform({_grams(CONTAM_N)}, s -> {sql_md5_long('s')}))"
 
 
 @query(
@@ -328,7 +318,7 @@ _CONTAM_HASHES = f"list_distinct(list_transform({_grams(CONTAM_N)}, s -> {_h('s'
 WITH base AS (
   SELECT doc_id, {_CONTAM_HASHES} AS hs
   FROM documents
-  WHERE text IS NOT NULL AND len({_TOKS}) >= {CONTAM_N}
+  WHERE text IS NOT NULL AND len({TOKENS_SQL}) >= {CONTAM_N}
 ),
 eval_set AS (
   SELECT DISTINCT unnest(hs) AS sh FROM base WHERE doc_id % {CONTAM_EVAL_MOD} = 0
@@ -339,7 +329,7 @@ train AS (
 )
 SELECT doc_id, n_shingles,
   CAST(count(*) AS BIGINT) AS n_matched,
-  {_r("CAST(count(*) AS DOUBLE) / n_shingles", 6)} AS contamination
+  {sql_hround("CAST(count(*) AS DOUBLE) / n_shingles", 6)} AS contamination
 FROM train JOIN eval_set USING (sh)
 GROUP BY doc_id, n_shingles
 ORDER BY doc_id
@@ -408,7 +398,7 @@ SEQ_LEN = 512  # context window (tokens) for sequence packing
 # string_split_regex('') is [''] — the guard pins both to 0.
 _NTOKS = (
     "CASE WHEN trim(text) = '' THEN 0"
-    f" ELSE len({_TOKS}) END"
+    f" ELSE len({TOKENS_SQL}) END"
 )
 
 
@@ -416,8 +406,8 @@ _NTOKS = (
     oracle=f"""
 WITH b AS (
   SELECT doc_id, n_chars, {_NTOKS} AS n_tokens,
-    CASE WHEN {_h("CAST(doc_id AS VARCHAR)")} % 100 < {SPLIT_TRAIN_PCT} THEN 'train'
-         WHEN {_h("CAST(doc_id AS VARCHAR)")} % 100 < {SPLIT_VAL_PCT} THEN 'val'
+    CASE WHEN {sql_md5_long("CAST(doc_id AS VARCHAR)")} % 100 < {SPLIT_TRAIN_PCT} THEN 'train'
+         WHEN {sql_md5_long("CAST(doc_id AS VARCHAR)")} % 100 < {SPLIT_VAL_PCT} THEN 'val'
          ELSE 'test' END AS split
   FROM documents WHERE text IS NOT NULL
 )

@@ -200,11 +200,6 @@ _PUB_AT_SQL = (
 )
 
 
-def _r(expr: str, dp: int) -> str:
-    p = float(10**dp)
-    return f"floor(({expr}) * {p!r} + 0.5) / {p!r}"
-
-
 @query(
     oracle=f"""
 WITH
@@ -290,8 +285,8 @@ analytics AS (
     count(*) AS comments,
     CAST(floor(sum(l_quantity)) AS BIGINT) % 100 AS likes,
     count(*) % 7 AS shares,
-    {_r("(CAST(sum(CAST(floor((l_extendedprice * l_discount) * 10000.0 + 0.5) AS BIGINT)) AS BIGINT) / 10000.0) / 10.0", 4)} AS estimated_revenue,
-    {_r("(CAST(sum(CAST(floor((l_tax) * 100.0 + 0.5) AS BIGINT)) AS DOUBLE) / CAST(count(l_tax) AS DOUBLE) / 100.0 * 100.0)", 6)} AS cpm,
+    {sql_hround("(CAST(sum(CAST(floor((l_extendedprice * l_discount) * 10000.0 + 0.5) AS BIGINT)) AS BIGINT) / 10000.0) / 10.0", 4)} AS estimated_revenue,
+    {sql_hround("(CAST(sum(CAST(floor((l_tax) * 100.0 + 0.5) AS BIGINT)) AS DOUBLE) / CAST(count(l_tax) AS DOUBLE) / 100.0 * 100.0)", 6)} AS cpm,
     CASE WHEN l_orderkey % 19 = 0 THEN NULL ELSE count(*) END AS subscribers_gained,
     count(*) % 5 AS subscribers_lost
   FROM lineitem WHERE l_orderkey % 5 <> 1
@@ -323,7 +318,7 @@ SELECT
     + INTERVAL 5 HOUR, '%H:%M:%S'), '') AS published_time_local,
   content_type,
   views,
-  {_r("coalesce(minutes_watched, 0) / 60.0", 2)} AS watch_hours,
+  {sql_hround("coalesce(minutes_watched, 0) / 60.0", 2)} AS watch_hours,
   coalesce(avg_view_duration, 0) // 3600 || ':' ||
     lpad(CAST((coalesce(avg_view_duration, 0) % 3600) // 60 AS VARCHAR), 2, '0') || ':' ||
     lpad(CAST(coalesce(avg_view_duration, 0) % 60 AS VARCHAR), 2, '0')
@@ -337,11 +332,11 @@ SELECT
   subscribers_lost,
   CAST(coalesce(subscribers_gained, 0) - coalesce(subscribers_lost, 0) AS BIGINT)
     AS net_subscribers,
-  {_r("CASE WHEN coalesce(views, 0) > 0 THEN (coalesce(comments,0) + coalesce(likes,0) + coalesce(shares,0)) / coalesce(views, 0) * 100.0 ELSE 0 END", 2)}
+  {sql_hround("CASE WHEN coalesce(views, 0) > 0 THEN (coalesce(comments,0) + coalesce(likes,0) + coalesce(shares,0)) / coalesce(views, 0) * 100.0 ELSE 0 END", 2)}
     AS engagement_pct,
-  {_r("CASE WHEN coalesce(views, 0) > 0 THEN coalesce(estimated_revenue, 0) / coalesce(views, 0) ELSE 0 END", 6)}
+  {sql_hround("CASE WHEN coalesce(views, 0) > 0 THEN coalesce(estimated_revenue, 0) / coalesce(views, 0) ELSE 0 END", 6)}
     AS cpv,
-  {_r("CASE WHEN coalesce(views, 0) > 0 THEN coalesce(estimated_revenue, 0) / coalesce(views, 0) ELSE 0 END * 1000.0", 2)}
+  {sql_hround("CASE WHEN coalesce(views, 0) > 0 THEN coalesce(estimated_revenue, 0) / coalesce(views, 0) ELSE 0 END * 1000.0", 2)}
     AS rpm,
   CASE WHEN trim(coalesce(category, '')) = 'International News'
        THEN coalesce(show_name, '')

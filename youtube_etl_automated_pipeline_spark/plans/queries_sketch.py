@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from youtube_etl_automated_pipeline_spark.ext.textstats import (
+    NORMALIZED_SQL,
     WS_CLASS,
     md5_long,
     normalized_text,
@@ -31,14 +32,13 @@ CMS_WIDTH = 256
 HH_TOPK = 20
 TOP_TERMS = 3
 
-_NORM = f"lower(regexp_replace(trim(text), '{WS_CLASS}+', ' ', 'g'))"
 
 
 @query(
     oracle=f"""
 WITH terms AS (
   SELECT doc_id, term FROM (
-    SELECT doc_id, unnest(string_split_regex({_NORM}, '{WS_CLASS}+')) AS term
+    SELECT doc_id, unnest(string_split_regex({NORMALIZED_SQL}, '{WS_CLASS}+')) AS term
     FROM documents
   ) WHERE term <> ''
 ), tf AS (
@@ -185,7 +185,7 @@ VOCAB_MIN_COUNT = 5
     oracle=f"""
 WITH terms AS (
   SELECT doc_id, term FROM (
-    SELECT doc_id, unnest(string_split_regex({_NORM}, '{WS_CLASS}+')) AS term
+    SELECT doc_id, unnest(string_split_regex({NORMALIZED_SQL}, '{WS_CLASS}+')) AS term
     FROM documents
   ) WHERE term <> ''
 ), counts AS (

@@ -687,7 +687,7 @@ def compaction_bin_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     views; the Spark side computes the same census from the real
     ``_metadata`` column and generalizes to many files per table —
     the multi-file packing path is exercised by
-    ``tests/test_engine5e.py`` on a multi-file fixture.
+    ``tests/test_sources.py`` on a multi-file fixture.
     """
     base = sf_dir.rstrip("/")
     files = file_census(

@@ -1771,7 +1771,7 @@ def preference_bradley_terry_distributed(
     per-round in-engine aggregation, applied to a keyed weight
     RELATION instead of a scalar model row). Same duel log, same
     integer fixed point, same oracle as ``preference_bradley_terry``
-    — `tests/test_engine6.py` asserts the two queries are row-identical.
+    — `tests/test_stats.py` asserts the two queries are row-identical.
 
     Each MM round w_i <- W_i*S // sum_j (N_ij*S // (w_i + w_j)) is:
     games ⋈ w on i ⋈ w on j (both joins broadcast the ≤entities-row
@@ -2027,7 +2027,7 @@ def exact_median_two_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups x MED_BUCKETS no matter how heavy-tailed the value column —
     a 100x corpus with a 10^15 value span costs the same bucket rows
     as cents-bounded order totals (range-invariance pinned in
-    tests/test_engine6.py on a synthetic 10^15-span column).
+    tests/test_stats.py on a synthetic 10^15-span column).
 
     Rounds (each map-side combinable; all-integer arithmetic):
     0. per-group (min, max, n) — locates the range and the lower-median

@@ -9,6 +9,8 @@ batch aggregation.
 from __future__ import annotations
 
 import math as _math
+import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -352,6 +354,25 @@ def _cdc_ops(orders: DataFrame) -> DataFrame:
     return u1.unionByName(d).unionByName(i).unionByName(u2)
 
 
+def _write_batch_files(df: DataFrame, fixture: str, t0: float) -> None:
+    """Write ``df`` split by its int ``batch`` column (0, 1, 2) as the
+    stream source files ``fixture/src/batch_{b}.parquet`` — one Spark
+    job, one file per batch (``partitionBy`` under ``coalesce(1)``;
+    the batch column itself is not stored) — each with mtime
+    ``t0 + 10 * b``: the file-stream source's arrival order."""
+    stage = os.path.join(fixture, "stage")
+    src = os.path.join(fixture, "src")
+    df.coalesce(1).write.partitionBy("batch").parquet(stage)
+    os.makedirs(src)
+    for b in range(3):
+        part_dir = os.path.join(stage, f"batch={b}")
+        part = next(f for f in os.listdir(part_dir) if f.startswith("part-"))
+        dst = os.path.join(src, f"batch_{b}.parquet")
+        shutil.move(os.path.join(part_dir, part), dst)
+        os.utime(dst, (t0 + 10 * b, t0 + 10 * b))
+    shutil.rmtree(stage)
+
+
 # Twin of streaming_merge_cdc: same pure-function CDC derivation
 # from o_orderkey, global keep-last-by-seq, tombstones dropped at
 # read time. Batch splitting is irrelevant by construction (the
@@ -393,8 +414,6 @@ def streaming_merge_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot (streaming/merge.py: keep-last-by-seq, tombstones
     retained so the result is batch-split-independent and retries are
     no-ops). Gate output = live rows of the final state."""
-    import os
-    import shutil
     import time
 
     from youtube_etl_automated_pipeline_spark.streaming.merge import (
@@ -407,7 +426,7 @@ def streaming_merge_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf_tag = os.path.basename(os.path.normpath(sf_dir))
     base_dir = os.path.join("/tmp/spark_graft_cdc", sf_tag)
     # Fixture memoization: the CDC source files and the seeded base
-    # snapshot are pure functions of sf_dir — build them ONCE (4 Spark
+    # snapshot are pure functions of sf_dir — build them ONCE (2 Spark
     # write jobs), then each invocation only file-copies the snapshot
     # into a fresh per-run state dir. What re-runs per invocation is
     # exactly the operator under test: the 3-micro-batch MERGE stream
@@ -417,7 +436,6 @@ def streaming_merge_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_state = os.path.join(fixture, "base_state")
     if not os.path.exists(os.path.join(fixture, "_READY")):
         shutil.rmtree(fixture, ignore_errors=True)
-        os.makedirs(src)
         orders = load_table(spark, sf_dir, "orders")
         base = orders.select(
             F.col("o_orderkey").alias("key"),
@@ -426,19 +444,7 @@ def streaming_merge_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0).cast("long").alias("seq"),
         )
         base.write.mode("overwrite").parquet(base_state)
-        ops = _cdc_ops(orders)
-        t0 = time.time() - 300
-        for b in range(3):
-            stage = os.path.join(fixture, f"stage{b}")
-            ops.filter(F.col("batch") == b).drop("batch").coalesce(1).write.parquet(
-                stage
-            )
-            part = next(f for f in os.listdir(stage) if f.startswith("part-"))
-            dst = os.path.join(src, f"batch_{b}.parquet")
-            shutil.move(os.path.join(stage, part), dst)
-            shutil.rmtree(stage)
-            # deterministic arrival order
-            os.utime(dst, (t0 + 10 * b, t0 + 10 * b))
+        _write_batch_files(_cdc_ops(orders), fixture, time.time() - 300)
         open(os.path.join(fixture, "_READY"), "w").close()
 
     # per-run state on tmpfs (r08): the 3-batch MERGE rewrites the
@@ -478,9 +484,6 @@ def streaming_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     double-count) → compaction folds the log → the view equals the
     full batch aggregate (the oracle). The complement of
     streaming_merge_cdc: additive state, not keyed latest-state."""
-    import os
-    import shutil
-
     from youtube_etl_automated_pipeline_spark.streaming.aggstate import (
         compact,
         read_view,
@@ -496,18 +499,13 @@ def streaming_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(fixture, "src")
     if not os.path.exists(os.path.join(fixture, "_READY")):
         shutil.rmtree(fixture, ignore_errors=True)
-        os.makedirs(src)
         ev = load_table(spark, sf_dir, "events").select(
-            "event_id", "event_type", "value"
+            "event_id",
+            "event_type",
+            "value",
+            (F.col("event_id") % 3).cast("int").alias("batch"),
         )
-        for b in range(3):
-            stage = os.path.join(fixture, f"stage{b}")
-            ev.filter(F.col("event_id") % 3 == b).coalesce(1).write.parquet(stage)
-            part = next(f for f in os.listdir(stage) if f.startswith("part-"))
-            dst = os.path.join(src, f"batch_{b}.parquet")
-            shutil.move(os.path.join(stage, part), dst)
-            shutil.rmtree(stage)
-            os.utime(dst, (1_000_000 + 10 * b, 1_000_000 + 10 * b))
+        _write_batch_files(ev, fixture, 1_000_000)
         open(os.path.join(fixture, "_READY"), "w").close()
 
     from youtube_etl_automated_pipeline_spark.session import fast_scratch_dir
@@ -1877,7 +1875,7 @@ def streaming_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE's equi-join and a recursion has no identity without a key;
     the 2-batch
     restart == one-shot == batch-twin identity is pinned in
-    tests/test_engine8.py).
+    tests/test_streaming.py).
 
     Scale: state is ONE 2-int row per user (watermark-free); each
     batch's work is one state-partition shuffle plus an O(rows)
@@ -1920,7 +1918,7 @@ def streaming_funnel_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     string across micro-batches and every batch re-scans it with the
     same unique-extent pattern, so any order-respecting batch split
     equals the one-shot scan (2-batch restart == one-shot == batch
-    twin pinned in tests/test_engine8.py). Shares the batch twin's
+    twin pinned in tests/test_streaming.py). Shares the batch twin's
     oracle verbatim.
 
     Scale: state is one string per user (per-user-activity bounded —

@@ -222,40 +222,6 @@ def stream_state_partitions(spark, n: int | str | None = None):
         yield
 
 
-def tws_state_partitions() -> int:
-    """State width for transformWithStateInPandas queries: wider than
-    the generic streaming default because each state partition runs a
-    real Python worker doing per-key compute AND opens its own
-    RocksDB instance — both parallelize with width. Default tracks
-    the session's cores (half of them, floor 8: r08 width sweep at
-    sf0.1 measured warm 2.9-3.5 s at 16, 3.5 s at 8, 4.8-5.2 s at 2
-    for tws_user_peaks on a 32-core local master), so a bigger
-    machine widens automatically; a real deployment still pins
-    SPARK_GRAFT_TWS_STATE_PARTITIONS before the first checkpoint
-    commit (the sticky-width contract).
-
-    MIGRATION HAZARD (r08 advice): the default changed from a fixed 8
-    to max(8, cores//2), so the same code now computes a DIFFERENT
-    width per host. All repo call sites create ephemeral per-run
-    checkpoints, so nothing here can break — but any external durable
-    transformWithState checkpoint committed under the old fixed-8
-    default that is reopened on a >16-core machine will find the
-    session conf disagreeing with the checkpoint. Spark resolves this
-    itself (the checkpointed width is sticky and silently wins — see
-    stream_state_partitions' MIGRATION note and
-    test_checkpoint_state_width_is_sticky), so restores stay correct
-    at the old width; pin the env var if you need the widths to
-    match across hosts."""
-    env = os.environ.get("SPARK_GRAFT_TWS_STATE_PARTITIONS")
-    if env is not None:
-        return int(env)
-    from youtube_etl_automated_pipeline_spark.session import (
-        default_parallelism,
-    )
-
-    return max(8, default_parallelism() // 2)
-
-
 _QUIET_MARKER = "_graft_state_server_quieted"
 
 
@@ -285,9 +251,18 @@ def quiet_state_server_logs(spark) -> None:
 @contextmanager
 def tws_state_posture(spark):
     """The state posture of a transformWithState query: the RocksDB
-    state store provider (the TWS operator requires it), the
-    ``tws_state_partitions()`` width and a quiet state server log. On
-    exit every conf is restored as it was, or unset if it was unset.
+    state store provider (the TWS operator requires it), one state
+    partition per core of the session (``defaultParallelism``) and a
+    quiet state server log. On exit every conf is restored as it was,
+    or unset if it was unset.
+
+    The width is read off the session, not inherited from
+    ``spark.sql.shuffle.partitions`` (Spark's default there is 200):
+    each state partition runs a Python worker whose task carries a
+    fixed cost of about 0.7 s per batch (measured on a 4-core local
+    master), so one wave of tasks across the cores is the floor, and a
+    wider state runs a second wave. A checkpoint keeps the width of
+    its first commit (test_checkpoint_state_width_is_sticky).
 
     Worker-side ``google.protobuf`` is not wired here: a PythonFunction
     snapshots ``sc.environment`` and the shipped includes when the plan
@@ -301,7 +276,9 @@ def tws_state_posture(spark):
                 "org.apache.spark.sql.execution.streaming.state."
                 "RocksDBStateStoreProvider"
             ),
-            "spark.sql.shuffle.partitions": str(tws_state_partitions()),
+            "spark.sql.shuffle.partitions": str(
+                spark.sparkContext.defaultParallelism
+            ),
         },
     ):
         yield

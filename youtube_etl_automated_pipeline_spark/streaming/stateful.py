@@ -22,6 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
 from youtube_etl_automated_pipeline_spark.session import ensure_protobuf_on_session
 
@@ -91,10 +92,69 @@ def stateful_user_stats(events: DataFrame) -> DataFrame:
 # operator runs END-TO-END: tests/test_streaming.py executes it and
 # `streaming_tws_user_peaks` is a full oracle-gated driver query.
 
+TWS_NULL_KEY = -1  # sentinel grouping key for NULL user_id; user ids
+# are nonnegative in the data model so -1 is unoccupied.
+#
+# WHY A SENTINEL IS MANDATORY for transformWithStateInPandas (round 8,
+# found by the streaming null-parity sweep): a NULL grouping key is
+# not rejected — it SILENTLY CORRUPTS. Measured on Spark 4.1: rows
+# with NULL user_id were both merged into an unrelated live user's
+# state (inflating that user's counts by exactly the null-row census)
+# AND emitted as separate null-keyed rows — double-counted and
+# misattributed at once. applyInPandasWithState handles null keys
+# correctly (streaming_stateful_user_stats is parity-green); only the
+# TWS path is affected, so _transform_with_state quarantines the null
+# key at entry and restores it on the way out.
+
+
+def _transform_with_state(
+    events: DataFrame,
+    processor: StatefulProcessor,
+    schema: str,
+    *cols,
+    mode: str = "Update",
+    time_mode: str = "None",
+) -> DataFrame:
+    """Group ``events`` projected to ``cols`` by user_id through
+    ``processor``. A NULL user_id is pinned to TWS_NULL_KEY before the
+    groupBy and mapped back to NULL in the output, so the output
+    contract (and the batch/oracle twin, which keeps a NULL group) is
+    unchanged. Wires worker-side protobuf first: the TWS
+    PythonFunction snapshots the session's worker environment when it
+    is built, not when the query starts."""
+    ensure_protobuf_on_session(events.sparkSession)
+    keyed = events.select(
+        F.coalesce("user_id", F.lit(TWS_NULL_KEY)).alias("user_id"), *cols
+    )
+    out = keyed.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=processor,
+        outputStructType=schema,
+        outputMode=mode,
+        timeMode=time_mode,
+    )
+    if "user_id" not in out.columns:
+        return out
+    return out.withColumn(
+        "user_id",
+        F.when(F.col("user_id") == TWS_NULL_KEY, F.lit(None).cast("bigint"))
+        .otherwise(F.col("user_id")),
+    )
+
+
+def _sorted_arrivals(rows) -> pd.DataFrame | None:
+    """One key's batch rows in (us, event_id) order, or None when the
+    batch holds none — the arrival order the sequential processors
+    fold in."""
+    pdfs = [p for p in rows if len(p)]
+    if not pdfs:
+        return None
+    return pd.concat(pdfs).sort_values(["us", "event_id"])
+
+
 TWS_OUTPUT_SCHEMA = "user_id bigint, n_events bigint, peak_cents bigint"
 
 
-class UserPeakProcessor:
+class UserPeakProcessor(StatefulProcessor):
     """Running per-user event count + peak value (exact integer
     cents). Deterministic regardless of batch split: count is
     additive, max is associative."""
@@ -123,80 +183,12 @@ class UserPeakProcessor:
             columns=["user_id", "n_events", "peak_cents"],
         )
 
-    def close(self) -> None:
-        pass
-
-
-def _tws_processor():
-    """Build the StatefulProcessor subclass lazily: the base class
-    import must not break environments without the Spark 4 API."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    # mixin first: the concrete methods must precede the ABC in the
-    # MRO or they do not override its abstract stubs
-    return type(
-        "UserPeakStatefulProcessor", (UserPeakProcessor, StatefulProcessor), {}
-    )()
-
-
-TWS_NULL_KEY = -1  # sentinel grouping key for NULL user_id; user ids
-# are nonnegative in the data model so -1 is unoccupied.
-#
-# WHY A SENTINEL IS MANDATORY for transformWithStateInPandas (round 8,
-# found by the streaming null-parity sweep): a NULL grouping key is
-# not rejected — it SILENTLY CORRUPTS. Measured on Spark 4.1: rows
-# with NULL user_id were both merged into an unrelated live user's
-# state (inflating that user's counts by exactly the null-row census)
-# AND emitted as separate null-keyed rows — double-counted and
-# misattributed at once. applyInPandasWithState handles null keys
-# correctly (streaming_stateful_user_stats is parity-green); only the
-# TWS path is affected, so every TWS wrapper below quarantines the
-# null key at entry and restores it on the way out.
-
-
-def _null_safe_user_key(events: DataFrame, *cols) -> DataFrame:
-    """Pin NULL user_id to TWS_NULL_KEY before a TWS groupBy."""
-    return events.select(
-        F.coalesce("user_id", F.lit(TWS_NULL_KEY)).alias("user_id"), *cols
-    )
-
-
-def _restore_null_user_key(out: DataFrame) -> DataFrame:
-    """Map the sentinel back to NULL so the output contract (and the
-    batch/oracle twin, which keeps a NULL group) is unchanged."""
-    return out.withColumn(
-        "user_id",
-        F.when(F.col("user_id") == TWS_NULL_KEY, F.lit(None).cast("bigint"))
-        .otherwise(F.col("user_id")),
-    )
-
-
-def _transform_with_state(
-    keyed: DataFrame,
-    processor,
-    schema: str,
-    mode: str = "Update",
-    time_mode: str = "None",
-) -> DataFrame:
-    """Group ``keyed`` by user_id through ``processor``. Wires
-    worker-side protobuf first: the TWS PythonFunction snapshots the
-    session's worker environment when it is built, not when the query
-    starts."""
-    ensure_protobuf_on_session(keyed.sparkSession)
-    return keyed.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=processor,
-        outputStructType=schema,
-        outputMode=mode,
-        timeMode=time_mode,
-    )
-
 
 def tws_user_peaks(events: DataFrame) -> DataFrame:
     """Apply the transformWithStateInPandas peak tracker to a
     STREAMING events DataFrame (update mode, no event-time timers)."""
-    keyed = _null_safe_user_key(events, F.col("value"))
-    return _restore_null_user_key(
-        _transform_with_state(keyed, _tws_processor(), TWS_OUTPUT_SCHEMA)
+    return _transform_with_state(
+        events, UserPeakProcessor(), TWS_OUTPUT_SCHEMA, F.col("value")
     )
 
 
@@ -204,7 +196,7 @@ TWS_TOPK = 3
 TWS_TOPK_SCHEMA = "user_id bigint, n_seen bigint, top_cents string"
 
 
-class UserTopKProcessor:
+class UserTopKProcessor(StatefulProcessor):
     """Per-user top-K event values (exact integer cents) held in
     ListState — the second TWS state flavor next to the peak
     tracker's ValueState. The list stores the current top-K sorted
@@ -244,31 +236,19 @@ class UserTopKProcessor:
             columns=["user_id", "n_seen", "top_cents"],
         )
 
-    def close(self) -> None:
-        pass
-
-
-def _tws_topk_processor():
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    return type(
-        "UserTopKStatefulProcessor", (UserTopKProcessor, StatefulProcessor), {}
-    )()
-
 
 def tws_user_topk(events: DataFrame) -> DataFrame:
     """Apply the ListState top-K tracker to a STREAMING events
     DataFrame (update mode)."""
-    keyed = _null_safe_user_key(events, F.col("value"))
-    return _restore_null_user_key(
-        _transform_with_state(keyed, _tws_topk_processor(), TWS_TOPK_SCHEMA)
+    return _transform_with_state(
+        events, UserTopKProcessor(), TWS_TOPK_SCHEMA, F.col("value")
     )
 
 
 TWS_TYPEMAP_SCHEMA = "user_id bigint, event_type string, n bigint"
 
 
-class UserTypeCountProcessor:
+class UserTypeCountProcessor(StatefulProcessor):
     """Per-user per-event-type running counts in MapState — the third
     TWS state flavor (ValueState: peak; ListState: top-K; MapState:
     keyed sub-counters). Each batch increments the touched types'
@@ -297,19 +277,6 @@ class UserTypeCountProcessor:
             out.append((key[0], t, n))
         yield pd.DataFrame(out, columns=["user_id", "event_type", "n"])
 
-    def close(self) -> None:
-        pass
-
-
-def _tws_typemap_processor():
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    return type(
-        "UserTypeCountStatefulProcessor",
-        (UserTypeCountProcessor, StatefulProcessor),
-        {},
-    )()
-
 
 def tws_user_type_counts(events: DataFrame) -> DataFrame:
     """Apply the MapState per-type counter to a STREAMING events
@@ -320,13 +287,11 @@ def tws_user_type_counts(events: DataFrame) -> DataFrame:
     otherwise silently DROP the NaN rows — the sentinel keeps dirty
     rows counted, identically in both the streaming state path and
     the batch/oracle path (streaming null-parity gate pins this)."""
-    keyed = _null_safe_user_key(
-        events, F.coalesce("event_type", F.lit("<null>")).alias("event_type")
-    )
-    return _restore_null_user_key(
-        _transform_with_state(
-            keyed, _tws_typemap_processor(), TWS_TYPEMAP_SCHEMA
-        )
+    return _transform_with_state(
+        events,
+        UserTypeCountProcessor(),
+        TWS_TYPEMAP_SCHEMA,
+        F.coalesce("event_type", F.lit("<null>")).alias("event_type"),
     )
 
 
@@ -334,7 +299,7 @@ TWS_INACTIVE_AFTER_MS = 2 * 3600 * 1000  # inactivity horizon: 2h
 TWS_INACTIVE_SCHEMA = "user_id bigint, n_events bigint, last_ms bigint"
 
 
-class InactiveUserProcessor:
+class InactiveUserProcessor(StatefulProcessor):
     """EVENT-TIME TIMERS: flag users inactive for TWS_INACTIVE_AFTER
     after their last event. Each batch advances the per-user
     (last_ms, n) ValueState and re-arms one timer at
@@ -375,32 +340,18 @@ class InactiveUserProcessor:
             columns=["user_id", "n_events", "last_ms"],
         )
 
-    def close(self) -> None:
-        pass
-
-
-def _tws_inactive_processor():
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    return type(
-        "InactiveUserStatefulProcessor",
-        (InactiveUserProcessor, StatefulProcessor),
-        {},
-    )()
-
 
 def tws_inactive_users(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Apply the event-time-timer inactivity flagger to a STREAMING
     events DataFrame (append mode — rows come from timer firings)."""
-    keyed = _null_safe_user_key(
+    return _transform_with_state(
         events.withWatermark("ts", watermark),
+        InactiveUserProcessor(),
+        TWS_INACTIVE_SCHEMA,
         F.unix_micros("ts").alias("us"),
         F.col("ts"),
-    )
-    return _restore_null_user_key(
-        _transform_with_state(
-            keyed, _tws_inactive_processor(), TWS_INACTIVE_SCHEMA, "Append", "EventTime"
-        )
+        mode="Append",
+        time_mode="EventTime",
     )
 
 
@@ -411,7 +362,7 @@ TWS_TRANSITION_SCHEMA = "from_type string, to_type string, n bigint"
 _ETYPE_NULL = "\x00null\x00"
 
 
-class TransitionDeltaProcessor:
+class TransitionDeltaProcessor(StatefulProcessor):
     """Per-user event-transition deltas with a ValueState boundary:
     the state remembers the user's LAST (ts_us, event_id, event_type);
     each batch sorts its rows by (ts_us, event_id), stitches the
@@ -429,10 +380,9 @@ class TransitionDeltaProcessor:
         )
 
     def handleInputRows(self, key, rows, timerValues):
-        pdfs = [p for p in rows if len(p)]
-        if not pdfs:
+        pdf = _sorted_arrivals(rows)
+        if pdf is None:
             return
-        pdf = pd.concat(pdfs).sort_values(["us", "event_id"])
         types = [
             None if t is None or (isinstance(t, float) and np.isnan(t)) else str(t)
             for t in pdf["event_type"].tolist()
@@ -462,39 +412,25 @@ class TransitionDeltaProcessor:
                 columns=["from_type", "to_type", "n"],
             )
 
-    def close(self) -> None:
-        pass
-
-
-def _tws_transition_processor():
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    return type(
-        "TransitionDeltaStatefulProcessor",
-        (TransitionDeltaProcessor, StatefulProcessor),
-        {},
-    )()
-
 
 def tws_transition_deltas(events: DataFrame) -> DataFrame:
     """Apply the transition-delta processor to a STREAMING events
-    DataFrame (update mode). Same null-key quarantine as every TWS
-    wrapper; user_id is not re-emitted (deltas aggregate globally)."""
-    keyed = _null_safe_user_key(
+    DataFrame (update mode); user_id is not re-emitted (deltas
+    aggregate globally)."""
+    return _transform_with_state(
         events,
+        TransitionDeltaProcessor(),
+        TWS_TRANSITION_SCHEMA,
         F.unix_micros("ts").alias("us"),
         F.col("event_id"),
         F.col("event_type"),
-    )
-    return _transform_with_state(
-        keyed, _tws_transition_processor(), TWS_TRANSITION_SCHEMA
     )
 
 
 TWS_EWMA_SCHEMA = "user_id bigint, n_events bigint, ewma_cents bigint"
 
 
-class EwmaStateProcessor:
+class EwmaStateProcessor(StatefulProcessor):
     """The ewma_user_value integer recursion (e_0 = v_0; e_i =
     (3*e_{i-1} + v_i) // 4 on cents) carried through a TWS ValueState:
     state = (ewma_cents, n_events). Each batch sorts its arrivals by
@@ -511,10 +447,9 @@ class EwmaStateProcessor:
         )
 
     def handleInputRows(self, key, rows, timerValues):
-        pdfs = [p for p in rows if len(p)]
-        if not pdfs:
+        pdf = _sorted_arrivals(rows)
+        if pdf is None:
             return
-        pdf = pd.concat(pdfs).sort_values(["us", "event_id"])
         cents = np.floor(pdf["value"].to_numpy() * 100.0 + 0.5).astype(
             "int64"
         )
@@ -537,17 +472,6 @@ class EwmaStateProcessor:
             }
         )
 
-    def close(self) -> None:
-        pass
-
-
-def _tws_ewma_processor():
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    return type(
-        "EwmaStatefulProcessor", (EwmaStateProcessor, StatefulProcessor), {}
-    )()
-
 
 def tws_ewma_user_value(events: DataFrame) -> DataFrame:
     """Apply the EWMA recursion processor to a STREAMING events
@@ -556,18 +480,16 @@ def tws_ewma_user_value(events: DataFrame) -> DataFrame:
     a sequential recursion is undefined without a sequence identity,
     so NULL user_id rows are excluded on BOTH sides (the oracle adds
     the same predicate — a NULL group cannot thread a recursive CTE's
-    equi-join). The sentinel quarantine still wraps the groupBy as
-    the engine-wide TWS entry contract (vacuously, post-filter)."""
-    keyed = _null_safe_user_key(
+    equi-join)."""
+    return _transform_with_state(
         events.filter(
             F.col("value").isNotNull() & F.col("user_id").isNotNull()
         ),
+        EwmaStateProcessor(),
+        TWS_EWMA_SCHEMA,
         F.unix_micros("ts").alias("us"),
         F.col("event_id"),
         F.col("value"),
-    )
-    return _restore_null_user_key(
-        _transform_with_state(keyed, _tws_ewma_processor(), TWS_EWMA_SCHEMA)
     )
 
 
@@ -577,7 +499,7 @@ TWS_FUNNEL_SCHEMA = (
 _FUNNEL_PATTERN = "V[CE]*P"
 
 
-class FunnelSeqProcessor:
+class FunnelSeqProcessor(StatefulProcessor):
     """The sequence_funnel_regex census maintained incrementally: a
     ValueState holds each user's accumulated symbol string; every
     micro-batch appends its (ts, event_id)-sorted symbols and re-scans
@@ -595,10 +517,9 @@ class FunnelSeqProcessor:
     def handleInputRows(self, key, rows, timerValues):
         import re
 
-        pdfs = [p for p in rows if len(p)]
-        if not pdfs:
+        pdf = _sorted_arrivals(rows)
+        if pdf is None:
             return
-        pdf = pd.concat(pdfs).sort_values(["us", "event_id"])
         add = "".join(str(s)[:1].upper() for s in pdf["sym"].tolist())
         st = self._seq.get()  # None when absent: no exists() probe
         prev = "" if st is None else st[0]
@@ -614,37 +535,21 @@ class FunnelSeqProcessor:
             }
         )
 
-    def close(self) -> None:
-        pass
-
-
-def _tws_funnel_processor():
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    return type(
-        "FunnelSeqStatefulProcessor",
-        (FunnelSeqProcessor, StatefulProcessor),
-        {},
-    )()
-
 
 def tws_funnel_seq(events: DataFrame) -> DataFrame:
     """Apply the funnel-sequence processor to a STREAMING events
     DataFrame (update mode). The batch twin's participation filter
     (user_id/ts/event_type all non-null — an event without identity,
-    time or type has no place in a sequence) applies BEFORE keying;
-    the sentinel quarantine wraps the groupBy as the engine-wide TWS
-    entry contract (vacuously, post-filter)."""
-    keyed = _null_safe_user_key(
+    time or type has no place in a sequence) applies BEFORE keying."""
+    return _transform_with_state(
         events.filter(
             F.col("user_id").isNotNull()
             & F.col("ts").isNotNull()
             & F.col("event_type").isNotNull()
         ),
+        FunnelSeqProcessor(),
+        TWS_FUNNEL_SCHEMA,
         F.unix_micros("ts").alias("us"),
         F.col("event_id"),
         F.expr("upper(substring(event_type, 1, 1))").alias("sym"),
-    )
-    return _restore_null_user_key(
-        _transform_with_state(keyed, _tws_funnel_processor(), TWS_FUNNEL_SCHEMA)
     )
