@@ -28,8 +28,9 @@ etl:
 
 # fast local check of the streaming runner: state postures, the
 # foreachBatch driver and the keep-last merge, TWS restarts, the
-# oracle parity of the five benchmarked streaming queries and of every
-# other transformWithState query, and the TWS null-parity cases
+# scratch root (fixture identity, dead-owner sweep), the oracle parity
+# of the five benchmarked streaming queries and of every other
+# transformWithState query, and the TWS null-parity cases
 STREAM_TESTS = test_foreach_batch_upsert_keep_last test_incremental_pipeline_equals_batch \
   test_tws_user_peaks_or_env_gate test_stream_state_posture_is_read_off_the_plan_and_restored \
   test_rocksdb_state_store_matches_default_provider test_checkpoint_state_width_is_sticky \
@@ -44,7 +45,7 @@ STREAM_GATES = streaming_tws_inactive_users streaming_merge_cdc streaming_stream
 STREAM_NULLS = streaming_tws_type_counts streaming_transition_matrix \
   streaming_ewma_user_value streaming_funnel_regex
 stream:
-	python -m pytest -q -p no:cacheprovider tests/test_streaming_merge.py \
+	python -m pytest -q -p no:cacheprovider tests/test_streaming_merge.py tests/test_scratch.py \
 	  $(addprefix tests/test_streaming.py::,$(STREAM_TESTS)) \
 	  "tests/test_sinks.py::test_flush_schema_mismatch_raises[upsert_batch]" \
 	  $(foreach q,$(STREAM_GATES),"tests/test_oracle_parity.py::test_query_matches_oracle[$(q)]") \

@@ -222,3 +222,42 @@ def test_keep_last_hot_key_pretruncates_before_shuffle(spark):
     )
     assert rows[0] == expect_hot
     assert len(rows) == updates.select("key").distinct().count()
+
+
+def test_bucketed_join_tables_are_per_input(spark, tmp_path):
+    """Two inputs with one directory name but different orders each
+    get their own bucketed tables: each rollup matches its own
+    oracle."""
+    import os
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from tests.oracle_compare import compare, duckdb_conn
+    from youtube_etl_automated_pipeline_spark.plans.queries_olap import (
+        bucketed_colocated_join_rollup,
+    )
+    from youtube_etl_automated_pipeline_spark.plans.registry import oracle_sql
+
+    a, b = str(tmp_path / "a" / "sf"), str(tmp_path / "b" / "sf")
+    shutil.copytree(SF_SMOKE, a)
+    shutil.copytree(SF_SMOKE, b)
+    orders = pq.read_table(os.path.join(SF_SMOKE, "orders.parquet"))
+    pq.write_table(
+        orders.filter(pc.equal(pc.bit_wise_and(orders["o_orderkey"], 1), 0)),
+        os.path.join(b, "orders.parquet"),
+    )
+    before = {t.name for t in spark.catalog.listTables()}
+    try:
+        for d in (a, b):
+            errors = compare(
+                bucketed_colocated_join_rollup(spark, d),
+                duckdb_conn(d),
+                oracle_sql()["bucketed_colocated_join_rollup"],
+            )
+            assert not errors, "; ".join(errors[:6])
+    finally:
+        for t in spark.catalog.listTables():
+            if t.name not in before:
+                spark.sql(f"DROP TABLE IF EXISTS {t.name}")

@@ -86,3 +86,33 @@ def test_leakage_split_differs_from_doc_keyed_split(spark):
         (b_doc < LS_TRAIN_PCT) != (b_cl < LS_TRAIN_PCT)
     ).count()
     assert diverging > 0
+
+
+def test_logreg_memo_follows_a_rewritten_documents_table(spark, tmp_path):
+    """The trained-weights and feature memos carry the documents
+    table's fingerprint: after the table is rewritten in place, the
+    calibration bins equal the oracle over the new table."""
+    import os
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from tests.oracle_compare import compare, duckdb_conn
+    from youtube_etl_automated_pipeline_spark.plans.queries_curation import (
+        logreg_calibration_bins,
+    )
+    from youtube_etl_automated_pipeline_spark.plans.registry import oracle_sql
+
+    d = str(tmp_path / "sf")
+    shutil.copytree(SF_SMOKE, d)
+    sql = oracle_sql()["logreg_calibration_bins"]
+    for rewrite in (False, True):
+        if rewrite:
+            docs = pq.read_table(os.path.join(d, "documents.parquet"))
+            pq.write_table(
+                docs.filter(pc.not_equal(pc.bit_wise_and(docs["doc_id"], 3), 0)),
+                os.path.join(d, "documents.parquet"),
+            )
+        errors = compare(logreg_calibration_bins(spark, d), duckdb_conn(d), sql)
+        assert not errors, "; ".join(errors[:6])

@@ -972,101 +972,23 @@ def test_streaming_cms_equals_batch_twin(spark):
     assert got == want and len(got) > 0
 
 
-def test_streaming_transitions_restart_equals_oneshot_and_batch(
-    spark, tmp_path
-):
-    """Two micro-batches with a stop/restart between them must sum to
-    the one-shot census, which must equal the batch twin — the
-    boundary transition lives in ValueState and survives checkpoint
-    recovery."""
-    from youtube_etl_automated_pipeline_spark.plans.queries_analytics import (
-        event_transition_matrix,
-    )
+def _assert_restart_equals_oneshot_and_batch(spark, tmp_path, build, collect, batch):
+    """Events sorted by (ts, event_id) arrive as two files; a
+    foreachBatch TWS query built by ``build`` runs over the first,
+    stops, and restarts from its checkpoint over the second.
+    ``collect(rows, acc)`` folds one micro-batch's rows into the dict
+    ``acc``. The restarted result must equal a one-shot run over both
+    files, and that must equal ``batch()``, the batch twin in the same
+    shape."""
+    import pyarrow.compute as pc
+
     from youtube_etl_automated_pipeline_spark.streaming.incremental import (
         EVENTS_STREAM_SCHEMA,
         tws_state_posture,
-    )
-    from youtube_etl_automated_pipeline_spark.streaming.stateful import (
-        tws_transition_deltas,
     )
 
     tbl = pq.read_table(os.path.join(SF_SMOKE, "events.parquet"))
     # split by ts order so batch 2 is strictly later arrivals
-    import pyarrow.compute as pc
-
-    tbl = tbl.take(pc.sort_indices(tbl, sort_keys=[("ts", "ascending"), ("event_id", "ascending")]))
-    half = tbl.num_rows // 2
-    src = tmp_path / "events"
-    src.mkdir()
-    pq.write_table(tbl.slice(0, half), src / "a.parquet")
-
-    captured: list[dict] = []
-
-    def run(ckpt):
-        stream = (
-            spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-
-        def sink(batch_df, _bid):
-            for r in batch_df.collect():
-                captured.append(
-                    (r["from_type"], r["to_type"], int(r["n"]))
-                )
-
-        with tws_state_posture(spark):
-            q = (
-                tws_transition_deltas(stream)
-                .writeStream.foreachBatch(sink)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-    run(str(tmp_path / "ckpt"))
-    pq.write_table(tbl.slice(half), src / "b.parquet")
-    run(str(tmp_path / "ckpt"))  # RESTART: state recovers
-    from collections import Counter
-
-    incremental = Counter()
-    for a, b, n in captured:
-        incremental[(a, b)] += n
-
-    captured.clear()
-    run(str(tmp_path / "ckpt_ref"))  # one-shot over both files
-    oneshot = Counter()
-    for a, b, n in captured:
-        oneshot[(a, b)] += n
-
-    assert incremental == oneshot and len(oneshot) > 0
-    batch = {
-        (r["from_type"], r["to_type"]): r["n_transitions"]
-        for r in event_transition_matrix(spark, SF_SMOKE).collect()
-    }
-    assert dict(incremental) == batch
-
-
-def test_streaming_ewma_restart_equals_oneshot_and_batch(spark, tmp_path):
-    """Two micro-batches with a stop/restart between them must land on
-    the batch kernel's exact integer fixed point — the EWMA state
-    survives checkpoint recovery and folds later arrivals on top."""
-    from youtube_etl_automated_pipeline_spark.plans.queries_analytics import (
-        ewma_user_value,
-    )
-    from youtube_etl_automated_pipeline_spark.streaming.incremental import (
-        EVENTS_STREAM_SCHEMA,
-        tws_state_posture,
-    )
-    from youtube_etl_automated_pipeline_spark.streaming.stateful import (
-        tws_ewma_user_value,
-    )
-
-    tbl = pq.read_table(os.path.join(SF_SMOKE, "events.parquet"))
-    import pyarrow.compute as pc
-
     tbl = tbl.take(
         pc.sort_indices(
             tbl,
@@ -1078,7 +1000,7 @@ def test_streaming_ewma_restart_equals_oneshot_and_batch(spark, tmp_path):
     src.mkdir()
     pq.write_table(tbl.slice(0, half), src / "a.parquet")
 
-    latest: dict = {}
+    acc: dict = {}
 
     def run(ckpt):
         stream = (
@@ -1088,15 +1010,11 @@ def test_streaming_ewma_restart_equals_oneshot_and_batch(spark, tmp_path):
         )
 
         def sink(batch_df, _bid):
-            for r in batch_df.collect():
-                u = r["user_id"]
-                row = (int(r["n_events"]), int(r["ewma_cents"]))
-                if u not in latest or row[0] > latest[u][0]:
-                    latest[u] = row
+            collect(batch_df.collect(), acc)
 
         with tws_state_posture(spark):
             q = (
-                tws_ewma_user_value(stream)
+                build(stream)
                 .writeStream.foreachBatch(sink)
                 .outputMode("update")
                 .option("checkpointLocation", ckpt)
@@ -1108,18 +1026,83 @@ def test_streaming_ewma_restart_equals_oneshot_and_batch(spark, tmp_path):
     run(str(tmp_path / "ckpt"))
     pq.write_table(tbl.slice(half), src / "b.parquet")
     run(str(tmp_path / "ckpt"))  # RESTART: state recovers
-    incremental = dict(latest)
+    incremental = dict(acc)
 
-    latest.clear()
+    acc.clear()
     run(str(tmp_path / "ckpt_ref"))  # one-shot over both files
-    oneshot = dict(latest)
+    oneshot = dict(acc)
 
     assert incremental == oneshot and len(oneshot) > 0
-    batch = {
-        r["user_id"]: (int(r["n_events"]), int(r["ewma_cents"]))
-        for r in ewma_user_value(spark, SF_SMOKE).collect()
-    }
-    assert incremental == batch
+    assert incremental == batch()
+
+
+def _keep_longest(row):
+    """A collector keeping, per user, the row with the largest first
+    field (the state's event count or sequence length)."""
+
+    def collect(rows, acc):
+        for r in rows:
+            u, v = r["user_id"], row(r)
+            if u not in acc or v[0] > acc[u][0]:
+                acc[u] = v
+
+    return collect
+
+
+def test_streaming_transitions_restart_equals_oneshot_and_batch(
+    spark, tmp_path
+):
+    """Two micro-batches with a stop/restart between them must sum to
+    the one-shot census, which must equal the batch twin — the
+    boundary transition lives in ValueState and survives checkpoint
+    recovery."""
+    from youtube_etl_automated_pipeline_spark.plans.queries_analytics import (
+        event_transition_matrix,
+    )
+    from youtube_etl_automated_pipeline_spark.streaming.stateful import (
+        tws_transition_deltas,
+    )
+
+    def collect(rows, acc):
+        for r in rows:
+            k = (r["from_type"], r["to_type"])
+            acc[k] = acc.get(k, 0) + int(r["n"])
+
+    _assert_restart_equals_oneshot_and_batch(
+        spark,
+        tmp_path,
+        tws_transition_deltas,
+        collect,
+        lambda: {
+            (r["from_type"], r["to_type"]): r["n_transitions"]
+            for r in event_transition_matrix(spark, SF_SMOKE).collect()
+        },
+    )
+
+
+def test_streaming_ewma_restart_equals_oneshot_and_batch(spark, tmp_path):
+    """Two micro-batches with a stop/restart between them must land on
+    the batch kernel's exact integer fixed point — the EWMA state
+    survives checkpoint recovery and folds later arrivals on top."""
+    from youtube_etl_automated_pipeline_spark.plans.queries_analytics import (
+        ewma_user_value,
+    )
+    from youtube_etl_automated_pipeline_spark.streaming.stateful import (
+        tws_ewma_user_value,
+    )
+
+    def row(r):
+        return (int(r["n_events"]), int(r["ewma_cents"]))
+
+    _assert_restart_equals_oneshot_and_batch(
+        spark,
+        tmp_path,
+        tws_ewma_user_value,
+        _keep_longest(row),
+        lambda: {
+            r["user_id"]: row(r) for r in ewma_user_value(spark, SF_SMOKE).collect()
+        },
+    )
 
 
 def test_streaming_funnel_restart_equals_oneshot_and_batch(
@@ -1131,75 +1114,20 @@ def test_streaming_funnel_restart_equals_oneshot_and_batch(
     from youtube_etl_automated_pipeline_spark.plans.queries_analytics import (
         sequence_funnel_regex,
     )
-    from youtube_etl_automated_pipeline_spark.streaming.incremental import (
-        EVENTS_STREAM_SCHEMA,
-        tws_state_posture,
-    )
     from youtube_etl_automated_pipeline_spark.streaming.stateful import (
         tws_funnel_seq,
     )
 
-    tbl = pq.read_table(os.path.join(SF_SMOKE, "events.parquet"))
-    import pyarrow.compute as pc
+    def row(r):
+        return (int(r["seq_len"]), int(r["n_conversions"]), int(r["longest_run"]))
 
-    tbl = tbl.take(
-        pc.sort_indices(
-            tbl,
-            sort_keys=[("ts", "ascending"), ("event_id", "ascending")],
-        )
+    _assert_restart_equals_oneshot_and_batch(
+        spark,
+        tmp_path,
+        tws_funnel_seq,
+        _keep_longest(row),
+        lambda: {
+            r["user_id"]: row(r)
+            for r in sequence_funnel_regex(spark, SF_SMOKE).collect()
+        },
     )
-    half = tbl.num_rows // 2
-    src = tmp_path / "events"
-    src.mkdir()
-    pq.write_table(tbl.slice(0, half), src / "a.parquet")
-
-    latest: dict = {}
-
-    def run(ckpt):
-        stream = (
-            spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-
-        def sink(batch_df, _bid):
-            for r in batch_df.collect():
-                u = r["user_id"]
-                row = (
-                    int(r["seq_len"]),
-                    int(r["n_conversions"]),
-                    int(r["longest_run"]),
-                )
-                if u not in latest or row[0] > latest[u][0]:
-                    latest[u] = row
-
-        with tws_state_posture(spark):
-            q = (
-                tws_funnel_seq(stream)
-                .writeStream.foreachBatch(sink)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-    run(str(tmp_path / "ckpt"))
-    pq.write_table(tbl.slice(half), src / "b.parquet")
-    run(str(tmp_path / "ckpt"))  # RESTART: string state recovers
-    incremental = dict(latest)
-
-    latest.clear()
-    run(str(tmp_path / "ckpt_ref"))  # one-shot over both files
-    oneshot = dict(latest)
-
-    assert incremental == oneshot and len(oneshot) > 0
-    batch = {
-        r["user_id"]: (
-            int(r["seq_len"]),
-            int(r["n_conversions"]),
-            int(r["longest_run"]),
-        )
-        for r in sequence_funnel_regex(spark, SF_SMOKE).collect()
-    }
-    assert incremental == batch

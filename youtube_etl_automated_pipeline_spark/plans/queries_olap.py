@@ -5,8 +5,6 @@ the operator family Spark lacks as a built-in). Oracles inline.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -489,11 +487,13 @@ def bucketed_colocated_join_rollup(spark: SparkSession, sf_dir: str) -> DataFram
     layout for every repeated fact-fact join. The oracle computes the
     same rollup from the raw tables, proving the bucketed layout is
     content-lossless."""
+    from youtube_etl_automated_pipeline_spark.session import input_digest
     from youtube_etl_automated_pipeline_spark.sinks import write_bucketed
 
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    t_orders = f"bkt_orders_{sf_tag.replace('.', '_')}"
-    t_li = f"bkt_lineitem_{sf_tag.replace('.', '_')}"
+    # named by input path and table contents, as fixture_dir keys
+    tag = input_digest(sf_dir, ("orders", "lineitem"))
+    t_orders = f"bkt_orders_{tag}"
+    t_li = f"bkt_lineitem_{tag}"
     if not spark.catalog.tableExists(t_orders):
         write_bucketed(load_table(spark, sf_dir, "orders"), t_orders, "o_orderkey")
     if not spark.catalog.tableExists(t_li):

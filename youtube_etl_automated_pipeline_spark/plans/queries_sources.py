@@ -23,6 +23,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from youtube_etl_automated_pipeline_spark.plans.registry import query
+from youtube_etl_automated_pipeline_spark.session import (
+    fixture_dir,
+    input_digest,
+    scratch_dir,
+)
 from youtube_etl_automated_pipeline_spark.sources import (
     materialize_format,
     read_jsonl,
@@ -301,10 +306,8 @@ def binaryfile_media_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from youtube_etl_automated_pipeline_spark.sources import load_table
 
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join("/tmp/spark_graft_formats", sf_tag, "media_bin")
-    if not os.path.exists(os.path.join(out, "_DONE")):
-        os.makedirs(out, exist_ok=True)
+    def build(out: str) -> None:
+        os.makedirs(out)
         rows = (
             load_table(spark, sf_dir, "documents")
             .filter(F.col("doc_id") < 40)
@@ -314,9 +317,8 @@ def binaryfile_media_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in rows:
             with open(os.path.join(out, f"{r.doc_id:05d}.bin"), "wb") as f:
                 f.write((r.text or "").encode("utf-8"))
-        with open(os.path.join(out, "_DONE"), "w") as f:
-            f.write("ok")
 
+    out = fixture_dir(sf_dir, "media_bin", build, ("documents",))
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.bin")
@@ -445,8 +447,7 @@ def api_sink_roundtrip_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     _register_sink(spark)
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    target = os.path.join("/tmp/spark_graft_formats", sf_tag, "events.apisink")
+    target = scratch_dir("events.apisink", input_digest(sf_dir))
     os.makedirs(target, exist_ok=True)
     ev = _lt(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
@@ -479,16 +480,14 @@ def csv_documents_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     type-coercion loss. At 100 TB: multiLine CSV is NOT splittable
     (one task per file) — this gate documents the cost; columnar
     formats remain the recommended interchange."""
-    import os as _os
-
     from youtube_etl_automated_pipeline_spark.sources import load_table
 
-    sf_tag = _os.path.basename(_os.path.normpath(sf_dir))
-    out = _os.path.join("/tmp/spark_graft_formats", sf_tag, "documents.csvdir")
-    if not _os.path.exists(_os.path.join(out, "_SUCCESS")):
-        load_table(spark, sf_dir, "documents").write.mode("overwrite").option(
+    def build(out: str) -> None:
+        load_table(spark, sf_dir, "documents").write.option(
             "header", True
         ).option("quoteAll", True).option("escape", '"').csv(out)
+
+    out = fixture_dir(sf_dir, "documents.csvdir", build, ("documents",))
     docs = (
         spark.read.schema(DOCUMENTS_SCHEMA)
         .option("header", True)
@@ -535,23 +534,18 @@ def parquet_schema_evolution_rollup(spark: SparkSession, sf_dir: str) -> DataFra
 
     from youtube_etl_automated_pipeline_spark.sources import load_table
 
-    sf_tag = _os.path.basename(_os.path.normpath(sf_dir))
-    root = _os.path.join(
-        "/tmp/spark_graft_formats", sf_tag, "orders_evolution"
-    )
-    old_dir = _os.path.join(root, "v0")
-    new_dir = _os.path.join(root, "v1")
-    if not (
-        _os.path.exists(_os.path.join(old_dir, "_SUCCESS"))
-        and _os.path.exists(_os.path.join(new_dir, "_SUCCESS"))
-    ):
+    def build(root: str) -> None:
         orders = load_table(spark, sf_dir, "orders")
         orders.filter(F.col("o_orderkey") % 2 == 0).select(
             "o_orderkey", "o_totalprice"
-        ).write.mode("overwrite").parquet(old_dir)
+        ).write.parquet(_os.path.join(root, "v0"))
         orders.filter(F.col("o_orderkey") % 2 == 1).select(
             "o_orderkey", "o_totalprice", "o_orderpriority"
-        ).write.mode("overwrite").parquet(new_dir)
+        ).write.parquet(_os.path.join(root, "v1"))
+
+    root = fixture_dir(sf_dir, "orders_evolution", build, ("orders",))
+    old_dir = _os.path.join(root, "v0")
+    new_dir = _os.path.join(root, "v1")
     merged = (
         spark.read.option("mergeSchema", "true").parquet(old_dir, new_dir)
     )

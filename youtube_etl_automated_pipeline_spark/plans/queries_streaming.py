@@ -28,6 +28,11 @@ from youtube_etl_automated_pipeline_spark.plans.queries_dedup_adv import (
 )
 from youtube_etl_automated_pipeline_spark.plans.queries_sketch import _CMS_SQL
 from youtube_etl_automated_pipeline_spark.plans.registry import query
+from youtube_etl_automated_pipeline_spark.session import (
+    fixture_dir,
+    input_digest,
+    scratch_dir,
+)
 from youtube_etl_automated_pipeline_spark.sources import load_table, load_wide
 from youtube_etl_automated_pipeline_spark.streaming.incremental import (
     read_events_stream,
@@ -423,19 +428,13 @@ def streaming_merge_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_cdc_merge_stream,
     )
 
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    base_dir = os.path.join("/tmp/spark_graft_cdc", sf_tag)
-    # Fixture memoization: the CDC source files and the seeded base
-    # snapshot are pure functions of sf_dir — build them ONCE (2 Spark
+    # The CDC source files and the seeded base snapshot are a pure
+    # function of the orders table: built once per process (2 Spark
     # write jobs), then each invocation only file-copies the snapshot
     # into a fresh per-run state dir. What re-runs per invocation is
     # exactly the operator under test: the 3-micro-batch MERGE stream
     # against fresh state + checkpoint.
-    fixture = os.path.join(base_dir, "fixture")
-    src = os.path.join(fixture, "src")
-    base_state = os.path.join(fixture, "base_state")
-    if not os.path.exists(os.path.join(fixture, "_READY")):
-        shutil.rmtree(fixture, ignore_errors=True)
+    def build(fixture: str) -> None:
         orders = load_table(spark, sf_dir, "orders")
         base = orders.select(
             F.col("o_orderkey").alias("key"),
@@ -443,18 +442,18 @@ def streaming_merge_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("S").alias("op"),
             F.lit(0).cast("long").alias("seq"),
         )
-        base.write.mode("overwrite").parquet(base_state)
+        base.write.parquet(os.path.join(fixture, "base_state"))
         _write_batch_files(_cdc_ops(orders), fixture, time.time() - 300)
-        open(os.path.join(fixture, "_READY"), "w").close()
 
-    # per-run state on tmpfs (r08): the 3-batch MERGE rewrites the
-    # state parquet three times — on ext4 /tmp that is pure fsync tax
+    fixture = fixture_dir(sf_dir, "cdc", build, ("orders",))
+    src = os.path.join(fixture, "src")
+
     run_dir = cdc_run_dir(sf_dir)
     shutil.rmtree(run_dir, ignore_errors=True)
     state = os.path.join(run_dir, "state")
     ckpt = os.path.join(run_dir, "ckpt")
     os.makedirs(run_dir)
-    shutil.copytree(base_state, state)
+    shutil.copytree(os.path.join(fixture, "base_state"), state)
 
     run_cdc_merge_stream(spark, src, state, ckpt)
     final = live_rows(read_state(spark, state))
@@ -490,15 +489,10 @@ def streaming_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_partials_stream,
     )
 
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    base_dir = os.path.join("/tmp/spark_graft_aggstate", sf_tag)
-    # same fixture-memoization posture as streaming_merge_cdc: the 3
-    # source files are a pure function of sf_dir, built once; state
+    # same posture as streaming_merge_cdc: the 3 source files are a
+    # pure function of the events table, built once per process; state
     # and checkpoint are fresh per invocation
-    fixture = os.path.join(base_dir, "fixture")
-    src = os.path.join(fixture, "src")
-    if not os.path.exists(os.path.join(fixture, "_READY")):
-        shutil.rmtree(fixture, ignore_errors=True)
+    def build(fixture: str) -> None:
         ev = load_table(spark, sf_dir, "events").select(
             "event_id",
             "event_type",
@@ -506,12 +500,10 @@ def streaming_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("event_id") % 3).cast("int").alias("batch"),
         )
         _write_batch_files(ev, fixture, 1_000_000)
-        open(os.path.join(fixture, "_READY"), "w").close()
 
-    from youtube_etl_automated_pipeline_spark.session import fast_scratch_dir
+    src = os.path.join(fixture_dir(sf_dir, "aggstate", build, ("events",)), "src")
 
-    # per-run partial-agg log + checkpoint on tmpfs (r08, see CDC)
-    run_dir = fast_scratch_dir("aggstate", sf_tag)
+    run_dir = scratch_dir("aggstate", input_digest(sf_dir))
     shutil.rmtree(run_dir, ignore_errors=True)
     state = os.path.join(run_dir, "state")
     ckpt = os.path.join(run_dir, "ckpt")
@@ -558,11 +550,8 @@ def ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from youtube_etl_automated_pipeline_spark.streaming.ivm import JoinView
 
-    from youtube_etl_automated_pipeline_spark.session import fast_scratch_dir
-
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    # accumulators + view log are rebuilt per run: tmpfs (r08, see CDC)
-    base = fast_scratch_dir("ivm", sf_tag)
+    # accumulators + view log are rebuilt per run
+    base = scratch_dir("ivm", input_digest(sf_dir))
     shutil.rmtree(base, ignore_errors=True)
     view = JoinView(
         a_dir=os.path.join(base, "orders_acc"),

@@ -11,7 +11,13 @@ DuckDB oracle.
 
 from __future__ import annotations
 
+import atexit
+import functools
+import hashlib
 import os
+import shutil
+import tempfile
+import time
 
 from pyspark.sql import SparkSession
 
@@ -20,107 +26,97 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-def _fast_tmp_dir() -> str | None:
-    """tmpfs home for EPHEMERAL JVM temp state — shuffle/local dirs and
-    the temporary streaming checkpoints every gate/bench streaming
-    query creates and deletes per run. On this host /tmp is disk-backed
-    ext4, so each streaming query pays checkpoint-WAL fsyncs to disk;
-    on tmpfs those vanish (measured: streaming_tumbling_window 1.27s ->
-    1.07s min-of-5 at sf0.1 — x ~30 streaming gates ≈ 6s of suite).
+_TMPFS = "/dev/shm"
 
-    Local-test posture ONLY, guarded accordingly: a real cluster puts
-    spark.local.dir on fast local disks and streaming checkpoints on
-    DURABLE shared storage (tmpfs checkpoints cannot survive a node
-    loss — fine here because gate checkpoints are created fresh and
-    deleted within one run; every recovery/restart-invariance test
-    pins its own explicit on-disk checkpoint dir). Returns None (use
-    defaults) when tmpfs is absent, unwritable, or short on headroom,
-    or when SPARK_GRAFT_NO_TMPFS=1. Stale temp from crashed runs is
-    RAM, so sweep anything older than 6h at session build."""
-    if os.environ.get("SPARK_GRAFT_NO_TMPFS") == "1":
-        return None
-    shm = "/dev/shm"
-    if not os.path.isdir(shm) or not os.access(shm, os.W_OK):
-        return None
+
+@functools.cache
+def scratch_root() -> str:
+    """This process's private (0700) scratch directory, removed at exit.
+    Everything the engine derives and throws away lives under it:
+    fixtures (``fixture_dir``), per-run state (``scratch_dir``), the
+    worker protobuf zip, and — on tmpfs — Spark's local dirs and the
+    temporary-* streaming checkpoints (``java.io.tmpdir``).
+
+    It sits on tmpfs when ``/dev/shm`` is writable with at least 8 GiB
+    free, else under ``tempfile.gettempdir()``. On a disk-backed /tmp each
+    streaming query pays checkpoint-WAL fsyncs that tmpfs does not
+    (measured: streaming_tumbling_window 1.27s -> 1.07s min-of-5 at
+    sf0.1). Local-test posture only: a cluster puts spark.local.dir on
+    local disks and checkpoints on durable storage; every restart test
+    pins its own on-disk checkpoint dir.
+
+    A crashed process leaves its directory behind, in RAM when on tmpfs,
+    so each new root sweeps its siblings (``_sweep_dead_owners``)."""
+    base = tempfile.gettempdir()
     try:
-        st = os.statvfs(shm)
+        st = os.statvfs(_TMPFS)
+        if os.access(_TMPFS, os.W_OK) and st.f_bavail * st.f_frsize >= (8 << 30):
+            base = _TMPFS
     except OSError:
-        return None
-    if st.f_bavail * st.f_frsize < (8 << 30):
-        return None
-    root = os.path.join(shm, "spark_graft_tmp")
-    os.makedirs(root, exist_ok=True)
-    import shutil
-    import time
-    import uuid
+        pass
+    parent = os.path.join(base, "spark_graft_tmp")
+    os.makedirs(parent, exist_ok=True)
+    _sweep_dead_owners(parent)
+    root = tempfile.mkdtemp(prefix=f"pid-{os.getpid()}-", dir=parent)
+    atexit.register(shutil.rmtree, root, True)
+    return root
 
-    # Each session gets its OWN pid-named subdir, and the sweep only
-    # reclaims subdirs whose owning pid is dead — never by mtime, which
-    # would delete the live shuffle/blockmgr dirs of a concurrent
-    # session older than the cutoff (blockmgr dir mtimes are set at
-    # creation and not refreshed while in use). Legacy un-named entries
-    # (pre round-8 layout) still fall back to a conservative 6h mtime
-    # sweep so old RAM is eventually reclaimed.
+
+def _sweep_dead_owners(parent: str) -> None:
+    """Remove the ``pid-<pid>-*`` entries of ``parent`` whose owning
+    process is gone — never by mtime, which would delete the live
+    shuffle dirs of a long-running concurrent session (blockmgr mtimes
+    are set at creation, not refreshed in use). Any other entry (an
+    older layout) goes once it is 6 h old."""
     cutoff = time.time() - 6 * 3600
-    for name in os.listdir(root):
-        p = os.path.join(root, name)
+    for name in os.listdir(parent):
+        p = os.path.join(parent, name)
         try:
             if name.startswith("pid-"):
-                owner = int(name.split("-")[1])
                 try:
-                    os.kill(owner, 0)  # signal 0: existence probe only
+                    os.kill(int(name.split("-")[1]), 0)  # existence probe only
                 except ProcessLookupError:
                     shutil.rmtree(p, ignore_errors=True)
                 except PermissionError:
-                    pass  # pid alive, owned by someone else: keep
-            elif name == "runstate":
-                # fast_scratch_dir's per-run state root. Its OWN mtime
-                # refreshes every time any run creates a child, so the
-                # generic rule below would never fire and crashed-run
-                # leaks would accumulate in RAM (r08 advice). Sweep
-                # one level down instead: per-run state is rebuilt on
-                # every invocation (callers rmtree+recreate at start),
-                # so a 6h-old child is a crashed run's leak, never a
-                # live one. The root itself is kept.
-                for sub in os.listdir(p):
-                    sp = os.path.join(p, sub)
-                    try:
-                        if os.path.getmtime(sp) < cutoff:
-                            shutil.rmtree(sp, ignore_errors=True)
-                    except OSError:
-                        pass
+                    pass  # alive, owned by someone else: keep
             elif os.path.getmtime(p) < cutoff:
                 shutil.rmtree(p, ignore_errors=True)
         except (OSError, ValueError):
             pass
-    d = os.path.join(root, f"pid-{os.getpid()}-{uuid.uuid4().hex[:8]}")
-    os.makedirs(d, exist_ok=True)
-    return d
 
 
-def fast_scratch_dir(*parts: str) -> str:
-    """Ephemeral PER-RUN state root on tmpfs when available, /tmp
-    otherwise: the incremental-view gate queries (CDC merge, agg-state
-    log, IVM join view) rebuild parquet state tables + checkpoints on
-    every invocation, and on this host /tmp is disk-backed ext4 — the
-    state rewrites pay fsyncs a warm cluster would not (r08; same
-    rationale as _fast_tmp_dir for shuffle/checkpoint temp). Returns a
-    path under the root; callers own create/cleanup exactly as they
-    did under /tmp. Durable FIXTURES (memoized per-sf inputs) stay on
-    /tmp — only state that is rebuilt per run belongs here."""
-    root = None
-    if os.environ.get("SPARK_GRAFT_NO_TMPFS") != "1":
-        shm = "/dev/shm"
-        if os.path.isdir(shm) and os.access(shm, os.W_OK):
-            try:
-                st = os.statvfs(shm)
-                if st.f_bavail * st.f_frsize >= (8 << 30):
-                    root = os.path.join(shm, "spark_graft_tmp", "runstate")
-            except OSError:
-                pass
-    if root is None:
-        root = "/tmp/spark_graft_runstate"
-    return os.path.join(root, *parts)
+def scratch_dir(*parts: str) -> str:
+    """A path for per-run state under this process's scratch root;
+    callers create and clear it."""
+    return os.path.join(scratch_root(), *parts)
+
+
+def input_digest(sf_dir: str, tables=()) -> str:
+    """Names what is derived from ``sf_dir``: its real path plus the
+    content fingerprint of each table in ``tables``, so two inputs with
+    one directory name never share a derivation and a table rewritten
+    in place gets a fresh one."""
+    from youtube_etl_automated_pipeline_spark.sources.readers import (
+        table_fingerprint,
+    )
+
+    ident = (os.path.realpath(sf_dir), [table_fingerprint(sf_dir, t) for t in tables])
+    return hashlib.md5(repr(ident).encode()).hexdigest()[:16]
+
+
+def fixture_dir(sf_dir: str, name: str, build, tables=()) -> str:
+    """The derived input ``name`` of ``sf_dir``, built once per process:
+    ``build(path)`` writes it to a temp sibling, published whole with
+    ``os.replace``, so a half-built fixture is never read. Keyed by
+    ``input_digest(sf_dir, tables)``; ``tables`` are the source tables
+    ``build`` reads."""
+    out = scratch_dir("fixtures", input_digest(sf_dir, tables), name)
+    if not os.path.isdir(out):
+        tmp = out + ".tmp"
+        shutil.rmtree(tmp, ignore_errors=True)  # left by a build that raised
+        build(tmp)
+        os.replace(tmp, out)
+    return out
 
 
 def ensure_protobuf() -> None:
@@ -170,7 +166,7 @@ def ensure_protobuf_on_session(spark: SparkSession) -> None:
     if getattr(sc, marker, False):
         return
     vendor = os.path.join(os.path.dirname(os.path.abspath(__file__)), "vendor")
-    zip_path = "/tmp/spark_graft_miniproto.zip"
+    zip_path = scratch_dir("vendor_protobuf.zip")
     if not os.path.exists(zip_path):
         tmp = zip_path + ".tmp"
         with zipfile.ZipFile(tmp, "w") as zf:
@@ -239,16 +235,16 @@ def get_spark(app_name: str = "youtube_etl_spark", shuffle_partitions: int | Non
         # ANSI mode would turn those into runtime errors.
         .config("spark.sql.ansi.enabled", "false")
     )
-    fast_tmp = _fast_tmp_dir()
-    if fast_tmp:
-        builder = builder.config("spark.local.dir", fast_tmp).config(
+    scratch = scratch_root()
+    if scratch.startswith(_TMPFS + os.sep):
+        builder = builder.config("spark.local.dir", scratch).config(
             # java.io.tmpdir is where ResolveWriteToStream creates the
             # temporary-* checkpoint dirs for queries without an
             # explicit checkpointLocation (all gate/bench streaming
             # queries); takes effect because the driver JVM has not
             # started yet at builder time
             "spark.driver.extraJavaOptions",
-            f"-Djava.io.tmpdir={fast_tmp}",
+            f"-Djava.io.tmpdir={scratch}",
         )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

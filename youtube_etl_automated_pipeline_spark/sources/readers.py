@@ -15,6 +15,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from youtube_etl_automated_pipeline_spark.session import fixture_dir
+
 TESTDATA_TABLES = (
     "region",
     "nation",
@@ -80,9 +82,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     key = (
         spark.sparkContext.applicationId,
         os.path.join(sf_dir, f"{name}.parquet"),
+        table_fingerprint(sf_dir, name),
     )
     if key in _SCAN_CACHE:
         return _SCAN_CACHE[key]
+    for stale in [k for k in _SCAN_CACHE if k[:2] == key[:2]]:
+        del _SCAN_CACHE[stale]
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -90,10 +95,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = df.cache()
     # ALWAYS memoize the analyzed DataFrame object (not just in shared
     # mode): every fresh spark.read.parquet pays a one-task schema-
-    # inference job, ~190x per suite sweep. The testdata tables are
-    # immutable, DataFrames are immutable plans, and the key carries
-    # the owning session's applicationId — reuse is always safe. Only
-    # the .cache() materialization stays gated on shared mode.
+    # inference job, ~190x per suite sweep. The key carries the owning
+    # session's applicationId and the table's fingerprint: the plan
+    # holds the file listing, so a table rewritten in place is re-read
+    # and its superseded entry dropped. Only the .cache()
+    # materialization stays gated on shared mode.
     _SCAN_CACHE[key] = df
     return df
 
@@ -253,28 +259,26 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
 def materialize_format(
     spark: SparkSession, sf_dir: str, name: str, fmt: str
 ) -> str:
-    """Re-materialize a testdata parquet table as ``fmt`` (jsonl/orc)
-    under /tmp, once per (sf, table, format) — the fixture step for
-    format-breadth gate queries. Content is byte-derived from the
-    parquet source, so a query over the round-tripped copy must equal
-    the same query over the original (which is exactly what the
-    DuckDB oracle checks)."""
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join("/tmp/spark_graft_formats", sf_tag, f"{name}.{fmt}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        df = load_table(spark, sf_dir, name)
-        writer = df.write.mode("overwrite")
+    """Re-materialize a testdata parquet table as ``fmt`` (jsonl/orc/xml)
+    — the fixture step for format-breadth gate queries. Content is
+    byte-derived from the parquet source, so a query over the
+    round-tripped copy must equal the same query over the original
+    (which is exactly what the DuckDB oracle checks)."""
+    if fmt not in ("jsonl", "orc", "xml"):
+        raise ValueError(f"unknown format {fmt!r}")
+
+    def build(out: str) -> None:
+        writer = load_table(spark, sf_dir, name).write
         if fmt == "jsonl":
             writer.json(out)
         elif fmt == "orc":
             writer.orc(out)
-        elif fmt == "xml":
+        else:
             # Spark 4 native XML (the spark-xml package folded into
             # core). rowTag names the per-record element.
             writer.format("xml").option("rowTag", "doc").save(out)
-        else:
-            raise ValueError(f"unknown format {fmt!r}")
-    return out
+
+    return fixture_dir(sf_dir, f"{name}.{fmt}", build, (name,))
 
 
 def read_xml(spark: SparkSession, path: str, schema) -> DataFrame:
@@ -307,35 +311,33 @@ def load_json_dim(spark: SparkSession, path: str) -> DataFrame:
 
 def materialize_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     """Re-materialize events as a DATE-PARTITIONED parquet layout
-    (``event_date=YYYY-MM-DD/`` directories), once per sf — the
-    fixture for the partition-pruning gate. At 100 TB this layout is
-    what turns a date-range query from a full scan into reading a few
-    directories; locally it is ~30 small partitions."""
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join("/tmp/spark_graft_formats", sf_tag, "events_by_day.parquet")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    (``event_date=YYYY-MM-DD/`` directories) — the fixture for the
+    partition-pruning gate. At 100 TB this layout is what turns a
+    date-range query from a full scan into reading a few directories;
+    locally it is ~30 small partitions."""
+
+    def build(out: str) -> None:
         df = load_table(spark, sf_dir, "events").withColumn(
             "event_date", F.to_date("ts")
         )
-        df.write.mode("overwrite").partitionBy("event_date").parquet(out)
-    return out
+        df.write.partitionBy("event_date").parquet(out)
+
+    return fixture_dir(sf_dir, "events_by_day.parquet", build, ("events",))
 
 
 def materialize_zordered_orders(spark: SparkSession, sf_dir: str) -> str:
-    """Re-materialize orders in z-order over (o_custkey, o_orderdate),
-    once per sf — the fixture for the clustering/scan-skipping gate.
-    At 100 TB this layout makes two-dimensional point/range predicates
-    touch a handful of row groups (see operators/layout.py)."""
+    """Re-materialize orders in z-order over (o_custkey, o_orderdate)
+    — the fixture for the clustering/scan-skipping gate. At 100 TB this
+    layout makes two-dimensional point/range predicates touch a handful
+    of row groups (see operators/layout.py)."""
     from youtube_etl_automated_pipeline_spark.operators.layout import zorder_by
 
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join("/tmp/spark_graft_formats", sf_tag, "orders_zorder.parquet")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        df = load_table(spark, sf_dir, "orders")
+    def build(out: str) -> None:
         zorder_by(
-            df,
+            load_table(spark, sf_dir, "orders"),
             F.col("o_custkey"),
             F.datediff(F.col("o_orderdate"), F.lit("1992-01-01")),
             n_files=16,
-        ).write.mode("overwrite").parquet(out)
-    return out
+        ).write.parquet(out)
+
+    return fixture_dir(sf_dir, "orders_zorder.parquet", build, ("orders",))

@@ -33,7 +33,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from youtube_etl_automated_pipeline_spark.session import fast_scratch_dir
+from youtube_etl_automated_pipeline_spark.session import input_digest, scratch_dir
 from youtube_etl_automated_pipeline_spark.sinks import dedup_table_swap
 from youtube_etl_automated_pipeline_spark.streaming.incremental import (
     record_batch_plan,
@@ -45,8 +45,8 @@ CDC_SCHEMA = "key bigint, price_cents bigint, op string, seq bigint"
 
 def cdc_run_dir(sf_dir: str) -> str:
     """The per-run state + checkpoint root of ``streaming_merge_cdc``
-    over ``sf_dir`` (tmpfs when available, see fast_scratch_dir)."""
-    return fast_scratch_dir("cdc", os.path.basename(os.path.normpath(sf_dir)))
+    over ``sf_dir``."""
+    return scratch_dir("cdc", input_digest(sf_dir))
 
 
 def read_state(spark: SparkSession, state_dir: str) -> DataFrame:
